@@ -1,8 +1,9 @@
 """CLI entry points — the run.py-equivalent surface (SURVEY §2.9 O2,
 O7, O8; reference run.py:103-232, :366-424, :499-518).
 
-Each subcommand is one deterministic Spark job over parquet-backed
-tables; the Celery choreography collapses into sequential actions.
+Each subcommand is one deterministic Spark job; the Celery
+choreography collapses into sequential actions. The records table is
+a log-structured TxnTable (sinks/txnlake.py) at ``<data>/records``.
 
     python -m adsmasterpipeline_spark.cli ingest   --events DIR --data DIR
     python -m adsmasterpipeline_spark.cli reindex  --data DIR [--force] [--since TS]
@@ -29,34 +30,6 @@ def _records_path(data_dir: str) -> str:
     return os.path.join(data_dir, "records")
 
 
-def _load_records(spark, data_dir: str):
-    from .storage import empty_records
-    path = _records_path(data_dir)
-    if os.path.exists(path):
-        return spark.read.parquet(path)
-    return empty_records(spark)
-
-
-def _save_records(df, data_dir: str) -> None:
-    import uuid
-
-    from .sinks.lake import publish_snapshot_dir
-    path = _records_path(data_dir)
-    # versioned snapshot dir + atomic symlink swap (sinks/lake.py):
-    # a crash at any point leaves the old or the new COMPLETE
-    # snapshot readable — the round-6 rmtree-then-rename had a window
-    # that left neither
-    staging = f"{path}.v-{uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").parquet(staging)
-    publish_snapshot_dir(path, staging)
-    # The swap happens behind Spark's back: any cached relation over
-    # `path` (cmd_reindex caches records) would keep serving the
-    # PRE-swap rows to every later read in this session. Cross-process
-    # callers never notice; in-process sequences (tests, long-lived
-    # drivers) silently lose the writeback without this.
-    df.sparkSession.catalog.refreshByPath(path)
-
-
 def _records_txn(spark, data_dir: str, **opts):
     from .sinks.txnlake import txn_table
     return txn_table(spark, _records_path(data_dir), **opts)
@@ -66,12 +39,11 @@ def cmd_ingest(args) -> int:
     """Batch-apply an update-event directory (JSON lines with the
     EVENT_SCHEMA) into the records table; appends the changelog.
 
-    ``--fmt txn`` routes through the log-structured TxnTable exactly
-    like the streaming path: an existing table is merged against ONLY
-    the rows read from stat-pruned candidate files (read_for_keys),
-    insert ids continue from the driver-side stat fold, and the
-    publish is a file-granular MERGE — O(touched files + batch), not
-    O(table) (VERDICT r6 task 4)."""
+    Routes through the log-structured TxnTable exactly like the
+    streaming path: an existing table is merged against ONLY the rows
+    read from stat-pruned candidate files (read_for_keys), insert ids
+    continue from the driver-side stat fold, and the publish is a
+    file-granular MERGE — O(touched files + batch), not O(table)."""
     from pyspark.sql import functions as F
 
     from .schemas import EVENT_SCHEMA
@@ -79,41 +51,34 @@ def cmd_ingest(args) -> int:
     spark = _spark()
     events = spark.read.schema(EVENT_SCHEMA).json(args.events)
     out: dict = {}
-    if getattr(args, "fmt", "parquet") == "txn":
-        t = _records_txn(spark, args.data, cluster_writes=True,
-                         rows_per_file=args.rows_per_file)
-        event_keys = events.select("bibcode").distinct()
-        exists = t.version() >= 0 and bool(t.live_files())
-        if exists:
-            records = t.read_for_keys(event_keys)
-            max_id = t.max_stat("id")
-            if max_id is None:
-                max_id = t.read().agg(
-                    F.max("id")).collect()[0][0] or 0
-        else:
-            records, max_id = empty_records(spark), 0
-        merged, changelog = merge_updates(records, events,
-                                          max_id=max_id)
-        merged = merged.localCheckpoint()
-        n = merged.count()
-        if exists:
-            deleted = event_keys.join(merged, "bibcode", "left_anti")
-            t.merge(merged, deleted_keys=deleted,
-                    merge_on_read=bool(getattr(
-                        args, "merge_on_read", False)))
-            p = t.last_merge_probe or {}
-            out["probe"] = {
-                "live_files": p.get("live_files"),
-                "candidate_files": len(p.get("candidate_files", [])),
-                "touched_files": len(p.get("touched_files", []))}
-        else:
-            t.overwrite(merged)
+    t = _records_txn(spark, args.data, cluster_writes=True,
+                     rows_per_file=args.rows_per_file)
+    event_keys = events.select("bibcode").distinct()
+    exists = t.version() >= 0 and bool(t.live_files())
+    if exists:
+        records = t.read_for_keys(event_keys)
+        max_id = t.max_stat("id")
+        if max_id is None:
+            max_id = t.read().agg(
+                F.max("id")).collect()[0][0] or 0
     else:
-        records = _load_records(spark, args.data)
-        merged, changelog = merge_updates(records, events)
-        merged = merged.localCheckpoint()  # sever lineage pre-swap
-        n = merged.count()
-        _save_records(merged, args.data)
+        records, max_id = empty_records(spark), 0
+    merged, changelog = merge_updates(records, events,
+                                      max_id=max_id)
+    merged = merged.localCheckpoint()
+    n = merged.count()
+    if exists:
+        deleted = event_keys.join(merged, "bibcode", "left_anti")
+        t.merge(merged, deleted_keys=deleted,
+                merge_on_read=bool(getattr(
+                    args, "merge_on_read", False)))
+        p = t.last_merge_probe or {}
+        out["probe"] = {
+            "live_files": p.get("live_files"),
+            "candidate_files": len(p.get("candidate_files", [])),
+            "touched_files": len(p.get("touched_files", []))}
+    else:
+        t.overwrite(merged)
     changelog.write.mode("append").parquet(os.path.join(args.data, "changelog"))
     out["records"] = n
     print(json.dumps(out))
@@ -136,35 +101,31 @@ def cmd_reindex(args) -> int:
     from .storage import KeyValueStore
     from .transform import solr_docs_json
     spark = _spark()
-    fmt = getattr(args, "fmt", "parquet")
     probes: dict = {}
     kv = KeyValueStore(spark, os.path.join(args.data, "kv"))
     wm_key = "last.reindex.forced" if args.force else "last.reindex.normal"
     since = args.since or (None if args.force else kv.get(wm_key))
 
-    if fmt == "txn":
-        t = _records_txn(spark, args.data)
-        if (since is not None
-                and not (args.bibcodes or args.failed)):
-            # the cron tick (run.py:147-151, the reference's hottest
-            # query): stat-pruned watermark scan — files whose
-            # updated-range predates the watermark are never opened
-            # (VERDICT r6 task 3). incremental_filter still applies
-            # the exact row predicate downstream.
-            import datetime as dt
-            lo = since
-            if isinstance(lo, str):
-                lo = dt.datetime.fromisoformat(
-                    lo.replace("Z", "+00:00"))
-            records = t.read_for_range("updated", lo=lo).cache()
-            p = t.last_read_probe or {}
-            probes["watermark_scan"] = {
-                "live_files": p.get("live_files"),
-                "candidate_files": len(p.get("candidate_files", []))}
-        else:
-            records = t.read().cache()
+    t = _records_txn(spark, args.data)
+    if (since is not None
+            and not (args.bibcodes or args.failed)):
+        # the cron tick (run.py:147-151, the reference's hottest
+        # query): stat-pruned watermark scan — files whose
+        # updated-range predates the watermark are never opened.
+        # incremental_filter still applies the exact row predicate
+        # downstream.
+        import datetime as dt
+        lo = since
+        if isinstance(lo, str):
+            lo = dt.datetime.fromisoformat(
+                lo.replace("Z", "+00:00"))
+        records = t.read_for_range("updated", lo=lo).cache()
+        p = t.last_read_probe or {}
+        probes["watermark_scan"] = {
+            "live_files": p.get("live_files"),
+            "candidate_files": len(p.get("candidate_files", []))}
     else:
-        records = _load_records(spark, args.data).cache()
+        records = t.read().cache()
 
     scope = records
     if args.bibcodes:
@@ -187,30 +148,26 @@ def cmd_reindex(args) -> int:
     write_solr_dir(
         solr_docs_json(solr.drop("checksum", *mtime_cols)),
         os.path.join(out, "solr"))
-    if fmt == "txn":
-        # S7 metrics upsert as a REAL stat-pruned MERGE (VERDICT r6
-        # task 4): incoming rows (defaults applied) merge into a
-        # key-clustered TxnTable — only files whose key range can
-        # contain a batch bibcode are opened, the executed analogue
-        # of the reference's INSERT..ON CONFLICT (adsmp/app.py:45-77)
-        from .sinks.txnlake import txn_table
-        from .sinks.writers import metrics_upsert
-        incoming = metrics_upsert(None, metrics).localCheckpoint()
-        mt = txn_table(spark, os.path.join(out, "metrics"),
-                       key="bibcode", cluster_writes=True,
-                       rows_per_file=args.rows_per_file)
-        if mt.version() >= 0 and mt.live_files():
-            mt.merge(incoming)
-            p = mt.last_merge_probe or {}
-            probes["metrics_merge"] = {
-                "live_files": p.get("live_files"),
-                "candidate_files": len(p.get("candidate_files", [])),
-                "touched_files": len(p.get("touched_files", []))}
-        elif incoming.count():
-            mt.overwrite(incoming)
-    else:
-        metrics.write.mode("overwrite").parquet(
-            os.path.join(out, "metrics"))
+    # S7 metrics upsert as a stat-pruned MERGE: incoming rows (defaults
+    # applied) merge into a key-clustered TxnTable — only files whose
+    # key range can contain a batch bibcode are opened, the executed
+    # analogue of the reference's INSERT..ON CONFLICT
+    # (adsmp/app.py:45-77)
+    from .sinks.txnlake import txn_table
+    from .sinks.writers import metrics_upsert
+    incoming = metrics_upsert(None, metrics).localCheckpoint()
+    mt = txn_table(spark, os.path.join(out, "metrics"),
+                   key="bibcode", cluster_writes=True,
+                   rows_per_file=args.rows_per_file)
+    if mt.version() >= 0 and mt.live_files():
+        mt.merge(incoming)
+        p = mt.last_merge_probe or {}
+        probes["metrics_merge"] = {
+            "live_files": p.get("live_files"),
+            "candidate_files": len(p.get("candidate_files", [])),
+            "touched_files": len(p.get("touched_files", []))}
+    elif incoming.count():
+        mt.overwrite(incoming)
     write_links_dir(links, os.path.join(out, "links"))
 
     updated = records
@@ -221,32 +178,29 @@ def cmd_reindex(args) -> int:
     updated = updated.localCheckpoint()
     counts: dict = {"solr": solr.count(), "metrics": metrics.count(),
                     "links": links.count()}
-    if fmt == "txn":
-        # `records` may be the watermark-PRUNED subset — the
-        # writeback must be a keyed MERGE of the touched rows, never
-        # a snapshot save (which would truncate the table to the
-        # subset). mark_processed only changed rows it saw done-keys
-        # for, all of which are in scope.
-        touched_keys = (solr.select("bibcode")
-                        .unionByName(metrics.select("bibcode"))
-                        .unionByName(links.select("bibcode"))
-                        .distinct())
-        subset = updated.join(touched_keys, "bibcode", "left_semi") \
-            .localCheckpoint()
-        if subset.count():
-            # drop the cached scan of the table's files first: a live
-            # cache entry over the same parquet paths would hijack the
-            # merge's input_file_name() probe (served from memory, no
-            # file context) and degrade its touched-file detection
-            records.unpersist()
-            t.merge(subset)
-            p = t.last_merge_probe or {}
-            probes["writeback_merge"] = {
-                "live_files": p.get("live_files"),
-                "candidate_files": len(p.get("candidate_files", [])),
-                "touched_files": len(p.get("touched_files", []))}
-    else:
-        _save_records(updated, args.data)
+    # `records` may be the watermark-PRUNED subset — the writeback is
+    # a keyed MERGE of the touched rows, never a full-table rewrite
+    # (which would truncate the table to the subset). mark_processed
+    # only changed rows it saw done-keys for, all of which are in
+    # scope.
+    touched_keys = (solr.select("bibcode")
+                    .unionByName(metrics.select("bibcode"))
+                    .unionByName(links.select("bibcode"))
+                    .distinct())
+    subset = updated.join(touched_keys, "bibcode", "left_semi") \
+        .localCheckpoint()
+    if subset.count():
+        # drop the cached scan of the table's files first: a live
+        # cache entry over the same parquet paths would hijack the
+        # merge's input_file_name() probe (served from memory, no
+        # file context) and degrade its touched-file detection
+        records.unpersist()
+        t.merge(subset)
+        p = t.last_merge_probe or {}
+        probes["writeback_merge"] = {
+            "live_files": p.get("live_files"),
+            "candidate_files": len(p.get("candidate_files", [])),
+            "touched_files": len(p.get("touched_files", []))}
     if not (args.bibcodes or args.failed):
         # a scoped run never saw the full table — advancing the
         # incremental watermark would silently skip everything else
@@ -262,26 +216,24 @@ def cmd_sitemap(args) -> int:
     """O8/O10 sitemap maintenance. ``--action auto`` is the
     update_sitemaps_auto cron shape (run.py:558-628): select
     recently-touched records, flag/extend the table, regenerate dirty
-    files. With ``--fmt txn --incremental`` the selection comes from
-    the records TxnTable's CHANGE-DATA-FEED keyed off a KV version
-    watermark (VERDICT r8 task 4) — O(changed files) instead of the
-    rescan's O(table), with the feed probe in the output JSON and the
-    watermark advancing only after the sitemap table write succeeded
-    (same rollback contract as ``outbox --incremental``); the
-    selected records are then fetched via the stat-pruned
-    ``read_for_keys``, so the table scan is O(files containing
-    selected keys) too. Rescan mode (``--since``) remains for parquet
-    records and as the equality oracle."""
+    files. With ``--incremental`` the selection comes from the
+    records TxnTable's CHANGE-DATA-FEED keyed off a KV version
+    watermark — O(changed files) instead of the rescan's O(table),
+    with the feed probe in the output JSON and the watermark
+    advancing only after the sitemap table write succeeded (same
+    rollback contract as ``outbox --incremental``); the selected
+    records are then fetched via the stat-pruned ``read_for_keys``,
+    so the table scan is O(files containing selected keys) too.
+    Rescan mode (``--since``) remains as the equality oracle."""
     from pyspark.sql import functions as F
     from . import sitemap as sm
     spark = _spark()
-    fmt = getattr(args, "fmt", "parquet")
     table_path = os.path.join(args.data, "sitemap")
     extra: dict = {}
     kv_advance = None
     if args.action == "auto":
         existing = spark.read.parquet(table_path)
-        if fmt == "txn" and args.incremental:
+        if args.incremental:
             from .storage import KeyValueStore
             t = _records_txn(spark, args.data)
             kv = KeyValueStore(spark, os.path.join(args.data, "kv"))
@@ -307,9 +259,8 @@ def cmd_sitemap(args) -> int:
             if not args.since:
                 raise SystemExit(
                     "sitemap --action auto needs --since TS (rescan "
-                    "mode) or --fmt txn --incremental (change feed)")
-            records = (_records_txn(spark, args.data).read()
-                       if fmt == "txn" else _load_records(spark, args.data))
+                    "mode) or --incremental (change feed)")
+            records = _records_txn(spark, args.data).read()
             sel = sm.auto_update_selection(records, existing, args.since) \
                 .localCheckpoint()
             incoming = records.join(F.broadcast(sel), "bibcode",
@@ -327,13 +278,12 @@ def cmd_sitemap(args) -> int:
     elif args.action == "cleanup":
         # O9 — the reference's sitemap cleanup rescans the FULL records
         # table per run (adsmp/tasks.py:482-583; the rescan branch
-        # keeps that shape as the equality oracle). With ``--fmt txn
-        # --incremental`` the invalidation set comes from the change
+        # keeps that shape as the equality oracle). With
+        # ``--incremental`` the invalidation set comes from the change
         # feed instead, keyed off its own KV version watermark — the
-        # last rescanning consumer now reads O(changed files) per tick
-        # (VERDICT r9 task 3).
+        # last rescanning consumer now reads O(changed files) per tick.
         existing = spark.read.parquet(table_path)
-        if fmt == "txn" and args.incremental:
+        if args.incremental:
             from .storage import KeyValueStore
             t = _records_txn(spark, args.data)
             kv = KeyValueStore(spark, os.path.join(args.data, "kv"))
@@ -359,8 +309,7 @@ def cmd_sitemap(args) -> int:
             table, emptied = sm.remove_records(existing, sel)
             kv_advance = (kv, vk, v_hi)
         else:
-            records = (_records_txn(spark, args.data).read()
-                       if fmt == "txn" else _load_records(spark, args.data))
+            records = _records_txn(spark, args.data).read()
             # one materialized selection, one remove pass (the naive
             # existing.count() - table.count() executed the whole
             # cleanup join pipeline twice) — identical to sm.cleanup
@@ -372,12 +321,9 @@ def cmd_sitemap(args) -> int:
             table, emptied = sm.remove_records(existing, sel)
         extra["emptied"] = emptied
     elif args.action == "bootstrap":
-        records = (_records_txn(spark, args.data).read()
-                   if fmt == "txn" else _load_records(spark, args.data))
-        table = sm.bootstrap(records)
+        table = sm.bootstrap(_records_txn(spark, args.data).read())
     else:
-        records = (_records_txn(spark, args.data).read()
-                   if fmt == "txn" else _load_records(spark, args.data))
+        records = _records_txn(spark, args.data).read()
         existing = spark.read.parquet(table_path)
         table = sm.add_records(existing, records, force=args.force)
     table = table.localCheckpoint()
@@ -448,7 +394,7 @@ def cmd_rebuild(args) -> int:
     from .dispatch import reindex
     from .transform import solr_docs_json
     spark = _spark()
-    records = _load_records(spark, args.data)
+    records = _records_txn(spark, args.data).read()
     batches = reindex(records, force=True, ignore_checksums=True)
     solr = batches["solr"]
     live = args.out or os.path.join(args.data, "sinks", "solr")
@@ -472,33 +418,48 @@ def cmd_rebuild(args) -> int:
 
 def cmd_gc(args) -> int:
     """M8 — delete obsolete records (run.py:258-293): drop rows with no
-    bib_data whose last update predates the cutoff."""
+    bib_data whose last update predates the cutoff, as one keyed
+    deletion-vector DELETE on the records TxnTable."""
     from .storage import delete_obsolete_records
     spark = _spark()
-    records = _load_records(spark, args.data)
+    t = _records_txn(spark, args.data)
+    records = t.read()
     before = records.count()
-    kept = delete_obsolete_records(records, args.cutoff).localCheckpoint()
-    after = kept.count()
-    _save_records(kept, args.data)
-    print(json.dumps({"deleted": before - after, "kept": after}))
+    gone = (records.select("bibcode")
+            .join(delete_obsolete_records(records, args.cutoff)
+                  .select("bibcode"), "bibcode", "left_anti")
+            .localCheckpoint())
+    deleted = gone.count()
+    if deleted:
+        t.delete(keys=gone)
+    print(json.dumps({"deleted": deleted, "kept": before - deleted}))
     return 0
 
 
 def cmd_scixid(args) -> int:
     """M7 scix_id maintenance (task_update_scixid flag modes,
     adsmp/tasks.py:210-275): update / force / reset over the records
-    table, optionally limited to a bibcode list file (one per line)."""
+    table, optionally limited to a bibcode list file (one per line).
+    Only rows whose scix_id changed are MERGEd back."""
+    from pyspark.sql import functions as F
+
     from .storage import update_scix_ids
     spark = _spark()
-    records = _load_records(spark, args.data)
+    t = _records_txn(spark, args.data)
+    records = t.read()
     bibs = None
     if args.bibcodes:
         with open(args.bibcodes, encoding="utf-8") as f:
             bibs = [ln.strip() for ln in f if ln.strip()]
     before = records.where("scix_id IS NOT NULL").count()
-    out = update_scix_ids(records, args.flag, bibs).localCheckpoint()
-    after = out.where("scix_id IS NOT NULL").count()
-    _save_records(out, args.data)
+    prev = records.select("bibcode", F.col("scix_id").alias("_prev"))
+    changed = (update_scix_ids(records, args.flag, bibs)
+               .join(prev, "bibcode")
+               .where(~F.col("scix_id").eqNullSafe(F.col("_prev")))
+               .drop("_prev").localCheckpoint())
+    if changed.count():
+        t.merge(changed)
+    after = t.read().where("scix_id IS NOT NULL").count()
     print(json.dumps({"flag": args.flag, "with_scix_before": before,
                       "with_scix_after": after}))
     return 0
@@ -510,7 +471,7 @@ def cmd_diag(args) -> int:
     from pyspark.sql import functions as F
     from .storage import KeyValueStore
     spark = _spark()
-    records = _load_records(spark, args.data)
+    records = _records_txn(spark, args.data).read()
     agg = records.agg(
         F.count(F.lit(1)).alias("records"),
         F.count("bib_data").alias("with_bib_data"),
@@ -532,18 +493,17 @@ def cmd_diag(args) -> int:
 
 def cmd_delete(args) -> int:
     """run.py --delete parity: remove a file of bibcodes from the
-    records table, emit solr tombstones, and (when a sitemap table
-    exists) anti-join it too, reporting files emptied by the removal."""
-    from pyspark.sql import functions as F
+    records table (a keyed deletion-vector DELETE on the TxnTable),
+    emit solr tombstones, and (when a sitemap table exists) anti-join
+    it too, reporting files emptied by the removal."""
     from . import sitemap as sm
     from .sources import bibcode_list
     spark = _spark()
-    records = _load_records(spark, args.data)
+    t = _records_txn(spark, args.data)
     bibs = bibcode_list(spark, args.bibcodes).cache()
-    survivors = records.join(F.broadcast(bibs), "bibcode", "left_anti") \
-        .localCheckpoint()
-    deleted = records.count() - survivors.count()
-    _save_records(survivors, args.data)
+    deleted = t.read_for_keys(bibs).count()
+    if deleted:
+        t.delete(keys=bibs)
     out = args.out or os.path.join(args.data, "sinks")
     bibs.select("bibcode").write.mode("overwrite") \
         .json(os.path.join(out, "solr_deletes"))
@@ -566,9 +526,9 @@ def cmd_outbox(args) -> int:
     batches for the downstream pipelines and write them to the outbox
     directory (the HTTP/queue adapter's pickup point).
 
-    ``--fmt txn --incremental`` feeds the derivation from the
-    TxnTable CHANGE-DATA-FEED instead of a full-table rescan
-    (VERDICT r7 task 1's wired consumer): only rows actually
+    ``--incremental`` feeds the derivation from the records
+    TxnTable's CHANGE-DATA-FEED instead of a full-table rescan: only
+    rows actually
     inserted/updated since the last emitted version produce requests
     — O(changed files), with the feed's probe in the output JSON —
     and the emitted version advances in the KV store only after the
@@ -599,7 +559,7 @@ def cmd_outbox(args) -> int:
     out = args.out or os.path.join(args.data, "outbox", args.kind)
     result: dict = {"kind": args.kind}
 
-    if getattr(args, "fmt", "parquet") == "txn" and args.incremental:
+    if args.incremental:
         t = _records_txn(spark, args.data)
         kv = KeyValueStore(spark, os.path.join(args.data, "kv"))
         vk = f"last.outbox.{args.kind}.version"
@@ -636,10 +596,7 @@ def cmd_outbox(args) -> int:
         print(json.dumps(result))
         return 0
 
-    records = (_records_txn(spark, args.data).read()
-               if getattr(args, "fmt", "parquet") == "txn"
-               else _load_records(spark, args.data))
-    requests = fn(records)
+    requests = fn(_records_txn(spark, args.data).read())
     write_outbox(requests, out)
     result["requests"] = requests.count()
     print(json.dumps(result))
@@ -930,6 +887,12 @@ def cmd_lake(args) -> int:
     return 0
 
 
+# The records table has one format; ``--fmt`` is kept so existing
+# ``--fmt txn`` invocations still parse.
+_FMT = ("txn",)
+_FMT_HELP = "records format (TxnTable, the only one)"
+
+
 def main(argv=None) -> int:
     p = argparse.ArgumentParser(prog="adsmasterpipeline_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
@@ -937,14 +900,12 @@ def main(argv=None) -> int:
     pi = sub.add_parser("ingest", help="apply update events to records")
     pi.add_argument("--events", required=True)
     pi.add_argument("--data", required=True)
-    pi.add_argument("--fmt", choices=("parquet", "txn"),
-                    default="parquet",
-                    help="records storage: parquet snapshot swap or "
-                    "log-structured TxnTable (stat-pruned MERGE)")
+    pi.add_argument("--fmt", choices=_FMT, default=_FMT[0],
+                    help=_FMT_HELP)
     pi.add_argument("--rows-per-file", type=int, default=500_000,
-                    help="txn fmt: target rows per key-clustered file")
+                    help="target rows per key-clustered file")
     pi.add_argument("--merge-on-read", action="store_true",
-                    help="txn fmt: deletion-vector MERGE — mask "
+                    help="deletion-vector MERGE — mask "
                          "matched rows + one add file, zero existing "
                          "files rewritten (compact materializes)")
     pi.set_defaults(fn=cmd_ingest)
@@ -959,14 +920,11 @@ def main(argv=None) -> int:
                     "restricts the run and skips the watermark")
     pr.add_argument("--failed", action="store_true",
                     help="reselect rows whose last dispatch failed")
-    pr.add_argument("--fmt", choices=("parquet", "txn"),
-                    default="parquet",
-                    help="txn: stat-pruned watermark scan, MERGE "
-                    "writeback, and a TxnTable metrics upsert; the "
-                    "output JSON carries the file-skipping probes")
+    pr.add_argument("--fmt", choices=_FMT, default=_FMT[0],
+                    help=_FMT_HELP)
     pr.add_argument("--rows-per-file", type=int, default=500_000,
-                    help="txn fmt: target rows per clustered file "
-                    "of the metrics table")
+                    help="target rows per clustered file of the "
+                    "metrics table")
     pr.set_defaults(fn=cmd_reindex)
 
     ps = sub.add_parser("sitemap", help="sitemap table + XML generation")
@@ -976,11 +934,10 @@ def main(argv=None) -> int:
                     choices=("bootstrap", "update", "auto", "cleanup"),
                     default="update")
     ps.add_argument("--force", action="store_true")
-    ps.add_argument("--fmt", choices=("parquet", "txn"),
-                    default="parquet",
-                    help="records storage the selection reads from")
+    ps.add_argument("--fmt", choices=_FMT, default=_FMT[0],
+                    help=_FMT_HELP)
     ps.add_argument("--incremental", action="store_true",
-                    help="auto/cleanup + txn: select from the records "
+                    help="auto/cleanup: select from the records "
                     "change feed since the KV version watermark "
                     "instead of rescanning (O(changed files))")
     ps.add_argument("--since",
@@ -1023,10 +980,10 @@ def main(argv=None) -> int:
     po.add_argument("--kind", choices=("augment", "boost", "classify"),
                     required=True)
     po.add_argument("--out")
-    po.add_argument("--fmt", choices=("parquet", "txn"),
-                    default="parquet")
+    po.add_argument("--fmt", choices=_FMT, default=_FMT[0],
+                    help=_FMT_HELP)
     po.add_argument("--incremental", action="store_true",
-                    help="txn only: derive requests from the change-"
+                    help="derive requests from the change-"
                          "data-feed since the last emitted version "
                          "instead of a full-table rescan")
     po.set_defaults(fn=cmd_outbox)

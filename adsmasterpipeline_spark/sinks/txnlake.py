@@ -3,17 +3,15 @@ executed MERGE — file-granular copy-on-write, atomic commits,
 idempotent application transactions, per-file key statistics for
 probe pruning, log checkpointing, and time travel.
 
-Why this exists: the production upsert boundary wants ``MERGE INTO``
-semantics (the reference's per-row transactional upsert,
-/root/reference/adsmp/app.py:45-77, recast set-at-a-time), and the
-``fmt="delta"`` branch in sinks/lake.py is the preferred deployment —
-but delta-spark cannot be installed in this environment (no package
-index reachable), so until round 4 the MERGE path had only ever run
-against a stub. This module is a from-scratch implementation of the
-subset of the PUBLIC Delta transaction-log protocol (Armbrust et al.,
-"Delta Lake: High-Performance ACID Table Storage over Cloud Object
-Stores", VLDB 2020) that the sink contract needs, so the merge path
-EXECUTES for real in tests and in this container:
+Why this exists: the records table wants ``MERGE INTO`` semantics
+(the reference's per-row transactional upsert, adsmp/app.py:45-77,
+recast set-at-a-time). This
+module is a from-scratch implementation of the subset of the PUBLIC
+Delta transaction-log protocol (Armbrust et al., "Delta Lake:
+High-Performance ACID Table Storage over Cloud Object Stores", VLDB
+2020) that the pipeline needs, and it is the only records format:
+``cli`` and ``streaming.ingest`` read and write the records table
+through it.
 
 - **Log**: ``<path>/_txn/<version>.json`` entries list data files
   added/removed plus an optional application transaction id. Each

@@ -13,11 +13,11 @@ serial Celery queue for ordering. The Spark engine is set-at-a-time:
    lazy scix_id generation on first bib_data (M7, adsmp/app.py:197-202),
    and a changelog DataFrame of pre-images (J6, adsmp/app.py:175).
 
-On a real cluster the records table is Delta/Iceberg and
-``merge_updates`` is a ``MERGE INTO``; this repo has no lake-format
-jars, so the same logic runs as join + coalesce + full overwrite
-(copy-on-write). The join shuffles on ``bibcode`` only; the update
-batch side is typically small → AQE picks a broadcast.
+``merge_updates`` computes the post-merge rows of the batch's keys;
+callers publish them with a file-granular ``TxnTable.merge``
+(sinks/txnlake.py), the executed ``MERGE INTO``. The join shuffles on
+``bibcode`` only; the update batch side is typically small → AQE
+picks a broadcast.
 """
 
 from __future__ import annotations

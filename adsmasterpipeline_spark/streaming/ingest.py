@@ -25,29 +25,29 @@ from ..storage import empty_records, merge_updates
 
 
 class StreamingIngest:
-    """File-source streaming ingestion into a records table.
+    """File-source streaming ingestion into the records TxnTable
+    (sinks/txnlake.py). Each micro-batch publishes as a FILE-GRANULAR
+    MERGE of just the batch's keys, committed atomically with the
+    epoch id as the application transaction id — so a micro-batch
+    REPLAYED after a crash-and-restart (Structured Streaming's
+    at-least-once foreachBatch contract) is detected in the log and
+    becomes a no-op. That composes the checkpoint's offset tracking
+    with sink-side idempotence into end-to-end exactly-once state,
+    and each epoch rewrites O(touched files), not O(table).
 
-    ``fmt="parquet"`` (default) publishes each micro-batch as a full
-    copy-on-write snapshot swap; ``fmt="txn"`` publishes through the
-    log-structured TxnTable (sinks/txnlake.py): a FILE-GRANULAR MERGE
-    of just the batch's keys, committed atomically with the epoch id
-    as the application transaction id — so a micro-batch REPLAYED
-    after a crash-and-restart (Structured Streaming's at-least-once
-    foreachBatch contract) is detected in the log and becomes a
-    no-op. That composes the checkpoint's offset tracking with
-    sink-side idempotence into end-to-end exactly-once state, and
-    each epoch rewrites O(touched files), not O(table).
+    ``fmt`` accepts only ``"txn"``, the one records format.
     """
 
     def __init__(self, spark: SparkSession, events_dir: str,
                  records_path: str, checkpoint_dir: str,
-                 fmt: str = "parquet", txn_opts: dict | None = None):
+                 fmt: str = "txn", txn_opts: dict | None = None):
+        if fmt != "txn":
+            raise ValueError(f"unknown records format {fmt!r}: the "
+                             "records table is a TxnTable ('txn')")
         self.spark = spark
         self.events_dir = events_dir
         self.records_path = records_path
         self.checkpoint_dir = checkpoint_dir
-        assert fmt in ("parquet", "txn")
-        self.fmt = fmt
         # e.g. {"cluster_writes": True, "rows_per_file": ...}: key-
         # clustered data files let the TxnTable's stats pruning bound
         # each epoch's merge probe by the batch's key range.
@@ -84,129 +84,98 @@ class StreamingIngest:
         return txn_table(self.spark, self.records_path, **self.txn_opts)
 
     def _load_records(self) -> DataFrame:
-        if self.fmt == "txn":
-            t = self._txn()
-            # live-EMPTY is distinct from nonexistent: an epoch whose
-            # deletes removed every row commits a merge with zero
-            # adds; the next epoch must see an empty table, not a
-            # FileNotFoundError crash-loop (foreachBatch would retry
-            # the same batch forever)
-            if t.version() >= 0 and t.live_files():
-                return t.read()
-            return empty_records(self.spark)
-        if os.path.exists(self.records_path):
-            return self.spark.read.parquet(self.records_path)
+        t = self._txn()
+        # live-EMPTY is distinct from nonexistent: an epoch whose
+        # deletes removed every row commits a merge with zero adds;
+        # the next epoch must see an empty table, not a
+        # FileNotFoundError crash-loop (foreachBatch would retry the
+        # same batch forever)
+        if t.version() >= 0 and t.live_files():
+            return t.read()
         return empty_records(self.spark)
 
     def _merge_batch(self, batch: DataFrame, now=None) -> DataFrame:
-        """Load + merge for one micro-batch. The parquet mode (full
-        snapshot swap) needs the FULL post-merge table; the txn mode
-        only publishes the batch's keys, so an existing table is
-        merged against ONLY the rows read from candidate data files
-        (TxnTable.read_for_keys — per-file stats pruning): per-epoch
-        compute is O(touched files + batch), not O(table). The
-        table-wide max id (insert numbering) is aggregated only when
-        the batch actually inserts, as a column-pruned scan."""
+        """Load + merge for one micro-batch. Only the batch's keys are
+        published, so an existing table is merged against ONLY the
+        rows read from candidate data files (TxnTable.read_for_keys —
+        per-file stats pruning): per-epoch compute is O(touched files
+        + batch), not O(table). The table-wide max id (insert
+        numbering) is looked up only when the batch actually
+        inserts."""
         from pyspark.sql import functions as F
 
-        if self.fmt == "txn":
-            t = self._txn()
-            # the subset path needs live data files; a live-empty
-            # table (all rows deleted) falls through to the
-            # empty_records merge below
-            if t.version() >= 0 and t.live_files():
-                batch_keys = batch.select("bibcode").distinct()
-                records = t.read_for_keys(batch_keys)
-                n_new = batch_keys.join(records, "bibcode",
-                                        "left_anti").count()
-                max_id = 0
-                if n_new:
-                    # table-wide max id for insert numbering WITHOUT a
-                    # table scan: folded driver-side from the per-file
-                    # id stats every commit records (VERDICT r6 #1 —
-                    # the old t.read().agg(max) opened every live file
-                    # on every insert epoch, reintroducing the
-                    # O(table) cost the probe pruning removed; insert
-                    # workloads hit this nearly every batch). Falls
-                    # back to the scan only for legacy tables whose
-                    # files predate id stats.
-                    max_id = t.max_stat("id")
-                    if max_id is None:
-                        max_id = t.read().agg(
-                            F.max("id")).collect()[0][0] or 0
-                merged, _ = merge_updates(records, batch, now=now,
-                                          max_id=max_id)
-                return merged
+        t = self._txn()
+        # the subset path needs live data files; a live-empty table
+        # (all rows deleted) falls through to the empty_records merge
+        # below
+        if t.version() >= 0 and t.live_files():
+            batch_keys = batch.select("bibcode").distinct()
+            records = t.read_for_keys(batch_keys)
+            n_new = batch_keys.join(records, "bibcode",
+                                    "left_anti").count()
+            max_id = 0
+            if n_new:
+                # table-wide max id for insert numbering WITHOUT a
+                # table scan: folded driver-side from the per-file id
+                # stats every commit records (a t.read().agg(max)
+                # would open every live file on every insert epoch).
+                # Falls back to the scan only for legacy tables whose
+                # files predate id stats.
+                max_id = t.max_stat("id")
+                if max_id is None:
+                    max_id = t.read().agg(
+                        F.max("id")).collect()[0][0] or 0
+            merged, _ = merge_updates(records, batch, now=now,
+                                      max_id=max_id)
+            return merged
         merged, _ = merge_updates(self._load_records(), batch, now=now)
         return merged
 
     def _publish(self, merged: DataFrame, batch: DataFrame,
                  epoch_id: int) -> None:
         """Commit the post-merge table state for one micro-batch."""
-        if self.fmt == "txn":
-            t = self._txn()
-            txn_id = f"{self.checkpoint_dir}#epoch-{epoch_id}"
-            ver = t.version()
-            if ver < 0:
-                t.overwrite(merged, app_txn_id=txn_id)
-            else:
-                batch_keys = batch.select("bibcode").distinct()
-                touched = merged.join(batch_keys, "bibcode", "left_semi")
-                # merge_updates DROPS deleted rows from `merged`, so a
-                # batch key absent from the post-merge table was
-                # deleted this epoch — it must flow to TxnTable.merge
-                # as a tombstone or the old row stays live and is
-                # resurrected by the next _load_records (the parquet
-                # snapshot mode and batch merge_records(fmt="txn")
-                # both already delete; this keeps the modes identical)
-                deleted = batch_keys.join(merged, "bibcode", "left_anti")
-                v = t.merge(touched, deleted_keys=deleted,
-                            app_txn_id=txn_id,
-                            merge_on_read=self.merge_on_read)
-                if v > ver:                     # replay no-op: v == ver
-                    self._merges_since_compact += 1
-                if (self.auto_compact_every and
-                        self._merges_since_compact
-                        >= self.auto_compact_every):
-                    # Maintenance must never fail the epoch (the DATA
-                    # commit above already landed): compact rebases on
-                    # conflict like merge does, and if a concurrent
-                    # writer still outraces every retry we SKIP this
-                    # interval — the small files stay live and the
-                    # next interval picks them up. Without this, a
-                    # multi-writer table's auto-compact raised
-                    # CommitConflict out of the epoch and cleanup_log
-                    # after it never ran (VERDICT r7 #3).
-                    from ..sinks.txnlake import CommitConflict
-                    try:
-                        t.compact(retries=2)
-                        self._merges_since_compact = 0
-                    except CommitConflict:
-                        pass
-                    if self.auto_cleanup_log:
-                        t.cleanup_log()
+        t = self._txn()
+        txn_id = f"{self.checkpoint_dir}#epoch-{epoch_id}"
+        ver = t.version()
+        if ver < 0:
+            t.overwrite(merged, app_txn_id=txn_id)
             return
-        # copy-on-write commit: write a fresh versioned snapshot dir,
-        # then atomically repoint the table symlink (the reference's
-        # core swap, scripts/reindex.py:146-156, without the round-6
-        # rmtree-then-rename crash window that could lose the table).
-        # The attempt suffix keeps a REPLAYED epoch (crash after
-        # publish, before the stream checkpoint committed) from
-        # overwriting the dir it is currently serving reads from.
-        import uuid
-
-        from ..sinks.lake import publish_snapshot_dir
-        staging = (f"{self.records_path}.v{epoch_id}"
-                   f"-{uuid.uuid4().hex[:8]}")
-        merged.write.mode("overwrite").parquet(staging)
-        publish_snapshot_dir(self.records_path, staging)
+        batch_keys = batch.select("bibcode").distinct()
+        touched = merged.join(batch_keys, "bibcode", "left_semi")
+        # merge_updates DROPS deleted rows from `merged`, so a batch
+        # key absent from the post-merge table was deleted this epoch
+        # — it must flow to TxnTable.merge as a tombstone or the old
+        # row stays live and is resurrected by the next epoch's read
+        deleted = batch_keys.join(merged, "bibcode", "left_anti")
+        v = t.merge(touched, deleted_keys=deleted,
+                    app_txn_id=txn_id,
+                    merge_on_read=self.merge_on_read)
+        if v > ver:                     # replay no-op: v == ver
+            self._merges_since_compact += 1
+        if (self.auto_compact_every and
+                self._merges_since_compact
+                >= self.auto_compact_every):
+            # Maintenance must never fail the epoch (the DATA commit
+            # above already landed): compact rebases on conflict like
+            # merge does, and if a concurrent writer still outraces
+            # every retry we SKIP this interval — the small files stay
+            # live and the next interval picks them up. Without this,
+            # a multi-writer table's auto-compact raised
+            # CommitConflict out of the epoch and cleanup_log after it
+            # never ran.
+            from ..sinks.txnlake import CommitConflict
+            try:
+                t.compact(retries=2)
+                self._merges_since_compact = 0
+            except CommitConflict:
+                pass
+            if self.auto_cleanup_log:
+                t.cleanup_log()
 
     def _apply_batch(self, batch: DataFrame, epoch_id: int) -> None:
         if batch.isEmpty():
             return
-        merged = self._merge_batch(batch)
-        if self.fmt == "txn":
-            merged = merged.localCheckpoint()
+        merged = self._merge_batch(batch).localCheckpoint()
         self._publish(merged, batch, epoch_id)
 
     def run_available_now(self) -> None:
@@ -248,7 +217,7 @@ class StreamingReindex(StreamingIngest):
 
     def __init__(self, spark: SparkSession, events_dir: str,
                  records_path: str, checkpoint_dir: str, sinks_dir: str,
-                 force: bool = False, now=None, fmt: str = "parquet",
+                 force: bool = False, now=None, fmt: str = "txn",
                  txn_opts: dict | None = None):
         super().__init__(spark, events_dir, records_path,
                          checkpoint_dir, fmt=fmt, txn_opts=txn_opts)
@@ -295,25 +264,8 @@ class StreamingReindex(StreamingIngest):
                                      sink, now=self.now)
         updated = updated.localCheckpoint()
         # mark_processed only touched `done` keys ⊆ batch keys, so the
-        # txn publish path's batch-key MERGE covers the writeback too
+        # publish's batch-key MERGE covers the writeback too
         self._publish(updated, batch, epoch_id)
-
-
-def streaming_dedup(docs: DataFrame, fingerprint_cols: list[str],
-                    event_time_col: str = "event_ts",
-                    watermark: str = "1 hour") -> DataFrame:
-    """Streaming exact deduplication: keep the first arrival per
-    fingerprint, with bounded state via
-    ``dropDuplicatesWithinWatermark`` — duplicates separated by more
-    than the watermark CAN reappear (state for old keys is evicted),
-    which is the correct cost/completeness trade for an unbounded
-    corpus feed; the batch ``operators/dedup.exact_dedup`` pass is the
-    exhaustive backstop. Works on a streaming DataFrame (stateful) or
-    a batch one (falls back to plain dropDuplicates semantics)."""
-    wm = docs.withWatermark(event_time_col, watermark)
-    if docs.isStreaming:
-        return wm.dropDuplicatesWithinWatermark(fingerprint_cols)
-    return wm.dropDuplicates(fingerprint_cols)
 
 
 def windowed_event_counts(events: DataFrame, window: str = "5 minutes",

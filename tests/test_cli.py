@@ -38,12 +38,15 @@ def test_cli_lifecycle(spark, tmp_path, events_dir, capsys):
 
     assert main(["reindex", "--data", data]) == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out == {"solr": 4, "metrics": 0, "links": 4}
+    assert out == {"solr": 4, "metrics": 0, "links": 4, "probes": {
+        "writeback_merge": {"live_files": 1, "candidate_files": 1,
+                            "touched_files": 1}}}
 
     # idempotent second run (checksums + watermark persisted on disk)
     assert main(["reindex", "--data", data]) == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out == {"solr": 0, "metrics": 0, "links": 0}
+    assert out == {"solr": 0, "metrics": 0, "links": 0, "probes": {
+        "watermark_scan": {"live_files": 1, "candidate_files": 0}}}
 
     assert main(["sitemap", "--data", data, "--action", "bootstrap"]) == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
@@ -94,15 +97,13 @@ def test_sitemap_update_is_incremental(spark, tmp_path, events_dir, capsys):
     assert out["files"] == 0
 
     # records updated after the stamp DO get re-rendered
-    rec_path = str(tmp_path / "data" / "records")
     from pyspark.sql import functions as F
-    recs = spark.read.parquet(rec_path)
-    bumped = recs.withColumn(
+
+    from adsmasterpipeline_spark.sinks.txnlake import txn_table
+    t = txn_table(spark, str(tmp_path / "data" / "records"))
+    t.merge(t.read().where("bibcode = 'E00'").withColumn(
         "bib_data_updated",
-        F.when(F.col("bibcode") == "E00",
-               F.current_timestamp() + F.expr("INTERVAL 1 DAY"))
-        .otherwise(F.col("bib_data_updated"))).localCheckpoint()
-    bumped.write.mode("overwrite").parquet(rec_path)
+        F.current_timestamp() + F.expr("INTERVAL 1 DAY")).localCheckpoint())
     assert main(["sitemap", "--data", data, "--action", "update"]) == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["files"] == 2  # one dirty file x two sites
@@ -164,7 +165,9 @@ def test_cli_scoped_reindex_diag_delete_outbox(spark, tmp_path, events_dir,
     assert main(["delete", "--data", data, "--bibcodes", str(bibfile)]) == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["deleted"] == 1
-    assert spark.read.parquet(str(tmp_path / "data" / "records")).count() == 3
+    from adsmasterpipeline_spark.sinks.txnlake import txn_table
+    assert txn_table(spark, str(tmp_path / "data" / "records")) \
+        .read().count() == 3
     assert (tmp_path / "data" / "sinks" / "solr_deletes").exists()
     smt = spark.read.parquet(str(tmp_path / "data" / "sitemap"))
     assert smt.where("bibcode = 'E01'").count() == 0
@@ -536,6 +539,69 @@ def test_cli_sitemap_cleanup_incremental_from_change_feed(
                  "--fmt", "txn", "--incremental", "--out", out_dir]) == 0
     r3 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert r3["removed"] == 0 and r3["feed"]["files_read"] == 0
+
+
+def test_cli_maintenance_verbs_on_txn_records(spark, tmp_path, capsys):
+    """diag, gc, scixid, rebuild and delete operate on the records
+    TxnTable that ingest writes (``records/_txn`` + ``records/data``),
+    and each reports the table's live row counts."""
+    import os as _os
+
+    from adsmasterpipeline_spark.sinks.txnlake import txn_table
+
+    data = str(tmp_path / "data")
+    ev0 = _mk_events(tmp_path, "ev0", [f"K{i:03d}" for i in range(16)], 1)
+    assert main(["ingest", "--events", str(ev0), "--data", data,
+                 "--fmt", "txn", "--rows-per-file", "4"]) == 0
+    # second batch overlaps: one update, one insert, and one bib-less
+    # record that gc will collect
+    ev1 = _mk_events(tmp_path, "ev1", ["K003", "K100"], 20, full=False)
+    (ev1 / "g.json").write_text(json.dumps(
+        {"bibcode": "G000", "type": "nonbib_data", "status": "active",
+         "payload": json.dumps({"boost": 0.2}),
+         "event_ts": "2024-01-20T00:00:00.000Z"}))
+    assert main(["ingest", "--events", str(ev1), "--data", data,
+                 "--fmt", "txn", "--rows-per-file", "4"]) == 0
+    capsys.readouterr()
+    t = txn_table(spark, _os.path.join(data, "records"))
+    assert len(t.live_files()) > 1
+
+    def last():
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    def live(where="true"):
+        return t.read().where(where).count()
+
+    assert main(["diag", "--data", data]) == 0
+    d = last()
+    assert d["records"] == live() == 18
+    assert d["with_bib_data"] == live("bib_data IS NOT NULL") == 17
+    assert d["with_scix_id"] == live("scix_id IS NOT NULL")
+
+    assert main(["gc", "--data", data, "--cutoff", "2100-01-01"]) == 0
+    assert last() == {"deleted": 1, "kept": 17}
+    assert live() == 17 and live("bibcode = 'G000'") == 0
+
+    assert main(["scixid", "--data", data, "--flag", "reset"]) == 0
+    assert last() == {"flag": "reset", "with_scix_before": 17,
+                      "with_scix_after": 0}
+    assert live("scix_id IS NOT NULL") == 0
+    assert main(["scixid", "--data", data, "--flag", "update"]) == 0
+    assert last() == {"flag": "update", "with_scix_before": 0,
+                      "with_scix_after": 17}
+    assert live("scix_id IS NOT NULL") == 17
+
+    assert main(["rebuild", "--data", data]) == 0
+    assert last() == {"docs": live(), "swapped": True}
+
+    v0 = t.version()
+    bibfile = tmp_path / "del.txt"
+    bibfile.write_text("K003\n")
+    assert main(["delete", "--data", data, "--bibcodes", str(bibfile)]) == 0
+    assert last()["deleted"] == 1
+    assert live() == 16 and live("bibcode = 'K003'") == 0
+    assert _os.path.isdir(_os.path.join(data, "records", "_txn"))
+    assert t.version() > v0
 
 
 def _mk_events(tmp_path, name, bibs, day, full=True):

@@ -4,7 +4,6 @@ multimodal plumbing, streaming ingestion."""
 
 from __future__ import annotations
 
-import datetime as dt
 import json
 
 import pytest
@@ -311,6 +310,7 @@ def test_multimodal_real_decode_when_deps_present(spark):
 
 @pytest.mark.slow
 def test_streaming_ingest_available_now(spark, tmp_path):
+    from adsmasterpipeline_spark.sinks.txnlake import txn_table
     from adsmasterpipeline_spark.streaming.ingest import StreamingIngest
 
     events_dir = tmp_path / "events"
@@ -329,7 +329,7 @@ def test_streaming_ingest_available_now(spark, tmp_path):
     ing = StreamingIngest(spark, str(events_dir),
                           str(tmp_path / "records"), str(tmp_path / "ckpt"))
     ing.run_available_now()
-    recs = spark.read.parquet(str(tmp_path / "records"))
+    recs = txn_table(spark, str(tmp_path / "records")).read()
     assert recs.count() == 2
 
     # second file arrives; checkpoint ensures only the delta is applied
@@ -338,57 +338,11 @@ def test_streaming_ingest_available_now(spark, tmp_path):
                "event_ts": "2024-01-02T00:00:00.000Z"}]
     (events_dir / "b2.json").write_text(json.dumps(batch2[0]))
     ing.run_available_now()
-    recs = spark.read.parquet(str(tmp_path / "records"))
+    recs = txn_table(spark, str(tmp_path / "records")).read()
     assert recs.count() == 2
     row = recs.where("bibcode = 'S1'").collect()[0]
     assert json.loads(row["fulltext"])["body"] == "B"
     assert json.loads(row["bib_data"])["title"] == ["one"]
-
-
-def test_streaming_dedup_within_watermark(spark, tmp_path):
-    """First arrival per fingerprint wins across micro-batches; a
-    duplicate arriving in a later batch (inside the watermark) is
-    dropped with bounded state."""
-    import json as _json
-
-    from adsmasterpipeline_spark.streaming.ingest import streaming_dedup
-
-    src = tmp_path / "docs"
-    src.mkdir()
-    ck = str(tmp_path / "ck")
-
-    def write(name, rows):
-        (src / name).write_text("\n".join(_json.dumps(r) for r in rows))
-
-    write("b1.json", [
-        {"fp": "A", "doc_id": 1, "event_ts": "2024-01-01T00:00:00.000Z"},
-        {"fp": "B", "doc_id": 2, "event_ts": "2024-01-01T00:00:01.000Z"},
-    ])
-    stream = (spark.readStream
-              .schema("fp string, doc_id long, event_ts timestamp")
-              .json(str(src)))
-    q = (streaming_dedup(stream, ["fp"]).writeStream
-         .format("memory").queryName("dedup_sink").outputMode("append")
-         .option("checkpointLocation", ck).start())
-    try:
-        q.processAllAvailable()
-        write("b2.json", [
-            {"fp": "A", "doc_id": 9, "event_ts": "2024-01-01T00:10:00.000Z"},
-            {"fp": "C", "doc_id": 3, "event_ts": "2024-01-01T00:10:01.000Z"},
-        ])
-        q.processAllAvailable()
-        rows = spark.sql(
-            "SELECT fp, doc_id FROM dedup_sink ORDER BY fp").collect()
-        assert [(r["fp"], r["doc_id"]) for r in rows] \
-            == [("A", 1), ("B", 2), ("C", 3)]  # duplicate A dropped
-    finally:
-        q.stop()
-
-    # batch fallback: plain dropDuplicates semantics
-    batch = spark.createDataFrame(
-        [("A", 1, dt.datetime(2024, 1, 1)), ("A", 9, dt.datetime(2024, 1, 2))],
-        "fp string, doc_id long, event_ts timestamp")
-    assert streaming_dedup(batch, ["fp"]).count() == 1
 
 
 def test_video_frame_features_tick_parity(spark):

@@ -6,8 +6,6 @@ from __future__ import annotations
 
 import json
 
-import pytest
-
 from adsmasterpipeline_spark.sinks.writers import (
     metrics_upsert, write_solr_dir, write_text_files,
 )
@@ -55,133 +53,3 @@ def test_dir_sinks(spark, tmp_path):
 
     write_text_files([("robots.txt", "Sitemap: x\n")], str(tmp_path / "txt"))
     assert (tmp_path / "txt" / "robots.txt").read_text() == "Sitemap: x\n"
-
-
-@pytest.mark.slow
-def test_lake_merge_parquet_matches_full_rewrite(spark, tmp_path):
-    """merge_records(parquet) applied incrementally must equal the full
-    merged table merge_updates produces — proving the sink interface
-    carries the whole contract (SCALE.md's 'sink change, not logic
-    change')."""
-    import datetime as dt
-    import json as _json
-
-    from pyspark.sql import functions as F
-    from adsmasterpipeline_spark.schemas import EVENT_SCHEMA
-    from adsmasterpipeline_spark.sinks.lake import merge_records, write_records
-    from adsmasterpipeline_spark.storage import empty_records, merge_updates
-
-    now = F.lit(dt.datetime(2024, 1, 10)).cast("timestamp")
-    ev1 = spark.createDataFrame([
-        ("B1", "bib_data", "active", _json.dumps({"bibcode": "B1"}),
-         dt.datetime(2024, 1, 1)),
-        ("B2", "bib_data", "active", _json.dumps({"bibcode": "B2"}),
-         dt.datetime(2024, 1, 1)),
-    ], EVENT_SCHEMA)
-    recs1, _ = merge_updates(empty_records(spark), ev1, now=now)
-    path = str(tmp_path / "records")
-    write_records(recs1.localCheckpoint(), path)
-
-    ev2 = spark.createDataFrame([
-        ("B2", "metrics", "active", _json.dumps({"citations": ["x"]}),
-         dt.datetime(2024, 1, 2)),
-        ("B3", "bib_data", "active", _json.dumps({"bibcode": "B3"}),
-         dt.datetime(2024, 1, 2)),
-        ("B1", "bib_data", "deleted", None, dt.datetime(2024, 1, 2)),
-    ], EVENT_SCHEMA)
-    stored = spark.read.parquet(path)
-    recs2, _ = merge_updates(stored, ev2, now=now)
-    recs2 = recs2.localCheckpoint()  # survives the directory swap below
-    # incremental view: touched rows + tombstones
-    touched = recs2.join(ev2.select("bibcode").distinct(), "bibcode",
-                         "left_semi").localCheckpoint()
-    deleted = ev2.where("status = 'deleted'").select("bibcode").distinct()
-    merge_records(spark, touched, deleted, path)
-
-    got = sorted(tuple(r) for r in spark.read.parquet(path).collect())
-    want = sorted(tuple(r) for r in recs2.collect())
-    assert got == want
-    assert {r[0] for r in got} == {"B2", "B3"}
-
-
-def test_lake_delta_gated(spark, tmp_path):
-    import pytest as _pytest
-
-    from adsmasterpipeline_spark.sinks.lake import write_records
-    from adsmasterpipeline_spark.storage import empty_records
-    try:
-        import delta  # noqa: F401
-        _pytest.skip("delta-spark installed; gate test is for its absence")
-    except ImportError:
-        pass
-    with _pytest.raises(NotImplementedError, match="delta-spark"):
-        write_records(empty_records(spark), str(tmp_path / "d"), fmt="delta")
-
-
-def test_lake_delta_delete_stays_distributed(spark, monkeypatch):
-    """The delta branch must apply tombstones via MERGE ... whenMatchedDelete,
-    never by collecting keys to the driver (a production deletion batch is
-    millions of rows). Drives the branch with a stubbed DeltaTable and a
-    collect-poisoned tombstone frame."""
-    import sys
-    import types
-
-    from adsmasterpipeline_spark.sinks import lake
-
-    calls = []
-
-    class FakeMerge:
-        def __init__(self, tag):
-            self.tag = tag
-
-        def whenMatchedUpdateAll(self):
-            calls.append((self.tag, "update_all"))
-            return self
-
-        def whenNotMatchedInsertAll(self):
-            calls.append((self.tag, "insert_all"))
-            return self
-
-        def whenMatchedDelete(self):
-            calls.append((self.tag, "matched_delete"))
-            return self
-
-        def execute(self):
-            calls.append((self.tag, "execute"))
-
-    class FakeTable:
-        def alias(self, a):
-            return self
-
-        def merge(self, src, cond):
-            # src must still be a DataFrame (distributed), not a list
-            assert hasattr(src, "select") or hasattr(src, "alias")
-            calls.append(("merge", cond))
-            return FakeMerge(cond)
-
-        def delete(self, *a, **kw):  # pragma: no cover - the forbidden path
-            raise AssertionError("delta delete must go through MERGE, "
-                                 "not a collected IN-list")
-
-    fake_tables = types.ModuleType("delta.tables")
-    fake_tables.DeltaTable = types.SimpleNamespace(
-        forPath=lambda _spark, _path: FakeTable())
-    fake_delta = types.ModuleType("delta")
-    fake_delta.tables = fake_tables
-    monkeypatch.setitem(sys.modules, "delta", fake_delta)
-    monkeypatch.setitem(sys.modules, "delta.tables", fake_tables)
-
-    changed = spark.createDataFrame([("B1", 1)], "bibcode string, v int")
-    deleted = spark.createDataFrame([("B9",)], "bibcode string")
-    monkeypatch.setattr(
-        type(deleted), "collect",
-        lambda self: (_ for _ in ()).throw(
-            AssertionError("tombstone frame collected to the driver")),
-        raising=True)
-
-    lake.merge_records(spark, changed, deleted, "/nonexistent", fmt="delta")
-
-    assert ("merge", "t.bibcode = s.bibcode") in calls
-    assert any(op == "matched_delete" for _, op in calls)
-    # two merges executed: upsert + delete
-    assert sum(1 for _, op in calls if op == "execute") == 2

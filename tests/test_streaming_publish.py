@@ -1,16 +1,10 @@
-"""Round-7 streaming ingestion hardening (VERDICT r6 tasks 1 + 7):
+"""Streaming ingestion into the records TxnTable: an INSERT epoch
+must not scan the table for max(id) — id numbering folds from the
+per-file stats (O(batch) epochs even on insert-heavy streams) — plus
+log-listing bounds and clean constraint failures mid-stream.
 
-- txn mode: an INSERT epoch must not scan the table for max(id) —
-  id numbering folds from the per-file stats (O(batch) epochs even on
-  insert-heavy streams);
-- parquet mode: the snapshot publish is crash-atomic — a failure at
-  any point leaves the previous COMPLETE snapshot readable (the old
-  rmtree-then-rename had a window that left no table at all), and the
-  replayed epoch then lands exactly once.
-
-Reference analogues: Postgres autoincrement PK
-(/root/reference/adsmp/models.py:49); the core-swap publish
-(/root/reference/scripts/reindex.py:146-156).
+Reference analogue: Postgres autoincrement PK
+(adsmp/models.py:49).
 """
 
 from __future__ import annotations
@@ -34,16 +28,15 @@ def _write_events(events_dir, name, rows):
             f.write(json.dumps(r) + "\n")
 
 
-def _make_ingest(spark, tmp_path, fmt):
+def _make_ingest(spark, tmp_path):
     from adsmasterpipeline_spark.streaming.ingest import StreamingIngest
-    base = tmp_path / fmt
+    base = tmp_path / "txn"
     events_dir = base / "events"
     events_dir.mkdir(parents=True)
     ing = StreamingIngest(
         spark, str(events_dir), str(base / "records"),
-        str(base / "ckpt"), fmt=fmt,
-        txn_opts={"cluster_writes": True, "rows_per_file": 4}
-        if fmt == "txn" else None)
+        str(base / "ckpt"),
+        txn_opts={"cluster_writes": True, "rows_per_file": 4})
     return ing, str(events_dir)
 
 
@@ -56,7 +49,7 @@ def test_txn_insert_epoch_never_scans_table(spark, tmp_path):
     with no collisions."""
     from adsmasterpipeline_spark.sinks.txnlake import TxnTable
 
-    ing, events_dir = _make_ingest(spark, tmp_path, "txn")
+    ing, events_dir = _make_ingest(spark, tmp_path)
     _write_events(events_dir, "boot.json",
                   [_event(f"B{i:03d}", i) for i in range(8)])
     ing.run_available_now()
@@ -82,62 +75,6 @@ def test_txn_insert_epoch_never_scans_table(spark, tmp_path):
     assert len(set(rows.values())) == 11, "id collision"
     assert {rows[f"N{i}"] for i in range(3)} == {9, 10, 11}
     assert rows["B001"] == ids0["B001"]            # update kept its id
-
-
-@pytest.mark.slow
-def test_parquet_publish_survives_crash_and_replays(spark, tmp_path):
-    """VERDICT r6 task 7 done-criterion: kill the publish between the
-    snapshot write and the pointer swap — the table must still read
-    as the PREVIOUS complete snapshot; the replayed epoch then
-    applies exactly once."""
-    from adsmasterpipeline_spark.sinks import lake
-    from pyspark.sql.streaming import StreamingQueryException
-
-    ing, events_dir = _make_ingest(spark, tmp_path, "parquet")
-    _write_events(events_dir, "b0.json",
-                  [_event(f"B{i}", i) for i in range(4)])
-    ing.run_available_now()
-    assert os.path.islink(ing.records_path), \
-        "publish must go through the symlink swap"
-    before = {r["bibcode"] for r in
-              spark.read.parquet(ing.records_path).collect()}
-    assert before == {f"B{i}" for i in range(4)}
-
-    # epoch 2 crashes AFTER the staging write, BEFORE the swap
-    _write_events(events_dir, "b1.json", [_event("C9", 9)])
-    orig = lake.publish_snapshot_dir
-
-    def crash(path, staging):
-        assert os.path.isdir(staging)     # snapshot fully written
-        raise RuntimeError("injected crash before publish")
-
-    lake.publish_snapshot_dir = crash
-    try:
-        with pytest.raises((StreamingQueryException, Exception)):
-            ing.run_available_now()
-    finally:
-        lake.publish_snapshot_dir = orig
-
-    spark.catalog.refreshByPath(ing.records_path)
-    after_crash = {r["bibcode"] for r in
-                   spark.read.parquet(ing.records_path).collect()}
-    assert after_crash == before, "crash mid-publish lost the table"
-
-    # restart: the unfinished epoch replays and lands exactly once
-    ing.run_available_now()
-    spark.catalog.refreshByPath(ing.records_path)
-    final = spark.read.parquet(ing.records_path)
-    assert {r["bibcode"] for r in final.collect()} == before | {"C9"}
-    assert final.count() == 5
-    # superseded snapshot dirs were swept (bounded disk)
-    d = os.path.dirname(ing.records_path)
-    base = os.path.basename(ing.records_path)
-    cur = os.path.realpath(ing.records_path)
-    stale = [n for n in os.listdir(d)
-             if n.startswith(base + ".v")
-             and os.path.join(d, n) != cur
-             and os.path.realpath(os.path.join(d, n)) != cur]
-    assert stale == []
 
 
 @pytest.mark.slow
@@ -182,7 +119,7 @@ def test_txn_stream_constraint_epoch_fails_clean_then_retries(
     the refused write are deleted, not orphaned) — and a corrected
     retry of the SAME epoch (same offsets, same app txn id) commits
     exactly once."""
-    ing, events_dir = _make_ingest(spark, tmp_path, "txn")
+    ing, events_dir = _make_ingest(spark, tmp_path)
     _write_events(events_dir, "boot.json",
                   [_event(f"G{i}", i) for i in range(4)])
     ing.run_available_now()                                      # v0

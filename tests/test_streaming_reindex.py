@@ -127,7 +127,8 @@ def test_streaming_reindex_equals_batch_and_idempotent(spark, tmp_path):
     assert {b for b, _ in want} <= {b for b, _ in got}
 
     # records table carries the writeback state
-    recs_stream = spark.read.parquet(str(base / "records"))
+    from adsmasterpipeline_spark.sinks.txnlake import txn_table
+    recs_stream = txn_table(spark, str(base / "records")).read()
     assert {r["bibcode"] for r in
             recs_stream.where("solr_checksum is not null")
             .collect()} == {"S1", "S2"}

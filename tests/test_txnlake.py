@@ -37,13 +37,27 @@ def _file_hashes(path):
     return out
 
 
+def _full_fold(spark, batch_files):
+    """The reference state for a streamed event sequence: each batch
+    file folded into the WHOLE in-memory table by
+    ``storage.merge_updates``, in arrival order."""
+    from adsmasterpipeline_spark.schemas import EVENT_SCHEMA
+    from adsmasterpipeline_spark.storage import empty_records, merge_updates
+
+    recs = empty_records(spark)
+    for f in batch_files:
+        recs, _ = merge_updates(
+            recs, spark.read.schema(EVENT_SCHEMA).json(str(f)))
+        recs = recs.localCheckpoint()
+    return recs
+
+
 @pytest.mark.slow
 def test_txn_merge_matches_full_rewrite(spark, tmp_path):
     """Incremental MERGE result == recomputing the whole table:
-    upserts land, survivors persist, tombstones delete — through the
-    same merge_updates-shaped inputs the lake sink interface takes."""
+    upserts land, survivors persist, tombstones delete — fed the
+    touched rows and delete keys merge_updates produces."""
     from adsmasterpipeline_spark.schemas import EVENT_SCHEMA
-    from adsmasterpipeline_spark.sinks.lake import merge_records, write_records
     from adsmasterpipeline_spark.storage import empty_records, merge_updates
 
     now = F.lit(dt.datetime(2024, 1, 10)).cast("timestamp")
@@ -54,10 +68,9 @@ def test_txn_merge_matches_full_rewrite(spark, tmp_path):
          dt.datetime(2024, 1, 1)),
     ], EVENT_SCHEMA)
     recs1, _ = merge_updates(empty_records(spark), ev1, now=now)
-    path = str(tmp_path / "records")
-    write_records(recs1.localCheckpoint(), path, fmt="txn")
+    t = txn_table(spark, str(tmp_path / "records"))
+    t.overwrite(recs1.localCheckpoint())
 
-    t = txn_table(spark, path)
     ev2 = spark.createDataFrame([
         ("B2", "metrics", "active", _json.dumps({"citations": ["x"]}),
          dt.datetime(2024, 1, 2)),
@@ -71,7 +84,7 @@ def test_txn_merge_matches_full_rewrite(spark, tmp_path):
     touched = recs2.join(ev2.select("bibcode").distinct(), "bibcode",
                          "left_semi").localCheckpoint()
     deleted = ev2.where("status = 'deleted'").select("bibcode").distinct()
-    merge_records(spark, touched, deleted, path, fmt="txn")
+    t.merge(touched, deleted)
 
     got = sorted(tuple(r) for r in t.read().collect())
     want = sorted(tuple(r) for r in recs2.collect())
@@ -177,8 +190,8 @@ def test_txn_concurrent_commit_conflict(spark, tmp_path):
 @pytest.mark.slow
 def test_streaming_ingest_on_txn_table(spark, tmp_path):
     """Streaming ingestion publishing through the TxnTable: state
-    equals the parquet-swap mode, versions advance per micro-batch,
-    and a REPLAYED epoch (foreachBatch's at-least-once contract after
+    equals the full-table merge_updates fold of the same batches,
+    versions advance per micro-batch, and a REPLAYED epoch (foreachBatch's at-least-once contract after
     a crash-restart) is a no-op — the epoch's app txn id is already
     in the log, so file set and bytes are unchanged. End-to-end
     exactly-once state without delta-spark."""
@@ -186,40 +199,37 @@ def test_streaming_ingest_on_txn_table(spark, tmp_path):
 
     from adsmasterpipeline_spark.streaming.ingest import StreamingIngest
 
-    def run(fmt, sub):
-        events_dir = tmp_path / sub / "events"
-        events_dir.mkdir(parents=True)
-        b1 = [{"bibcode": "S1", "type": "bib_data", "status": "active",
-               "payload": json.dumps({"bibcode": "S1", "title": ["one"]}),
-               "event_ts": "2024-01-01T00:00:00.000Z"},
-              {"bibcode": "S2", "type": "bib_data", "status": "active",
-               "payload": json.dumps({"bibcode": "S2"}),
-               "event_ts": "2024-01-01T00:00:01.000Z"}]
-        b2 = [{"bibcode": "S1", "type": "fulltext", "status": "active",
-               "payload": json.dumps({"body": "B"}),
-               "event_ts": "2024-01-02T00:00:00.000Z"}]
-        ing = StreamingIngest(spark, str(events_dir),
-                              str(tmp_path / sub / "records"),
-                              str(tmp_path / sub / "ckpt"), fmt=fmt)
-        (events_dir / "b1.json").write_text(
-            "\n".join(json.dumps(e) for e in b1))
-        ing.run_available_now()
-        (events_dir / "b2.json").write_text(json.dumps(b2[0]))
-        ing.run_available_now()
-        return ing
-
-    ing_t = run("txn", "t")
-    ing_p = run("parquet", "p")
+    events_dir = tmp_path / "t" / "events"
+    events_dir.mkdir(parents=True)
+    b1 = [{"bibcode": "S1", "type": "bib_data", "status": "active",
+           "payload": json.dumps({"bibcode": "S1", "title": ["one"]}),
+           "event_ts": "2024-01-01T00:00:00.000Z"},
+          {"bibcode": "S2", "type": "bib_data", "status": "active",
+           "payload": json.dumps({"bibcode": "S2"}),
+           "event_ts": "2024-01-01T00:00:01.000Z"}]
+    b2 = [{"bibcode": "S1", "type": "fulltext", "status": "active",
+           "payload": json.dumps({"body": "B"}),
+           "event_ts": "2024-01-02T00:00:00.000Z"}]
+    ing_t = StreamingIngest(spark, str(events_dir),
+                            str(tmp_path / "t" / "records"),
+                            str(tmp_path / "t" / "ckpt"))
+    (events_dir / "b1.json").write_text(
+        "\n".join(json.dumps(e) for e in b1))
+    ing_t.run_available_now()
+    (events_dir / "b2.json").write_text(json.dumps(b2[0]))
+    ing_t.run_available_now()
 
     t = ing_t._txn()
     assert t.version() == 1          # one commit per micro-batch
     drop = {"created", "updated", "processed"}  # wall-clock stamps
-    cols = [c for c in ing_t._load_records().columns if c not in drop]
+    cols = [c for c in t.read().columns if c not in drop]
 
     def state(df):
         return sorted(tuple(r) for r in df.select(*cols).collect())
 
-    assert state(ing_t._load_records()) == state(ing_p._load_records())
+    want = _full_fold(spark, [events_dir / "b1.json",
+                              events_dir / "b2.json"])
+    assert state(t.read()) == state(want)
 
     # crash-replay: re-apply epoch 1's batch with the same epoch id —
     # the txn log already has ckpt#epoch-1, so nothing changes
@@ -371,48 +381,45 @@ def test_txn_legacy_string_adds_still_fold(spark, tmp_path):
 @pytest.mark.slow
 def test_streaming_txn_delete_writes_tombstone(spark, tmp_path):
     """ADVICE r5 (high): a status='deleted' event flowing through
-    StreamingIngest(fmt='txn') must tombstone the key in the TxnTable
-    — round 5 never passed deleted_keys, so the old row stayed live
-    and was resurrected by the next _load_records. Parity with
-    fmt='parquet' is the contract."""
+    StreamingIngest must tombstone the key in the TxnTable — without
+    deleted_keys the old row stays live and is resurrected by the
+    next epoch's read. The full-table merge_updates fold of the same
+    batches is the reference state."""
     import json
 
     from adsmasterpipeline_spark.streaming.ingest import StreamingIngest
 
-    def run(fmt, sub):
-        events_dir = tmp_path / sub / "events"
-        events_dir.mkdir(parents=True)
-        b1 = [{"bibcode": "S1", "type": "bib_data", "status": "active",
-               "payload": json.dumps({"bibcode": "S1"}),
-               "event_ts": "2024-01-01T00:00:00.000Z"},
-              {"bibcode": "S2", "type": "bib_data", "status": "active",
-               "payload": json.dumps({"bibcode": "S2"}),
-               "event_ts": "2024-01-01T00:00:01.000Z"}]
-        b2 = [{"bibcode": "S1", "type": "bib_data", "status": "deleted",
-               "payload": None,
-               "event_ts": "2024-01-02T00:00:00.000Z"}]
-        ing = StreamingIngest(spark, str(events_dir),
-                              str(tmp_path / sub / "records"),
-                              str(tmp_path / sub / "ckpt"), fmt=fmt)
-        (events_dir / "b1.json").write_text(
-            "\n".join(json.dumps(e) for e in b1))
-        ing.run_available_now()
-        (events_dir / "b2.json").write_text(json.dumps(b2[0]))
-        ing.run_available_now()
-        return ing
+    events_dir = tmp_path / "t" / "events"
+    events_dir.mkdir(parents=True)
+    b1 = [{"bibcode": "S1", "type": "bib_data", "status": "active",
+           "payload": json.dumps({"bibcode": "S1"}),
+           "event_ts": "2024-01-01T00:00:00.000Z"},
+          {"bibcode": "S2", "type": "bib_data", "status": "active",
+           "payload": json.dumps({"bibcode": "S2"}),
+           "event_ts": "2024-01-01T00:00:01.000Z"}]
+    b2 = [{"bibcode": "S1", "type": "bib_data", "status": "deleted",
+           "payload": None,
+           "event_ts": "2024-01-02T00:00:00.000Z"}]
+    ing_t = StreamingIngest(spark, str(events_dir),
+                            str(tmp_path / "t" / "records"),
+                            str(tmp_path / "t" / "ckpt"))
+    (events_dir / "b1.json").write_text(
+        "\n".join(json.dumps(e) for e in b1))
+    ing_t.run_available_now()
+    (events_dir / "b2.json").write_text(json.dumps(b2[0]))
+    ing_t.run_available_now()
 
-    ing_t = run("txn", "t")
-    ing_p = run("parquet", "p")
+    want = _full_fold(spark, [events_dir / "b1.json",
+                              events_dir / "b2.json"])
+    got = ing_t._txn().read()
     # the deleted key is GONE from the txn table (no resurrection),
-    # matching the parquet snapshot mode
-    assert {r["bibcode"] for r in ing_t._load_records().collect()} == {"S2"}
-    assert {r["bibcode"] for r in ing_p._load_records().collect()} == {"S2"}
+    # matching the full-table fold
+    assert {r["bibcode"] for r in got.collect()} == {"S2"}
+    assert {r["bibcode"] for r in want.collect()} == {"S2"}
     drop = {"created", "updated", "processed"}
-    cols = [c for c in ing_t._load_records().columns if c not in drop]
-    assert (sorted(tuple(r) for r in
-                   ing_t._load_records().select(*cols).collect())
-            == sorted(tuple(r) for r in
-                      ing_p._load_records().select(*cols).collect()))
+    cols = [c for c in got.columns if c not in drop]
+    assert (sorted(tuple(r) for r in got.select(*cols).collect())
+            == sorted(tuple(r) for r in want.select(*cols).collect()))
 
 
 @pytest.mark.slow
