@@ -48,24 +48,6 @@ FEATURE_SCHEMA = ("asset_id long, kind string, n_bytes long, "
                   "feature array<double>, decode_ok boolean, error string")
 
 
-def spread_for_decode(df: DataFrame) -> DataFrame:
-    """Scale-adaptive parallelism for the per-asset decode pass: when
-    the upstream scan yields fewer partitions than the session has task
-    slots (one small parquet file — every local bench/test tier — or
-    the tail of a partitioned table), round-robin repartition to
-    ``defaultParallelism`` so the Arrow decode pass uses every core
-    instead of one. At real scale the scan already carries >= slots
-    partitions and this is a NO-OP — no shuffle is added where the
-    input is already parallel, so nothing here is tuned to local mode.
-    Callers pass the slim (id, text) projection BEFORE payload
-    synthesis, so the shuffled bytes (when the shuffle happens at all)
-    are the text column, never the synthesized media. (Thin alias of
-    operators/skew.spread_small_scan — the same input-skew fix serves
-    the heavy JVM text folds; one implementation.)"""
-    from .skew import spread_small_scan
-    return spread_small_scan(df)
-
-
 def _netpbm_gray(payload: bytes):
     """Parse a binary netpbm image (P5 grayscale / P6 RGB — REAL public
     formats, pure stdlib+numpy) into a normalized [0,1] grayscale

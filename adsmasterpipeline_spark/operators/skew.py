@@ -1,15 +1,18 @@
 """Skew mitigation (SURVEY §4 / the 100 TB checklist).
 
 AQE's skew-join handling (enabled in session.py) splits oversized
-partitions at runtime, but only for sort-merge joins. ``salted_join``
-is the explicit fallback for pathological key skew (one key holding a
-double-digit percentage of rows): the skewed side's hot keys get a
-random salt in [0, S), the other side replicates each hot-key row S
-times, and the join key becomes (key, salt) — the hot key's rows
-spread over S tasks instead of one straggler.
+shuffle partitions at runtime. Two input shapes stay outside its
+reach, and this module covers them:
 
-Results are identical to the plain join; only the physical
-distribution changes (asserted in tests).
+- ``spread_small_scan``: a scan with fewer partitions than task slots
+  (one unsplittable file) is round-robined to ``defaultParallelism``
+  so the per-row work above it runs on every core;
+- ``salted_agg_count``: a per-key count under key skew is
+  pre-aggregated on (key, random salt) and then combined, bounding
+  the per-task state of the first stage.
+
+Both leave results unchanged; only the physical distribution moves
+(asserted in tests).
 """
 
 from __future__ import annotations
@@ -40,44 +43,6 @@ def spread_small_scan(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
-
-
-def detect_hot_keys(df: DataFrame, key: str, threshold_frac: float = 0.05,
-                    max_keys: int = 100) -> list:
-    """Keys holding more than ``threshold_frac`` of all rows."""
-    total = df.count()
-    rows = (df.groupBy(key).count()
-            .where(F.col("count") >= total * threshold_frac)
-            .orderBy(F.col("count").desc())
-            .limit(max_keys)
-            .collect())
-    return [r[key] for r in rows]
-
-
-def salted_join(skewed: DataFrame, other: DataFrame, key: str,
-                salt: int = 8, hot_keys: list | None = None,
-                how: str = "inner") -> DataFrame:
-    """Join ``skewed`` (big, skewed side) with ``other`` on ``key``.
-
-    Hot keys are salted; cold keys keep salt 0 so the non-skewed
-    volume is not replicated. ``other``'s hot-key rows are exploded
-    across all salt values.
-    """
-    if hot_keys is None:
-        hot_keys = detect_hot_keys(skewed, key)
-    if not hot_keys:
-        return skewed.join(other, key, how)
-    hot = F.col(key).isin(hot_keys)
-
-    s = skewed.withColumn(
-        "_salt",
-        F.when(hot, (F.rand(seed=42) * salt).cast("int")).otherwise(F.lit(0)))
-    o = other.withColumn(
-        "_salts",
-        F.when(hot, F.sequence(F.lit(0), F.lit(salt - 1)))
-        .otherwise(F.array(F.lit(0))))
-    o = o.withColumn("_salt", F.explode("_salts")).drop("_salts")
-    return s.join(o, [key, "_salt"], how).drop("_salt")
 
 
 def salted_agg_count(df: DataFrame, key: str, salt: int = 8) -> DataFrame:

@@ -178,12 +178,20 @@ def cluster_keeper_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cluster_size").cast("long").alias("cluster_size"))
 
 
+def _check_iters(iters: int) -> None:
+    # iteration 1 is unrolled and always runs, so iters=0 cannot mean
+    # "the constant initial ranks"; refuse it instead of running one
+    if iters < 1:
+        raise ValueError(f"pagerank needs iters >= 1, got {iters}")
+
+
 def _pagerank_sql(iters: int = 3) -> str:
     """Unrolled integer-exact PageRank oracle. Integer division is
     spelled (a - a % b) / b in BOTH engines: the quotient is then an
     exact integer well under 2^53, so the double division is lossless
     — a bare FLOOR(a/b) is NOT (at rank magnitudes the correctly-
     rounded double quotient can land above the true integer)."""
+    _check_iters(iters)
     rounds = []
     for k in range(1, iters + 1):
         rounds.append(f"""
@@ -253,6 +261,7 @@ def _pagerank_sql(iters: int = 3) -> str:
 )
 def pagerank_supplier_customer(spark: SparkSession, sf_dir: str,
                                iters: int = 3) -> DataFrame:
+    _check_iters(iters)
     l = load_table(spark, sf_dir, "lineitem").select("l_orderkey",
                                                      "l_suppkey")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey",

@@ -375,9 +375,8 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         "docs belong to the text SimHash path (simhash_neardup).",
 )
 def image_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.multimodal import (
-        blockhash63, extract_features, spread_for_decode,
-    )
+    from ..operators.multimodal import blockhash63
+    from ..operators.skew import spread_small_scan
     from .text import _norm_text
 
     # slim projection first, then scale-adaptive spread: the bench
@@ -385,7 +384,7 @@ def image_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whole normalize+render+decode pipeline onto a single core
     # (measured 1.6 s of the query's 2.6 s at sf0.1); at real scale the
     # scan is already parallel and this adds no shuffle
-    d = spread_for_decode(
+    d = spread_small_scan(
         load_table(spark, sf_dir, "documents").select("doc_id", "text"))
     ascii_txt = F.regexp_replace(_norm_text(), "[^a-z0-9 ]", "")
     # degenerate-raster gate: require at least two 64-char raster rows
@@ -435,14 +434,13 @@ def image_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def audio_fingerprint_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import banded_hamming_pairs
-    from ..operators.multimodal import (
-        diffhash63, spread_for_decode, synth_wav_assets,
-    )
+    from ..operators.multimodal import diffhash63, synth_wav_assets
+    from ..operators.skew import spread_small_scan
     from .text import _norm_text
 
     # scale-adaptive spread before the two Arrow passes (WAV render +
     # decode): one local parquet split otherwise serializes them
-    d = spread_for_decode(
+    d = spread_small_scan(
         load_table(spark, sf_dir, "documents").select("doc_id", "text"))
     docs = d.select("doc_id", _norm_text().alias("norm"))
     assets = synth_wav_assets(docs, text_col="norm")
@@ -481,7 +479,7 @@ def video_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from .text import _norm_text
 
-    # NO spread_for_decode here (unlike the image/audio paths): the
+    # NO spread_small_scan here (unlike the image/audio paths): the
     # RAWV render+frame-decode python work is light (~0.5 s serial at
     # sf0.1) and the A/B measured the extra exchange + 32-task stage
     # overhead as a net regression (1.26 s -> 1.54 s best-of-3)

@@ -18,9 +18,8 @@ through it.
   ``add`` carries the file's key min/max and row count (Delta's
   per-file ``stats``) collected at write time; entries with removes
   also carry ``remove_stats`` (removed path -> row count, copied from
-  the prior snapshot) so the change-feed stream can size its per-task
-  slicing from max(add rows, remove rows) — a delete-heavy merge or a
-  restore is add-light but its pre-image is not. The current snapshot
+  the prior snapshot), which ``cli lake delete`` sums into its
+  ``deleted_rows`` report. The current snapshot
   is the ordered fold of the log: ``adds - removes``.
 - **Atomic commit**: the entry is staged to a temp file and published
   with ``os.link`` (fails with EEXIST if the version was taken) — the
@@ -655,21 +654,13 @@ class TxnTable:
                  "adds": adds, "removes": removes}
         if prior_live is not None and removes:
             # per-file row counts of the REMOVED files, copied from the
-            # prior snapshot's add stats (known at commit time, free).
-            # The CDF stream sizes its per-task key-hash slicing from
-            # max(add rows, remove rows): a delete-heavy merge or a
-            # restore writes few add rows but its tasks must hold every
-            # removed file's pre-image, so sizing from adds alone
-            # silently broke the per-task memory bound (VERDICT r9 #1).
-            # Stat-less removed files are omitted (legacy adds-only
-            # estimate remains the floor, never an overcount).
+            # prior snapshot's add stats (known at commit time, free);
+            # ``cli lake delete`` sums them into its deleted_rows
+            # report. Stat-less removed files are omitted.
             rs = {p: (prior_live.get(p) or {}).get("rows")
                   for p in removes}
             # a removed file carrying a deletion vector has card rows
-            # already masked: its pre-image (what the change feed must
-            # stream) is rows - card, so sizing from the raw count
-            # would only over-slice — but recording effective rows
-            # keeps the estimate honest
+            # already masked: record its live rows (rows - card)
             if prior_dvs:
                 rs = {p: (max(0, r - prior_dvs[p]["card"])
                           if isinstance(r, int) and p in prior_dvs
@@ -1469,9 +1460,7 @@ class TxnTable:
         # are not orderable, so compare the JSON of their entry list
         # SORTED BY KEY — raw to_json(map) is insertion-order-
         # sensitive, so equal maps written in different key orders
-        # would register as spurious update pairs (ADVICE r8). The
-        # streaming source canonicalizes the same way (cdf_source
-        # sorts map entries before its dict diff) — parity-tested.
+        # would register as spurious update pairs (ADVICE r8).
         def _cmp(side):
             items = []
             for c in data_cols:
@@ -1987,7 +1976,7 @@ class TxnTable:
         exclude previously-masked ones) into fully-dead files (every
         remaining row died — dropped outright) and files getting a
         new cumulative vector; writes the vector parquet and returns
-        (dead_files, commit extra with dvs/dv_prior/dv_stats)."""
+        (dead_files, commit extra with dvs/dv_prior)."""
         per_file = {r["_dv_file"]: r["n"] for r in
                     matched.groupBy("_dv_file")
                     .agg(F.count(F.lit(1)).alias("n")).collect()}
@@ -2034,9 +2023,6 @@ class TxnTable:
             # prior pointers make the entry self-contained for the
             # feed (new minus prior = this commit's deleted positions)
             extra["dv_prior"] = {p: snap.dvs.get(p) for p in dvs_entry}
-            # exact per-file changed-row counts for the streaming
-            # source's per-task slicing
-            extra["dv_stats"] = {p: per_file[p] for p in dvs_entry}
         return dead, extra
 
     def compact(self, small_rows_threshold: int | None = None,
@@ -2509,12 +2495,6 @@ class TxnTable:
         if dvs_delta:
             extra["dvs"] = dvs_delta
             extra["dv_prior"] = {p: snap.dvs.get(p) for p in dvs_delta}
-            # slicing upper bound for the streaming feed: the position
-            # delta can't exceed the union of both vectors
-            extra["dv_stats"] = {
-                p: ((d or {}).get("card", 0)
-                    + (snap.dvs.get(p) or {}).get("card", 0))
-                for p, d in dvs_delta.items()}
         v = snap.version + 1
         self._commit(v, adds, removes, "restore", app_txn_id,
                      extra=extra or None,
@@ -2570,10 +2550,6 @@ class TxnTable:
                 comp_extra["dvs"] = comp_dvs
                 comp_extra["dv_prior"] = {p: target.dvs.get(p)
                                           for p in comp_dvs}
-                comp_extra["dv_stats"] = {
-                    p: ((d or {}).get("card", 0)
-                        + (target.dvs.get(p) or {}).get("card", 0))
-                    for p, d in comp_dvs.items()}
             if not comp_gone:
                 try:
                     self._commit(v + 1, comp_adds, comp_removes,

@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from adsmasterpipeline_spark.operators.graph import (
@@ -121,3 +122,18 @@ def test_triangle_copurchase_hand_computed(spark, tmp_path):
     out = {r["part_key"]: r["tri_count"]
            for r in triangle_copurchase(spark, sf).collect()}
     assert out == {1: 1, 2: 1, 3: 1}
+
+
+def test_pagerank_refuses_zero_iterations(spark):
+    """The first PageRank iteration is unrolled and always runs, so
+    iters=0 would silently compute one round, and the unrolled oracle
+    would reference an undefined CTE. Both refuse it up front."""
+    from adsmasterpipeline_spark.queries.graph import (
+        _pagerank_sql, pagerank_supplier_customer,
+    )
+
+    for iters in (0, -1):
+        with pytest.raises(ValueError, match="iters >= 1"):
+            pagerank_supplier_customer(spark, "/nonexistent", iters=iters)
+        with pytest.raises(ValueError, match="iters >= 1"):
+            _pagerank_sql(iters)

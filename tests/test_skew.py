@@ -1,12 +1,10 @@
-"""Salted-join equivalence and distribution tests."""
+"""Salted aggregation equivalence test."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from adsmasterpipeline_spark.operators.skew import (
-    detect_hot_keys, salted_agg_count, salted_join,
-)
+from adsmasterpipeline_spark.operators.skew import salted_agg_count
 
 
 def _skewed(spark):
@@ -14,29 +12,6 @@ def _skewed(spark):
     return spark.range(0, 20_000).select(
         F.when(F.col("id") % 2 == 0, 0).otherwise(F.col("id") % 100)
         .alias("k"), F.col("id").alias("v"))
-
-
-def test_detect_hot_keys(spark):
-    hot = detect_hot_keys(_skewed(spark), "k", threshold_frac=0.2)
-    assert hot == [0]
-
-
-def test_salted_join_equals_plain_join(spark):
-    left = _skewed(spark)
-    right = spark.range(0, 100).select(
-        F.col("id").alias("k"), (F.col("id") * 10).alias("w"))
-    plain = left.join(right, "k").select("k", "v", "w")
-    salted = salted_join(left, right, "k", salt=4).select("k", "v", "w")
-    assert plain.count() == salted.count()
-    assert plain.exceptAll(salted).isEmpty()
-    assert salted.exceptAll(plain).isEmpty()
-
-
-def test_salted_join_no_hot_keys_passthrough(spark):
-    left = spark.range(0, 100).select((F.col("id") % 10).alias("k"), "id")
-    right = spark.range(0, 10).select(F.col("id").alias("k"))
-    out = salted_join(left, right, "k", hot_keys=[])
-    assert out.count() == 100
 
 
 def test_salted_agg_count(spark):

@@ -1984,6 +1984,32 @@ def test_txn_changes_schema_evolution(spark, tmp_path):
     }
 
 
+def test_txn_changes_struct_nan_and_map_order(spark, tmp_path):
+    """Survivor equality recurses into nested values: a NaN inside a
+    struct field and a map rewritten with the same content in another
+    key order are NOT changes (maps compare by sorted map_entries;
+    raw to_json(map) is insertion-order-sensitive)."""
+    nan = float("nan")
+    schema = ("bibcode string, s struct<x: double, y: long>, "
+              "m map<string, long>")
+    t = txn_table(spark, str(tmp_path / "t"), rows_per_file=1000)
+    t.overwrite(spark.createDataFrame(
+        [("B1", (nan, 1), {"a": 1, "b": 2}),
+         ("B2", (2.5, 2), {"a": 9}),
+         ("C1", (nan, 3), {"z": 7})], schema))                     # v0
+    # v1 rewrites the file: B1 carries IDENTICAL content (NaN struct
+    # field; map content equal but keys in reversed insertion order),
+    # B2 genuinely changes, C1 is a survivor copied by the rewrite
+    t.merge(spark.createDataFrame(
+        [("B1", (nan, 1), {"b": 2, "a": 1}),
+         ("B2", (9.9, 2), {"a": 9})], schema))                     # v1
+    rows = t.changes(0, 1).collect()
+    got = sorted((r["bibcode"], r["_change_type"]) for r in rows)
+    assert got == [("B2", "update_postimage"), ("B2", "update_preimage")]
+    post = [r for r in rows if r["_change_type"] == "update_postimage"]
+    assert post[0]["s"]["x"] == 9.9 and post[0]["m"] == {"a": 9}
+
+
 def test_lost_file_error_classifier():
     """ADVICE r10: the rebase trigger matches on exception TYPE plus
     cause chain — a non-Spark exception merely embedding

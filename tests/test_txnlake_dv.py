@@ -77,6 +77,11 @@ def test_dv_overlapping_deletes_and_feed_exactly_once(spark, tmp_path):
     n_new = (sum(d["new"] for d in e["dvs"].values())
              + sum(e.get("remove_stats", {}).values()))
     assert n_new == 10
+    # every field the DV delete entry carries has a reader: the feed
+    # and vacuum (dvs, dv_prior, remove_dvs), cli lake delete
+    # (dvs[*].new, remove_stats)
+    assert set(e) == {"version", "operation", "ts_ms", "adds", "removes",
+                      "remove_stats", "remove_dvs", "dvs", "dv_prior"}
     assert t.read().count() == 70
     per = {(r["_commit_version"], r["_change_type"]): r["n"]
            for r in t.changes(0).groupBy(
@@ -158,6 +163,10 @@ def test_dv_restore_unmasks_and_feeds_reinserts(spark, tmp_path):
     t.delete(keys=_ids(spark, range(0, 5)))              # v1
     assert t.restore(0) == 2                             # unmask
     assert t.read().count() == 100
+    # the restore entry carries only the pointer move and its prior
+    assert set(t._load_json(dict(t._entry_files())[2])) == {
+        "version", "operation", "ts_ms", "adds", "removes", "dvs",
+        "dv_prior"}
     ins = sorted(r["id"] for r in t.changes(1, 2).collect())
     assert ins == [0, 1, 2, 3, 4]
     assert t.changes(1, 2).select("_change_type").distinct() \
@@ -305,27 +314,6 @@ def test_dv_merge_on_read_masks_instead_of_rewriting(spark, tmp_path):
     assert t.restore(1) == 4
     got = {r["id"]: r["v"] for r in t.read().collect()}
     assert got[0] == 999 and len(got) == 99
-
-
-def test_dv_merge_on_read_stream_parity(spark, tmp_path):
-    """The txn_cdf stream serves a merge-on-read commit (adds + DV
-    pointer moves in ONE entry) identically to batch changes()."""
-    from adsmasterpipeline_spark.streaming.cdf_source import (
-        TxnChangeFeedStreamReader,
-    )
-    t = _table(spark, tmp_path)
-    t.merge(spark.createDataFrame(
-        [(0, 999), (300, 3)], "id long, v long"),
-        deleted_keys=_ids(spark, [1, 2]), merge_on_read=True)   # v1
-    r = TxnChangeFeedStreamReader(t.path, "id", 0, ["id", "v"],
-                                  max_rows_per_task=2)
-    parts = r.partitions({"version": 0}, {"version": 1})
-    assert len(parts) >= 2          # dv_stats + add rows size slices
-    got = sorted((row[0], row[1], row[2]) for p in parts
-                 for row in r.read(p))
-    want = sorted((row["id"], row["v"], row["_change_type"])
-                  for row in t.changes(0, 1).collect())
-    assert got == want
 
 
 @pytest.mark.slow
