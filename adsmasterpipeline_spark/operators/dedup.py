@@ -97,12 +97,6 @@ def minhash_from_shingles(sh: Column, num_hashes: int = 16) -> Column:
     return F.aggregate(sh, init, mins)
 
 
-def minhash_signature(text: Column, num_hashes: int = 16,
-                      shingle_n: int = 3) -> Column:
-    """Array of k min-hashes over the text's shingle set."""
-    return minhash_from_shingles(shingles(text, shingle_n), num_hashes)
-
-
 def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", num_hashes: int = 16,
                       bands: int = 4, shingle_n: int = 3,

@@ -239,51 +239,6 @@ def ann_brute_force(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "multimodal_features", None, "multimodal",
-    doc="Multimodal plumbing: documents' text bytes as opaque media "
-        "payloads -> Arrow-batched mapInPandas feature extraction "
-        "(decode stubbed deterministically; schema/batching real).",
-)
-def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    assets = d.select(
-        F.col("doc_id").alias("asset_id"),
-        F.element_at(F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-                     (F.col("doc_id") % 3 + 1).cast("int")).alias("kind"),
-        F.encode("text", "utf-8").alias("media"),
-        F.struct(F.lit("text/plain").alias("mime"),
-                 F.lit(None).cast("int").alias("width"),
-                 F.lit(None).cast("int").alias("height"),
-                 (F.col("n_chars") * 10).cast("int").alias("duration_ms"))
-        .alias("meta"),
-    )
-    return extract_features(assets, fake_decode=True)
-
-
-@query(
-    "video_frames", None, "multimodal",
-    doc="Video frame sampling + per-frame features: documents' bytes as "
-        "fake video payloads -> mapInPandas frame fan-out (bytes cross "
-        "the Arrow boundary once per asset, frames generated "
-        "executor-side; see operators/multimodal.video_frame_features).",
-)
-def video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.multimodal import video_frame_features
-    d = load_table(spark, sf_dir, "documents")
-    assets = d.select(
-        F.col("doc_id").alias("asset_id"),
-        F.lit("video").alias("kind"),
-        F.encode("text", "utf-8").alias("media"),
-        F.struct(F.lit("video/fake").alias("mime"),
-                 F.lit(None).cast("int").alias("width"),
-                 F.lit(None).cast("int").alias("height"),
-                 (F.col("n_chars") * 10).cast("int").alias("duration_ms"))
-        .alias("meta"),
-    ).where(F.col("doc_id") % 5 == 0)
-    return video_frame_features(assets, every_ms=1000)
-
-
-@query(
     "salted_group_counts",
     """
     SELECT lang, CAST(COUNT(*) AS BIGINT) AS n
@@ -403,7 +358,7 @@ def image_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.lit(64).alias("width"), F.lit(4).alias("height"),
                  F.lit(None).cast("int").alias("duration_ms"))
         .alias("meta"))
-    feats = extract_features(assets, fake_decode=False, dims=63)
+    feats = extract_features(assets, dims=63)
     sig = feats.where(F.col("decode_ok")).select(
         F.col("asset_id"), blockhash63(F.col("feature")).alias("ph"))
     from ..operators.dedup import banded_hamming_pairs
@@ -419,8 +374,8 @@ def image_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "its own duration (stdlib wave writer, executor-side; no "
         "padding/cycling so edits stay window-local), the REAL stdlib "
         "wave parser decodes it back into a 64-window loudness "
-        "envelope (operators/multimodal.decode_audio — no fake path "
-        "anywhere), consecutive-window loudness DIFFERENCES sign into "
+        "envelope (operators/multimodal.decode_audio), "
+        "consecutive-window loudness DIFFERENCES sign into "
         "a 63-bit Haitsma-Kalker-shape fingerprint (diffhash63 — "
         "gain-invariant, discriminative where a median threshold on "
         "near-constant envelopes is not), and pairs come from the "
@@ -444,7 +399,7 @@ def audio_fingerprint_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents").select("doc_id", "text"))
     docs = d.select("doc_id", _norm_text().alias("norm"))
     assets = synth_wav_assets(docs, text_col="norm")
-    feats = extract_features(assets, fake_decode=False, dims=64)
+    feats = extract_features(assets, dims=64)
     sig = feats.where(F.col("decode_ok")).select(
         F.col("asset_id"), diffhash63(F.col("feature")).alias("fp"))
     pairs = banded_hamming_pairs(sig, "asset_id", "fp", max_hamming=3)
@@ -491,8 +446,7 @@ def video_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = d.select("doc_id", _norm_text().alias("norm")) \
         .where(F.length("norm") >= 256)
     assets = synth_rawv_assets(docs, text_col="norm")
-    frames = video_frame_features(assets, every_ms=1000, dims=8,
-                                  fake_decode=False)
+    frames = video_frame_features(assets, every_ms=1000, dims=8)
     seq = (frames.where(F.col("decode_ok"))
            .groupBy(F.col("asset_id"))
            .agg(F.flatten(F.transform(

@@ -10,6 +10,7 @@ Pandas-UDF paths.
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
@@ -31,6 +32,10 @@ def get_spark(app_name: str = "adsmasterpipeline_spark",
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # Python workers import this package by name: give them its
+        # parent directory so UDF queries run from any working directory
+        .config("spark.executorEnv.PYTHONPATH",
+                str(Path(__file__).resolve().parents[1]))
         # saveAsTable targets (bucketed tables, rebuild-swap tests) go
         # under tmp, never the repo working directory
         .config("spark.sql.warehouse.dir",

@@ -1,16 +1,14 @@
-"""Sink fan-out (S5-S8, O4-O6).
+"""Sink fan-out (S5-S8).
 
 The reference posts batches to SOLR/metrics-Postgres/link-resolver with
 a batch→row degradation on errors (adsmp/app.py:381-584). This repo's
-default sinks are directory sinks (parquet/JSON); the HTTP adapters are
-optional and follow the same partition-level writer pattern:
-``foreachPartition`` → try batch → on failure retry row-by-row →
-failed keys come back as a DataFrame for `mark_processed(status=...)`.
+sinks are directory sinks (parquet/JSON) written by Spark's partitioned
+writers; there is no HTTP adapter, so the reference's batch→row
+fallback (O4-O6) has no counterpart here.
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame
@@ -67,57 +65,6 @@ def metrics_upsert(existing: DataFrame, batch: DataFrame) -> DataFrame:
     survivors = existing.join(incoming.select("bibcode"), "bibcode",
                               "left_anti")
     return survivors.unionByName(incoming, allowMissingColumns=True)
-
-
-def http_post_partitions(df: DataFrame, url: str, doc_col: str = "doc",
-                         key_col: str = "bibcode",
-                         batch_size: int = 500) -> DataFrame:
-    """O4-O6 batch→row fallback shape for HTTP sinks: per partition,
-    POST in batches; a failed batch is retried row-by-row; failed keys
-    are returned (bibcode, error) for status writeback.
-
-    Gated behind an import-try: environments without `requests` (or
-    without the service) use the directory sinks above.
-    """
-    spark = df.sparkSession
-
-    def run(partition):
-        try:
-            import requests
-        except ImportError:  # pragma: no cover - env without requests
-            for row in partition:
-                yield (row[key_col], "requests-not-installed")
-            return
-        buf = []
-
-        def post(docs):
-            resp = requests.post(url, json=docs, timeout=60)
-            resp.raise_for_status()
-
-        for row in partition:
-            buf.append(row)
-            if len(buf) >= batch_size:
-                yield from flush(buf, post)
-                buf = []
-        yield from flush(buf, post)
-
-    def flush(buf, post):
-        if not buf:
-            return
-        docs = [json.loads(r[doc_col]) if isinstance(r[doc_col], str)
-                else r[doc_col] for r in buf]
-        try:
-            post(docs)
-        except Exception:
-            # batch→row degradation (adsmp/app.py:393-430)
-            for r, d in zip(buf, docs):
-                try:
-                    post([d])
-                except Exception as e:  # noqa: BLE001
-                    yield (r[key_col], str(e)[:200])
-
-    failed = df.select(key_col, doc_col).rdd.mapPartitions(run)
-    return spark.createDataFrame(failed, f"{key_col} string, error string")
 
 
 def write_text_files(rows: list[tuple[str, str]], out_dir: str) -> None:

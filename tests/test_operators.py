@@ -1,6 +1,6 @@
 """Tests for the scale-path operators: two-phase assignment parity,
 LSH dedup behavior on planted duplicates, ANN recall vs brute force,
-multimodal plumbing, streaming ingestion."""
+multimodal decode, streaming ingestion."""
 
 from __future__ import annotations
 
@@ -14,9 +14,7 @@ from adsmasterpipeline_spark.operators.assignment import assign_sequential
 from adsmasterpipeline_spark.operators.dedup import (
     exact_dedup, minhash_lsh_pairs, simhash64, simhash_pairs,
 )
-from adsmasterpipeline_spark.operators.multimodal import (
-    extract_features, fake_assets, frame_sample_plan,
-)
+from adsmasterpipeline_spark.operators.multimodal import extract_features
 from adsmasterpipeline_spark.operators.similarity import (
     brute_force_topk, label_centroids, sign_lsh_topk,
 )
@@ -208,49 +206,52 @@ def test_label_centroids_shape(spark):
     assert all(len(r["centroid"]) == 64 for r in cen)
 
 
+def _p5(w, h, pixels):
+    """Binary netpbm P5 (8-bit gray) payload."""
+    return b"P5 %d %d 255\n" % (w, h) + bytes(pixels)
+
+
 def test_multimodal_plumbing(spark):
-    feats = extract_features(fake_assets(spark, 30)).collect()
+    """extract_features over real netpbm assets: one row per asset, the
+    default 8-value feature, the payload byte count, deterministic
+    across runs."""
+    assets = [(i, "image", bytearray(_p5(
+        4 + i % 5, 2, [(i * 7 + j) % 256 for j in range(2 * (4 + i % 5))])))
+        for i in range(30)]
+    df = spark.createDataFrame(
+        assets, "asset_id long, kind string, media binary")
+    feats = extract_features(df).collect()
     assert len(feats) == 30
     byid = {r["asset_id"]: r for r in feats}
-    assert all(r["decode_ok"] for r in feats)
-    assert len(byid[0]["feature"]) == 8
-    assert byid[0]["n_bytes"] == 32
+    assert all(r["decode_ok"] for r in feats), [r["error"] for r in feats]
+    assert all(len(r["feature"]) == 8 for r in feats)
+    # 4 columns over the default 8 strips: the empty strips read 0.0
+    assert byid[0]["feature"] == [2 / 255, 3 / 255, 4 / 255, 5 / 255] \
+        + [0.0] * 4
+    assert byid[0]["n_bytes"] == len(assets[0][2]) == 19
     # deterministic across runs
-    feats2 = extract_features(fake_assets(spark, 30)).collect()
+    feats2 = extract_features(df).collect()
     assert sorted(map(str, feats)) == sorted(map(str, feats2))
 
 
 def test_multimodal_real_decode_stubbed(spark):
-    """Without the optional codec extras every kind fails row-wise with
-    a recorded error (image/audio: missing lib; video: no ffmpeg), the
-    job itself never dies."""
-    feats = extract_features(fake_assets(spark, 3), fake_decode=False).collect()
-    assert all(not r["decode_ok"] for r in feats)
-    errs = {r["kind"]: r["error"] or "" for r in feats}
-    has_pil = True
-    try:
-        import PIL  # noqa: F401
-    except ImportError:
-        has_pil = False
-    if not has_pil:
-        assert "need PIL" in errs["image"]
-    assert "no codec for kind=video" in errs["video"]
-
-
-def test_frame_sample_plan(spark):
-    plan = frame_sample_plan(fake_assets(spark, 12), every_ms=500,
-                             audio_window_ms=500, audio_hop_ms=250).collect()
-    video = [r for r in plan if r["kind"] == "video"]
-    audio = [r for r in plan if r["kind"] == "audio"]
-    assert video and audio
-    assert all(r["ts_ms"] == r["frame_idx"] * 500 for r in video)
-    # audio windows hop by 250, span 500, clipped to the duration
-    assert all(r["ts_ms"] == r["frame_idx"] * 250 for r in audio)
-    assert all(r["end_ms"] - r["ts_ms"] <= 500 for r in audio)
-    # overlapping framing: asset 7 (audio, 1200ms) yields
-    # ceil((1200-500)/250)+1 = 4 windows, the last clipped to 1200
-    w7 = sorted((r["ts_ms"], r["end_ms"]) for r in audio if r["asset_id"] == 7)
-    assert w7 == [(0, 500), (250, 750), (500, 1000), (750, 1200)]
+    """Payloads with no decoder fail row-wise with a recorded error — a
+    video row (video decodes per frame in video_frame_features), a
+    non-netpbm image and a non-WAV audio row — and the job itself never
+    dies."""
+    rows = [(1, "image", bytearray(b"\xff\xd8\xff\xe0 a JPEG")),
+            (2, "audio", bytearray(b"ID3 an MP3")),
+            (3, "video", bytearray(_p5(2, 1, [0, 255]))),
+            (4, "image", bytearray(_p5(2, 1, [0, 255])))]
+    df = spark.createDataFrame(
+        rows, "asset_id long, kind string, media binary")
+    out = {r["asset_id"]: r for r in extract_features(df).collect()}
+    assert [out[i]["decode_ok"] for i in (1, 2, 3, 4)] == \
+        [False, False, False, True]
+    assert all(out[i]["feature"] is None for i in (1, 2, 3))
+    assert "netpbm" in out[1]["error"]
+    assert "PCM WAV" in out[2]["error"]
+    assert "no codec for kind=video" in out[3]["error"]
 
 
 def test_audio_real_wav_decode(spark):
@@ -286,26 +287,9 @@ def test_audio_real_wav_decode(spark):
         [(1, "audio", payload, ("audio/wav", None, None, 100))],
         "asset_id long, kind string, media binary, "
         "meta struct<mime:string,width:int,height:int,duration_ms:int>")
-    row = extract_features(assets, fake_decode=False).collect()[0]
+    row = extract_features(assets).collect()[0]
     assert row["decode_ok"], row["error"]
     assert abs(row["feature"][0] - 2000 / 32768) < 1e-9
-
-
-def test_multimodal_real_decode_when_deps_present(spark):
-    """Exercises the real PIL path when the optional extra is installed
-    (skipped in codec-less containers)."""
-    import io
-    pytest.importorskip("PIL")
-    from PIL import Image
-    buf = io.BytesIO()
-    Image.new("L", (16, 16), color=128).save(buf, format="PNG")
-    assets = spark.createDataFrame(
-        [(1, "image", buf.getvalue(), ("image/png", 16, 16, None))],
-        "asset_id long, kind string, media binary, "
-        "meta struct<mime:string,width:int,height:int,duration_ms:int>")
-    row = extract_features(assets, fake_decode=False).collect()[0]
-    assert row["decode_ok"] and len(row["feature"]) == 8
-    assert all(abs(v - 128 / 255) < 1e-6 for v in row["feature"])
 
 
 @pytest.mark.slow
@@ -345,35 +329,6 @@ def test_streaming_ingest_available_now(spark, tmp_path):
     assert json.loads(row["bib_data"])["title"] == ["one"]
 
 
-def test_video_frame_features_tick_parity(spark):
-    """Python-side frame generation must agree with the JVM
-    frame_sample_plan tick arithmetic, asset by asset."""
-    from adsmasterpipeline_spark.operators.multimodal import (
-        video_frame_features,
-    )
-    assets = fake_assets(spark, 30)
-    plan_counts = {
-        r["asset_id"]: r["n"]
-        for r in frame_sample_plan(assets, every_ms=1000)
-        .where("kind = 'video'")
-        .groupBy("asset_id").agg(F.count(F.lit(1)).alias("n")).collect()}
-    feat = video_frame_features(assets, every_ms=1000)
-    feat_counts = {
-        r["asset_id"]: r["n"]
-        for r in feat.groupBy("asset_id")
-        .agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert feat_counts == plan_counts
-    rows = feat.orderBy("asset_id", "frame_idx").collect()
-    assert all(r["decode_ok"] for r in rows)
-    assert all(r["ts_ms"] == r["frame_idx"] * 1000 for r in rows)
-    # frames of one asset get distinct deterministic features
-    by_asset = {}
-    for r in rows:
-        by_asset.setdefault(r["asset_id"], []).append(tuple(r["feature"]))
-    multi = [v for v in by_asset.values() if len(v) > 1]
-    assert multi and all(len(set(v)) > 1 for v in multi)
-
-
 def test_blocked_gemm_pairs_equals_hof_join(spark):
     """The BLAS tile path must reproduce the zip_with/aggregate join
     bit-for-bit at 6 dp — same pairs, same sims, no pair duplicated or
@@ -398,16 +353,54 @@ def test_blocked_gemm_pairs_equals_hof_join(spark):
     assert hof and gemm == hof
 
 
-def test_video_frame_real_decode_records_error(spark):
-    """Non-RAWV payloads on the real-decode path must record per-row
-    errors (no codec for them in-environment), not fail the job."""
+def test_video_frame_features_tick_parity(spark):
+    """One tick per ``every_ms`` from t=0 through the duration
+    inclusive — ``int(dur / every_ms) + 1`` rows per asset, at
+    ``ts_ms = frame_idx * every_ms`` — and frames of one asset decode
+    to distinct features."""
     from adsmasterpipeline_spark.operators.multimodal import (
-        video_frame_features,
+        ASSET_SCHEMA, encode_rawv, video_frame_features,
     )
-    assets = fake_assets(spark, 9)
-    rows = video_frame_features(assets, fake_decode=False).collect()
-    assert rows and all(not r["decode_ok"] for r in rows)
-    assert all(r["error"] for r in rows)
+
+    w = h = 4
+    frames = [bytes([v] * (w * h)) for v in (10, 128, 250)]
+    payload = encode_rawv(frames, w, h, frame_ms=1000)
+    durations = {1: 2000, 3: 0, 4: 1500}
+    assets = spark.createDataFrame(
+        [(aid, "video", payload, ("video/x-rawv", w, h, dur))
+         for aid, dur in durations.items()], ASSET_SCHEMA)
+    feat = video_frame_features(assets, every_ms=1000)
+    counts = {r["asset_id"]: r["n"] for r in
+              feat.groupBy("asset_id").agg(F.count(F.lit(1)).alias("n"))
+              .collect()}
+    assert counts == {aid: int(dur / 1000) + 1
+                      for aid, dur in durations.items()}
+    rows = feat.orderBy("asset_id", "frame_idx").collect()
+    assert all(r["decode_ok"] for r in rows), [r["error"] for r in rows]
+    assert all(r["ts_ms"] == r["frame_idx"] * 1000 for r in rows)
+    by_asset = {}
+    for r in rows:
+        by_asset.setdefault(r["asset_id"], []).append(tuple(r["feature"]))
+    multi = [v for v in by_asset.values() if len(v) > 1]
+    assert multi and all(len(set(v)) == len(v) for v in multi)
+
+
+def test_video_frame_real_decode_records_error(spark):
+    """Non-RAWV video payloads record an error on every tick (no codec
+    for them in this package) instead of failing the job."""
+    from adsmasterpipeline_spark.operators.multimodal import (
+        ASSET_SCHEMA, video_frame_features,
+    )
+
+    assets = spark.createDataFrame(
+        [(2, "video", b"\x00\x01\x02rubbish-not-rawv",
+          ("video/mp4", 4, 4, 1500)),
+         (5, "video", b"\x00\x00\x00\x18ftypmp42", ("video/mp4", 4, 4, 0))],
+        ASSET_SCHEMA)
+    rows = video_frame_features(assets, every_ms=1000).collect()
+    assert sorted(r["asset_id"] for r in rows) == [2, 2, 5]
+    assert all(not r["decode_ok"] and r["feature"] is None
+               and "RAWV" in r["error"] for r in rows)
 
 
 def test_video_frame_real_rawv_decode(spark):
@@ -427,7 +420,7 @@ def test_video_frame_real_rawv_decode(spark):
     assets = spark.createDataFrame(
         [(1, "video", payload, ("video/x-rawv", w, h, 2000))], ASSET_SCHEMA)
 
-    rows = (video_frame_features(assets, every_ms=1000, fake_decode=False)
+    rows = (video_frame_features(assets, every_ms=1000)
             .orderBy("frame_idx").collect())
     assert [r["frame_idx"] for r in rows] == [0, 1, 2]
     assert all(r["decode_ok"] for r in rows), [r["error"] for r in rows]
@@ -538,12 +531,112 @@ def test_image_real_netpbm_decode(spark):
             (3, "image", bytearray(b"P5 4 4 255\n\x00\x01"))]  # truncated
     df = spark.createDataFrame(
         rows, "asset_id long, kind string, media binary")
-    out = {r["asset_id"]: r for r in
-           extract_features(df, fake_decode=False).collect()}
+    out = {r["asset_id"]: r for r in extract_features(df).collect()}
     assert out[1]["decode_ok"] and out[2]["decode_ok"]
     assert not out[3]["decode_ok"]
     assert "truncated netpbm raster" in out[3]["error"]
     assert out[1]["feature"][:2] == [0.0, 64 / 255]
+
+
+def _gray_png(rows):
+    """Valid 8-bit grayscale PNG of ``rows`` (lists of pixel values),
+    every scanline with filter 0."""
+    import struct
+    import zlib
+
+    def chunk(typ, data):
+        return (struct.pack(">I", len(data)) + typ + data
+                + struct.pack(">I", zlib.crc32(typ + data)))
+
+    ihdr = struct.pack(">IIBBBBB", len(rows[0]), len(rows), 8, 0, 0, 0, 0)
+    raw = b"".join(b"\x00" + bytes(r) for r in rows)
+    return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
+            + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b""))
+
+
+def test_decode_image_refuses_png():
+    """Binary netpbm is the only image format with a decoder: a valid
+    PNG raises NotImplementedError naming netpbm, which callers record
+    per row."""
+    from adsmasterpipeline_spark.operators.multimodal import decode_image
+
+    with pytest.raises(NotImplementedError, match="netpbm"):
+        decode_image(_gray_png([[128]]))     # 1x1, pixel 128
+
+
+def test_image_phash_png_planted_pair(spark):
+    """Planted near-dup through the full perceptual-hash path: text
+    rasters encoded as netpbm, decoded inside mapInPandas, blockhashed
+    and banded — an exact dup collides at hamming 0, an unrelated doc
+    pairs with neither, and a PNG copy of the planted raster records a
+    per-row decode error and pairs with nothing."""
+    from adsmasterpipeline_spark.operators.dedup import (
+        banded_hamming_pairs)
+    from adsmasterpipeline_spark.operators.multimodal import blockhash63
+
+    def raster(text):
+        txt = (text * 8)[:256].ljust(256)
+        return [[ord(ch) for ch in txt[r * 64:(r + 1) * 64]]
+                for r in range(4)]
+
+    def p5(data):
+        return _p5(64, 4, [v for row in data for v in row])
+
+    base = ("the quick brown fox jumps over the lazy dog while spark "
+            "shuffles blocks across executors ")
+    other = ("completely different content about adaptive query "
+             "execution and partition coalescing in the optimizer ")
+    rows = [(1, bytearray(p5(raster(base)))),
+            (2, bytearray(p5(raster(base)))),
+            (3, bytearray(p5(raster(other)))),
+            (4, bytearray(_gray_png(raster(base))))]
+    df = spark.createDataFrame(rows, "asset_id long, media binary") \
+        .selectExpr("asset_id", "'image' as kind", "media")
+    feats = extract_features(df, dims=63)
+    ok = {r["asset_id"]: (r["decode_ok"], r["error"])
+          for r in feats.collect()}
+    assert all(ok[i][0] for i in (1, 2, 3))
+    assert not ok[4][0] and "netpbm" in ok[4][1]
+    sig = feats.where(F.col("decode_ok")).select(
+        "asset_id", blockhash63(F.col("feature")).alias("ph"))
+    pairs = {(r["id_a"], r["id_b"]): r["hamming"]
+             for r in banded_hamming_pairs(sig, "asset_id", "ph",
+                                           max_hamming=3).collect()}
+    assert pairs[(1, 2)] == 0
+    assert not any(3 in p or 4 in p for p in pairs)
+
+
+def test_python_udf_query_runs_from_foreign_cwd(tmp_path):
+    """Python workers import this package by name. From a working
+    directory outside the repo, with the repo on the driver's sys.path
+    only (not in the PYTHONPATH env var, which workers would inherit),
+    a mapInPandas query must still decode its row."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = str(Path(__file__).resolve().parents[1])
+    script = f"""
+import sys
+sys.path.insert(0, {repo!r})
+from adsmasterpipeline_spark.operators.multimodal import extract_features
+from adsmasterpipeline_spark.session import get_spark
+spark = get_spark("foreign_cwd", shuffle_partitions=1)
+df = spark.createDataFrame(
+    [(1, "image", bytearray(b"P5 2 1 255\\n\\x00\\xff"))],
+    "asset_id long, kind string, media binary")
+row = extract_features(df, dims=2).collect()[0]
+print("RESULT", row["decode_ok"], row["feature"], row["error"])
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="1", SPARK_DRIVER_MEM="1g")
+    proc = subprocess.run([sys.executable, "-c", script], cwd=tmp_path,
+                          env=env, capture_output=True, text=True,
+                          timeout=300)
+    assert "RESULT True [0.0, 1.0] None" in proc.stdout, \
+        proc.stdout[-1000:] + proc.stderr[-3000:]
 
 
 def test_pq_topk_recall_and_determinism(spark):
@@ -596,7 +689,7 @@ def test_image_phash_neardup_planted(spark, tmp_path):
     identical raster (hamming 0); a one-word edit renders a
     near-identical raster (low hamming); an unrelated doc pairs with
     neither. All payloads must really decode (decode_ok True for every
-    asset — the netpbm path, not the fake)."""
+    asset — the netpbm path)."""
     from pyspark.sql import functions as F
 
     from adsmasterpipeline_spark.queries.scale_ops import (
@@ -633,55 +726,6 @@ def test_image_phash_neardup_planted(spark, tmp_path):
     assert not any(4 in p for p in pairs)
     # the length gate keeps degenerate short docs out of the image path
     assert not any(5 in p or 6 in p for p in pairs)
-
-
-def test_resize_images_roundtrip(spark):
-    """Real resize path: a planted 8x4 P5 gradient block-mean
-    downscales to 4x2, the output re-decodes through the SAME netpbm
-    parser with correct dims, and the overall mean intensity is
-    preserved (area-average invariant). A corrupt payload records a
-    per-row error instead of failing the job."""
-    import numpy as np
-
-    from adsmasterpipeline_spark.operators.multimodal import (
-        _netpbm_gray, encode_p5, resize_images,
-    )
-
-    grad = np.arange(32, dtype=np.float64).reshape(4, 8) / 31.0
-    payload = encode_p5(grad)
-    rows = [(1, "image", payload, ("image/x-portable-graymap", 8, 4,
-                                   None)),
-            (2, "image", b"JUNK", ("image/x-portable-graymap", 0, 0,
-                                   None))]
-    from adsmasterpipeline_spark.operators.multimodal import ASSET_SCHEMA
-    assets = spark.createDataFrame(rows, ASSET_SCHEMA)
-    out = {r["asset_id"]: r
-           for r in resize_images(assets, out_w=4, out_h=2).collect()}
-    assert out[1]["resize_ok"] and out[2]["error"] is not None
-    small = _netpbm_gray(bytes(out[1]["media"]))
-    assert small.shape == (2, 4)
-    # area-average preserves mean up to uint8 quantization
-    assert abs(float(small.mean()) - float(grad.mean())) < 2 / 255
-    # downscale is deterministic: second run byte-identical
-    again = {r["asset_id"]: bytes(r["media"]) for r in
-             resize_images(assets, out_w=4, out_h=2).collect()
-             if r["resize_ok"]}
-    assert again[1] == bytes(out[1]["media"])
-
-
-def test_resize_gray_uneven_split():
-    import numpy as np
-
-    from adsmasterpipeline_spark.operators.multimodal import resize_gray
-
-    g = np.arange(35, dtype=np.float64).reshape(5, 7) / 34.0
-    small = resize_gray(g, 3, 2)
-    assert small.shape == (2, 3)
-    # uneven splits weight blocks unequally, so the mean is only
-    # approximately preserved (exact preservation needs divisible dims
-    # — pinned in test_resize_images_roundtrip)
-    assert abs(float(small.mean()) - float(g.mean())) < 0.1
-    assert 0.0 <= float(small.min()) and float(small.max()) <= 1.0
 
 
 def test_audio_fingerprint_neardup_planted(spark, tmp_path):
@@ -762,116 +806,6 @@ def test_video_phash_neardup_planted(spark, tmp_path):
     assert not any(4 in p or 5 in p for p in pairs)
 
 
-def _png_encode(gray_rows, depth=8, ctype=0, filters=None,
-                interlace=0):
-    """Forward PNG encoder (test-side inverse of the production
-    decoder): per-row filter types from ``filters`` (default all 0),
-    zlib-compressed, real chunk CRCs. ``gray_rows`` is [h][w] ints for
-    ctype 0, [h][w][ch] for 2/4/6."""
-    import zlib
-
-    def chunk(typ, data):
-        return (len(data).to_bytes(4, "big") + typ + data
-                + zlib.crc32(typ + data).to_bytes(4, "big"))
-
-    nch = {0: 1, 2: 3, 4: 2, 6: 4}[ctype]
-    bps = depth // 8
-    h = len(gray_rows)
-    w = len(gray_rows[0])
-    bpp = nch * bps
-
-    def sample_bytes(v):
-        return v.to_bytes(bps, "big")
-
-    raw_rows = []
-    for row in gray_rows:
-        b = bytearray()
-        for px in row:
-            for c in (px if nch > 1 else [px]):
-                b += sample_bytes(c)
-        raw_rows.append(bytes(b))
-
-    filters = filters or [0] * h
-    out = bytearray()
-    prev = bytes(len(raw_rows[0]))
-    for row, ft in zip(raw_rows, filters):
-        out.append(ft)
-        if ft == 0:
-            out += row
-        else:
-            for x in range(len(row)):
-                a = row[x - bpp] if x >= bpp else 0
-                b = prev[x]
-                c = prev[x - bpp] if x >= bpp else 0
-                if ft == 1:
-                    pred = a
-                elif ft == 2:
-                    pred = b
-                elif ft == 3:
-                    pred = (a + b) >> 1
-                else:  # paeth
-                    p = a + b - c
-                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                    pred = a if (pa <= pb and pa <= pc) else \
-                        (b if pb <= pc else c)
-                out.append((row[x] - pred) & 0xFF)
-        prev = row
-    ihdr = (w.to_bytes(4, "big") + h.to_bytes(4, "big")
-            + bytes([depth, ctype, 0, 0, interlace]))
-    return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(bytes(out)))
-            + chunk(b"IEND", b""))
-
-
-def test_png_decode_all_filters_and_depths(spark):
-    """Stdlib PNG decode: every filter type (None/Sub/Up/Average/
-    Paeth) round-trips through the forward encoder, 8-bit gray / RGB /
-    RGBA and 16-bit gray all decode to the right intensities, and the
-    full mapInPandas path records per-row errors for corrupt /
-    interlaced payloads instead of failing the job."""
-    import pytest as _pytest
-
-    from adsmasterpipeline_spark.operators.multimodal import (
-        decode_image, extract_features)
-
-    # 8-bit gray 4x5, one row per filter type; decode as 4 col-strips
-    rows = [[0, 64, 128, 255], [10, 20, 30, 40], [200, 100, 50, 25],
-            [5, 250, 5, 250], [17, 34, 51, 68]]
-    png = _png_encode(rows, filters=[0, 1, 2, 3, 4])
-    f = decode_image(png, dims=4)
-    expect = [sum(r[c] for r in rows) / 5 / 255 for c in range(4)]
-    assert all(abs(a - b) < 1e-12 for a, b in zip(f, expect))
-
-    # RGB: pixel red + white (gray 1/3, 1.0), Paeth-filtered row
-    rgb = _png_encode([[[255, 0, 0], [255, 255, 255]]], ctype=2,
-                      filters=[4])
-    f3 = decode_image(rgb, dims=2)
-    assert abs(f3[0] - 1 / 3) < 1e-12 and f3[1] == 1.0
-
-    # RGBA: alpha ignored for intensity
-    rgba = _png_encode([[[0, 0, 0, 7], [255, 255, 255, 9]]], ctype=6)
-    f4 = decode_image(rgba, dims=2)
-    assert f4 == [0.0, 1.0]
-
-    # 16-bit gray big-endian
-    p16 = _png_encode([[32768]], depth=16)
-    assert abs(decode_image(p16, dims=1)[0] - 32768 / 65535) < 1e-12
-
-    # interlaced -> per-row error through the real Arrow path
-    adam7 = _png_encode(rows, interlace=1)
-    truncated = png[:40]
-    df = spark.createDataFrame(
-        [(1, "image", bytearray(png)), (2, "image", bytearray(adam7)),
-         (3, "image", bytearray(truncated))],
-        "asset_id long, kind string, media binary")
-    out = {r["asset_id"]: r for r in
-           extract_features(df, fake_decode=False, dims=4).collect()}
-    assert out[1]["decode_ok"]
-    assert out[1]["feature"] == _pytest.approx(expect)
-    assert not out[2]["decode_ok"] and "interlaced" in out[2]["error"]
-    assert not out[3]["decode_ok"]
-
-
 def test_banded_hamming_first_match_equals_dedup_form(spark):
     """banded_hamming_pairs emits each colliding pair exactly once via
     its LOWEST agreeing band (first-match pairing); output must equal
@@ -914,262 +848,6 @@ def test_banded_hamming_first_match_equals_dedup_form(spark):
     assert got == sorted(map(tuple, ref.collect()))
     # multiplicity: the hamming-0 twin appears exactly once
     assert [g for g in got if g[:2] == (1, 2)] == [(1, 2, 0)]
-
-
-def test_image_phash_png_planted_pair(spark):
-    """PNG planted near-dup through the FULL perceptual-hash path:
-    text rasters encoded as real PNGs (not netpbm), decoded by the
-    stdlib PNG parser inside mapInPandas, blockhashed, and banded —
-    an exact dup collides at hamming 0, an unrelated doc pairs with
-    neither."""
-    from adsmasterpipeline_spark.operators.dedup import (
-        banded_hamming_pairs)
-    from adsmasterpipeline_spark.operators.multimodal import (
-        blockhash63, extract_features)
-
-    def raster(text):
-        txt = (text * 8)[:256].ljust(256)
-        data = [[ord(ch) for ch in txt[r * 64:(r + 1) * 64]]
-                for r in range(4)]
-        return _png_encode(data, filters=[0, 1, 2, 4])
-
-    base = ("the quick brown fox jumps over the lazy dog while spark "
-            "shuffles blocks across executors ")
-    other = ("completely different content about adaptive query "
-             "execution and partition coalescing in the optimizer ")
-    rows = [(1, bytearray(raster(base))), (2, bytearray(raster(base))),
-            (3, bytearray(raster(other)))]
-    df = spark.createDataFrame(rows, "asset_id long, media binary") \
-        .selectExpr("asset_id", "'image' as kind", "media")
-    feats = extract_features(df, fake_decode=False, dims=63)
-    sig = feats.where(F.col("decode_ok")).select(
-        "asset_id", blockhash63(F.col("feature")).alias("ph"))
-    pairs = {(r["id_a"], r["id_b"]): r["hamming"]
-             for r in banded_hamming_pairs(sig, "asset_id", "ph",
-                                           max_hamming=3).collect()}
-    assert pairs[(1, 2)] == 0
-    assert not any(3 in p for p in pairs)
-
-
-def _jpeg_encode_gray(img, comps_420=None, progressive=False, al=0):
-    """Test-side baseline JPEG encoder (forward twin of the production
-    decoder): full 8x8 orthonormal DCT, all-ones quant tables, custom
-    single-length Huffman tables (DC: 12 cats at 4 bits; AC: 176
-    run/size symbols at 8 bits), byte stuffing, optional flat-chroma
-    4:2:0 color (``comps_420=(cb, cr)``). ``progressive=True`` emits
-    SOF2 + a DC-only first scan (Ss=Se=0, Ah=0, Al=``al``) — DC
-    coefficients arithmetic-shifted by ``al`` per T.81 G.1.2.1, no AC
-    data at all (gray only)."""
-    import numpy as np
-
-    k = np.arange(8)
-    A = np.cos((2 * k[None, :] + 1) * k[:, None] * np.pi / 16) / 2
-    A[0, :] *= 1 / np.sqrt(2)
-    ZZ = [0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-          12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-          35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-          58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63]
-    bits = []
-
-    def put(v, n):
-        for i in range(n - 1, -1, -1):
-            bits.append((v >> i) & 1)
-
-    def cat(v):
-        a, c = abs(v), 0
-        while a:
-            a >>= 1
-            c += 1
-        return c
-
-    ac_syms = [r << 4 | s for r in range(16) for s in range(11)]
-    ac_code = {sym: i for i, sym in enumerate(ac_syms)}
-
-    def encode_block(block, pred):
-        f = A @ (block.astype(np.float64) - 128) @ A.T
-        q = np.round(f).astype(int)
-        zz = [q.flat[i] for i in ZZ]
-        diff = zz[0] - pred
-        s = cat(diff)
-        put(s, 4)
-        if s:
-            put(diff if diff >= 0 else diff + (1 << s) - 1, s)
-        run = 0
-        for v in zz[1:]:
-            if v == 0:
-                run += 1
-                continue
-            while run > 15:
-                put(ac_code[0xF0], 8)
-                run -= 16
-            s = cat(v)
-            put(ac_code[run << 4 | s], 8)
-            put(v if v >= 0 else v + (1 << s) - 1, s)
-            run = 0
-        if run:
-            put(ac_code[0x00], 8)
-        return zz[0]
-
-    h, w = img.shape
-    ncomp = 3 if comps_420 else 1
-    if progressive:
-        pred = 0
-        for by in range(h // 8):
-            for bx in range(w // 8):
-                blk = img[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8]
-                f = A @ (blk.astype(np.float64) - 128) @ A.T
-                tdc = int(round(f[0, 0])) >> al
-                diff = tdc - pred
-                pred = tdc
-                s = cat(diff)
-                put(s, 4)
-                if s:
-                    put(diff if diff >= 0 else diff + (1 << s) - 1, s)
-    elif comps_420:
-        cb, cr = comps_420
-        preds = [0, 0, 0]
-        for my in range(h // 16):
-            for mx in range(w // 16):
-                for by in range(2):
-                    for bx in range(2):
-                        blk = img[my * 16 + by * 8:my * 16 + by * 8 + 8,
-                                  mx * 16 + bx * 8:mx * 16 + bx * 8 + 8]
-                        preds[0] = encode_block(blk, preds[0])
-                preds[1] = encode_block(np.full((8, 8), cb), preds[1])
-                preds[2] = encode_block(np.full((8, 8), cr), preds[2])
-    else:
-        pred = 0
-        for by in range(h // 8):
-            for bx in range(w // 8):
-                pred = encode_block(
-                    img[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8], pred)
-    while len(bits) % 8:
-        bits.append(1)
-    raw = bytearray()
-    for i in range(0, len(bits), 8):
-        byte = int("".join(map(str, bits[i:i + 8])), 2)
-        raw.append(byte)
-        if byte == 0xFF:
-            raw.append(0x00)          # byte stuffing
-
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + (len(body) + 2).to_bytes(2, "big") + body
-
-    dqt = seg(0xDB, bytes([0x00]) + bytes([1] * 64))
-    dc_dht = seg(0xC4, bytes([0x00]) + bytes(
-        [0, 0, 0, 12] + [0] * 12) + bytes(range(12)))
-    ac_dht = seg(0xC4, bytes([0x10]) + bytes(
-        [0] * 7 + [176] + [0] * 8) + bytes(ac_syms))
-    if progressive:
-        sof = seg(0xC2, bytes([8]) + h.to_bytes(2, "big")
-                  + w.to_bytes(2, "big") + bytes([1, 1, 0x11, 0]))
-        sos = seg(0xDA, bytes([1, 1, 0x00, 0, 0, al]))
-        # TEM + fill byte before SOS: zero-payload markers a baseline
-        # segment walker mis-parses as length-carrying (ADVICE r5)
-        return (b"\xff\xd8" + dqt + dc_dht + b"\xff\x01" + b"\xff"
-                + sof + sos + bytes(raw) + b"\xff\xd9")
-    if ncomp == 1:
-        sof = seg(0xC0, bytes([8]) + h.to_bytes(2, "big")
-                  + w.to_bytes(2, "big") + bytes([1, 1, 0x11, 0]))
-        sos = seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-    else:
-        sof = seg(0xC0, bytes([8]) + h.to_bytes(2, "big")
-                  + w.to_bytes(2, "big")
-                  + bytes([3, 1, 0x22, 0, 2, 0x11, 0, 3, 0x11, 0]))
-        sos = seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0]))
-    return (b"\xff\xd8" + dqt + dc_dht + ac_dht + sof + sos
-            + bytes(raw) + b"\xff\xd9")
-
-
-def test_jpeg_decode_baseline(spark):
-    """Stdlib baseline JPEG: a gradient grayscale image round-trips
-    through the forward DCT encoder within quantization error; flat
-    4:2:0 YCbCr color converts through YCbCr->RGB->mean-gray;
-    progressive and truncated payloads record per-row errors through
-    the real Arrow path."""
-    import numpy as np
-    import pytest as _pytest
-
-    from adsmasterpipeline_spark.operators.multimodal import (
-        _jpeg_gray, decode_image, extract_features)
-
-    # 16x8 horizontal gradient: strip means must track the gradient
-    img = np.tile(np.linspace(40, 215, 16).astype(np.uint8), (8, 1))
-    jp = _jpeg_encode_gray(img)
-    gray = _jpeg_gray(jp)
-    assert gray.shape == (8, 16)
-    assert np.abs(gray * 255 - img).max() < 3.0  # quant + IDCT error
-    f = decode_image(jp, dims=4)
-    want = [img[:, c * 4:(c + 1) * 4].mean() / 255 for c in range(4)]
-    assert f == _pytest.approx(want, abs=0.02)
-
-    # flat 4:2:0 color: Y=120, Cb=100, Cr=160 -> exact YCbCr->RGB mean
-    cimg = np.full((16, 16), 120, dtype=np.uint8)
-    jc = _jpeg_encode_gray(cimg, comps_420=(100, 160))
-    g = _jpeg_gray(jc)
-    y, cb, cr = 120.0, 100 - 128.0, 160 - 128.0
-    want_gray = ((y + 1.402 * cr) + (y - 0.344136 * cb - 0.714136 * cr)
-                 + (y + 1.772 * cb)) / 3 / 255
-    assert np.abs(g - want_gray).max() < 0.02
-
-    # progressive flag (SOF2) and truncation -> per-row errors
-    progressive = jp.replace(b"\xff\xc0", b"\xff\xc2", 1)
-    df = spark.createDataFrame(
-        [(1, "image", bytearray(jp)), (2, "image", bytearray(progressive)),
-         (3, "image", bytearray(jp[:40]))],
-        "asset_id long, kind string, media binary")
-    out = {r["asset_id"]: r for r in
-           extract_features(df, fake_decode=False, dims=4).collect()}
-    assert out[1]["decode_ok"]
-    assert not out[2]["decode_ok"] and "progressive" in out[2]["error"]
-    assert not out[3]["decode_ok"]
-
-
-def test_jpeg_progressive_dc_decode(spark):
-    """Progressive JPEG (SOF2) DC-first-scan decode: the scan IS the
-    8x-downsampled image, which is exactly what the block-mean /
-    phash features consume. Planted pair: the SAME image encoded
-    progressive and baseline must yield matching features through the
-    real Arrow path; arithmetic-coded SOF stays a per-row error. Also
-    exercises zero-payload TEM + fill bytes in the segment walk
-    (ADVICE r5: these desynced the round-5 parser)."""
-    import numpy as np
-    import pytest as _pytest
-
-    from adsmasterpipeline_spark.operators.multimodal import (
-        _jpeg_gray, decode_image, extract_features)
-
-    rng = np.random.default_rng(7)
-    # block-constant image -> DC-only reconstruction is near-exact
-    blocks = rng.integers(30, 226, size=(4, 4))
-    img = np.kron(blocks, np.ones((8, 8))).astype(np.uint8)
-
-    jp_prog = _jpeg_encode_gray(img, progressive=True, al=1)
-    gray = _jpeg_gray(jp_prog)
-    # DC raster pixel-replicated back to the true frame size, so the
-    # geometry matches a baseline decode of the same image
-    assert gray.shape == (32, 32)
-    # al=1 drops one LSB of the quantized DC: mean error < 1 level
-    assert np.abs(gray * 255 - img).max() < 1.5
-
-    f_prog = decode_image(jp_prog, dims=4)
-    f_base = decode_image(_jpeg_encode_gray(img), dims=4)
-    assert f_prog == _pytest.approx(f_base, abs=0.02)
-
-    other = np.kron(rng.integers(30, 226, size=(4, 4)),
-                    np.ones((8, 8))).astype(np.uint8)
-    jp_other = _jpeg_encode_gray(other, progressive=True, al=1)
-    arith = jp_prog.replace(b"\xff\xc2", b"\xff\xc9", 1)
-    df = spark.createDataFrame(
-        [(1, "image", bytearray(jp_prog)), (2, "image", bytearray(jp_other)),
-         (3, "image", bytearray(arith))],
-        "asset_id long, kind string, media binary")
-    out = {r["asset_id"]: r for r in
-           extract_features(df, fake_decode=False, dims=4).collect()}
-    assert out[1]["decode_ok"] and out[2]["decode_ok"]
-    assert out[1]["feature"] == _pytest.approx(f_prog, abs=1e-6)
-    assert out[1]["feature"] != _pytest.approx(out[2]["feature"], abs=0.02)
-    assert not out[3]["decode_ok"] and "arithmetic" in out[3]["error"]
 
 
 def test_hadamard_bucket_vectorized_dirty_vectors(spark):
