@@ -69,9 +69,7 @@ def cmd_ingest(args) -> int:
     n = merged.count()
     if exists:
         deleted = event_keys.join(merged, "bibcode", "left_anti")
-        t.merge(merged, deleted_keys=deleted,
-                merge_on_read=bool(getattr(
-                    args, "merge_on_read", False)))
+        t.merge(merged, deleted_keys=deleted)
         p = t.last_merge_probe or {}
         out["probe"] = {
             "live_files": p.get("live_files"),
@@ -904,10 +902,6 @@ def main(argv=None) -> int:
                     help=_FMT_HELP)
     pi.add_argument("--rows-per-file", type=int, default=500_000,
                     help="target rows per key-clustered file")
-    pi.add_argument("--merge-on-read", action="store_true",
-                    help="deletion-vector MERGE — mask "
-                         "matched rows + one add file, zero existing "
-                         "files rewritten (compact materializes)")
     pi.set_defaults(fn=cmd_ingest)
 
     pr = sub.add_parser("reindex", help="incremental dispatch to sinks")

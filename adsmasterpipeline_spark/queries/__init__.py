@@ -45,29 +45,9 @@ def query(name: str, oracle: Optional[str], *tags: str, doc: str = ""):
 # rows-only entries (oracle=None) must not burn checked slots.  This
 # list pins the front of the window explicitly; oracled queries not
 # named here follow in registration order; rows-only entries always
-# sort last.
-#
-# Round-7 rotation (VERDICT.md r6 task 2): cumulative driver-green
-# across rounds is what counts. This window = the TWO round-6
-# additions that have never had a driver row (judge-run green only:
-# shingle_containment_pairs, distinct_ngram_diversity — rotating them
-# in returns cumulative driver-green to 100% of oracled queries with
-# zero judge-substituted rows) + all 27 oracled queries whose last
-# driver-green is r04 (the stalest tier, computed from committed
-# CORRECTNESS_r0{1..6}.json) + the alphabetically-first 21 of the 49
-# r05-stale queries (the rest rotate in next round). No oracled
-# query's SQL or plan changed in round 7: the round's changes
-# (TxnTable stats/cleanup/retry, streaming insert stat-fold, crash-
-# safe publish, cli txn routing) are pytest/STREAMTXN/TXNPROBE
-# surfaces, and the ann_ivf/ann_pq retunes are rows-only entries.
+# sort last. The window holds the oracled queries that passed the
+# gate longest ago, so every query is checked in turn.
 PRIORITY: tuple[str, ...] = (
-    # Round-12 window (same rotation rule as r7/r11): computed from
-    # committed CORRECTNESS_r0{1..11}.json — every oracled query's
-    # LAST driver-green round. Distribution after r11 over the 135
-    # oracled queries: {r9: 35, r10: 50, r11: 50}. This window = all
-    # 35 whose last green is r09, then the alphabetically-first 15 of
-    # the 50 whose last green is r10 — after this round the cumulative
-    # last-green floor advances to r10.
     # -- last driver-green r09 (35) --
     "embedding_cosine_neardup_gemm", "embedding_quantize",
     "except_keys", "explode_tokens_top", "first_last_value",

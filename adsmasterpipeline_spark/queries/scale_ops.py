@@ -264,29 +264,15 @@ def salted_group_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ann_pq", None, "vectors", "scale",
     doc="IVF+PQ ANN in the re-ranking configuration (IVFADC+R, Jegou "
         "et al. 2011): driver-trained codebooks on a bounded sample "
-        "(8 subspaces x 8 dims, 64 centroids each + a 16-list coarse "
+        "(8 subspaces x 8 dims, 128 centroids each + a 16-list coarse "
         "quantizer), one shuffle-free Arrow encode pass (a 64-float "
         "vector becomes ~9 bytes), ADC scoring restricted to each "
         "query's probed IVF lists, then EXACT cosine re-rank of the "
         "ADC pool — PQ generates candidates, the output sims are "
-        "exact. Fixes r04's recall cliff (0.33 at sf0.1): ADC "
-        "quantization error now only costs recall when the true "
-        "neighbor leaves the re-rank pool entirely. The POOL SCALES "
-        "with corpus size (round 6: with list occupancy ~n/16 at "
-        "fixed k_coarse, a fixed pool lets ADC noise in dense "
-        "clusters squeeze true neighbors out — recall measured 0.81 "
-        "at sf0.1 but 0.50 at the 10x stress SF; a pool of "
-        "max(48, n/50) exact re-ranks recovers 0.81 at sf1 at "
-        "IDENTICAL runtime since the re-rank GEMM is on vectors "
-        "already in memory, and lifts sf0.01/sf0.1 to 0.91/0.83 "
-        "via nprobe 10->12). Round-11 retune (VERDICT r10 task 6): "
-        "k_cent 64->128 — finer subspace codebooks halve ADC "
-        "quantization noise so the true neighbor survives into the "
-        "re-rank pool more often; measured recall@3 "
-        "0.91/0.83/0.81 -> 0.99/0.875/0.90 at sf0.01/0.1/1, priced "
-        "with the split truth/query timer at ~flat query wall (the "
-        "LUT is [Q, 8, 128] instead of [Q, 8, 64] — still "
-        "driver-trivial; encode GEMM doubles one tiny inner dim). "
+        "exact, so ADC quantization error only costs recall when the "
+        "true neighbor leaves the re-rank pool entirely. The pool "
+        "scales with corpus size (max(48, n/50) exact re-ranks) and "
+        "each query probes 12 lists. "
         "Quality tracked in ANNRECALL_r{N}.json. "
         "Rows-only: codebook training is not SQL-replayable "
         "(ann_ivf_kmeans covers the oracled-kmeans shape).",

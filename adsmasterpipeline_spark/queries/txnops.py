@@ -1,9 +1,9 @@
 """Oracled query surfaces for the TxnTable lifecycle ops that were
 pytest-green only (VERDICT r9 task 6, extended r10/r11): RESTORE's
-change-feed diff, CHECK-constraint write gating, deletion-vector
-DELETE / RESTORE, and merge-on-read MERGE — each scripted
-deterministically from the driver's synthetic tables so the DuckDB
-oracle can recompute the exact same answer from the sources.
+change-feed diff, CHECK-constraint write gating and deletion-vector
+DELETE / RESTORE — each scripted deterministically from the synthetic
+source tables so the DuckDB oracle can recompute the exact same answer
+from them.
 
 All of them rebuild a scratch TxnTable under /tmp on every call
 (rmtree + overwrite/merge script), so repeated runs — the driver gate,
@@ -352,63 +352,3 @@ def txn_partition_dv_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe = t.last_read_probe
     assert len(probe["candidate_files"]) < probe["live_files"], probe
     return out
-
-
-@query(
-    "txn_mor_merge_feed",
-    """
-    WITH mx AS (SELECT MAX(c_custkey) + 1 AS off FROM customer),
-    c AS (SELECT c_custkey, c_mktsegment,
-                 CAST(ROUND(c_acctbal * 100) AS BIGINT) AS cents
-          FROM customer)
-    SELECT c_custkey, cents, 'update_preimage' AS change_type
-    FROM c WHERE c_mktsegment = 'AUTOMOBILE'
-    UNION ALL
-    SELECT c_custkey, cents + 100, 'update_postimage'
-    FROM c WHERE c_mktsegment = 'AUTOMOBILE'
-    UNION ALL
-    SELECT c_custkey, cents, 'delete'
-    FROM c WHERE c_mktsegment = 'HOUSEHOLD'
-    UNION ALL
-    SELECT c_custkey + (SELECT off FROM mx), cents, 'insert'
-    FROM c WHERE c_mktsegment = 'MACHINERY'
-    """,
-    "txn", "dv", "cdf",
-    doc="Merge-on-read MERGE served on the change feed (VERDICT r10 "
-        "task 5): bootstrap customers in integer cents, then ONE "
-        "merge(merge_on_read=True) that updates AUTOMOBILE (+100), "
-        "deletes HOUSEHOLD, and inserts MACHINERY clones at offset "
-        "keys — executed as deletion-vector masks plus a single add "
-        "file, zero data files rewritten (asserted). The feed must "
-        "key-diff the masked pre-images against the add file into "
-        "exactly the update pre/post pairs, deletes, and inserts the "
-        "oracle recomputes from the customer table alone.")
-def txn_mor_merge_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sinks.txnlake import txn_table
-
-    cents = F.round(F.col("c_acctbal") * 100).cast("long")
-    base = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment", cents.alias("cents"))
-    t = txn_table(spark, _scratch(sf_dir, "mor_merge_feed"),
-                  key="c_custkey", cluster_writes=True,
-                  rows_per_file=100_000)
-    t.overwrite(base)                                            # v0
-    off = base.agg(F.max("c_custkey")).collect()[0][0] + 1
-    upd = base.where(F.col("c_mktsegment") == "AUTOMOBILE") \
-        .withColumn("cents", F.col("cents") + F.lit(100))
-    ins = base.where(F.col("c_mktsegment") == "MACHINERY") \
-        .withColumn("c_custkey", F.col("c_custkey") + F.lit(int(off)))
-    dels = base.where(F.col("c_mktsegment") == "HOUSEHOLD") \
-        .select("c_custkey")
-    assert t.merge(upd.unionByName(ins), deleted_keys=dels,
-                   merge_on_read=True) == 1                      # v1
-    # the merge-on-read shape, asserted at every SF: matched rows are
-    # MASKED (deletion vectors), the batch lands as adds, and no
-    # existing data file is rewritten or dropped
-    e = t._load_json(dict(t._entry_files())[1])
-    assert e["operation"] == "merge" and e["removes"] == []
-    assert e["adds"] and e.get("dvs")
-    assert t.last_merge_probe["mode"] == "merge_on_read"
-    return t.changes(0, 1).select(
-        "c_custkey", "cents",
-        F.col("_change_type").alias("change_type"))

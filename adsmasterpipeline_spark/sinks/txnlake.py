@@ -65,19 +65,18 @@ through it.
   file.
 - **Lifecycle**: ``read_for_keys`` (stat-pruned point reads),
   optional ``cluster_writes`` (range-partition every written batch —
-  what makes min/max pruning effective) and ``bloom_bits`` per-file
-  key blooms (file skipping on hash-partitioned layouts),
-  ``compact()`` (OPTIMIZE bin-packing: file count tracks data, not
-  epochs), ``vacuum()`` (retention-horizon GC of unreachable files
-  with a modification-time guard for in-flight writers), and
-  ``history()`` (DESCRIBE HISTORY).
+  what makes min/max pruning effective), ``compact()`` (OPTIMIZE
+  bin-packing: file count tracks data, not epochs), ``vacuum()``
+  (retention-horizon GC of unreachable files with a
+  modification-time guard for in-flight writers), and ``history()``
+  (DESCRIBE HISTORY).
 
 Scale notes: the log fold and file lists live on the driver — bounded
 by FILE COUNT (what Delta itself keeps driver-side after parsing the
 log), never by row count. All row work (membership probe, rewrite,
 survivor union) is DataFrame joins; deleted keys are never collected
 into an IN-list (the pruning collect is capped at
-``prune_key_limit`` keys and falls back to min/max range overlap
+``_PRUNE_KEY_LIMIT`` keys and falls back to min/max range overlap
 above it).
 """
 
@@ -94,6 +93,9 @@ from pyspark.sql import functions as F
 
 _LOG_DIR = "_txn"
 _LAST_CHECKPOINT = "_last_checkpoint"
+# batches with at most this many distinct keys prune candidate files
+# by exact key containment; larger ones by min/max range overlap
+_PRUNE_KEY_LIMIT = 65536
 
 
 class CommitConflict(RuntimeError):
@@ -217,12 +219,9 @@ class TxnTable:
 
     def __init__(self, spark: SparkSession, path: str, key: str,
                  checkpoint_every: int = 10,
-                 prune_key_limit: int = 65536,
                  cluster_writes: bool = False,
                  rows_per_file: int = 500_000,
-                 bloom_bits: int = 0,
                  stats_cols: tuple[str, ...] = ("id", "updated"),
-                 schema_evolution: bool = False,
                  dv_broadcast_budget: int = 1_000_000,
                  partition_by: tuple[str, ...] = ()):
         self.spark = spark
@@ -248,7 +247,6 @@ class TxnTable:
                 f"one partition per row")
         self._guard_dv_columns(self.partition_by, "partition_by")
         self.checkpoint_every = checkpoint_every
-        self.prune_key_limit = prune_key_limit
         # NON-KEY columns to record per-file min/max for (Delta's
         # dataSkippingNumIndexedCols analogue — VERDICT r6 task 3):
         # names absent from a written frame are skipped, so the
@@ -259,14 +257,6 @@ class TxnTable:
         # a no-op for tables without those columns. The extra min/max
         # aggregates ride the stats job _write_data already runs.
         self.stats_cols = tuple(stats_cols)
-        # schema_evolution=True is Delta's mergeSchema: a merge whose
-        # batch carries NEW columns widens the table (survivors union
-        # by name with nulls for the missing side) and every read
-        # merges per-file footers so old files surface the new
-        # columns as null. Off by default — the strict mode fails
-        # loudly on drift, which is what a fixed-schema pipeline
-        # wants.
-        self.schema_evolution = schema_evolution
         # cluster_writes range-partitions every written batch by key
         # (~rows_per_file rows per data file) — Delta's cluster-by
         # analogue. Key-clustered files are what make the min/max
@@ -278,12 +268,6 @@ class TxnTable:
         # checkpoints retain app txn ids from this many trailing
         # commits (replay detection window — Delta's txn expiry)
         self.txn_retention_commits = 10_000
-        # bloom_bits > 0 additionally records a per-file key BLOOM
-        # FILTER in each add (Delta's bloom index analogue): min/max
-        # ranges prune nothing on a hash-partitioned table (every
-        # file spans the full key range), but bloom membership still
-        # skips files. Power-of-two bits; ~512 bytes/file at 4096.
-        self.bloom_bits = bloom_bits
         # PER-SCAN deletion-vector budget (VERDICT r10 #2): the
         # default DV read path broadcasts ALL scanned files' unpurged
         # positions in one anti-join — F.broadcast is a hint that
@@ -768,12 +752,6 @@ class TxnTable:
                 aggs.append(F.min(c).alias(f"_mn{i}"))
                 aggs.append(F.max(c).alias(f"_mx{i}"))
             rows = tagged.groupBy("_f").agg(*aggs).collect()
-            blooms = {}
-            if self.bloom_bits:
-                blooms = {
-                    os.path.basename(_decode_uri(r["_f"])): r["bloom"]
-                    for r in self._file_blooms(
-                        tagged.select("_f", self.key))}
             for r in rows:
                 base = os.path.basename(_decode_uri(r["_f"]))
                 mn, mx = r["mn"], r["mx"]
@@ -802,9 +780,6 @@ class TxnTable:
                                 f"[{cs['mn']!r}, {cs['mx']!r}]")
                         part[c] = cs["mn"]
                     s["part"] = part
-                if base in blooms:
-                    s["bloom"] = blooms[base]
-                    s["bloom_bits"] = self.bloom_bits
                 stats[base] = s
             # a part-file absent from the stats aggregate is EMPTY
             # (Spark writes zero-row parts for some shuffle shapes):
@@ -820,36 +795,10 @@ class TxnTable:
                                  "rows": None})}
                 for n in names]
 
-    def _file_blooms(self, tagged: DataFrame) -> list:
-        """Per-file base64 key bloom, built executor-side in one Arrow
-        pass per file group over a slim (_f, key) projection; min/max
-        stats come from the JVM aggregate in ``_write_data``."""
-        import base64
-
-        key, m = self.key, self.bloom_bits
-
-        def per_file(pdf):
-            import pandas as pd
-            arr = bytearray(m // 8)
-            for k in pdf[key]:
-                h = _bloom_digest(k)
-                for p in (h[0] % m, h[1] % m):
-                    arr[p >> 3] |= 1 << (p & 7)
-            return pd.DataFrame({
-                "_f": [pdf["_f"].iloc[0]],
-                "bloom": [base64.b64encode(bytes(arr)).decode()]})
-
-        return tagged.groupBy("_f").applyInPandas(
-            per_file, "_f string, bloom string").collect()
-
     def _read_files(self, files: list[str]) -> DataFrame:
-        """Scan table-relative data files; with schema_evolution the
-        per-file footers merge so pre-widening files surface later
-        columns as null (Delta's mergeSchema read)."""
-        r = self.spark.read
-        if self.schema_evolution:
-            r = r.option("mergeSchema", "true")
-        return r.parquet(*[os.path.join(self.path, f) for f in files])
+        """Scan table-relative data files."""
+        return self.spark.read.parquet(
+            *[os.path.join(self.path, f) for f in files])
 
     # ------------------------------------------------ deletion vectors
     # Merge-on-read DELETE (the public Delta deletionVectors feature):
@@ -886,7 +835,7 @@ class TxnTable:
         ``_dv_file`` / ``_dv_pos`` / ``_dv_commit`` (joined on, then
         dropped). A table or batch that already carries one of those
         names would silently mis-join or lose user data on any DV
-        read, delete, or MOR merge — refuse loudly instead
+        read, delete or merge — refuse loudly instead
         (ADVICE r10)."""
         clash = sorted(c for c in cols if c.startswith("_dv_"))
         if clash:
@@ -976,8 +925,8 @@ class TxnTable:
                           dvs: dict[str, dict]) -> DataFrame:
         """Position-tagged LIVE rows of ``files`` (the _dv_file /
         _dv_pos working columns kept for callers that classify or
-        probe by position: the merge probe, the MOR matched set, the
-        delete classifier). Every DV-masking consumer routes through
+        probe by position: the merge probe and the delete
+        classifier). Every DV-masking consumer routes through
         here so the per-scan budget applies uniformly — no call site
         is left with its own unbounded broadcast."""
         tagged = self._with_pos(self._read_files(files))
@@ -1092,17 +1041,11 @@ class TxnTable:
                 .drop("_dv_file", "_dv_pos"))
 
     def _empty_like(self, snap: Snapshot) -> DataFrame:
-        """Zero-row frame with the TABLE schema. In strict mode every
-        live file shares one schema, so any single footer suffices;
-        with schema_evolution a file written before a widening merge
-        lacks the newer columns (mergeSchema over ONE file adds
-        nothing), so the empty frame must merge ALL live footers —
-        otherwise code selecting a post-widening column fails only on
-        the rare empty-result path (ADVICE r7). Footer-only cost:
-        limit(0) never reads row data."""
-        files = (list(snap.live) if self.schema_evolution
-                 else [next(iter(snap.live))])
-        return self._read_files(files).limit(0)
+        """Zero-row frame with the TABLE schema: every live file
+        shares one schema (merges refuse a drifted batch), so any
+        single footer suffices. Footer-only cost: limit(0) never
+        reads row data."""
+        return self._read_files([next(iter(snap.live))]).limit(0)
 
     def max_stat(self, col: str):
         """Table-wide max of ``col`` derived ENTIRELY from the
@@ -1423,8 +1366,9 @@ class TxnTable:
         key = self.key
         if pre is None and post is None:
             raise AssertionError("commit with neither adds nor removes")
-        # align schemas (schema_evolution: pre-widening files lack the
-        # new columns — surface them as typed nulls on the narrow side)
+        # align schemas (a full overwrite may replace the table's
+        # columns — surface the missing ones as typed nulls on the
+        # narrow side)
         cols: dict[str, object] = {}
         for df in (post, pre):
             if df is not None:
@@ -1492,6 +1436,28 @@ class TxnTable:
                 .unionByName(upd_pre).unionByName(upd_post))
 
     # ------------------------------------------------------ operations
+    @staticmethod
+    def _with_retries(attempt_once, retries: int):
+        """Optimistic-concurrency retry shared by every write: run
+        ``attempt_once()`` up to ``retries + 1`` times, re-planning on
+        a ``CommitConflict`` (another writer took the staged version)
+        or a lost input file (``_is_lost_file_error``: a vacuum
+        collected a planned input past the retention horizon) —
+        Delta's commit-conflict-then-rebase loop. Each attempt takes
+        its own snapshot, so pruning, the touched-file probe and the
+        app_txn_id idempotence check all re-evaluate. ``retries=0``
+        keeps the raise-on-conflict contract for single-writer
+        callers; a losing attempt's data files are unreferenced
+        orphans (vacuum collects them), never corruption."""
+        for attempt in range(retries + 1):
+            try:
+                return attempt_once()
+            except Exception as exc:
+                if attempt == retries or not (
+                        isinstance(exc, CommitConflict)
+                        or _is_lost_file_error(exc)):
+                    raise
+
     def overwrite(self, df: DataFrame,
                   app_txn_id: str | None = None,
                   replace_where: str | None = None,
@@ -1511,16 +1477,9 @@ class TxnTable:
         refusal). At 100 TB this is the re-ingest primitive: replace
         one day / one source shard in O(that partition), never
         O(table)."""
-        for attempt in range(retries + 1):
-            try:
-                return self._overwrite_once(df, app_txn_id,
-                                            replace_where)
-            except CommitConflict:
-                if attempt == retries:
-                    raise
-            except Exception as exc:
-                if attempt == retries or not _is_lost_file_error(exc):
-                    raise
+        return self._with_retries(
+            lambda: self._overwrite_once(df, app_txn_id, replace_where),
+            retries)
 
     def _overwrite_once(self, df: DataFrame,
                         app_txn_id: str | None,
@@ -1586,7 +1545,7 @@ class TxnTable:
                           affected: DataFrame) -> list[str]:
         """Driver-side file skipping: keep only live files whose
         [min_key, max_key] can contain an affected key. Small batches
-        (<= prune_key_limit keys) test each file's range against the
+        (<= _PRUNE_KEY_LIMIT keys) test each file's range against the
         sorted key list (exact containment, strongest pruning); larger
         ones fall back to range overlap. Files without stats are
         always candidates (never incorrectly skipped)."""
@@ -1597,8 +1556,7 @@ class TxnTable:
             return []
         bmin, bmax = agg["mn"], agg["mx"]
         keys = None
-        digests = None
-        if agg["n"] <= self.prune_key_limit:
+        if agg["n"] <= _PRUNE_KEY_LIMIT:
             keys = sorted(r[0] for r in affected.collect()
                           if r[0] is not None)
             if keys and not _jsonable(keys[0]):
@@ -1617,20 +1575,6 @@ class TxnTable:
                     i = bisect.bisect_left(keys, mn)
                     if i >= len(keys) or keys[i] > mx:
                         continue
-                    if s.get("bloom"):
-                        # bloom skip: effective even when the file's
-                        # range spans everything (hash-partitioned
-                        # layouts). md5 digests computed once per
-                        # batch key, bit-tested per file.
-                        import base64
-                        if digests is None:
-                            digests = [_bloom_digest(k) for k in keys]
-                        bl = base64.b64decode(s["bloom"])
-                        bb = s.get("bloom_bits", len(bl) * 8)
-                        j = bisect.bisect_right(keys, mx)
-                        if not any(_bloom_contains(bl, digests[x], bb)
-                                   for x in range(i, j)):
-                            continue
             except TypeError:
                 pass                   # incomparable: keep candidate
             out.append(p)
@@ -1666,113 +1610,14 @@ class TxnTable:
 
     def merge(self, changed: DataFrame,
               deleted_keys: DataFrame | None = None,
-              app_txn_id: str | None = None, retries: int = 0,
-              merge_on_read: bool = False) -> int:
-        """MERGE with optimistic-concurrency retry: on a
-        ``CommitConflict`` (another writer took the staged version)
-        the WHOLE merge re-runs against the fresh snapshot — candidate
-        pruning, touched-file probe, and the app_txn_id idempotence
-        check all re-evaluate, exactly Delta's
-        commit-conflict-then-rebase loop. ``retries=0`` (default)
-        preserves the raise-on-conflict contract for single-writer
-        callers; a conflicted attempt's data files are unreferenced
-        orphans (vacuum collects them), never corruption.
-
-        ``merge_on_read=True`` executes the merge in the deletion-
-        vector form (Delta's DV-backed UPDATE/MERGE): matched rows
-        are MASKED in place and the batch's post-merge rows land in
-        one new add file — zero existing files rewritten, so a
-        scattered update of K rows writes O(K + positions) instead of
-        rewriting every touched file's full width. The change feed is
-        identical either way (masked pre-images vs the add file's
-        post-images key-diff into the same insert/update/delete
-        rows); readers pay the position mask until ``compact()``
-        materializes. Copy-on-write (the default) remains right when
-        batches repeatedly hit the same files (no mask accumulation);
-        merge-on-read wins for wide tables with scattered updates."""
-        for attempt in range(retries + 1):
-            try:
-                if merge_on_read:
-                    return self._merge_mor_once(changed, deleted_keys,
-                                                app_txn_id)
-                return self._merge_once(changed, deleted_keys,
-                                        app_txn_id)
-            except CommitConflict:
-                if attempt == retries:
-                    raise
-            except Exception as exc:
-                # stale-snapshot file loss (a vacuum collected a
-                # planned input past the retention horizon): re-plan
-                # against a fresh snapshot, same budget as conflicts
-                if attempt == retries or not _is_lost_file_error(exc):
-                    raise
-
-    def _merge_mor_once(self, changed: DataFrame,
-                        deleted_keys: DataFrame | None,
-                        app_txn_id: str | None) -> int:
-        """Merge-on-read MERGE: mask every live row whose key is in
-        the batch (changed or deleted), write the upserts as one new
-        add file, commit both in one atomic entry. The masking reuses
-        the DV delete machinery; candidate pruning and the live-row
-        probe are the same stat/bloom-driven file skipping as
-        copy-on-write."""
-        key = self.key
-        self._guard_dv_columns(changed.columns,
-                               "merge(merge_on_read=True)")
-        snap = self._snapshot()
-        if app_txn_id is not None and app_txn_id in snap.txn_ids:
-            return snap.version
-        pmeta = self._reconcile_partitioning(snap)
-        if deleted_keys is None:
-            deleted_keys = changed.select(key).limit(0)
-        deleted_keys = deleted_keys.select(key).distinct()
-        affected = (changed.select(key)
-                    .unionByName(deleted_keys).distinct()
-                    .localCheckpoint())
-        candidates = self._prune_candidates(snap.live, affected)
-        v = snap.version + 1
-        matched = None
-        if candidates:
-            live_rows = self._live_rows_tagged(candidates, snap.dvs)
-            matched = (live_rows.join(affected, key, "left_semi")
-                       .select("_dv_file", "_dv_pos")
-                       .localCheckpoint())
-        # stage + validate the adds BEFORE writing the mask parquet:
-        # a constraint refusal then leaves only the staged files
-        # (which _validate_staged cleans up), never an orphan DV dir
-        upserts = changed.join(deleted_keys, key, "left_anti")
-        if snap.live:
-            # the copy-on-write path enforces the schema contract
-            # through its survivors union (strict mode fails loudly on
-            # drift, schema_evolution widens by name); merge-on-read
-            # writes the batch AS-IS, so mirror the contract here by
-            # unioning with a zero-row table-schema frame — a drifted
-            # batch raises before anything lands, and a widening batch
-            # (evolution on) writes the table ∪ batch columns exactly
-            # like a CoW rewrite would (ADVICE r10, medium).
-            upserts = self._empty_like(snap).unionByName(
-                upserts, allowMissingColumns=self.schema_evolution)
-        adds = self._write_data(upserts, v)
-        self._validate_staged(adds, snap.constraints,
-                              "the merge batch")
-        dead: list = []
-        extra: dict = {}
-        if matched is not None:
-            dead, extra = self._mask_commit_parts(matched, snap, v)
-        extra.update(pmeta)
-        self.last_merge_probe = {
-            "live_files": len(snap.live),
-            "candidate_files": sorted(candidates),
-            "touched_files": sorted(
-                dead + list(extra.get("dvs") or {})),
-            "mode": "merge_on_read",
-        }
-        if not adds and not dead and not extra:
-            return snap.version        # empty batch: no commit
-        self._commit(v, adds, dead, "merge", app_txn_id,
-                     extra=extra or None,
-                     prior_live=snap.live, prior_dvs=snap.dvs)
-        return v
+              app_txn_id: str | None = None, retries: int = 0) -> int:
+        """Copy-on-write MERGE (``_merge_once``) with the shared
+        optimistic-concurrency retry (``_with_retries``): on a
+        ``CommitConflict`` or a lost input file the whole merge
+        re-runs against the fresh snapshot."""
+        return self._with_retries(
+            lambda: self._merge_once(changed, deleted_keys, app_txn_id),
+            retries)
 
     def _merge_once(self, changed: DataFrame,
                     deleted_keys: DataFrame | None = None,
@@ -1792,7 +1637,9 @@ class TxnTable:
            (minus deletes); untouched files are re-referenced as-is;
         4. changed keys absent from the table insert via the same
            union (they appear in no file, so they survive the
-           anti-join unconditionally);
+           anti-join unconditionally); a batch that touches no file
+           is unioned with a zero-row frame of the table schema
+           instead, so a drifted batch refuses either way;
         5. commit {adds: rewritten+inserted files, removes: touched
            files} as one atomic log entry.
 
@@ -1800,6 +1647,7 @@ class TxnTable:
         ``app_txn_id`` was already applied — idempotent replay).
         """
         key = self.key
+        self._guard_dv_columns(changed.columns, "merge")
         snap = self._snapshot()
         if app_txn_id is not None and app_txn_id in snap.txn_ids:
             return snap.version
@@ -1862,10 +1710,14 @@ class TxnTable:
             # drop their pointers
             survivors = (self._read_live(touched, snap.dvs)
                          .join(affected, key, "left_anti"))
-            # schema evolution: a widening batch unions by name with
-            # nulls on the narrow side; strict mode fails loudly
-            new_rows = survivors.unionByName(
-                upserts, allowMissingColumns=self.schema_evolution)
+            # a batch whose columns differ from the table's fails
+            # loudly here
+            new_rows = survivors.unionByName(upserts)
+        elif snap.live:
+            # nothing touched (every key is new): the same schema
+            # contract against a zero-row table-schema frame, so a
+            # drifted batch refuses before anything is written
+            new_rows = self._empty_like(snap).unionByName(upserts)
         else:
             new_rows = upserts
         # rewrite is read-from-committed-files, write-to-new-dir: no
@@ -1895,8 +1747,8 @@ class TxnTable:
 
         Exactly one of:
 
-        - ``keys``: DataFrame of key values — stat/bloom-pruned like
-          a merge (files that cannot hold an affected key are never
+        - ``keys``: DataFrame of key values — stat-pruned like a
+          merge (files that cannot hold an affected key are never
           opened);
         - ``where``: SQL predicate string or Column. String
           predicates of stat-checkable shape (comparisons / IN /
@@ -1915,15 +1767,8 @@ class TxnTable:
         is the pressure valve that keeps that broadcast bounded.
         Returns the committed version — unchanged when nothing
         matched (no empty commits)."""
-        for attempt in range(retries + 1):
-            try:
-                return self._delete_once(keys, where, app_txn_id)
-            except CommitConflict:
-                if attempt == retries:
-                    raise
-            except Exception as exc:
-                if attempt == retries or not _is_lost_file_error(exc):
-                    raise              # see merge(): stale-file rebase
+        return self._with_retries(
+            lambda: self._delete_once(keys, where, app_txn_id), retries)
 
     def _delete_once(self, keys: DataFrame | None, where,
                      app_txn_id: str | None) -> int:
@@ -1971,12 +1816,12 @@ class TxnTable:
 
     def _mask_commit_parts(self, matched: DataFrame,
                            snap: Snapshot, v: int) -> tuple[list, dict]:
-        """Shared masking step for DV delete and merge-on-read MERGE:
-        classify the matched LIVE positions (``matched`` must already
-        exclude previously-masked ones) into fully-dead files (every
-        remaining row died — dropped outright) and files getting a
-        new cumulative vector; writes the vector parquet and returns
-        (dead_files, commit extra with dvs/dv_prior)."""
+        """Masking step of the DV delete: classify the matched LIVE
+        positions (``matched`` must already exclude previously-masked
+        ones) into fully-dead files (every remaining row died —
+        dropped outright) and files getting a new cumulative vector;
+        writes the vector parquet and returns (dead_files, commit
+        extra with dvs/dv_prior)."""
         per_file = {r["_dv_file"]: r["n"] for r in
                     matched.groupBy("_dv_file")
                     .agg(F.count(F.lit(1)).alias("n")).collect()}
@@ -2055,8 +1900,7 @@ class TxnTable:
         per-file stats recorded for those columns (put them in
         ``stats_cols``) prune ``read_for_range`` scans on EITHER
         column. Trade-off (same as Delta's): the files' KEY ranges
-        widen, so key-probe pruning degrades to blooms — bloom_bits
-        is the right companion.
+        widen, so key-probe pruning keeps more candidate files.
 
         ``where=`` scopes the compaction to files that could hold a
         matching row (Delta's ``OPTIMIZE ... WHERE``, generalized to
@@ -2071,27 +1915,18 @@ class TxnTable:
         scoped run skips the table-global DV-cardinality trigger
         (scoped means scoped).
 
-        ``retries``: like ``merge(retries=N)`` — on a CommitConflict
-        (a concurrent writer landed a commit between this compact's
-        snapshot and its CAS) the WHOLE compact re-runs against the
-        fresh snapshot, so the small-file set re-evaluates and a file
-        a racing merge just rewrote is never doubly referenced or
-        stale-referenced (VERDICT r7 #3: compact previously had no
-        rebase path even though merge did, so a multi-writer table's
-        auto-compact could fail a streaming epoch). A losing
-        attempt's packed files are unreferenced orphans (vacuum
-        collects them), never corruption.
+        ``retries``: the shared ``_with_retries`` policy — on a
+        CommitConflict (a concurrent writer landed a commit between
+        this compact's snapshot and its CAS) the WHOLE compact re-runs
+        against the fresh snapshot, so the small-file set re-evaluates
+        and a file a racing merge just rewrote is never doubly
+        referenced or stale-referenced (a multi-writer table's
+        auto-compact must not fail a streaming epoch).
         """
-        for attempt in range(retries + 1):
-            try:
-                return self._compact_once(small_rows_threshold,
-                                          purge_dvs, zorder_by, where)
-            except CommitConflict:
-                if attempt == retries:
-                    raise
-            except Exception as exc:
-                if attempt == retries or not _is_lost_file_error(exc):
-                    raise              # see merge(): stale-file rebase
+        return self._with_retries(
+            lambda: self._compact_once(small_rows_threshold, purge_dvs,
+                                       zorder_by, where),
+            retries)
 
     def _compact_once(self,
                       small_rows_threshold: int | None = None,
@@ -2131,7 +1966,7 @@ class TxnTable:
                 return snap.version
         else:
             # "small" by EFFECTIVE rows (stats count minus DV-masked),
-            # so a file whittled down by merge-on-read deletes
+            # so a file whittled down by DV deletes
             # qualifies for bin-packing; additionally any file with
             # >= 20% of its rows masked is rewritten outright — compact
             # is the DV MATERIALIZER (Delta's REORG/purge), the
@@ -2290,12 +2125,8 @@ class TxnTable:
         rows it would resurrect. The constraint is a metadata-only
         commit folded like any other log entry and carried by
         checkpoints, so it survives ``cleanup_log``."""
-        for attempt in range(retries + 1):
-            try:
-                return self._set_constraint_once(name, expr)
-            except CommitConflict:
-                if attempt == retries:
-                    raise
+        return self._with_retries(
+            lambda: self._set_constraint_once(name, expr), retries)
 
     def _set_constraint_once(self, name: str, expr: str) -> int:
         snap = self._snapshot()
@@ -2336,20 +2167,17 @@ class TxnTable:
 
     def drop_constraint(self, name: str, retries: int = 0) -> int:
         """Delta's ALTER TABLE DROP CONSTRAINT — metadata-only."""
-        for attempt in range(retries + 1):
-            try:
-                snap = self._snapshot()
-                if name not in snap.constraints:
-                    raise ValueError(
-                        f"drop_constraint({name!r}): no such "
-                        f"constraint; have {sorted(snap.constraints)}")
-                v = snap.version + 1
-                self._commit(v, [], [], "drop_constraint", None,
-                             extra={"constraint_drop": [name]})
-                return v
-            except CommitConflict:
-                if attempt == retries:
-                    raise
+        def once() -> int:
+            snap = self._snapshot()
+            if name not in snap.constraints:
+                raise ValueError(
+                    f"drop_constraint({name!r}): no such "
+                    f"constraint; have {sorted(snap.constraints)}")
+            v = snap.version + 1
+            self._commit(v, [], [], "drop_constraint", None,
+                         extra={"constraint_drop": [name]})
+            return v
+        return self._with_retries(once, retries)
 
     def restore(self, version: int, app_txn_id: str | None = None,
                 retries: int = 0) -> int:
@@ -2371,21 +2199,16 @@ class TxnTable:
         version, or the current one when the target state already
         equals the current state (no-op: nothing to commit).
 
-        ``retries``: like ``merge``/``compact`` — on a CommitConflict
-        the whole restore re-plans against the fresh snapshot (the
-        file DELTA changes under a racing writer, the target state
-        does not).
+        ``retries``: the shared ``_with_retries`` policy — the whole
+        restore re-plans against the fresh snapshot (the file DELTA
+        changes under a racing writer, the target state does not).
 
         Reference anchor: the reference undoes a bad batch by
         replaying events from the change_log pre-images row by row
         (/root/reference/adsmp/models.py:127-141); the log-structured
         table answers it with a metadata-only commit."""
-        for attempt in range(retries + 1):
-            try:
-                return self._restore_once(version, app_txn_id)
-            except CommitConflict:
-                if attempt == retries:
-                    raise
+        return self._with_retries(
+            lambda: self._restore_once(version, app_txn_id), retries)
 
     def _restore_once(self, version: int,
                       app_txn_id: str | None) -> int:
@@ -2738,23 +2561,6 @@ class TxnTable:
                 deleted.append(os.path.basename(
                     self._checkpoint_path(v)))
         return sorted(deleted)
-
-
-def _bloom_digest(key) -> tuple[int, int]:
-    """Two independent 64-bit hashes of the STRINGIFIED key (md5
-    halves) — deliberately engine-free so the executor-side build and
-    the driver-side probe share one definition."""
-    import hashlib
-    d = hashlib.md5(str(key).encode()).digest()
-    return (int.from_bytes(d[:8], "big"),
-            int.from_bytes(d[8:16], "big"))
-
-
-def _bloom_contains(bloom: bytes, h: tuple[int, int], m: int) -> bool:
-    for p in (h[0] % m, h[1] % m):
-        if not bloom[p >> 3] & (1 << (p & 7)):
-            return False
-    return True
 
 
 def _parse_predicate(s: str):

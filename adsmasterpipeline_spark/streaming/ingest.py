@@ -58,14 +58,6 @@ class StreamingIngest:
         self.txn_opts = dict(txn_opts or {})
         self.auto_compact_every = self.txn_opts.pop(
             "auto_compact_every", 0)
-        # "merge_on_read": True routes each epoch's merge through the
-        # deletion-vector form (mask matched rows + one add file per
-        # epoch, zero rewrites) — right for wide records tables with
-        # scattered per-epoch updates; auto_compact_every then doubles
-        # as the mask-materialization cadence (compact rewrites
-        # heavily-masked files, dropping their vectors)
-        self.merge_on_read = bool(self.txn_opts.pop(
-            "merge_on_read", False))
         # "auto_cleanup_log": True additionally runs
         # TxnTable.cleanup_log() after each auto-compact — an
         # unbounded stream otherwise grows the _txn/ LISTING with
@@ -147,9 +139,7 @@ class StreamingIngest:
         # — it must flow to TxnTable.merge as a tombstone or the old
         # row stays live and is resurrected by the next epoch's read
         deleted = batch_keys.join(merged, "bibcode", "left_anti")
-        v = t.merge(touched, deleted_keys=deleted,
-                    app_txn_id=txn_id,
-                    merge_on_read=self.merge_on_read)
+        v = t.merge(touched, deleted_keys=deleted, app_txn_id=txn_id)
         if v > ver:                     # replay no-op: v == ver
             self._merges_since_compact += 1
         if (self.auto_compact_every and

@@ -594,12 +594,11 @@ def test_txn_randomized_lifecycle_matches_model(spark, tmp_path, seed):
 
     constraints: dict[str, int] = {}       # name -> lim for "v < lim"
     for step in range(10):
-        op = rng.choice(["merge", "merge", "merge", "mor_merge",
-                         "delete", "dv_delete", "compact", "vacuum",
-                         "cleanup", "restore", "constraint"])
+        op = rng.choice(["merge", "merge", "merge", "delete",
+                         "dv_delete", "compact", "vacuum", "cleanup",
+                         "restore", "constraint"])
         v_before, prev_model = t.version(), dict(model)
-        if op in ("merge", "mor_merge"):
-            mor = op == "mor_merge"
+        if op == "merge":
             ups = {rng.choice(keys): step * 100 + i for i in range(4)}
             dels = ({rng.choice(list(model))}
                     if model and rng.random() < 0.5 else set())
@@ -613,15 +612,13 @@ def test_txn_randomized_lifecycle_matches_model(spark, tmp_path, seed):
                     t.merge(_recs(spark, list(ups.items())),
                             deleted_keys=spark.createDataFrame(
                                 [(k,) for k in dels] or [("~none~",)],
-                                "bibcode string"),
-                            merge_on_read=mor)
+                                "bibcode string"))
                 assert t.version() == v_before
             else:
                 t.merge(_recs(spark, list(ups.items())),
                         deleted_keys=spark.createDataFrame(
                             [(k,) for k in dels] or [("~none~",)],
-                            "bibcode string"),
-                        merge_on_read=mor)
+                            "bibcode string"))
                 model.update(ups)
                 for k in dels:
                     model.pop(k, None)
@@ -1030,54 +1027,6 @@ def test_txn_set_constraint_error_contract_and_names(spark, tmp_path):
     assert t.drop_constraint(weird) == 3
 
 
-def test_txn_bloom_prunes_hash_partitioned_files(spark, tmp_path):
-    """Bloom file skipping: on a HASH-partitioned table every file
-    spans the full key range, so min/max pruning keeps all of them —
-    the per-file key bloom still skips the files that cannot contain
-    a batch key. Control: the same layout without blooms prunes
-    nothing."""
-    rows = [(f"K{i:04d}", i) for i in range(400)]
-
-    def build(sub, bloom_bits):
-        path = str(tmp_path / sub)
-        t = txn_table(spark, path, bloom_bits=bloom_bits)
-        t.overwrite(_recs(spark, rows).repartition(8, "bibcode"))
-        return t
-
-    t = build("bloomed", 4096)
-    adds = t.live_adds()
-    assert len(adds) >= 6
-    for s in adds.values():
-        assert s.get("bloom") and s["bloom_bits"] == 4096
-        # hash layout: every file's range spans ~everything
-        assert s["min_key"] < "K0100" and s["max_key"] > "K0300"
-
-    t.merge(_recs(spark, [("K0007", -7)]))
-    probe = t.last_merge_probe
-    # the key lives in exactly one file; bloom must cut the candidate
-    # set far below the live count (false positives allowed but rare
-    # at this fill ratio)
-    assert len(probe["candidate_files"]) <= 2
-    assert probe["touched_files"] and \
-        set(probe["touched_files"]) <= set(probe["candidate_files"])
-    got = {r["bibcode"]: r["v"] for r in t.read().collect()}
-    assert got["K0007"] == -7 and len(got) == 400
-
-    # control: same layout without blooms — range+containment alone
-    # keeps strictly more candidates (it can only rule a file out
-    # when the key falls outside its [min,max] or in a gap)
-    t0 = build("plain", 0)
-    t0.merge(_recs(spark, [("K0007", -7)]))
-    assert len(t0.last_merge_probe["candidate_files"]) > \
-        len(probe["candidate_files"])
-
-    # absent key: bloom proves no file can contain it -> zero
-    # candidates, pure insert
-    t.merge(_recs(spark, [("ZZZZ", 1)]))
-    assert t.last_merge_probe["candidate_files"] == []
-    assert t.read().count() == 401
-
-
 @pytest.mark.slow
 def test_streaming_txn_survives_delete_everything_epoch(spark, tmp_path):
     """Crash-loop regression (round-6 review): an epoch whose deletes
@@ -1469,35 +1418,36 @@ def test_txn_concurrent_writers_threads(spark, tmp_path):
 
 
 def test_txn_schema_evolution(spark, tmp_path):
-    """Delta mergeSchema parity: with schema_evolution=True a merge
-    whose batch carries a NEW column widens the table — survivors
-    keep nulls for it, reads merge per-file footers so pre-widening
-    files surface the column, and stats pruning keeps working.
-    Strict mode (default) fails loudly on the same drift."""
+    """Strict schema contract: a merge whose batch columns differ from
+    the table's refuses loudly and commits nothing — both when it
+    touches a live file (the survivors union refuses) and when every
+    key is new and no file is touched (the batch is unioned with a
+    zero-row frame of the table schema; unchecked, it would land as a
+    drifted file whose extra column reads silently drop)."""
+    from pyspark.errors import AnalysisException
+
     path = str(tmp_path / "t")
     strict = txn_table(spark, path)
     strict.overwrite(_recs(spark, [("B1", 1), ("B2", 2)]))
     widened = spark.createDataFrame(
         [("B2", 22, "en"), ("B3", 3, "de")],
         "bibcode string, v long, lang string")
-    with pytest.raises(Exception):
-        strict.merge(widened)              # strict: loud failure
+    with pytest.raises(AnalysisException):
+        strict.merge(widened)              # touches B2's file
+    assert strict.version() == 0
 
-    evo = txn_table(spark, path, schema_evolution=True)
-    evo.merge(widened)
-    rows = {r["bibcode"]: (r["v"], r["lang"])
-            for r in evo.read().collect()}
-    assert rows == {"B1": (1, None), "B2": (22, "en"),
-                    "B3": (3, "de")}
-    # point reads across old+new files see the merged schema too
-    keyed = evo.read_for_keys(
-        spark.createDataFrame([("B1",), ("B3",)], "bibcode string"))
-    got = {r["bibcode"]: r["lang"] for r in keyed.collect()}
-    assert got == {"B1": None, "B3": "de"}
-    # narrowing batch back-fills nulls for the missing column
-    evo.merge(_recs(spark, [("B4", 4)]))
-    assert {r["bibcode"]: r["lang"] for r in
-            evo.read().collect()}["B4"] is None
+    t = txn_table(spark, str(tmp_path / "u"), key="id")
+    t.overwrite(spark.range(100).select(
+        "id", (F.col("id") * 2).alias("v")))
+    v0, cols = t.version(), t.read().columns
+    drifted = spark.createDataFrame([(1000, "x")],
+                                    "id long, other string")
+    with pytest.raises(AnalysisException):
+        t.merge(drifted)                   # key 1000: no file touched
+    assert t.last_merge_probe["touched_files"] == []
+    assert t.version() == v0
+    assert t.read().columns == cols == ["id", "v"]
+    assert t.read().count() == 100
 
 
 @pytest.mark.slow
@@ -1581,28 +1531,25 @@ def test_txn_checkpoint_migrates_legacy_txn_ids(spark, tmp_path):
 
 
 def test_txn_empty_result_schema_under_evolution(spark, tmp_path):
-    """ADVICE r8: the zero-candidate fallback took its schema from
-    ONE arbitrary live file; with schema_evolution that file may
-    predate a widening merge, so the empty frame lacked the newer
-    columns and downstream selects failed only on the empty-result
-    path. Now the empty frame merges ALL live footers."""
+    """The zero-candidate fallback of read_for_keys / read_for_range
+    returns zero rows with the table's columns, read from one live
+    footer."""
     path = str(tmp_path / "t")
-    evo = txn_table(spark, path, schema_evolution=True)
-    evo.overwrite(_recs(spark, [("A1", 1)]))       # narrow, FIRST file
-    widened = spark.createDataFrame(
-        [("M1", 2, "en")], "bibcode string, v long, lang string")
-    evo.merge(widened)
+    t = txn_table(spark, path)
+    t.overwrite(_recs(spark, [("A1", 1)]))
+    t.merge(_recs(spark, [("M1", 2)]))             # second live file
+    cols = t.read().columns
 
     # key beyond every file's range -> zero candidates
     miss = spark.createDataFrame([("ZZZ",)], "bibcode string")
-    out = evo.read_for_keys(miss)
-    assert evo.last_read_probe["candidate_files"] == []
-    assert out.count() == 0
-    assert "lang" in out.columns
-    out.select("lang").collect()            # post-widening column usable
+    out = t.read_for_keys(miss)
+    assert t.last_read_probe["candidate_files"] == []
+    assert out.count() == 0 and out.columns == cols
+    out.select("v").collect()                 # table columns usable
 
-    rng = evo.read_for_range("bibcode", lo="Y0", hi="Z9")
-    assert rng.count() == 0 and "lang" in rng.columns
+    rng = t.read_for_range("bibcode", lo="Y0", hi="Z9")
+    assert t.last_read_probe["candidate_files"] == []
+    assert rng.count() == 0 and rng.columns == cols
 
 
 def test_txn_compact_conflict_retry(spark, tmp_path):
@@ -1962,26 +1909,6 @@ def test_txn_changes_refuses_cleaned_or_vacuumed(spark, tmp_path):
     with pytest.raises(ValueError, match="vacuum"):
         t2.changes(0, 2)
     assert t2.changes(1, 2).count() == 2   # pre+post pair survives
-
-
-def test_txn_changes_schema_evolution(spark, tmp_path):
-    """Feed across a widening merge: pre-images from narrow files
-    surface the new column as null; change rows carry the widened
-    schema."""
-    path = str(tmp_path / "t")
-    t = txn_table(spark, path, schema_evolution=True)
-    t.overwrite(_recs(spark, [("B1", 1), ("B2", 2)]))      # v0 narrow
-    widened = spark.createDataFrame(
-        [("B2", 22, "en"), ("B3", 3, "de")],
-        "bibcode string, v long, lang string")
-    t.merge(widened)                                       # v1 widens
-    feed = {(r["bibcode"], r["_change_type"]): (r["v"], r["lang"])
-            for r in t.changes(0, 1).collect()}
-    assert feed == {
-        ("B2", "update_preimage"): (2, None),
-        ("B2", "update_postimage"): (22, "en"),
-        ("B3", "insert"): (3, "de"),
-    }
 
 
 def test_txn_changes_struct_nan_and_map_order(spark, tmp_path):

@@ -267,112 +267,6 @@ def test_dv_read_for_range_and_keys_mask(spark, tmp_path):
     assert rng == [9, 12, 13]
 
 
-@pytest.mark.slow
-def test_dv_merge_on_read_masks_instead_of_rewriting(spark, tmp_path):
-    """merge(merge_on_read=True): matched rows are MASKED in place and
-    the batch lands as one new add file — every pre-existing data
-    file stays byte-identical, and the change feed is identical to
-    the copy-on-write merge's (update pairs / deletes / inserts)."""
-    t = _table(spark, tmp_path)
-    before = _file_hashes(t.path)
-    upd = spark.createDataFrame(
-        [(0, 999), (50, 555), (200, 1)], "id long, v long")
-    dels = _ids(spark, [10, 20])
-    assert t.merge(upd, deleted_keys=dels, merge_on_read=True) == 1
-    after = _file_hashes(t.path)
-    assert {p: h for p, h in after.items() if p in before} == before
-    assert t.last_merge_probe["mode"] == "merge_on_read"
-    rows = {r["id"]: r["v"] for r in t.read().collect()}
-    assert len(rows) == 99          # 100 - 2 deletes + 1 insert
-    assert rows[0] == 999 and rows[50] == 555 and rows[200] == 1
-    assert 10 not in rows and 20 not in rows
-    feed = {(r["id"], r["_change_type"]): r["v"]
-            for r in t.changes(0, 1).collect()}
-    assert feed == {
-        (0, "update_preimage"): 0, (0, "update_postimage"): 999,
-        (50, "update_preimage"): 100, (50, "update_postimage"): 555,
-        (10, "delete"): 20, (20, "delete"): 40,
-        (200, "insert"): 1}
-    # a second MoR merge re-masks rows that live in the FIRST merge's
-    # add file (fresh files acquire vectors like any other)
-    assert t.merge(spark.createDataFrame([(0, 1000)], "id long, v long"),
-                   merge_on_read=True) == 2
-    rows = {r["id"]: r["v"] for r in t.read().collect()}
-    assert rows[0] == 1000 and len(rows) == 99
-    feed2 = {(r["id"], r["_change_type"]): r["v"]
-             for r in t.changes(1, 2).collect()}
-    assert feed2 == {(0, "update_preimage"): 999,
-                     (0, "update_postimage"): 1000}
-    # constraints still gate the MoR batch (staged-file validation)
-    assert t.set_constraint("v_cap", "v <= 1000") == 3
-    with pytest.raises(ValueError, match="v_cap"):
-        t.merge(spark.createDataFrame([(1, 9999)], "id long, v long"),
-                merge_on_read=True)
-    assert t.version() == 3
-    # time travel + restore still see every intermediate state
-    assert t.read(as_of=0).count() == 100
-    assert t.restore(1) == 4
-    got = {r["id"]: r["v"] for r in t.read().collect()}
-    assert got[0] == 999 and len(got) == 99
-
-
-@pytest.mark.slow
-def test_dv_streaming_ingest_merge_on_read_parity(spark, tmp_path):
-    """StreamingIngest(txn_opts={'merge_on_read': True}): every epoch
-    masks + appends instead of rewriting, and the resulting records
-    table is row-identical to the copy-on-write txn mode — including
-    a deleted event flowing through as a masked tombstone."""
-    import json
-
-    from adsmasterpipeline_spark.streaming.ingest import StreamingIngest
-
-    def run(sub, mor):
-        events_dir = tmp_path / sub / "events"
-        events_dir.mkdir(parents=True)
-        # enough bootstrap rows that epoch 2's two matched rows mask
-        # PARTIALLY (a fully-masked file drops outright instead of
-        # carrying a vector — the small-table degenerate case)
-        b1 = [{"bibcode": f"S{i}", "type": "bib_data",
-               "status": "active",
-               "payload": json.dumps({"bibcode": f"S{i}"}),
-               "event_ts": f"2024-01-01T00:00:0{i}.000Z"}
-              for i in range(1, 9)]
-        b2 = [{"bibcode": "S1", "type": "bib_data", "status": "deleted",
-               "payload": None,
-               "event_ts": "2024-01-02T00:00:00.000Z"},
-              {"bibcode": "S2", "type": "metrics", "status": "active",
-               "payload": json.dumps({"citations": ["x"]}),
-               "event_ts": "2024-01-02T00:00:01.000Z"}]
-        ing = StreamingIngest(
-            spark, str(events_dir), str(tmp_path / sub / "records"),
-            str(tmp_path / sub / "ckpt"), fmt="txn",
-            txn_opts={"cluster_writes": True, "rows_per_file": 64,
-                      "merge_on_read": mor})
-        (events_dir / "b1.json").write_text(
-            "\n".join(json.dumps(e) for e in b1))
-        ing.run_available_now()
-        (events_dir / "b2.json").write_text(
-            "\n".join(json.dumps(e) for e in b2))
-        ing.run_available_now()
-        return ing
-
-    ing_m = run("mor", True)
-    ing_c = run("cow", False)
-    drop = {"created", "updated", "processed"}
-    cols = [c for c in ing_m._load_records().columns if c not in drop]
-    assert (sorted(tuple(r) for r in
-                   ing_m._load_records().select(*cols).collect())
-            == sorted(tuple(r) for r in
-                      ing_c._load_records().select(*cols).collect()))
-    # the MoR mode's second epoch really went merge-on-read: the
-    # update/tombstone epoch carries a DV entry, not a file rewrite
-    from adsmasterpipeline_spark.sinks.txnlake import txn_table
-    t = txn_table(spark, str(tmp_path / "mor" / "records"),
-                  key="bibcode")
-    hist = t.history()
-    assert any(h["dvs"] > 0 for h in hist if h["operation"] == "merge")
-
-
 def test_dv_compact_purge_dvs_rewrites_all_masked(spark, tmp_path):
     """compact(purge_dvs=True) is REORG ... APPLY (PURGE): every
     masked file rewrites even below the 20% ratio, leaving zero
@@ -522,15 +416,14 @@ def test_dv_read_scan_masked_above_budget(spark, tmp_path):
     got = sorted(r["id"] for r in
                  lo.read_for_keys(_ids(spark, [0, 7, 5, 120])).collect())
     assert got == [5, 120]
-    # ...including the WRITER-side probes: a DV delete and a MOR
-    # merge on the above-budget table must classify live positions
-    # through the scan-masked path, never a global broadcast
+    # ...including the WRITER-side probes: a DV delete and a merge
+    # on the above-budget table must classify live positions through
+    # the scan-masked path, never a global broadcast
     assert lo.delete(keys=_ids(spark, [0, 5])) == 3   # 0 pre-masked
     e = lo._load_json(dict(lo._entry_files())[3])
     assert sum(d["new"] for d in e["dvs"].values()) == 1  # only 5
     lo.merge(spark.createDataFrame([(7, -1), (401, -2)],
-                                   "id long, v long"),
-             merge_on_read=True)                       # 7 pre-masked
+                                   "id long, v long"))  # 7 pre-masked
     rows = {r["id"]: r["v"] for r in lo.read().collect()}
     assert rows[7] == -1 and rows[401] == -2 and 5 not in rows
     # -1 (key 5 deleted) +1 (key 7, pre-masked, re-inserted by the
@@ -560,28 +453,6 @@ def test_compact_global_masked_cardinality_trigger(spark, tmp_path):
     assert t.changes(1, 2).count() == 0          # layout-only commit
 
 
-def test_mor_merge_schema_contract(spark, tmp_path):
-    """ADVICE r10 (medium): merge_on_read must enforce the same
-    schema contract as copy-on-write — strict mode refuses a drifted
-    batch BEFORE anything lands; schema_evolution widens by name."""
-    t = _table(spark, tmp_path)
-    v0 = t.version()
-    drifted = spark.createDataFrame([(1, "x")], "id long, other string")
-    with pytest.raises(Exception, match="other|v|UNION|RESOLVE"):
-        t.merge(drifted, merge_on_read=True)
-    assert t.version() == v0                     # nothing committed
-    assert t.read().where("id = 1").collect()[0]["v"] == 2
-
-    te = txn_table(spark, t.path, key="id", schema_evolution=True)
-    te.merge(spark.createDataFrame([(1, 111, "w")],
-                                   "id long, v long, extra string"),
-             merge_on_read=True)
-    row = te.read().where("id = 1").collect()[0]
-    assert (row["v"], row["extra"]) == (111, "w")
-    # pre-widening rows surface the new column as null
-    assert te.read().where("id = 2").collect()[0]["extra"] is None
-
-
 def test_dv_reserved_column_guard(spark, tmp_path):
     """ADVICE r10: a table or batch already carrying a _dv_* column
     would silently mis-join in the DV machinery — refuse loudly."""
@@ -594,7 +465,7 @@ def test_dv_reserved_column_guard(spark, tmp_path):
     bad = spark.createDataFrame([(1, 5, 9)],
                                 "id long, v long, _dv_pos long")
     with pytest.raises(ValueError, match="_dv_pos"):
-        t2.merge(bad, merge_on_read=True)
+        t2.merge(bad)
 
 
 def test_delete_where_stat_pruned(spark, tmp_path):

@@ -323,7 +323,7 @@ def test_partition_declaration_survives_cleanup_log(spark, tmp_path):
 @pytest.mark.slow
 def test_txn_partitioned_lifecycle_matches_model(spark, tmp_path, seed):
     """The randomized lifecycle model test, PARTITIONED: a seeded
-    random sequence of merge / merge-on-read / dv_delete /
+    random sequence of merge / dv_delete /
     replace_where / compact / vacuum / cleanup_log / restore ops on a
     table partitioned by a derived segment column must (a) keep the
     table equal to a plain dict model after every step, (b) keep
@@ -392,11 +392,11 @@ def test_txn_partitioned_lifecycle_matches_model(spark, tmp_path, seed):
         assert got == want
 
     for step in range(12):
-        op = rng.choice(["merge", "merge", "mor_merge", "dv_delete",
-                         "replace", "replace", "compact", "vacuum",
-                         "cleanup", "restore"])
+        op = rng.choice(["merge", "merge", "dv_delete", "replace",
+                         "replace", "compact", "vacuum", "cleanup",
+                         "restore"])
         v_before, prev_model = t.version(), dict(model)
-        if op in ("merge", "mor_merge"):
+        if op == "merge":
             ups = {rng.choice(keys): step * 100 + i for i in range(4)}
             dels = ({rng.choice(list(model))}
                     if model and rng.random() < 0.5 else set())
@@ -404,8 +404,7 @@ def test_txn_partitioned_lifecycle_matches_model(spark, tmp_path, seed):
             t.merge(recs(list(ups.items())),
                     deleted_keys=spark.createDataFrame(
                         [(k,) for k in dels] or [("~none~",)],
-                        "bibcode string"),
-                    merge_on_read=op == "mor_merge")
+                        "bibcode string"))
             model.update(ups)
             for k in dels:
                 model.pop(k, None)

@@ -103,36 +103,6 @@ def main() -> int:
             entry["bytes_ratio_cow_over_dv"] = round(
                 entry["cow"]["bytes_written"]
                 / max(1, entry["dv"]["bytes_written"]), 1)
-            # the UPDATE twin: merge-on-read MERGE (mask + one add
-            # file) vs copy-on-write (rewrite every touched file) for
-            # the same scattered update batch
-            upd = (spark.range(n_del)
-                   .select((F.col("id") * step).alias("id"))
-                   .join(base, "id")
-                   .withColumn("payload1", F.lit("updated")))
-            for mode in ("cow_update", "mor_update"):
-                path = os.path.join(work, f"{mode}_{frac}")
-                t = txn_table(spark, path, key="id",
-                              cluster_writes=True,
-                              rows_per_file=50_000)
-                t.overwrite(base)
-                before = _tree_bytes(path)
-                t0 = time.time()
-                t.merge(upd, merge_on_read=(mode == "mor_update"))
-                secs = time.time() - t0
-                after = _tree_bytes(path)
-                entry[mode] = {
-                    "bytes_written": sum(
-                        sz for p, sz in after.items()
-                        if p not in before),
-                    "secs": round(secs, 3),
-                    "live_rows": t.read().count(),
-                }
-            assert (entry["cow_update"]["live_rows"]
-                    == entry["mor_update"]["live_rows"] == rows)
-            entry["update_bytes_ratio_cow_over_mor"] = round(
-                entry["cow_update"]["bytes_written"]
-                / max(1, entry["mor_update"]["bytes_written"]), 1)
             out["fractions"].append(entry)
             print(json.dumps(entry))
         # READ-side bound (VERDICT r10 #2): a table of MANY files
@@ -172,8 +142,7 @@ def main() -> int:
             json.dump(out, f, indent=1, sort_keys=True)
     print(json.dumps({"summary": [
         {"fraction": e["fraction"],
-         "delete_ratio": e["bytes_ratio_cow_over_dv"],
-         "update_ratio": e["update_bytes_ratio_cow_over_mor"]}
+         "delete_ratio": e["bytes_ratio_cow_over_dv"]}
         for e in out["fractions"]]}))
     return 0
 
