@@ -708,35 +708,23 @@ def cmd_validate(args) -> int:
 
 def cmd_lake(args) -> int:
     """TxnTable maintenance: DESCRIBE HISTORY, OPTIMIZE (bin-pack
-    small files), VACUUM (drop files unreachable from the retained
-    snapshots), log retention, RESTORE (metadata-only rollback to a
-    retained version), CHECK constraints (set/drop; every write
-    validates its batch), and the change-data-feed summary — the
-    operational lifecycle of the log-structured records table
-    (sinks/txnlake.py)."""
+    small files, optionally purging deletion vectors), VACUUM (drop
+    files unreachable from the retained snapshots), log retention, a
+    deletion-vector DELETE by predicate, and the change-data-feed
+    summary — the operational lifecycle of the log-structured records
+    table (sinks/txnlake.py)."""
     from .sinks.txnlake import txn_table
     spark = _spark()
-    pby = tuple(args.partition_by.split(",")) \
-        if getattr(args, "partition_by", None) else ()
-    t = txn_table(spark, args.path, key=args.key, partition_by=pby)
+    t = txn_table(spark, args.path, key=args.key)
     out: dict = {"version": t.version()}
     if args.action == "history":
         out["history"] = t.history()
     elif args.action == "compact":
         if args.rows_per_file:
             t.rows_per_file = args.rows_per_file
-        zo = tuple(args.zorder.split(",")) if args.zorder else None
-        if zo is not None and len(zo) != 2:
-            raise SystemExit("lake compact --zorder needs COL_A,COL_B")
         v0 = len(t.live_files())
         dv0 = sum(d["card"] for d in t._snapshot().dvs.values())
-        try:
-            out["version"] = t.compact(purge_dvs=args.purge_dvs,
-                                       zorder_by=zo,
-                                       where=args.expr or None)
-        except ValueError as e:
-            print(json.dumps({"error": str(e)}))
-            return 1
+        out["version"] = t.compact(purge_dvs=args.purge_dvs)
         out["files_before"] = v0
         out["files_after"] = len(t.live_files())
         out["masked_rows_before"] = dv0
@@ -749,56 +737,19 @@ def cmd_lake(args) -> int:
     elif args.action == "cleanup-log":
         deleted = t.cleanup_log(keep_versions=args.keep_versions)
         out["deleted_log_files"] = len(deleted)
-    elif args.action == "set-constraint":
-        # Delta's ALTER TABLE ADD CONSTRAINT: existing data validated
-        # first; a violation is an expected operational state -> JSON
-        # error contract like changes/restore
-        if not args.name or not args.expr:
-            raise SystemExit(
-                "lake set-constraint needs --name N --expr SQL")
-        try:
-            out["version"] = t.set_constraint(args.name, args.expr)
-        except ValueError as e:
-            print(json.dumps({"error": str(e), "name": args.name}))
-            return 1
-        out["constraints"] = t.constraints()
-    elif args.action == "drop-constraint":
-        if not args.name:
-            raise SystemExit("lake drop-constraint needs --name N")
-        try:
-            out["version"] = t.drop_constraint(args.name)
-        except ValueError as e:
-            print(json.dumps({"error": str(e), "name": args.name}))
-            return 1
-        out["constraints"] = t.constraints()
-    elif args.action == "restore":
-        # Delta RESTORE: one metadata-only commit re-referencing the
-        # target snapshot's files (txnlake.restore docstring). The
-        # same expected operational refusals as changes — target
-        # below the retention horizon — report on the JSON contract.
-        if args.to_version is None:
-            raise SystemExit("lake restore needs --to-version V")
-        v0 = t.version()
-        try:
-            out["version"] = t.restore(args.to_version)
-        except ValueError as e:
-            print(json.dumps({"error": str(e),
-                              "target": args.to_version}))
-            return 1
-        out["target"] = args.to_version
-        out["restored"] = out["version"] != v0
     elif args.action == "delete":
         # merge-on-read DELETE via deletion vectors (Delta's
         # deletionVectors shape): writes only the deleted row
         # positions, zero data files rewritten. --expr is the
-        # predicate; a CHECK-style parse failure or an empty table
-        # report on the JSON contract.
+        # predicate; a parse failure or an empty table report on the
+        # JSON contract.
         if not args.expr:
             raise SystemExit("lake delete needs --expr SQL_PREDICATE")
         v0 = t.version()
         try:
             from pyspark.sql import functions as F
-            # eager parse/resolve, same contract as set-constraint
+            # eager parse/resolve: a bad predicate is a JSON error,
+            # not a Spark traceback
             try:
                 from pyspark.errors import AnalysisException
             except ImportError:                  # pragma: no cover
@@ -830,29 +781,6 @@ def cmd_lake(args) -> int:
         out["probe"] = {
             "live_files": p_.get("live_files"),
             "candidate_files": len(p_.get("candidate_files") or [])}
-    elif args.action == "replace":
-        # dynamic partition overwrite (Delta's replaceWhere): swap the
-        # partitions matching --expr for the batch parquet at --from.
-        # The table's own declared partitioning is adopted from the
-        # log; --partition-by only matters when declaring it on a
-        # fresh table.
-        if not args.expr or not args.from_path:
-            raise SystemExit(
-                "lake replace needs --expr PARTITION_PREDICATE "
-                "--from PARQUET_DIR")
-        try:
-            out["version"] = t.overwrite(
-                spark.read.parquet(args.from_path),
-                replace_where=args.expr)
-        except (ValueError, FileNotFoundError) as e:
-            print(json.dumps({"error": str(e), "expr": args.expr}))
-            return 1
-        entry = t._load_json(dict(t._entry_files())[out["version"]])
-        out["files_removed"] = len(entry.get("removes") or [])
-        out["files_added"] = len(entry.get("adds") or [])
-        out["rows_written"] = sum(
-            (a.get("rows") or 0) for a in entry.get("adds") or [])
-        out["live_files"] = len(t.live_files())
     elif args.action == "changes":
         # change-data-feed inspection (Delta's table_changes shape):
         # per-change-type counts + the feed's file probe; --since/--to
@@ -994,43 +922,25 @@ def main(argv=None) -> int:
     pl = sub.add_parser(
         "lake",
         help="TxnTable history/compact/vacuum/cleanup-log/changes/"
-             "restore/set-constraint/drop-constraint/delete/replace")
+             "delete")
     pl.add_argument("action", choices=["history", "compact", "vacuum",
                                        "cleanup-log", "changes",
-                                       "restore", "set-constraint",
-                                       "drop-constraint", "delete",
-                                       "replace"])
-    pl.add_argument("--name", help="constraint name")
+                                       "delete"])
     pl.add_argument("--expr",
-                    help="set-constraint: boolean SQL expression "
-                         "every row must satisfy; delete: SQL "
-                         "predicate selecting the rows to mask "
-                         "(merge-on-read, no data files rewritten); "
-                         "compact: scope to matching files (OPTIMIZE "
-                         "WHERE); replace: the partition predicate")
+                    help="delete: SQL predicate selecting the rows to "
+                         "mask (merge-on-read, no data files "
+                         "rewritten)")
     pl.add_argument("--since-version", type=int, default=-1,
                     help="changes: feed starts AFTER this version")
     pl.add_argument("--to-version", type=int, default=None,
                     help="changes: feed ends at this version "
-                         "(default: latest); restore: the target "
-                         "version to restore the table state to")
+                         "(default: latest)")
     pl.add_argument("--path", required=True)
-    pl.add_argument("--from", dest="from_path", default=None,
-                    help="replace: parquet dir holding the new "
-                         "batch for the replaced partitions")
-    pl.add_argument("--partition-by", default=None,
-                    help="comma-separated partition columns (only "
-                         "needed to DECLARE partitioning; an already-"
-                         "partitioned table is adopted from its log)")
     pl.add_argument("--key", default="bibcode")
     pl.add_argument("--rows-per-file", type=int, default=None)
     pl.add_argument("--purge-dvs", action="store_true",
                     help="compact: rewrite every deletion-vector-"
                          "masked file (REORG ... APPLY (PURGE))")
-    pl.add_argument("--zorder", default=None,
-                    help="compact: COL_A,COL_B — re-lay the table on "
-                         "a Morton curve of the two numeric columns "
-                         "(OPTIMIZE ZORDER BY)")
     pl.add_argument("--keep-versions", type=int, default=10)
     pl.add_argument("--min-age-seconds", type=float, default=3600.0)
     pl.set_defaults(fn=cmd_lake)

@@ -36,7 +36,7 @@ def get_spark(app_name: str = "adsmasterpipeline_spark",
         # parent directory so UDF queries run from any working directory
         .config("spark.executorEnv.PYTHONPATH",
                 str(Path(__file__).resolve().parents[1]))
-        # saveAsTable targets (bucketed tables, rebuild-swap tests) go
+        # managed-table targets (rebuild-swap tests) go
         # under tmp, never the repo working directory
         .config("spark.sql.warehouse.dir",
                 os.environ.get("SPARK_GRAFT_WAREHOUSE",

@@ -58,18 +58,22 @@ through it.
   files >= 20% masked (the pressure valve bounding the mask
   broadcast); the change feed serves each masked position's delete
   exactly once (entries carry ``dvs`` + ``dv_prior`` + ``remove_dvs``
-  pointers, so each commit's position delta is self-contained);
-  restore rolls pointers back, resurrecting masked rows. This is the
-  public Delta deletionVectors shape: at 100 TB a purge of 0.01% of
-  keys writes O(deleted positions), not a rewrite of every touched
-  file.
+  pointers, so each commit's position delta is self-contained).
+  This is the public Delta deletionVectors shape: at 100 TB a purge
+  of 0.01% of keys writes O(deleted positions), not a rewrite of
+  every touched file.
 - **Lifecycle**: ``read_for_keys`` (stat-pruned point reads),
   optional ``cluster_writes`` (range-partition every written batch —
   what makes min/max pruning effective), ``compact()`` (OPTIMIZE
   bin-packing: file count tracks data, not epochs), ``vacuum()``
   (retention-horizon GC of unreachable files with a
-  modification-time guard for in-flight writers), and ``history()``
-  (DESCRIBE HISTORY).
+  modification-time guard for in-flight writers), ``cleanup_log()``
+  (log retention) and ``history()`` (DESCRIBE HISTORY).
+
+The table has no CHECK constraints, no Hive partitioning and no
+RESTORE. A log or checkpoint that carries a constraint or a partition
+declaration (written by an earlier version of this module) is refused
+with ``TableStateError`` rather than read without it.
 
 Scale notes: the log fold and file lists live on the driver — bounded
 by FILE COUNT (what Delta itself keeps driver-side after parsing the
@@ -107,7 +111,8 @@ class CommitConflict(RuntimeError):
 
 class TableStateError(FileNotFoundError):
     """Deliberate complete-or-refuse refusal (reading / deleting from
-    a table with no committed data). Subclasses FileNotFoundError so
+    a table with no committed data, or a log that carries a removed
+    table feature). Subclasses FileNotFoundError so
     callers' existing ``except FileNotFoundError`` contracts hold —
     but the retry loops must NOT treat it as a stale-snapshot race:
     an empty table stays empty; rebasing would burn the retry budget
@@ -189,21 +194,38 @@ class Snapshot:
     """Driver-side fold of the log at one version: the live file set
     (path -> stats dict or None) in add order, the application
     txn ids visible from the checkpoint's retention window + the
-    log tail, and the table's CHECK constraints (name -> boolean SQL
-    expression, Delta's ALTER TABLE ADD CONSTRAINT state), plus the
-    per-file DELETION VECTOR pointers (data path -> {"dir", "card"}):
-    merge-on-read deletes that mask rows of a live file without
-    rewriting it (Delta's deletionVectors table feature)."""
+    log tail, and the per-file DELETION VECTOR pointers (data path ->
+    {"dir", "card"}): merge-on-read deletes that mask rows of a live
+    file without rewriting it (Delta's deletionVectors table
+    feature)."""
     version: int = -1
     live: dict[str, dict | None] = field(default_factory=dict)
     txn_ids: set[str] = field(default_factory=set)
-    constraints: dict[str, str] = field(default_factory=dict)
     dvs: dict[str, dict] = field(default_factory=dict)
-    # table-level partition columns (Delta's metaData.partitionColumns
-    # analogue): declared by the first partitioned write's entry,
-    # carried by checkpoints, adopted by handles opened without
-    # ``partition_by``
-    partition_by: tuple = ()
+
+
+# every field this module writes (or, for dv_stats, once wrote) into a
+# log entry / checkpoint; a non-empty field outside these sets belongs
+# to a removed table feature (CHECK constraints, Hive partitioning,
+# replaceWhere)
+_ENTRY_FIELDS = frozenset((
+    "version", "operation", "ts_ms", "adds", "removes", "remove_stats",
+    "remove_dvs", "app_txn_id", "dvs", "dv_prior", "dv_stats"))
+_CHECKPOINT_FIELDS = frozenset((
+    "version", "live", "txn_ids", "txn_pairs", "dvs"))
+
+
+def _refuse_unknown_fields(d: dict, known: frozenset, where: str) -> None:
+    """Refuse a log entry or checkpoint that carries a feature this
+    module does not implement: folding it without that feature would
+    silently drop a constraint or a table's partitioning."""
+    bad = sorted(k for k, v in d.items() if k not in known and v)
+    if bad:
+        raise TableStateError(
+            f"{where} carries {bad}, a table feature this TxnTable "
+            f"does not support (CHECK constraints and Hive "
+            f"partitioning were removed); refusing to read it "
+            f"without them")
 
 
 def _as_add(a) -> tuple[str, dict | None]:
@@ -222,30 +244,10 @@ class TxnTable:
                  cluster_writes: bool = False,
                  rows_per_file: int = 500_000,
                  stats_cols: tuple[str, ...] = ("id", "updated"),
-                 dv_broadcast_budget: int = 1_000_000,
-                 partition_by: tuple[str, ...] = ()):
+                 dv_broadcast_budget: int = 1_000_000):
         self.spark = spark
         self.path = os.path.abspath(path)
         self.key = key
-        # Hive-style partition columns (Delta's partitionedBy): every
-        # data file holds EXACTLY ONE combination of partition values
-        # (enforced at write time via the parquet writer's partitionBy
-        # on duplicated columns, then flattened back into the table's
-        # flat data/<commit>/<file> layout so the DV/position
-        # machinery's path invariants hold). Each add records the
-        # file's exact values under ``part`` AND mirrors them into the
-        # per-column [min,max] stats as point ranges — so every
-        # existing stat-pruning path (delete(where=), read_where,
-        # read_for_range, max_stat) prunes partitions EXACTLY for
-        # free, and ``overwrite(replace_where=...)`` can classify
-        # whole files in or out of a partition predicate soundly.
-        self.partition_by = tuple(partition_by)
-        if self.key in self.partition_by:
-            raise ValueError(
-                f"partition_by must not contain the table key "
-                f"{self.key!r}: partitioning on a unique key makes "
-                f"one partition per row")
-        self._guard_dv_columns(self.partition_by, "partition_by")
         self.checkpoint_every = checkpoint_every
         # NON-KEY columns to record per-file min/max for (Delta's
         # dataSkippingNumIndexedCols analogue — VERDICT r6 task 3):
@@ -327,8 +329,10 @@ class TxnTable:
         return os.path.join(self._log_dir(),
                             f"checkpoint-{version:08d}.json")
 
-    @staticmethod
-    def _fold_entry(snap: Snapshot, e: dict) -> None:
+    def _fold_entry(self, snap: Snapshot, e: dict) -> None:
+        _refuse_unknown_fields(
+            e, _ENTRY_FIELDS,
+            f"TxnTable log entry {e['version']} at {self._log_dir()}")
         snap.version = e["version"]
         for f in e.get("removes", []):
             snap.live.pop(f, None)
@@ -337,10 +341,10 @@ class TxnTable:
             p, stats = _as_add(a)
             snap.live[p] = stats
             snap.dvs.pop(p, None)      # a fresh add masks nothing
-        # deletion-vector pointer deltas, AFTER adds/removes so a
-        # restore that re-references a file AND re-attaches its old
-        # DV in one entry folds to the attached state (null clears —
-        # a restore to a pre-delete version detaches the pointer)
+        # deletion-vector pointer deltas, AFTER adds/removes so an
+        # entry that re-references a file AND attaches a DV to it
+        # folds to the attached state (null detaches the pointer;
+        # RESTORE commits of earlier versions wrote both shapes)
         for p, dv in (e.get("dvs") or {}).items():
             if dv is None:
                 snap.dvs.pop(p, None)
@@ -348,14 +352,6 @@ class TxnTable:
                 snap.dvs[p] = {"dir": dv["dir"], "card": dv["card"]}
         if e.get("app_txn_id") is not None:
             snap.txn_ids.add(e["app_txn_id"])
-        # CHECK-constraint deltas (Delta's metaData action analogue)
-        for n, expr in (e.get("constraint_set") or {}).items():
-            snap.constraints[n] = expr
-        for n in e.get("constraint_drop") or []:
-            snap.constraints.pop(n, None)
-        # partition-column declaration (metaData.partitionColumns)
-        if "partition_by" in e:
-            snap.partition_by = tuple(e["partition_by"])
 
     def _snapshot(self, as_of: int | None = None) -> Snapshot:
         """One log read per operation — with a bounded internal retry
@@ -394,21 +390,24 @@ class TxnTable:
                      if v <= as_of]
             cp = older[-1] if older else None
         if cp is not None:
+            data = None
             try:
                 data = self._load_json(self._checkpoint_path(cp))
                 snap.version = data["version"]
                 snap.live = dict(_as_add(a) for a in data["live"])
                 snap.txn_ids = set(data["txn_ids"])
-                snap.constraints = dict(data.get("constraints") or {})
                 snap.dvs = dict(data.get("dvs") or {})
-                snap.partition_by = tuple(
-                    data.get("partition_by") or ())
             except (OSError, ValueError, KeyError, TypeError):
                 # missing OR corrupt checkpoint: the retained log can
                 # rebuild the state — fall back rather than wedging
                 # every operation on one bad file
                 snap = Snapshot()
                 cp = None
+            if isinstance(data, dict):
+                _refuse_unknown_fields(
+                    data, _CHECKPOINT_FIELDS,
+                    f"TxnTable checkpoint {data.get('version')} at "
+                    f"{self._log_dir()}")
         if cp is None and entries and entries[0][0] > 0:
             raise ValueError(
                 f"TxnTable log at {self._log_dir()} starts at version "
@@ -533,14 +532,9 @@ class TxnTable:
                 # is what lets the NEXT checkpoint carry forward
                 "txn_ids": sorted({t for _, t in pairs}),
                 "txn_pairs": sorted(pairs),
-                # constraint state must survive cleanup_log deleting
-                # the set_constraint entries behind this checkpoint
-                "constraints": snap.constraints,
-                # deletion-vector pointers likewise outlive their
-                # delete entries once the log head is cleaned
-                "dvs": snap.dvs,
-                # partition declaration outlives its declaring entry
-                "partition_by": list(snap.partition_by)}
+                # deletion-vector pointers must outlive their delete
+                # entries once the log head is cleaned
+                "dvs": snap.dvs}
         d = self._log_dir()
         tmp = os.path.join(d, f".tmp-cp-{uuid.uuid4().hex}.json")
         with open(tmp, "w") as f:
@@ -704,46 +698,15 @@ class TxnTable:
         if self.cluster_writes and self.key in df.columns:
             n = df.count()
             nfiles = max(1, -(-n // self.rows_per_file))
-            # on a partitioned table, range-cluster by (partition
-            # cols, key): each task then holds a CONTIGUOUS run of
-            # partition values, so the hive split below emits
-            # O(tasks + values) files instead of O(tasks x values)
-            cluster = [c for c in self.partition_by
-                       if c in df.columns] + [self.key]
-            df = df.repartitionByRange(nfiles, *cluster)
-        if self.partition_by:
-            missing = [c for c in self.partition_by
-                       if c not in df.columns]
-            if missing:
-                raise ValueError(
-                    f"write batch is missing partition column(s) "
-                    f"{missing}: a partitioned table's every write "
-                    f"must carry its partition_by columns")
-            # partition on DUPLICATED columns so the values stay in
-            # the data files too (the writer consumes the dir-encoded
-            # columns; a bare partitionBy would strip them from the
-            # parquet, breaking flat per-file reads), then flatten the
-            # hive dirs back into this commit's flat dir — the log's
-            # data/<commit>/<file> path shape is load-bearing for the
-            # deletion-vector machinery (_rel_file_col).
-            wdf = df
-            for c in self.partition_by:
-                wdf = wdf.withColumn(f"__part_{c}", F.col(c))
-            (wdf.write.mode("error")
-             .partitionBy(*[f"__part_{c}" for c in self.partition_by])
-             .parquet(out_dir))
-            _flatten_partition_dirs(out_dir)
-        else:
-            df.write.mode("error").parquet(out_dir)
+            df = df.repartitionByRange(nfiles, self.key)
+        df.write.mode("error").parquet(out_dir)
         names = sorted(n for n in os.listdir(out_dir)
                        if n.endswith(".parquet"))
         stats = {}
         if names and self.key in df.columns:
             tagged = (self.spark.read.parquet(out_dir)
                       .withColumn("_f", F.input_file_name()))
-            extras = [c for c in
-                      dict.fromkeys(list(self.stats_cols)
-                                    + list(self.partition_by))
+            extras = [c for c in self.stats_cols
                       if c != self.key and c in df.columns]
             aggs = [F.min(self.key).alias("mn"),
                     F.max(self.key).alias("mx"),
@@ -763,23 +726,6 @@ class TxnTable:
                         c: {"mn": _stat_encode(r[f"_mn{i}"]),
                             "mx": _stat_encode(r[f"_mx{i}"])}
                         for i, c in enumerate(extras)}
-                if self.partition_by:
-                    # exact per-file partition values, read back from
-                    # the stats aggregate (typed, _stat_encode domain)
-                    # rather than parsed out of hive dir names. Purity
-                    # (one value per file) is the writer's invariant;
-                    # an all-NULL value records as None (min/max skip
-                    # nulls), the hive default-partition analogue.
-                    part = {}
-                    for c in self.partition_by:
-                        cs = s["cols"][c]
-                        if cs["mn"] != cs["mx"]:
-                            raise RuntimeError(
-                                f"partition purity violated: file "
-                                f"{base} spans {c} range "
-                                f"[{cs['mn']!r}, {cs['mx']!r}]")
-                        part[c] = cs["mn"]
-                    s["part"] = part
                 stats[base] = s
             # a part-file absent from the stats aggregate is EMPTY
             # (Spark writes zero-row parts for some shuffle shapes):
@@ -844,32 +790,6 @@ class TxnTable:
                 f"deletion-vector working columns (_dv_file/_dv_pos/"
                 f"_dv_commit are reserved); rename them first")
 
-    def _reconcile_partitioning(self, snap: Snapshot,
-                                full_overwrite: bool = False) -> dict:
-        """Align this handle's ``partition_by`` with the TABLE's
-        declared partition columns (Delta's metaData.partitionColumns
-        analogue, folded from the log / checkpoints). A handle opened
-        without ``partition_by`` ADOPTS the table's declaration — so
-        a reopened table keeps writing partition-pure files — and a
-        conflicting declaration refuses unless the operation is a
-        full overwrite (the only op that replaces every file, making
-        a re-partitioning sound). Returns the entry fields declaring
-        a new/changed partitioning ({} when nothing changes); every
-        write path calls this right after taking its snapshot."""
-        mine, theirs = self.partition_by, snap.partition_by
-        if not mine and theirs:
-            self.partition_by = tuple(theirs)       # adopt
-            return {}
-        if tuple(mine) == tuple(theirs):
-            return {}
-        if theirs and not full_overwrite:
-            raise ValueError(
-                f"table at {self.path} is partitioned by "
-                f"{list(theirs)} but this handle was opened with "
-                f"partition_by={list(mine)}; changing the "
-                f"partitioning requires a full overwrite()")
-        return {"partition_by": list(mine)}
-
     def _with_pos(self, df: DataFrame) -> DataFrame:
         """Tag each row with its source file's rel path and its
         stable in-file row position (parquet row order is immutable;
@@ -883,8 +803,8 @@ class TxnTable:
         """(_dv_file, _dv_pos) rows for the given file -> DV-dir
         pointers. Each distinct dir is read once, filtered to the
         files whose CURRENT pointer is that dir — a dir may also hold
-        stale rows for files whose pointer has since moved (or been
-        restored backwards), and those must not leak in."""
+        stale rows for files whose pointer has since moved, and those
+        must not leak in."""
         if not pairs:
             return None
         cols = ["_dv_file", "_dv_pos"] + \
@@ -1125,28 +1045,6 @@ class TxnTable:
             df = df.where(F.col(col) <= F.lit(hi))
         return df
 
-    def read_where(self, where: str) -> DataFrame:
-        """Rows matching a SQL predicate string, opening ONLY the
-        data files whose per-file stats could hold a match — the
-        read-side twin of the stat-pruned ``delete(where=)``. On a
-        partitioned table the partition columns' stats are exact
-        point values, so a partition predicate prunes to exactly the
-        matching partitions' files (hive-style partition pruning);
-        range predicates on ``stats_cols`` prune by [min, max] like
-        ``read_for_range``. Unparseable predicate shapes scan every
-        live file; the exact row filter applies on top either way, so
-        the result always equals ``read().where(where)``."""
-        snap = self._snapshot()
-        if not snap.live:
-            raise TableStateError(
-                f"TxnTable at {self.path} has no committed data")
-        cands = self._prune_where_candidates(snap, where)
-        self.last_read_probe = {"live_files": len(snap.live),
-                                "candidate_files": sorted(cands)}
-        if not cands:
-            return self._empty_like(snap)
-        return self._read_live(cands, snap.dvs).where(where)
-
     def read_for_keys(self, keys: DataFrame) -> DataFrame:
         """Rows whose key appears in ``keys``, reading ONLY the data
         files whose stats range can contain one (the read-side twin of
@@ -1239,7 +1137,7 @@ class TxnTable:
             prior_e = e.get("dv_prior") or {}
             rdvs = e.get("remove_dvs") or {}
             if not adds and not removes and not dvs_e:
-                continue               # metadata-only (constraints)
+                continue               # metadata-only entry
             add_set = set(adds)
             kept_dv = {p: d for p, d in dvs_e.items()
                        if p not in add_set}
@@ -1254,7 +1152,11 @@ class TxnTable:
                         f"pre-images below the retention horizon are "
                         f"not reconstructable")
             for dd in dv_dirs:
-                if not os.path.isdir(os.path.join(self.path, dd)):
+                # vacuum unlinks a dir's files before the dir itself
+                # ages out, so an emptied dir is collected too
+                full = os.path.join(self.path, dd)
+                if not (os.path.isdir(full) and any(
+                        n.endswith(".parquet") for n in os.listdir(full))):
                     raise ValueError(
                         f"changes({v_lo}, {v_hi}): deletion-vector "
                         f"dir {dd} from commit {v} was collected by "
@@ -1274,8 +1176,8 @@ class TxnTable:
                                       "left_anti")
                        .drop("_dv_file", "_dv_pos"))
             # post-image: added files minus the DVs this entry
-            # attaches to them (a restore re-adding a file together
-            # with its historical vector)
+            # attaches to them (RESTORE commits written by earlier
+            # versions re-add a file together with its old vector)
             post = self._read_files(adds) if adds else None
             add_dv = {p: d["dir"] for p, d in dvs_e.items()
                       if d and p in add_set}
@@ -1287,7 +1189,7 @@ class TxnTable:
             # kept-live files whose DV pointer moved: the position
             # DELTA is the row-level change — newly masked positions
             # are deletes (a delete commit), unmasked ones re-insert
-            # (a restore to a pre-delete version)
+            # (an earlier version's RESTORE to a pre-delete version)
             if kept_dv:
                 new_pos = self._dv_positions(
                     {p: d["dir"] for p, d in kept_dv.items() if d})
@@ -1301,7 +1203,7 @@ class TxnTable:
                 # parquets are position SETS per file), so a position
                 # in both sides sums to 0 (unchanged), only-current
                 # to +1 (newly masked -> delete) and only-prior to -1
-                # (unmasked by a restore -> re-insert). Replaces two
+                # (unmasked by a RESTORE -> re-insert). Replaces two
                 # anti-joins each paying its own checkpoint + count
                 # (half the feed's driver actions per DV commit).
                 del_pos = res_pos = None
@@ -1460,84 +1362,21 @@ class TxnTable:
 
     def overwrite(self, df: DataFrame,
                   app_txn_id: str | None = None,
-                  replace_where: str | None = None,
                   retries: int = 0) -> int:
-        """Full-snapshot write (version 0 bootstrap or replace) — or,
-        with ``replace_where``, Delta's DYNAMIC PARTITION OVERWRITE
-        (``replaceWhere``): atomically swap out exactly the files of
-        the partitions matching the predicate for the new batch,
-        leaving every other partition's files untouched. The
-        predicate must be statically checkable (the same tiny
-        interval grammar ``delete(where=)`` prunes with) and may
-        reference ONLY ``partition_by`` columns — file-granular
-        removal is sound only when membership is a per-file constant
-        — and every incoming row must satisfy it (validated on the
-        staged parquet, one O(batch) pass; a violating batch is
-        refused with the staged files cleaned up, like a CHECK
-        refusal). At 100 TB this is the re-ingest primitive: replace
-        one day / one source shard in O(that partition), never
-        O(table)."""
+        """Full-snapshot write: the version 0 bootstrap, or a replace
+        of every live file by ``df`` in one atomic commit. An
+        ``app_txn_id`` already in the log makes it a no-op."""
         return self._with_retries(
-            lambda: self._overwrite_once(df, app_txn_id, replace_where),
-            retries)
+            lambda: self._overwrite_once(df, app_txn_id), retries)
 
     def _overwrite_once(self, df: DataFrame,
-                        app_txn_id: str | None,
-                        replace_where: str | None) -> int:
+                        app_txn_id: str | None) -> int:
         snap = self._snapshot()
         if app_txn_id is not None and app_txn_id in snap.txn_ids:
             return snap.version
-        pmeta = self._reconcile_partitioning(
-            snap, full_overwrite=replace_where is None)
-        removes = list(snap.live)
-        constraints = dict(snap.constraints)
-        extra = None
-        if replace_where is not None:
-            if not self.partition_by:
-                raise ValueError(
-                    "overwrite(replace_where=...) requires a "
-                    "partitioned table (partition_by)")
-            node = _parse_predicate(replace_where)
-            if node is None:
-                raise ValueError(
-                    f"replace_where predicate {replace_where!r} is "
-                    f"not statically checkable (comparisons / IN / "
-                    f"BETWEEN over AND/OR on partition columns)")
-            stray = _pred_columns(node) - set(self.partition_by)
-            if stray:
-                raise ValueError(
-                    f"replace_where may reference only partition "
-                    f"columns {list(self.partition_by)}; got "
-                    f"{sorted(stray)}")
-            removes = []
-            for p, s in snap.live.items():
-                part = (s or {}).get("part")
-                if part is None or any(c not in part
-                                       for c in _pred_columns(node)):
-                    raise ValueError(
-                        f"replace_where: live file {p} has no "
-                        f"partition values for the predicate's "
-                        f"columns (written before partition_by?); "
-                        f"file-granular replacement would be unsound")
-                if _pred_exact_match(node, part):
-                    removes.append(p)
-            # every incoming row must fall INSIDE the replaced
-            # predicate (Delta refuses too) — enforced on the staged
-            # parquet below, same one-materialization discipline as
-            # CHECK constraints, with staged-file cleanup on refusal.
-            # Constraint names are user data: never shadow one that
-            # happens to be called "replace_where"
-            rw_key = "replace_where"
-            while rw_key in constraints:
-                rw_key += "_"
-            constraints[rw_key] = replace_where
-            extra = {"replace_where": replace_where}
         v = snap.version + 1
         adds = self._write_data(df, v)
-        self._validate_staged(adds, constraints,
-                              "the overwrite batch")
-        self._commit(v, adds, removes, "overwrite", app_txn_id,
-                     extra={**(extra or {}), **pmeta} or None,
+        self._commit(v, adds, list(snap.live), "overwrite", app_txn_id,
                      prior_live=snap.live, prior_dvs=snap.dvs)
         return v
 
@@ -1651,7 +1490,6 @@ class TxnTable:
         snap = self._snapshot()
         if app_txn_id is not None and app_txn_id in snap.txn_ids:
             return snap.version
-        pmeta = self._reconcile_partitioning(snap)
         if deleted_keys is None:
             deleted_keys = changed.select(key).limit(0)
         deleted_keys = deleted_keys.select(key).distinct()
@@ -1724,10 +1562,7 @@ class TxnTable:
         # read-own-input hazard, so no checkpoint needed
         v = snap.version + 1
         adds = self._write_data(new_rows, v)
-        self._validate_staged(adds, snap.constraints,
-                              "the merge batch")
         self._commit(v, adds, touched, "merge", app_txn_id,
-                     extra=pmeta or None,
                      prior_live=snap.live, prior_dvs=snap.dvs)
         return v
 
@@ -1780,7 +1615,6 @@ class TxnTable:
         snap = self._snapshot()
         if app_txn_id is not None and app_txn_id in snap.txn_ids:
             return snap.version
-        pmeta = self._reconcile_partitioning(snap)
         if not snap.live:
             raise TableStateError(
                 f"TxnTable at {self.path} has no committed data")
@@ -1808,7 +1642,6 @@ class TxnTable:
         dead, extra = self._mask_commit_parts(matched, snap, v)
         if not dead and not extra:
             return snap.version        # nothing matched: no commit
-        extra.update(pmeta)
         self._commit(v, [], dead, "delete", app_txn_id,
                      extra=extra or None,
                      prior_live=snap.live, prior_dvs=snap.dvs)
@@ -1871,9 +1704,7 @@ class TxnTable:
         return dead, extra
 
     def compact(self, small_rows_threshold: int | None = None,
-                retries: int = 0, purge_dvs: bool = False,
-                zorder_by: tuple[str, str] | None = None,
-                where: str | None = None) -> int:
+                retries: int = 0, purge_dvs: bool = False) -> int:
         """OPTIMIZE: fold small data files into ~rows_per_file-sized
         key-clustered ones in one atomic commit (Delta's bin-packing
         OPTIMIZE). Micro-batch merges add one small file per epoch —
@@ -1893,28 +1724,6 @@ class TxnTable:
         has zero masked positions, so reads drop the position
         anti-join entirely.
 
-        ``zorder_by=(col_a, col_b)`` re-lays the WHOLE table on a
-        Morton curve of the two (numeric) columns instead of
-        key-range clustering — Delta's ``OPTIMIZE ZORDER BY``. Each
-        output file covers a small rectangle in (a, b) space, so the
-        per-file stats recorded for those columns (put them in
-        ``stats_cols``) prune ``read_for_range`` scans on EITHER
-        column. Trade-off (same as Delta's): the files' KEY ranges
-        widen, so key-probe pruning keeps more candidate files.
-
-        ``where=`` scopes the compaction to files that could hold a
-        matching row (Delta's ``OPTIMIZE ... WHERE``, generalized to
-        any predicate the interval grammar can check against the
-        per-file stats): on a partitioned table
-        ``compact(where="day = '2024-06-01'")`` bin-packs or
-        Z-orders ONE partition in O(that partition) — the nightly
-        maintenance shape for a time-partitioned 100-TB table.
-        Compacting a subset is always sound (the rewrite preserves
-        exactly the subset's live rows); an unparseable predicate
-        refuses rather than silently compacting everything, and a
-        scoped run skips the table-global DV-cardinality trigger
-        (scoped means scoped).
-
         ``retries``: the shared ``_with_retries`` policy — on a
         CommitConflict (a concurrent writer landed a commit between
         this compact's snapshot and its CAS) the WHOLE compact re-runs
@@ -1924,106 +1733,58 @@ class TxnTable:
         auto-compact must not fail a streaming epoch).
         """
         return self._with_retries(
-            lambda: self._compact_once(small_rows_threshold, purge_dvs,
-                                       zorder_by, where),
+            lambda: self._compact_once(small_rows_threshold, purge_dvs),
             retries)
 
-    def _compact_once(self,
-                      small_rows_threshold: int | None = None,
-                      purge_dvs: bool = False,
-                      zorder_by: tuple[str, str] | None = None,
-                      where: str | None = None) -> int:
+    def _compact_once(self, small_rows_threshold: int | None = None,
+                      purge_dvs: bool = False) -> int:
         thr = (self.rows_per_file // 2 if small_rows_threshold is None
                else small_rows_threshold)
         snap = self._snapshot()
-        pmeta = self._reconcile_partitioning(snap)
-        # OPTIMIZE ... WHERE (Delta's partition-scoped OPTIMIZE, here
-        # generalized to any stat-checkable predicate): restrict the
-        # candidate set to files that COULD hold a matching row —
-        # compacting any SUBSET of files is always sound (the rewrite
-        # preserves exactly the subset's live rows), so on a
-        # partitioned table `where="day = '...'"` compacts one
-        # partition in O(that partition) and every other file is not
-        # even statted. An unparseable predicate refuses: the caller
-        # asked for a scope, silently compacting the world isn't one.
-        scope: set | None = None
-        if where is not None:
-            if _parse_predicate(where) is None:
-                raise ValueError(
-                    f"compact(where=...): predicate {where!r} is not "
-                    f"statically checkable (comparisons / IN / "
-                    f"BETWEEN over AND/OR on stat-covered columns)")
-            scope = set(self._prune_where_candidates(snap, where))
 
         def _masked(p) -> int:
             return snap.dvs.get(p, {}).get("card", 0)
 
-        if zorder_by:
-            # full-table (or full-scope) re-layout
-            small = [p for p in snap.live
-                     if scope is None or p in scope]
-            if not small:
-                return snap.version
-        else:
-            # "small" by EFFECTIVE rows (stats count minus DV-masked),
-            # so a file whittled down by DV deletes
-            # qualifies for bin-packing; additionally any file with
-            # >= 20% of its rows masked is rewritten outright — compact
-            # is the DV MATERIALIZER (Delta's REORG/purge), the
-            # pressure valve that keeps the read path's broadcast of
-            # masked positions bounded. purge_dvs forces EVERY masked
-            # file in.
-            small = [p for p, s in snap.live.items()
-                     if (scope is None or p in scope)
-                     and (not s or s.get("rows") is None
-                          or s["rows"] - _masked(p) <= thr
-                          or (_masked(p) > 0
-                              and _masked(p) * 5 >= s["rows"])
-                          or (purge_dvs and _masked(p) > 0))]
-            # GLOBAL masked-cardinality trigger (VERDICT r10 #2): the
-            # per-file 20% rule never fires on a table of MANY files
-            # each lightly masked, yet their SUM is what a scan must
-            # hold. When the table's total unpurged cardinality
-            # exceeds the read budget, pull in the most-masked files
-            # (descending) until the remainder sits at half the
-            # budget (hysteresis — the next trickle of deletes does
-            # not immediately re-trigger).
-            total_card = sum(_masked(p) for p in snap.live)
-            if scope is None and total_card > self.dv_broadcast_budget:
-                chosen = set(small)
-                rem = total_card - sum(_masked(p) for p in chosen)
-                for p in sorted(
-                        (q for q in snap.dvs
-                         if q in snap.live and q not in chosen),
-                        key=lambda q: -_masked(q)):
-                    if rem <= self.dv_broadcast_budget // 2:
-                        break
-                    chosen.add(p)
-                    rem -= _masked(p)
-                small = [p for p in snap.live if p in chosen]
-            # a single DV-carrying file is still worth rewriting (the
-            # rewrite drops its vector); plain bin-packing needs >= 2
-            if len(small) < 2 and not any(_masked(p) for p in small):
-                return snap.version
+        # "small" by EFFECTIVE rows (stats count minus DV-masked), so a
+        # file whittled down by DV deletes qualifies for bin-packing;
+        # additionally any file with >= 20% of its rows masked is
+        # rewritten outright — compact is the DV MATERIALIZER (Delta's
+        # REORG/purge), the pressure valve that keeps the read path's
+        # broadcast of masked positions bounded. purge_dvs forces
+        # EVERY masked file in.
+        small = [p for p, s in snap.live.items()
+                 if (not s or s.get("rows") is None
+                     or s["rows"] - _masked(p) <= thr
+                     or (_masked(p) > 0 and _masked(p) * 5 >= s["rows"])
+                     or (purge_dvs and _masked(p) > 0))]
+        # GLOBAL masked-cardinality trigger (VERDICT r10 #2): the
+        # per-file 20% rule never fires on a table of MANY files each
+        # lightly masked, yet their SUM is what a scan must hold. When
+        # the table's total unpurged cardinality exceeds the read
+        # budget, pull in the most-masked files (descending) until the
+        # remainder sits at half the budget (hysteresis — the next
+        # trickle of deletes does not immediately re-trigger).
+        total_card = sum(_masked(p) for p in snap.live)
+        if total_card > self.dv_broadcast_budget:
+            chosen = set(small)
+            rem = total_card - sum(_masked(p) for p in chosen)
+            for p in sorted(
+                    (q for q in snap.dvs
+                     if q in snap.live and q not in chosen),
+                    key=lambda q: -_masked(q)):
+                if rem <= self.dv_broadcast_budget // 2:
+                    break
+                chosen.add(p)
+                rem -= _masked(p)
+            small = [p for p in snap.live if p in chosen]
+        # a single DV-carrying file is still worth rewriting (the
+        # rewrite drops its vector); plain bin-packing needs >= 2
+        if len(small) < 2 and not any(_masked(p) for p in small):
+            return snap.version
         df = self._read_live(small, snap.dvs)
         n = df.count()
         nfiles = max(1, -(-n // self.rows_per_file))
-        if zorder_by:
-            from ..operators.layout import zorder_layout
-            a, b = zorder_by
-            for c in (a, b):
-                if c not in df.columns:
-                    raise ValueError(
-                        f"compact(zorder_by): column {c!r} not in "
-                        f"the table schema")
-            # range-partition on the Z-VALUE: each output file gets a
-            # contiguous Morton range = a small (a, b) rectangle, so
-            # both columns' per-file min/max stay tight
-            zb = zorder_layout(df, a, b)
-            packed = (zb.repartitionByRange(nfiles, "zvalue")
-                      .sortWithinPartitions("zvalue")
-                      .drop("zvalue", "zbucket"))
-        elif self.key in df.columns:
+        if self.key in df.columns:
             packed = df.repartitionByRange(nfiles, self.key)
         else:
             packed = df.coalesce(nfiles)
@@ -2035,362 +1796,7 @@ class TxnTable:
         finally:
             self.cluster_writes = cw
         self._commit(v, adds, sorted(small), "compact", None,
-                     extra=pmeta or None,
                      prior_live=snap.live, prior_dvs=snap.dvs)
-        return v
-
-
-    def constraints(self) -> dict[str, str]:
-        """Current CHECK constraints (name -> boolean SQL expr)."""
-        return dict(self._snapshot().constraints)
-
-    def _enforce_constraints(self, df: DataFrame,
-                             constraints: dict[str, str],
-                             what: str) -> None:
-        """Refuse a write whose rows violate any CHECK constraint —
-        one aggregate pass counts violations of every constraint at
-        once (a row where the expression is NULL violates, like
-        Delta: CHECK requires TRUE). An expression that no longer
-        resolves against the batch schema fails loudly too.
-        Aggregates use POSITIONAL aliases (_c0.._cN) mapped back to
-        constraint names: a constraint name is user data (dots,
-        backticks, spaces) and must never be parsed as a column
-        alias (ADVICE r9)."""
-        if not constraints:
-            return
-        names = sorted(constraints)
-        row = df.agg(*[
-            F.sum(F.when(~F.expr(constraints[n]).eqNullSafe(F.lit(True)),
-                         1).otherwise(0)).alias(f"_c{i}")
-            for i, n in enumerate(names)]).collect()[0]
-        bad = {n: int(row[f"_c{i}"])
-               for i, n in enumerate(names) if row[f"_c{i}"]}
-        if bad:
-            detail = "; ".join(
-                f"'{n}' ({constraints[n]}): {c} row(s)"
-                for n, c in bad.items())
-            raise ValueError(
-                f"CHECK constraint violated by {what}: {detail}")
-
-    def _validate_staged(self, adds: list[dict],
-                         constraints: dict[str, str],
-                         what: str) -> None:
-        """CHECK-validate the files ``_write_data`` just staged, so
-        validation and write see ONE materialization: the round-9
-        shape validated the input DataFrame and then recomputed it
-        for the write, letting a non-deterministic source (rand(),
-        re-read of a mutating upstream) land rows that were never
-        validated (ADVICE r9). Reading the staged parquet back costs
-        one O(batch) pass straight out of page cache — the same
-        price the stats pass already pays — and replaces the extra
-        full input-plan execution the pre-write check cost. A
-        refusal deletes the staged files (and their commit dir)
-        before raising: the failed write leaves no orphans."""
-        if not constraints or not adds:
-            return
-        try:
-            self._enforce_constraints(
-                self._read_files([a["path"] for a in adds]),
-                constraints, what)
-        except Exception as e:
-            # ANY validation failure must clean up the staged files —
-            # not just a counted violation: a constraint expression
-            # that no longer resolves against the written schema
-            # raises AnalysisException here, and letting it escape
-            # uncleaned would orphan the staged commit dir AND break
-            # the ValueError error contract (code-review r10)
-            import shutil
-            for d in {os.path.dirname(os.path.join(self.path,
-                                                   a["path"]))
-                      for a in adds}:
-                # the staged commit dir is per-attempt (uuid-suffixed)
-                # and exclusively this write's: remove it whole, not
-                # file-by-file — rmdir left the dir behind whenever
-                # the writer dropped _SUCCESS/.crc markers in it
-                shutil.rmtree(d, ignore_errors=True)
-            if isinstance(e, ValueError):
-                raise
-            raise ValueError(
-                f"CHECK constraint validation failed for {what}: "
-                f"{e}") from e
-
-    def set_constraint(self, name: str, expr: str,
-                       retries: int = 0) -> int:
-        """Delta's ALTER TABLE ADD CONSTRAINT: register a boolean SQL
-        expression every row of the table must satisfy. EXISTING data
-        is validated first (one aggregate scan — the same price Delta
-        pays) and the call refuses if any current row violates; from
-        then on every ``merge``/``overwrite`` batch is validated
-        before any file is written, and ``restore`` validates the
-        rows it would resurrect. The constraint is a metadata-only
-        commit folded like any other log entry and carried by
-        checkpoints, so it survives ``cleanup_log``."""
-        return self._with_retries(
-            lambda: self._set_constraint_once(name, expr), retries)
-
-    def _set_constraint_once(self, name: str, expr: str) -> int:
-        snap = self._snapshot()
-        if not name or not isinstance(name, str):
-            raise ValueError(
-                "set_constraint: name must be a non-empty string")
-        # eager parse + analysis: a malformed or unresolvable
-        # expression must fail HERE on the ValueError contract, not
-        # escape as a raw Spark traceback from some later write's
-        # validation aggregate (ADVICE r9). Parsing is local; the
-        # resolution probe analyzes against a ZERO-ROW frame of the
-        # table schema (footers only, no data read).
-        try:
-            from pyspark.errors import AnalysisException
-        except ImportError:                    # pragma: no cover
-            from pyspark.sql.utils import AnalysisException
-        try:
-            col = F.expr(expr)
-            if snap.live:
-                _ = self._empty_like(snap).select(
-                    col.cast("boolean")).schema
-        except AnalysisException as e:
-            raise ValueError(
-                f"set_constraint({name!r}): expression {expr!r} does "
-                f"not parse/resolve against the table schema: "
-                f"{e.getMessage() if hasattr(e, 'getMessage') else e}"
-            ) from e
-        if snap.live:
-            # through the deletion vectors: rows already masked are
-            # logically deleted and must not fail a new constraint
-            self._enforce_constraints(
-                self._read_live(list(snap.live), snap.dvs),
-                {name: expr}, "existing table data")
-        v = snap.version + 1
-        self._commit(v, [], [], "set_constraint", None,
-                     extra={"constraint_set": {name: expr}})
-        return v
-
-    def drop_constraint(self, name: str, retries: int = 0) -> int:
-        """Delta's ALTER TABLE DROP CONSTRAINT — metadata-only."""
-        def once() -> int:
-            snap = self._snapshot()
-            if name not in snap.constraints:
-                raise ValueError(
-                    f"drop_constraint({name!r}): no such "
-                    f"constraint; have {sorted(snap.constraints)}")
-            v = snap.version + 1
-            self._commit(v, [], [], "drop_constraint", None,
-                         extra={"constraint_drop": [name]})
-            return v
-        return self._with_retries(once, retries)
-
-    def restore(self, version: int, app_txn_id: str | None = None,
-                retries: int = 0) -> int:
-        """Delta RESTORE: make the CURRENT state equal
-        ``read(as_of=version)`` via ONE new commit that re-references
-        the target snapshot's files and removes the rest — no data is
-        copied or rewritten, so the cost is O(log fold), zero bytes
-        moved. History moves FORWARD (a bad merge is undone by a new
-        version whose content equals the old one, the bad version
-        stays inspectable via time travel), and the change feed serves
-        the restore commit as the row-level diff between the two
-        states — exactly Delta's RESTORE + CDF behavior.
-
-        Raises ``ValueError`` when the target is not reconstructable:
-        its log entries were removed by ``cleanup_log`` (the
-        ``_snapshot`` refusal) or any of its files were collected by
-        ``vacuum`` — committing would resurrect dangling references
-        (Delta refuses the same way unless forced). Returns the new
-        version, or the current one when the target state already
-        equals the current state (no-op: nothing to commit).
-
-        ``retries``: the shared ``_with_retries`` policy — the whole
-        restore re-plans against the fresh snapshot (the file DELTA
-        changes under a racing writer, the target state does not).
-
-        Reference anchor: the reference undoes a bad batch by
-        replaying events from the change_log pre-images row by row
-        (/root/reference/adsmp/models.py:127-141); the log-structured
-        table answers it with a metadata-only commit."""
-        return self._with_retries(
-            lambda: self._restore_once(version, app_txn_id), retries)
-
-    def _restore_once(self, version: int,
-                      app_txn_id: str | None) -> int:
-        snap = self._snapshot()
-        if app_txn_id is not None and app_txn_id in snap.txn_ids:
-            return snap.version
-        if not (0 <= version <= snap.version):
-            raise ValueError(
-                f"restore({version}): need 0 <= version <= latest "
-                f"committed version ({snap.version})")
-        target = self._snapshot(as_of=version)   # raises if log cleaned
-        missing = []
-        # resurrected DELETION-VECTOR dirs get the same treatment as
-        # data files: touch-to-refresh + existence check (a DV dir
-        # vacuumed below the horizon makes the target state
-        # unreconstructable — its masked positions are unknowable)
-        dv_paths: list[str] = []
-        for d in sorted({dv["dir"] for dv in target.dvs.values()}):
-            full_d = os.path.join(self.path, d)
-            if not os.path.isdir(full_d):
-                missing.append(d)
-                continue
-            dv_paths.extend(os.path.join(d, n)
-                            for n in os.listdir(full_d))
-        for p in list(target.live) + dv_paths:
-            full = os.path.join(self.path, p)
-            try:
-                # touch-to-refresh BEFORE the existence check: the
-                # files restore resurrects are old and referenced by
-                # no retained snapshot until the restore commit lands,
-                # so vacuum's min_age guard (built for fresh writer
-                # output) did not protect them — a vacuum that
-                # computed its protected set before this commit could
-                # unlink them mid-restore (ADVICE r9). A fresh mtime
-                # puts them inside any honest vacuum's age window;
-                # vacuum(min_age_seconds=0) already documents
-                # "only when no other writer can be in flight".
-                os.utime(full, None)
-            except OSError:
-                # utime can fail for reasons other than absence (a
-                # file another writer owns on a strict-permission
-                # mount) — only a genuinely MISSING file refuses; a
-                # present-but-untouchable one proceeds unrefreshed
-                # and relies on the post-commit re-verify arm below
-                if not os.path.exists(full):
-                    missing.append(p)
-        if missing:
-            raise ValueError(
-                f"restore({version}): data files {sorted(missing)} "
-                f"were collected by vacuum — the target snapshot is "
-                f"not reconstructable below the retention horizon")
-        adds = [{"path": p,
-                 **(s or {"min_key": None, "max_key": None,
-                          "rows": None})}
-                for p, s in target.live.items() if p not in snap.live]
-        removes = [p for p in snap.live if p not in target.live]
-        # DV pointer delta: every file live in the TARGET whose
-        # pointer differs from the current one — including clears
-        # (null: restoring to a pre-delete version detaches the
-        # vector, resurrecting its masked rows) and re-attachments on
-        # files the restore re-adds (fold order: adds pop, dvs set)
-        dvs_delta: dict = {}
-        for p in target.live:
-            tgt, cur = target.dvs.get(p), snap.dvs.get(p)
-            if p not in snap.live:
-                if tgt is not None:
-                    dvs_delta[p] = dict(tgt)
-            elif (tgt or {}).get("dir") != (cur or {}).get("dir"):
-                dvs_delta[p] = dict(tgt) if tgt is not None else None
-        if not adds and not removes and not dvs_delta:
-            return snap.version        # already that state: no commit
-        if snap.constraints:
-            # a constraint added AFTER the target version may not hold
-            # for the rows restore would resurrect — validate just the
-            # re-referenced files (through the TARGET's vectors: the
-            # masked rows do not come back) plus the rows a pointer
-            # clear unmasks; O(restored delta), not the table
-            frames = []
-            if adds:
-                frames.append(self._read_live(
-                    [a["path"] for a in adds], target.dvs))
-            kept = {p: d for p, d in dvs_delta.items()
-                    if p in snap.live}
-            if kept:
-                old_pos = self._dv_positions(
-                    {p: snap.dvs[p]["dir"] for p in kept
-                     if p in snap.dvs})
-                new_pos = self._dv_positions(
-                    {p: d["dir"] for p, d in kept.items()
-                     if d is not None})
-                if old_pos is not None:
-                    diff = (old_pos if new_pos is None else
-                            old_pos.join(new_pos,
-                                         ["_dv_file", "_dv_pos"],
-                                         "left_anti"))
-                    res = self._rows_at(diff)
-                    if res is not None:
-                        frames.append(res)
-            if frames:
-                un = frames[0]
-                for fr in frames[1:]:
-                    un = un.unionByName(fr, allowMissingColumns=True)
-                self._enforce_constraints(
-                    un, snap.constraints,
-                    f"rows restored from version {version}")
-        extra: dict = {}
-        if dvs_delta:
-            extra["dvs"] = dvs_delta
-            extra["dv_prior"] = {p: snap.dvs.get(p) for p in dvs_delta}
-        v = snap.version + 1
-        self._commit(v, adds, removes, "restore", app_txn_id,
-                     extra=extra or None,
-                     prior_live=snap.live, prior_dvs=snap.dvs)
-        # post-commit re-verify (detection arm of the same race): a
-        # vacuum pass that ignored the age guard can still have
-        # unlinked a resurrected file between the check and the
-        # commit, leaving a committed version with dangling
-        # references. Roll FORWARD with a compensating commit that
-        # re-references the pre-restore state (those files were live
-        # a moment ago — every retained snapshot still protects
-        # them), then raise so the caller knows the restore did not
-        # stick.
-        gone = [a["path"] for a in adds
-                if not os.path.exists(os.path.join(self.path, a["path"]))]
-        gone += [d for d in sorted({dv["dir"]
-                                    for dv in target.dvs.values()})
-                 if not os.path.isdir(os.path.join(self.path, d))]
-        if gone:
-            comp_adds = [{"path": p,
-                          **(s or {"min_key": None, "max_key": None,
-                                   "rows": None})}
-                         for p, s in snap.live.items()
-                         if p not in target.live]
-            # the compensation must not itself publish dangling refs:
-            # once the restore commit became the head, snap.live's
-            # dropped files stopped being live-protected too, so the
-            # same rogue vacuum may have taken them. Verify before
-            # committing; if the pre-restore files are also gone the
-            # table has genuinely lost data to a guard-ignoring
-            # vacuum and the only honest move is to say so.
-            comp_gone = [a["path"] for a in comp_adds
-                         if not os.path.exists(
-                             os.path.join(self.path, a["path"]))]
-            comp_gone += [d for d in sorted({dv["dir"] for dv
-                                             in snap.dvs.values()})
-                          if not os.path.isdir(
-                              os.path.join(self.path, d))]
-            comp_removes = [a["path"] for a in adds]
-            # the roll-forward must also restore the PRE-restore DV
-            # pointers (inverse of dvs_delta, same fold semantics)
-            comp_dvs: dict = {}
-            for p in snap.live:
-                pre_dv, now_dv = snap.dvs.get(p), target.dvs.get(p)
-                if p not in target.live:
-                    if pre_dv is not None:
-                        comp_dvs[p] = dict(pre_dv)
-                elif (pre_dv or {}).get("dir") != (now_dv or {}).get("dir"):
-                    comp_dvs[p] = (dict(pre_dv)
-                                   if pre_dv is not None else None)
-            comp_extra: dict = {}
-            if comp_dvs:
-                comp_extra["dvs"] = comp_dvs
-                comp_extra["dv_prior"] = {p: target.dvs.get(p)
-                                          for p in comp_dvs}
-            if not comp_gone:
-                try:
-                    self._commit(v + 1, comp_adds, comp_removes,
-                                 "restore", None,
-                                 extra=comp_extra or None,
-                                 prior_live=target.live,
-                                 prior_dvs=target.dvs)
-                except CommitConflict:
-                    pass     # a later writer owns v+1; surface the loss
-                raise ValueError(
-                    f"restore({version}): data files {sorted(gone)} "
-                    f"were collected by a concurrent vacuum after the "
-                    f"commit — rolled forward to the pre-restore state")
-            raise ValueError(
-                f"restore({version}): a concurrent vacuum collected "
-                f"restored files {sorted(gone)} AND pre-restore files "
-                f"{sorted(comp_gone)} — both states lost data below "
-                f"the retention guards; manual repair required")
         return v
 
     def history(self) -> list[dict]:
@@ -2785,95 +2191,6 @@ def _pred_may_match(node, stat_fn) -> bool:
         except TypeError:
             return True
     return True
-
-
-def _flatten_partition_dirs(out_dir: str) -> None:
-    """Move the hive-partitioned writer output's nested
-    ``__part_c=v/.../part-*.parquet`` files up into ``out_dir`` with
-    collision-proof names (part-file basenames repeat across hive
-    dirs), then drop the emptied dirs — restoring the flat
-    ``data/<commit>/<file>`` layout the position machinery's
-    ``_rel_file_col`` three-component invariant relies on. Values are
-    NOT parsed from the dir names: the stats pass reads them back
-    typed from the data itself.
-
-    Cost note: O(files-in-commit) driver-side metadata renames —
-    free on a real filesystem. An object-store deployment would skip
-    the flatten (keep the hive layout and widen ``_rel_file_col`` to
-    four components, or carry partitionValues like Delta and read
-    per-dir); the flat layout is chosen here because it keeps ONE
-    path shape for every consumer (DV parquet, vacuum, restore,
-    probes) instead of two."""
-    import shutil
-    seq = 0
-    for root, _dirs, files in sorted(os.walk(out_dir)):
-        if root == out_dir:
-            continue
-        for name in sorted(files):
-            if name.endswith(".parquet") and not name.startswith("."):
-                os.rename(os.path.join(root, name),
-                          os.path.join(out_dir, f"p{seq:05d}-{name}"))
-                seq += 1
-    for name in os.listdir(out_dir):
-        p = os.path.join(out_dir, name)
-        if os.path.isdir(p):
-            shutil.rmtree(p)
-
-
-def _pred_columns(node) -> set:
-    """Column names referenced by a ``_parse_predicate`` AST."""
-    if node[0] in ("and", "or"):
-        return _pred_columns(node[1]) | _pred_columns(node[2])
-    return {node[1]}
-
-
-def _pred_exact_match(node, vals: dict) -> bool:
-    """Evaluate a parsed predicate against EXACT point values (a
-    partitioned file's ``part`` dict) with SQL comparison semantics:
-    a NULL value matches no comparison. Unlike ``_pred_may_match``
-    this must never guess — an incomparable literal/value pair (user
-    wrote ``p = 5`` against a string partition) raises instead of
-    silently picking a side, because the caller is deciding whether
-    to DROP the file."""
-    op = node[0]
-    if op == "and":
-        return (_pred_exact_match(node[1], vals)
-                and _pred_exact_match(node[2], vals))
-    if op == "or":
-        return (_pred_exact_match(node[1], vals)
-                or _pred_exact_match(node[2], vals))
-    if op == "cmp":
-        _, col, cmp_op, lit = node
-        v = vals[col]
-        if v is None:
-            return False
-        v, lit = _pred_coerce(v, lit)
-        try:
-            if cmp_op in ("=", "=="):
-                return v == lit
-            if cmp_op in ("!=", "<>"):
-                return v != lit
-            return {"<": v < lit, "<=": v <= lit,
-                    ">": v > lit, ">=": v >= lit}[cmp_op]
-        except TypeError:
-            raise ValueError(
-                f"replace_where: literal {lit!r} is not comparable "
-                f"with partition column {col!r} value {v!r}")
-    # op == "in"
-    _, col, lits = node
-    v = vals[col]
-    if v is None:
-        return False
-    hit = False
-    for l in lits:
-        vc, lc = _pred_coerce(v, l)
-        try:
-            hit = hit or vc == lc
-        except TypeError:
-            raise ValueError(
-                f"replace_where: literal {l!r} is not comparable "
-                f"with partition column {col!r} value {v!r}")
-    return hit
 
 
 def _decode_uri(uri: str) -> str:

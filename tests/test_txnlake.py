@@ -522,18 +522,13 @@ def test_txn_vacuum_and_history(spark, tmp_path):
 def test_txn_randomized_lifecycle_matches_model(spark, tmp_path, seed):
     """Model-based check of the WHOLE lifecycle: a seeded random
     sequence of merge/delete/dv_delete (deletion vectors)/overwrite/
-    compact/vacuum/cleanup_log/
-    restore/set_constraint/drop_constraint ops (checkpoints firing
-    every 3 commits) must keep the table equal to a plain dict model
-    after every step — the same style of test that caught the
-    round-5 order-proxy byte bug. Vacuum keeps enough versions that
-    the current snapshot is always intact; cleanup_log interleaving
+    compact/vacuum/cleanup_log ops (checkpoints firing every 3
+    commits) must keep the table equal to a plain dict model after
+    every step — the same style of test that caught the round-5
+    order-proxy byte bug. Vacuum keeps enough versions that the
+    current snapshot is always intact; cleanup_log interleaving
     proves retention + vacuum's horizon fallback never touch live
-    data (the ADVICE r7 loss scenario); CHECK constraints gate the
-    model's merges exactly like the table's (round 10: a violating
-    merge must refuse and change NOTHING, a violating set_constraint
-    must refuse registration, restore may refuse when resurrected
-    rows violate a later constraint)."""
+    data (the ADVICE r7 loss scenario)."""
     import random
 
     rng = random.Random(seed)
@@ -559,8 +554,6 @@ def test_txn_randomized_lifecycle_matches_model(spark, tmp_path, seed):
     t.overwrite(_recs(spark, [(k, 0) for k in keys[:10]]))
     model.update({k: 0 for k in keys[:10]})
     check()
-    # every committed version's model state, for restore targets
-    models_by_version = {t.version(): dict(model)}
 
     def check_feed(v_before, prev_model):
         """The change feed for the step's transition must equal the
@@ -592,52 +585,22 @@ def test_txn_randomized_lifecycle_matches_model(spark, tmp_path, seed):
                 want[(k, "update_postimage")] = model[k]
         assert got == want
 
-    constraints: dict[str, int] = {}       # name -> lim for "v < lim"
     for step in range(10):
         op = rng.choice(["merge", "merge", "merge", "delete",
-                         "dv_delete", "compact", "vacuum", "cleanup",
-                         "restore", "constraint"])
+                         "dv_delete", "compact", "vacuum", "cleanup"])
         v_before, prev_model = t.version(), dict(model)
         if op == "merge":
             ups = {rng.choice(keys): step * 100 + i for i in range(4)}
             dels = ({rng.choice(list(model))}
                     if model and rng.random() < 0.5 else set())
             ups = {k: v for k, v in ups.items() if k not in dels}
-            if any(v >= lim for lim in constraints.values()
-                   for v in ups.values()):
-                # the model says this batch violates a CHECK: the
-                # merge must refuse and commit NOTHING (version and
-                # state both unchanged)
-                with pytest.raises(ValueError, match="CHECK"):
-                    t.merge(_recs(spark, list(ups.items())),
-                            deleted_keys=spark.createDataFrame(
-                                [(k,) for k in dels] or [("~none~",)],
-                                "bibcode string"))
-                assert t.version() == v_before
-            else:
-                t.merge(_recs(spark, list(ups.items())),
-                        deleted_keys=spark.createDataFrame(
-                            [(k,) for k in dels] or [("~none~",)],
-                            "bibcode string"))
-                model.update(ups)
-                for k in dels:
-                    model.pop(k, None)
-        elif op == "constraint":
-            if constraints and rng.random() < 0.5:
-                name = rng.choice(sorted(constraints))
-                t.drop_constraint(name)
-                constraints.pop(name)
-            else:
-                lim = (step + rng.choice([1, 4])) * 100
-                name = f"cap{step}"
-                if any(v >= lim for v in model.values()):
-                    with pytest.raises(ValueError,
-                                       match="existing table data"):
-                        t.set_constraint(name, f"v < {lim}")
-                    assert t.version() == v_before
-                else:
-                    t.set_constraint(name, f"v < {lim}")
-                    constraints[name] = lim
+            t.merge(_recs(spark, list(ups.items())),
+                    deleted_keys=spark.createDataFrame(
+                        [(k,) for k in dels] or [("~none~",)],
+                        "bibcode string"))
+            model.update(ups)
+            for k in dels:
+                model.pop(k, None)
         elif op == "delete":
             if not model:
                 continue
@@ -649,8 +612,7 @@ def test_txn_randomized_lifecycle_matches_model(spark, tmp_path, seed):
         elif op == "dv_delete":
             # merge-on-read delete (deletion vectors): by key batch
             # or by predicate, interleaved with every other op — the
-            # read, the feed, restore targets, and constraints must
-            # all see through the vectors
+            # read and the feed must both see through the vectors
             if not model:
                 continue
             if rng.random() < 0.5:
@@ -668,16 +630,8 @@ def test_txn_randomized_lifecycle_matches_model(spark, tmp_path, seed):
             t.compact()
         elif op == "vacuum":
             t.vacuum(keep_versions=3, min_age_seconds=0)
-        elif op == "restore":
-            tgt = rng.randrange(0, t.version() + 1)
-            try:
-                t.restore(tgt)
-            except ValueError:
-                continue   # target below retention: allowed refusal
-            model = dict(models_by_version[tgt])
         else:
             t.cleanup_log()
-        models_by_version[t.version()] = dict(model)
         check()
         check_feed(v_before, prev_model)
 
@@ -688,343 +642,6 @@ def test_txn_randomized_lifecycle_matches_model(spark, tmp_path, seed):
         assert t.read(as_of=t.version()).count() == len(model)
     except FileNotFoundError:
         assert not model
-
-
-def test_txn_restore(spark, tmp_path):
-    """Delta RESTORE: one metadata-only commit makes the current state
-    equal read(as_of=target) — zero data files written or copied,
-    history moves FORWARD (the undone versions stay time-travelable),
-    the change feed serves the restore as the row-level diff between
-    the two states, and a target below the retention horizon REFUSES
-    instead of committing dangling references."""
-    path = str(tmp_path / "t")
-    t = txn_table(spark, path)
-    t.overwrite(_recs(spark, [("B1", 1), ("B2", 2)]))            # v0
-    t.merge(_recs(spark, [("B2", 22), ("C1", 3)]))               # v1
-    t.merge(_recs(spark, [("D1", 4)]),
-            deleted_keys=spark.createDataFrame(
-                [("B1",)], "bibcode string"))                    # v2
-
-    want_v1 = sorted(tuple(r) for r in t.read(as_of=1).collect())
-    hashes_before = _file_hashes(path)
-
-    v = t.restore(1)                                             # v3
-    assert v == 3
-    assert sorted(tuple(r) for r in t.read().collect()) == want_v1
-    # metadata-only: not one data byte written, moved, or rewritten
-    assert _file_hashes(path) == hashes_before
-    assert t.history()[-1]["operation"] == "restore"
-    # the undone version is still inspectable via time travel
-    got_v2 = {r["bibcode"]: r["v"] for r in t.read(as_of=2).collect()}
-    assert got_v2 == {"B2": 22, "C1": 3, "D1": 4}
-
-    # the feed serves the restore as a row-level diff: B1 comes back,
-    # D1 goes away, untouched B2/C1 survivors cancel
-    feed = {(r["bibcode"], r["_change_type"]): r["v"]
-            for r in t.changes(2, 3).collect()}
-    assert feed == {("B1", "insert"): 1, ("D1", "delete"): 4}
-
-    # restoring to the current state is a no-op (no empty commit)
-    assert t.restore(1) == 3
-    # idempotent replay via app txn id
-    assert t.restore(2, app_txn_id="undo-undo") == 4
-    assert t.restore(2, app_txn_id="undo-undo") == 4
-
-    # a further merge on top of the restored state behaves normally
-    t.merge(_recs(spark, [("B2", 222)]))                         # v5
-    got = {r["bibcode"]: r["v"] for r in t.read().collect()}
-    assert got == {"B2": 222, "C1": 3, "D1": 4}
-
-    # refusals: out of range, and below the vacuum horizon
-    with pytest.raises(ValueError, match="restore"):
-        t.restore(99)
-    t.restore(1)                                                 # v6
-    t.merge(_recs(spark, [("E1", 5)]))                           # v7
-    t.vacuum(keep_versions=2, min_age_seconds=0)
-    with pytest.raises(ValueError, match="vacuum"):
-        t.restore(2)          # v2's files were collected
-
-
-def test_txn_restore_vacuum_toctou(spark, tmp_path):
-    """ADVICE r9 (medium): the files restore resurrects are old and
-    unreferenced by any retained snapshot until the restore commit
-    lands, so vacuum's min_age guard did not protect them — a vacuum
-    that computed its protected set before the restore commit could
-    unlink them after the existence check, committing dangling refs.
-    Two arms: (1) prevention — restore touch-refreshes its targets'
-    mtimes, so an age-guarded vacuum interleaved right before the
-    commit skips them and the restore lands readable; (2) detection —
-    a vacuum that ignores the age guard still unlinks them, and the
-    post-commit re-verify rolls FORWARD with a compensating commit to
-    the pre-restore state and raises, never leaving a dangling head."""
-    import os
-
-    def build(path):
-        t = txn_table(spark, path, rows_per_file=1000)
-        t.overwrite(_recs(spark, [("B1", 1), ("B2", 2)]))        # v0
-        t.merge(_recs(spark, [("B1", 11), ("B2", 22)]))          # v1
-        t.merge(_recs(spark, [("B1", 111)]))                     # v2
-        # age v0/v1's files well past any test-scale min_age window
-        for root, _d, files in os.walk(os.path.join(path, "data")):
-            for n in files:
-                old = 1_000_000_000
-                os.utime(os.path.join(root, n), (old, old))
-        return t
-
-    def interleave_vacuum(t, min_age):
-        """Patch _commit so a vacuum (whose protected set is computed
-        INSIDE the call — i.e. before the restore entry exists) runs
-        between restore's existence check and its commit publish."""
-        orig = t._commit
-
-        def patched(version, adds, removes, operation, app_txn_id,
-                    **kw):
-            if operation == "restore" and not getattr(
-                    patched, "fired", False):
-                patched.fired = True
-                txn_table(spark, t.path, rows_per_file=1000).vacuum(
-                    keep_versions=1, min_age_seconds=min_age)
-            return orig(version, adds, removes, operation,
-                        app_txn_id, **kw)
-
-        t._commit = patched
-
-    # arm 1: honest vacuum (min_age guard) — touch-refresh protects
-    # the resurrected files, the restore lands and reads clean
-    p1 = str(tmp_path / "t1")
-    t1 = build(p1)
-    interleave_vacuum(t1, min_age=3600.0)
-    v = t1.restore(0)
-    assert v == 3
-    got = {r["bibcode"]: r["v"] for r in t1.read().collect()}
-    assert got == {"B1": 1, "B2": 2}
-
-    # arm 2: age-guard-ignoring vacuum (the documented "only when no
-    # writer can be in flight" contract violated) — the re-verify
-    # detects the loss, compensates, and raises; the table head is
-    # the PRE-restore state with zero dangling references
-    p2 = str(tmp_path / "t2")
-    t2 = build(p2)
-    interleave_vacuum(t2, min_age=0.0)
-    with pytest.raises(ValueError, match="concurrent vacuum"):
-        t2.restore(0)
-    t2b = txn_table(spark, p2, rows_per_file=1000)
-    assert t2b.history()[-2:][0]["operation"] == "restore"   # v3: lost
-    assert t2b.history()[-1]["operation"] == "restore"       # v4: comp
-    got = {r["bibcode"]: r["v"] for r in t2b.read().collect()}
-    assert got == {"B1": 111, "B2": 22}
-
-
-def test_txn_restore_races_vacuum_threads(spark, tmp_path):
-    """Restore added to the concurrent-maintenance races (ADVICE r9):
-    a restorer thread flip-flops the table between two states while a
-    vacuum thread loops with keep_versions=1 — so the state NOT
-    currently live is always below the horizon and only the
-    touch-refresh window protects it. Invariant: every restore either
-    returns a version whose snapshot reads completely, or raises the
-    documented refusal — and the final head always reads with zero
-    dangling file references."""
-    import threading
-
-    path = str(tmp_path / "t")
-    t = txn_table(spark, path, rows_per_file=1000)
-    t.overwrite(_recs(spark, [("B1", 1), ("B2", 2)]))            # v0
-    t.merge(_recs(spark, [("B1", 11), ("B3", 3)]))               # v1
-    state_a = sorted(tuple(r) for r in t.read(as_of=0).collect())
-    state_b = sorted(tuple(r) for r in t.read(as_of=1).collect())
-
-    errors: list[Exception] = []
-    ok = {"restores": 0, "refusals": 0}
-    stop = threading.Event()
-
-    def restorer():
-        tr = txn_table(spark, path, rows_per_file=1000)
-        want = [(0, state_a), (1, state_b)]
-        i = 0
-        try:
-            while not stop.is_set() and ok["restores"] < 8:
-                target, want_rows = want[i % 2]
-                i += 1
-                try:
-                    v = tr.restore(target, retries=16)
-                except ValueError:
-                    ok["refusals"] += 1      # documented refusal path
-                    continue
-                got = sorted(tuple(r)
-                             for r in tr.read(as_of=v).collect())
-                assert got == want_rows, (v, target, got)
-                ok["restores"] += 1
-        except Exception as exc:
-            errors.append(traceback.format_exc())
-
-    def vacuumer():
-        tv = txn_table(spark, path, rows_per_file=1000)
-        try:
-            while not stop.is_set():
-                tv.vacuum(keep_versions=1, min_age_seconds=2.0)
-        except Exception as exc:
-            errors.append(traceback.format_exc())
-
-    rth = threading.Thread(target=restorer)
-    vth = threading.Thread(target=vacuumer)
-    rth.start()
-    vth.start()
-    rth.join(timeout=600)
-    stop.set()
-    vth.join(timeout=600)
-
-    assert not errors, "\n".join(str(e) for e in errors)
-    assert ok["restores"] >= 8, ok
-    final = sorted(tuple(r)
-                   for r in txn_table(spark, path).read().collect())
-    assert final in (state_a, state_b)
-
-
-@pytest.mark.slow
-def test_txn_check_constraints(spark, tmp_path):
-    """Delta CHECK constraints: set_constraint validates EXISTING data
-    before registering, every merge/overwrite batch is validated
-    before a single file is written (NULL violates, like Delta),
-    restore validates the rows it would resurrect, the constraint is
-    a metadata-only commit the change feed skips, and it survives
-    checkpoint + cleanup_log."""
-    path = str(tmp_path / "t")
-    t = txn_table(spark, path, checkpoint_every=2)
-    t.overwrite(_recs(spark, [("B1", 1), ("B2", 2)]))            # v0
-
-    # existing data violates -> refuse, nothing registered
-    with pytest.raises(ValueError, match="existing table data"):
-        t.set_constraint("v_small", "v < 2")
-    assert t.constraints() == {}
-    assert t.version() == 0
-
-    assert t.set_constraint("v_pos", "v > 0") == 1               # v1
-    assert t.constraints() == {"v_pos": "v > 0"}
-
-    # a valid batch passes; a violating one refuses BEFORE any commit
-    # (validated against the STAGED files post-write — see
-    # test_txn_constraint_validation_is_write_side)
-    t.merge(_recs(spark, [("C1", 3)]))                           # v2
-    with pytest.raises(ValueError, match="v_pos"):
-        t.merge(_recs(spark, [("D1", -5)]))
-    with pytest.raises(ValueError, match="v_pos"):
-        t.merge(_recs(spark, [("D1", None)]))     # NULL violates
-    with pytest.raises(ValueError, match="v_pos"):
-        t.overwrite(_recs(spark, [("D1", -5)]))
-    assert t.version() == 2
-    assert {r["bibcode"]: r["v"] for r in t.read().collect()} == \
-        {"B1": 1, "B2": 2, "C1": 3}
-
-    # the feed skips the metadata-only commit; the window still serves
-    feed = {(r["bibcode"], r["_change_type"]) for r in
-            t.changes(0, 2).collect()}
-    assert feed == {("C1", "insert")}
-
-    # survives checkpoint + cleanup_log on a FRESH handle
-    t.merge(_recs(spark, [("E1", 5)]))                           # v3
-    t.merge(_recs(spark, [("F1", 6)]))                           # v4 -> cp
-    assert t.cleanup_log() != []
-    t2 = txn_table(spark, path, checkpoint_every=2)
-    assert t2.constraints() == {"v_pos": "v > 0"}
-    with pytest.raises(ValueError, match="v_pos"):
-        t2.merge(_recs(spark, [("G1", 0)]))
-
-    # restore validates resurrected rows: drop, write a violator,
-    # overwrite it away, re-add the constraint, then try to restore
-    assert t2.drop_constraint("v_pos") == 5                      # v5
-    t2.merge(_recs(spark, [("N1", -9)]))                         # v6
-    t2.merge(_recs(spark, [("N1", 9)]))                          # v7
-    t2.set_constraint("v_pos", "v > 0")                          # v8
-    with pytest.raises(ValueError, match="restored from version 6"):
-        t2.restore(6)
-    with pytest.raises(ValueError, match="no such constraint"):
-        t2.drop_constraint("nope")
-
-
-def test_txn_constraint_validation_is_write_side(spark, tmp_path):
-    """ADVICE r9: validation must see the SAME materialization as the
-    write. The round-9 shape validated the input plan and then
-    recomputed it for the write — a non-deterministic source could
-    land rows that were never validated. Now the staged parquet files
-    themselves are validated before the commit: (1) a
-    non-deterministic batch whose WRITTEN rows violate is refused
-    even if a fresh recompute might pass; (2) a refusal deletes the
-    staged files — no orphans; (3) a passing write costs no extra
-    input-plan execution."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    path = str(tmp_path / "t")
-    t = txn_table(spark, path)
-    t.overwrite(_recs(spark, [("B1", 1)]))                       # v0
-    t.set_constraint("v_pos", "v > 0")                           # v1
-
-    def data_files():
-        out = []
-        for root, _d, files in os.walk(os.path.join(path, "data")):
-            out += [os.path.join(root, n) for n in files
-                    if n.endswith(".parquet")]
-        return sorted(out)
-
-    committed = data_files()
-
-    # non-deterministic batch: rand() makes ~half the rows violate on
-    # ANY materialization — the written rows are what gets checked,
-    # so the refusal is decided by the actual staged bytes
-    nd = (spark.range(200)
-          .select(F.concat(F.lit("N"), F.col("id")).alias("bibcode"),
-                  F.when(F.rand(seed=7) > 0.5, F.lit(5))
-                  .otherwise(F.lit(-5)).cast("long").alias("v")))
-    with pytest.raises(ValueError, match="v_pos"):
-        t.merge(nd)
-    # ... and the staged files were cleaned up, not orphaned
-    assert data_files() == committed
-    assert t.version() == 1
-
-    # a violating overwrite cleans up too
-    with pytest.raises(ValueError, match="v_pos"):
-        t.overwrite(_recs(spark, [("Z1", -1)]))
-    assert data_files() == committed
-
-    # a constraint that no longer RESOLVES against the written batch
-    # (overwrite never compares schemas) must also land on the
-    # ValueError contract AND clean up the staged files — not escape
-    # as a raw AnalysisException with orphans (code-review r10)
-    other = spark.createDataFrame([("Z1", 1)], "bibcode string, w long")
-    with pytest.raises(ValueError, match="validation failed"):
-        t.overwrite(other)
-    assert data_files() == committed
-    assert t.version() == 1
-
-
-def test_txn_set_constraint_error_contract_and_names(spark, tmp_path):
-    """ADVICE r9: set_constraint validates the expression EAGERLY —
-    malformed SQL and unresolvable columns raise ValueError (the JSON
-    error contract's exception), never a raw Spark ParseException /
-    AnalysisException from a later write; and a constraint NAME that
-    is not a legal column alias (dots, backticks, spaces) must not
-    break validation aggregates for subsequent writes."""
-    path = str(tmp_path / "t")
-    t = txn_table(spark, path)
-    t.overwrite(_recs(spark, [("B1", 1)]))                       # v0
-
-    with pytest.raises(ValueError, match="parse"):
-        t.set_constraint("bad_syntax", "v >< 1")
-    with pytest.raises(ValueError, match="resolve"):
-        t.set_constraint("bad_col", "no_such_column > 0")
-    with pytest.raises(ValueError, match="non-empty"):
-        t.set_constraint("", "v > 0")
-    assert t.constraints() == {} and t.version() == 0
-
-    # hostile alias names: positional aggregate aliases keep every
-    # later write's validation working
-    weird = "chk.v`x` pos"
-    assert t.set_constraint(weird, "v > 0") == 1                 # v1
-    t.merge(_recs(spark, [("C1", 3)]))                           # v2
-    with pytest.raises(ValueError, match=r"chk\.v"):
-        t.merge(_recs(spark, [("D1", -5)]))
-    assert t.drop_constraint(weird) == 3
 
 
 @pytest.mark.slow
@@ -1082,6 +699,46 @@ def test_txn_corrupt_checkpoint_falls_back_to_log(spark, tmp_path):
     assert t.read().count() == 3                # full-log fallback
     assert t.merge(_recs(spark, [("B4", 4)])) == 3
     assert t.read().count() == 4
+
+
+def test_txn_refuses_log_with_removed_features(spark, tmp_path):
+    """A log entry carrying a CHECK constraint, or a checkpoint
+    declaring Hive partition columns, comes from a table feature this
+    TxnTable does not implement: opening the table refuses instead of
+    reading it with the constraint or the partitioning dropped. The
+    empty ``constraints``/``partition_by`` fields every older
+    checkpoint carries still read."""
+    from adsmasterpipeline_spark.sinks.txnlake import TableStateError
+
+    def write_json(p, obj):
+        with open(p, "w") as f:
+            _json.dump(obj, f)
+
+    a = str(tmp_path / "a")
+    ta = txn_table(spark, a)
+    ta.overwrite(_recs(spark, [("B1", 1), ("B2", 2)]))
+    write_json(os.path.join(a, "_txn", "00000001.json"),
+               {"version": 1, "operation": "set_constraint",
+                "adds": [], "removes": [],
+                "constraint_set": {"v_pos": "v > 0"}})
+    with pytest.raises(TableStateError, match="constraint_set"):
+        ta.read()
+    with pytest.raises(TableStateError, match="constraint_set"):
+        ta.merge(_recs(spark, [("B3", -3)]))
+    assert ta.version() == 1
+
+    b = str(tmp_path / "b")
+    tb = txn_table(spark, b, checkpoint_every=1)
+    tb.overwrite(_recs(spark, [("B1", 1)]))
+    tb.merge(_recs(spark, [("B2", 2)]))              # checkpoint at v1
+    cp_path = os.path.join(b, "_txn", "checkpoint-00000001.json")
+    cp = _json.load(open(cp_path))
+    # the shape older checkpoints carry: empty fields read as before
+    write_json(cp_path, {**cp, "constraints": {}, "partition_by": []})
+    assert tb.read().count() == 2
+    write_json(cp_path, {**cp, "partition_by": ["bibcode"]})
+    with pytest.raises(TableStateError, match="partition_by"):
+        tb.read()
 
 
 def test_txn_checkpoint_txn_id_retention(spark, tmp_path):

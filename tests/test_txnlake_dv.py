@@ -2,8 +2,8 @@
 Delta deletionVectors feature, VLDB'20 + public Delta docs). A delete
 commit writes only the deleted ROW POSITIONS and repoints per-file DV
 pointers — zero data files rewritten — and every reader (read,
-read_for_keys/range, merge survivors, compact, constraints, the
-change feed, restore) masks the positions.
+read_for_keys/range, merge survivors, compact, the change feed)
+masks the positions.
 
 Reference analogue: the reference deletes rows one at a time through
 the ORM (/root/reference/adsmp/app.py:242-259); at 100 TB the
@@ -155,31 +155,6 @@ def test_dv_compact_purges_heavily_masked_file(spark, tmp_path):
     assert t.changes(1, 2).count() == 0
 
 
-def test_dv_restore_unmasks_and_feeds_reinserts(spark, tmp_path):
-    """RESTORE to a pre-delete version detaches the vector (metadata
-    only) and the feed serves the restore as re-inserts of exactly
-    the masked rows; restoring forward re-attaches the pointer."""
-    t = _table(spark, tmp_path)
-    t.delete(keys=_ids(spark, range(0, 5)))              # v1
-    assert t.restore(0) == 2                             # unmask
-    assert t.read().count() == 100
-    # the restore entry carries only the pointer move and its prior
-    assert set(t._load_json(dict(t._entry_files())[2])) == {
-        "version", "operation", "ts_ms", "adds", "removes", "dvs",
-        "dv_prior"}
-    ins = sorted(r["id"] for r in t.changes(1, 2).collect())
-    assert ins == [0, 1, 2, 3, 4]
-    assert t.changes(1, 2).select("_change_type").distinct() \
-        .collect()[0][0] == "insert"
-    # forward again: re-attach the same vector, feed = deletes
-    assert t.restore(1) == 3
-    assert t.read().count() == 95
-    dels = sorted(r["id"] for r in t.changes(2, 3).collect())
-    assert dels == [0, 1, 2, 3, 4]
-    # pointer state equals v1's exactly
-    assert t._snapshot().dvs == t._snapshot(as_of=1).dvs
-
-
 def test_dv_vacuum_protects_referenced_dirs(spark, tmp_path):
     """A DV dir referenced by any retained snapshot (or by a
     retained entry's prior/remove pointers) must survive vacuum —
@@ -212,6 +187,21 @@ def test_dv_vacuum_protects_referenced_dirs(spark, tmp_path):
         t.changes(0, 2).count()
 
 
+def test_dv_feed_refuses_emptied_dv_dir(spark, tmp_path):
+    """Vacuum unlinks a DV dir's files first and removes the emptied
+    dir only once it ages past the cutoff; the feed must read such a
+    dir as collected and refuse on its ValueError contract, not fail
+    with Spark's schema-inference error."""
+    t = _table(spark, tmp_path)
+    t.delete(keys=_ids(spark, range(0, 5)))              # v1
+    dv_dir = os.path.join(t.path, next(iter(t._snapshot().dvs.values()))
+                          ["dir"])
+    for n in os.listdir(dv_dir):
+        os.unlink(os.path.join(dv_dir, n))
+    with pytest.raises(ValueError, match="vacuum"):
+        t.changes(0, 1)
+
+
 def test_dv_checkpoint_carries_pointers_past_cleanup(spark, tmp_path):
     """DV pointers live in checkpoints: after cleanup_log removes the
     delete entries, a FRESH handle folds the checkpoint and still
@@ -239,20 +229,6 @@ def test_dv_idempotent_replay_and_noop(spark, tmp_path):
         t.delete()
     with pytest.raises(ValueError, match="exactly one"):
         t.delete(keys=_ids(spark, [1]), where="v > 0")
-
-
-def test_dv_constraints_ignore_masked_rows(spark, tmp_path):
-    """set_constraint validates existing data THROUGH the vectors: a
-    constraint violated only by masked rows is accepted (they are
-    logically deleted), and merges validate as before."""
-    t = _table(spark, tmp_path)
-    t.delete(where="v >= 190")                           # ids 95..99
-    # every live row now has v < 190 — constraint must pass even
-    # though masked rows violate it
-    assert t.set_constraint("v_cap", "v < 190") == 2
-    with pytest.raises(ValueError, match="v_cap"):
-        t.merge(spark.createDataFrame([(7, 500)], "id long, v long"))
-    assert t.read().where("id = 7").collect()[0]["v"] == 14
 
 
 def test_dv_read_for_range_and_keys_mask(spark, tmp_path):
@@ -283,55 +259,13 @@ def test_dv_compact_purge_dvs_rewrites_all_masked(spark, tmp_path):
     assert t.changes(1, 2).count() == 0          # still zero changes
 
 
-def test_compact_zorder_prunes_both_columns(spark, tmp_path):
-    """compact(zorder_by=(a, b)) — OPTIMIZE ZORDER BY: after the
-    Morton re-layout, read_for_range prunes files on EITHER column;
-    a key-clustered layout prunes only derived-from-key columns."""
-    t = txn_table(spark, str(tmp_path / "t"), key="id",
-                  cluster_writes=True, rows_per_file=64,
-                  stats_cols=("a", "b"))
-    # a and b deliberately uncorrelated with the key and each other
-    df = spark.range(1024).selectExpr(
-        "id", "pmod(id * 37, 1021) as a", "pmod(id * 101, 1019) as b")
-    t.overwrite(df)
-    base = sorted(tuple(r) for r in t.read().collect())
-    n_files = len(t.live_files())
-    assert n_files >= 8
-
-    def cands(col, lo, hi):
-        got = t.read_for_range(col, lo, hi)
-        n = len(t.last_read_probe["candidate_files"])
-        return n, sorted(r["id"] for r in got.collect())
-
-    # key-clustered layout: a and b are scattered -> ~every file is
-    # a candidate on either column
-    na_before, ids_a = cands("a", 0, 100)
-    nb_before, ids_b = cands("b", 0, 100)
-    assert na_before == n_files and nb_before == n_files
-
-    v = t.compact(zorder_by=("a", "b"))
-    assert v == 1
-    assert sorted(tuple(r) for r in t.read().collect()) == base
-    na_after, ids_a2 = cands("a", 0, 100)
-    nb_after, ids_b2 = cands("b", 0, 100)
-    assert ids_a2 == ids_a and ids_b2 == ids_b   # same answers
-    # the Z-layout prunes BOTH dimensions (single-column sorting
-    # could only ever achieve one)
-    n_after = len(t.live_files())
-    assert na_after < n_after and nb_after < n_after
-    assert na_after <= n_after // 2 and nb_after <= n_after // 2
-    # validation errors stay on the ValueError contract
-    with pytest.raises(ValueError, match="zorder_by"):
-        t.compact(zorder_by=("a", "nope"))
-
-
 def test_merge_rebases_on_vacuumed_candidate(spark, tmp_path):
     """A writer whose snapshot went stale past the retention horizon
     can plan a read of a file a concurrent vacuum collected (found by
     the 3-thread maintenance race at high contention). With a retry
     budget the merge must RE-PLAN against a fresh snapshot — the same
-    rebase Delta's conflict protocol does — and constraint refusals
-    must NOT be swallowed by the new retry arm."""
+    rebase Delta's conflict protocol does — and other refusals must
+    NOT be swallowed by the new retry arm."""
     t = _table(spark, tmp_path)
     orig = t._prune_candidates
     calls = {"n": 0}
@@ -356,12 +290,21 @@ def test_merge_rebases_on_vacuumed_candidate(spark, tmp_path):
     with _pytest.raises(Exception, match="PATH_NOT_FOUND|not exist"):
         t.merge(spark.createDataFrame([(2, 222)], "id long, v long"))
 
-    # the retry arm is NARROW: a CHECK refusal still raises through it
-    t._prune_candidates = orig
-    assert t.set_constraint("cap", "v < 10000") >= 2
-    with _pytest.raises(ValueError, match="cap"):
-        t.merge(spark.createDataFrame([(3, 99999)], "id long, v long"),
+    # the retry arm is NARROW: a drifted batch's schema refusal
+    # raises through it on the first attempt, committing nothing
+    from pyspark.errors import AnalysisException
+
+    def counting(live, affected):
+        calls["n"] += 1
+        return orig(live, affected)
+
+    t._prune_candidates = counting
+    calls["n"] = 0
+    v0 = t.version()
+    with _pytest.raises(AnalysisException):
+        t.merge(spark.createDataFrame([(3, "x")], "id long, w string"),
                 retries=3)
+    assert calls["n"] == 1 and t.version() == v0
 
     # delete() gets the same rebase
     t._prune_candidates = ghosting
@@ -504,7 +447,7 @@ def test_dv_feed_above_budget_parity(spark, tmp_path):
     t.delete(keys=_ids(spark, range(0, 10)))             # v1
     t.merge(spark.createDataFrame([(3, 333), (200, 0)],
                                   "id long, v long"))    # v2: rewrite
-    t.restore(1)                                         # v3
+    t.delete(where="id >= 90")                           # v3
 
     def feed(tbl):
         return sorted(
