@@ -654,9 +654,11 @@ def test_cli_outbox_incremental_from_change_feed(spark, tmp_path, capsys):
     assert got == want
 
 
-def test_cli_lake_compact_purge_dvs(spark, tmp_path, capsys):
+def test_cli_lake_compact_purge_and_zorder(spark, tmp_path, capsys):
     """`lake compact --purge-dvs`: the REORG form is operable from the
-    CLI with masked-row accounting in the JSON output."""
+    CLI with masked-row accounting in the JSON output. Z-order
+    compaction is gone from the table, so `--zorder` is refused as an
+    unknown flag instead of being accepted and ignored."""
     import json
 
     from adsmasterpipeline_spark.cli import main
@@ -674,4 +676,10 @@ def test_cli_lake_compact_purge_dvs(spark, tmp_path, capsys):
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["masked_rows_before"] == 4
     assert out["masked_rows_after"] == 0
+    assert t.read().count() == 124
+
+    with pytest.raises(SystemExit):
+        main(["lake", "compact", "--path", path, "--key", "id",
+              "--zorder", "a,b"])
+    assert t.version() == 2
     assert t.read().count() == 124

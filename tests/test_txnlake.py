@@ -684,6 +684,42 @@ def test_streaming_txn_survives_delete_everything_epoch(spark, tmp_path):
     assert {r["bibcode"] for r in ing._load_records().collect()} == {"S2"}
 
 
+def test_txn_restore(spark, tmp_path):
+    """Rolling a table back to an earlier version with what the table
+    keeps: a time-travel ``read(as_of=)`` fed to a full ``overwrite``.
+    The current state then equals the target version, history moves
+    forward (the undone version stays readable by time travel), the
+    change feed serves the rollback as the row-level diff between the
+    two states, a replayed rollback with the same ``app_txn_id`` is a
+    no-op, and a later merge applies on top of the restored state."""
+    path = str(tmp_path / "t")
+    t = txn_table(spark, path)
+    t.overwrite(_recs(spark, [("B1", 1), ("B2", 2)]))            # v0
+    t.merge(_recs(spark, [("B2", 22), ("C1", 3)]))               # v1
+    t.merge(_recs(spark, [("D1", 4)]),
+            deleted_keys=spark.createDataFrame(
+                [("B1",)], "bibcode string"))                    # v2
+
+    want_v1 = sorted(tuple(r) for r in t.read(as_of=1).collect())
+    assert t.overwrite(t.read(as_of=1), app_txn_id="undo-v2") == 3
+    assert sorted(tuple(r) for r in t.read().collect()) == want_v1
+    assert t.history()[-1]["operation"] == "overwrite"
+    got_v2 = {r["bibcode"]: r["v"] for r in t.read(as_of=2).collect()}
+    assert got_v2 == {"B2": 22, "C1": 3, "D1": 4}
+
+    # B1 comes back, D1 goes away, the unchanged B2/C1 rows cancel
+    feed = {(r["bibcode"], r["_change_type"]): r["v"]
+            for r in t.changes(2, 3).collect()}
+    assert feed == {("B1", "insert"): 1, ("D1", "delete"): 4}
+
+    assert t.overwrite(t.read(as_of=1), app_txn_id="undo-v2") == 3
+    assert t.version() == 3
+
+    t.merge(_recs(spark, [("B2", 222)]))                         # v4
+    got = {r["bibcode"]: r["v"] for r in t.read().collect()}
+    assert got == {"B1": 1, "B2": 222, "C1": 3}
+
+
 def test_txn_corrupt_checkpoint_falls_back_to_log(spark, tmp_path):
     """A corrupt checkpoint file (truncated copy, bad sector) must
     degrade to the full-log fold the retained entries always allow —
