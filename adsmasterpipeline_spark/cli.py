@@ -39,42 +39,23 @@ def cmd_ingest(args) -> int:
     """Batch-apply an update-event directory (JSON lines with the
     EVENT_SCHEMA) into the records table; appends the changelog.
 
-    Routes through the log-structured TxnTable exactly like the
-    streaming path: an existing table is merged against ONLY the rows
-    read from stat-pruned candidate files (read_for_keys), insert ids
-    continue from the driver-side stat fold, and the publish is a
-    file-granular MERGE — O(touched files + batch), not O(table)."""
-    from pyspark.sql import functions as F
-
+    The merge is ``storage.ingest_step``, the one every streaming
+    epoch runs: only the rows of stat-pruned candidate files are read,
+    and the publish is a file-granular MERGE, so the cost is
+    O(touched files + batch), not O(table)."""
+    from .dispatch import merge_probe
     from .schemas import EVENT_SCHEMA
-    from .storage import empty_records, merge_updates
+    from .storage import ingest_step
     spark = _spark()
     events = spark.read.schema(EVENT_SCHEMA).json(args.events)
     out: dict = {}
     t = _records_txn(spark, args.data, cluster_writes=True,
                      rows_per_file=args.rows_per_file)
-    event_keys = events.select("bibcode").distinct()
-    exists = t.version() >= 0 and bool(t.live_files())
-    if exists:
-        records = t.read_for_keys(event_keys)
-        max_id = t.max_stat("id")
-        if max_id is None:
-            max_id = t.read().agg(
-                F.max("id")).collect()[0][0] or 0
-    else:
-        records, max_id = empty_records(spark), 0
-    merged, changelog = merge_updates(records, events,
-                                      max_id=max_id)
-    merged = merged.localCheckpoint()
+    merged, changelog, deleted = ingest_step(t, events)
     n = merged.count()
-    if exists:
-        deleted = event_keys.join(merged, "bibcode", "left_anti")
+    if t.version() >= 0:
         t.merge(merged, deleted_keys=deleted)
-        p = t.last_merge_probe or {}
-        out["probe"] = {
-            "live_files": p.get("live_files"),
-            "candidate_files": len(p.get("candidate_files", [])),
-            "touched_files": len(p.get("touched_files", []))}
+        out["probe"] = merge_probe(t)
     else:
         t.overwrite(merged)
     changelog.write.mode("append").parquet(os.path.join(args.data, "changelog"))
@@ -84,20 +65,20 @@ def cmd_ingest(args) -> int:
 
 
 def cmd_reindex(args) -> int:
-    """Incremental dispatch: watermark scan -> readiness -> checksum
-    diff -> write the three sink batches -> mark processed -> advance
-    the watermark (rollback semantics: the watermark only moves after
-    every sink write succeeded).
+    """Incremental dispatch: watermark scan, then
+    ``dispatch.dispatch_step`` (readiness -> checksum diff -> the three
+    sink writes -> mark processed), then the writeback MERGE, then
+    advance the watermark (rollback semantics: the watermark only
+    moves after every sink write succeeded). The solr and links dirs
+    hold this run's dispatch only.
 
     ``--bibcodes FILE`` restricts the run to a bibcode list (run.py
     -b/-n); ``--failed`` reselects rows whose last dispatch failed
     (run.py --index_failed)."""
     from pyspark.sql import functions as F
-    from .dispatch import failed_filter, mark_processed, reindex
-    from .sinks.writers import write_links_dir, write_solr_dir
+    from .dispatch import dispatch_step, failed_filter, merge_probe
     from .sources import bibcode_list
     from .storage import KeyValueStore
-    from .transform import solr_docs_json
     spark = _spark()
     probes: dict = {}
     kv = KeyValueStore(spark, os.path.join(args.data, "kv"))
@@ -134,59 +115,16 @@ def cmd_reindex(args) -> int:
         scope = failed_filter(scope)
         since = None
 
-    batches = reindex(scope, since=since, force=args.force,
-                      ignore_checksums=args.ignore_checksums)
-    solr = batches["solr"].cache()
-    metrics = batches["metrics"].cache()
-    links = batches["links"].cache()
-
-    out = args.out or os.path.join(args.data, "sinks")
-    mtime_cols = [c for c in solr.columns
-                  if c.endswith("_mtime") or c == "update_timestamp"]
-    write_solr_dir(
-        solr_docs_json(solr.drop("checksum", *mtime_cols)),
-        os.path.join(out, "solr"))
-    # S7 metrics upsert as a stat-pruned MERGE: incoming rows (defaults
-    # applied) merge into a key-clustered TxnTable — only files whose
-    # key range can contain a batch bibcode are opened, the executed
-    # analogue of the reference's INSERT..ON CONFLICT
-    # (adsmp/app.py:45-77)
-    from .sinks.txnlake import txn_table
-    from .sinks.writers import metrics_upsert
-    incoming = metrics_upsert(None, metrics).localCheckpoint()
-    mt = txn_table(spark, os.path.join(out, "metrics"),
-                   key="bibcode", cluster_writes=True,
-                   rows_per_file=args.rows_per_file)
-    if mt.version() >= 0 and mt.live_files():
-        mt.merge(incoming)
-        p = mt.last_merge_probe or {}
-        probes["metrics_merge"] = {
-            "live_files": p.get("live_files"),
-            "candidate_files": len(p.get("candidate_files", [])),
-            "touched_files": len(p.get("touched_files", []))}
-    elif incoming.count():
-        mt.overwrite(incoming)
-    write_links_dir(links, os.path.join(out, "links"))
-
-    updated = records
-    for sink, df in (("solr", solr), ("metrics", metrics),
-                     ("datalinks", links)):
-        updated = mark_processed(updated, df.select("bibcode", "checksum"),
-                                 sink)
-    updated = updated.localCheckpoint()
-    counts: dict = {"solr": solr.count(), "metrics": metrics.count(),
-                    "links": links.count()}
+    step = dispatch_step(records, args.out or os.path.join(args.data, "sinks"),
+                         "overwrite", scope=scope, since=since,
+                         force=args.force,
+                         ignore_checksums=args.ignore_checksums,
+                         rows_per_file=args.rows_per_file)
+    probes.update(step["probes"])
     # `records` may be the watermark-PRUNED subset — the writeback is
     # a keyed MERGE of the touched rows, never a full-table rewrite
-    # (which would truncate the table to the subset). mark_processed
-    # only changed rows it saw done-keys for, all of which are in
-    # scope.
-    touched_keys = (solr.select("bibcode")
-                    .unionByName(metrics.select("bibcode"))
-                    .unionByName(links.select("bibcode"))
-                    .distinct())
-    subset = updated.join(touched_keys, "bibcode", "left_semi") \
-        .localCheckpoint()
+    # (which would truncate the table to the subset)
+    subset = step["touched"]
     if subset.count():
         # drop the cached scan of the table's files first: a live
         # cache entry over the same parquet paths would hijack the
@@ -194,16 +132,13 @@ def cmd_reindex(args) -> int:
         # file context) and degrade its touched-file detection
         records.unpersist()
         t.merge(subset)
-        p = t.last_merge_probe or {}
-        probes["writeback_merge"] = {
-            "live_files": p.get("live_files"),
-            "candidate_files": len(p.get("candidate_files", [])),
-            "touched_files": len(p.get("touched_files", []))}
+        probes["writeback_merge"] = merge_probe(t)
     if not (args.bibcodes or args.failed):
         # a scoped run never saw the full table — advancing the
         # incremental watermark would silently skip everything else
         import datetime as dt
         kv.put(wm_key, dt.datetime.now(dt.timezone.utc).isoformat())
+    counts = step["counts"]
     if probes:
         counts["probes"] = probes
     print(json.dumps(counts))

@@ -8,15 +8,20 @@ bibcode; here the whole dispatch is one DataFrame pipeline:
             → {solr_batch, metrics_batch, links_batch}
 
 and `mark_processed` is a keyed MERGE back onto records.
+`dispatch_step` runs that pipeline, writes the three sinks and applies
+the writeback; the CLI `reindex` verb and every streaming epoch call
+it, so the two cadences share one engine.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .checksum import checksum_col
-from .schemas import LINKS_DATA_ITEM_SCHEMA, NONBIB_DATA_SCHEMA
+from .schemas import LINKS_DATA_ITEM_SCHEMA
 from .transform import ensure_identifier, transform_records
 
 
@@ -90,7 +95,6 @@ def links_batch(records: DataFrame, ignore_checksums: bool = False) -> DataFrame
     """O1 links leg — generate_links_for_resolver (adsmp/app.py:876-920):
     prefer nonbib data_links_rows; fall back to bib links_data[0] with
     the /abs/→/pdf/ ESOURCE pair (F13)."""
-    nonbib = F.from_json("nonbib_data", NONBIB_DATA_SCHEMA)
     # data_links_rows has dynamic schema -> keep as raw JSON via path
     nonbib_rows = F.get_json_object("nonbib_data", "$.data_links_rows")
     bib_links = F.from_json("bib_data", "links_data array<string>") \
@@ -120,7 +124,6 @@ def links_batch(records: DataFrame, ignore_checksums: bool = False) -> DataFrame
         .withColumn("checksum",
                     checksum_col(F.struct(F.col("data_links_rows"))))
     )
-    _ = nonbib  # schema retained for documentation/future typed path
     if not ignore_checksums:
         out = out.where(F.col("_old").isNull()
                         | (F.col("_old") != F.col("checksum")))
@@ -162,3 +165,74 @@ def reindex(records: DataFrame, since=None, force: bool = False,
         "metrics": metrics_batch(ready, ignore_checksums),
         "links": links_batch(ready, ignore_checksums),
     }
+
+
+def merge_probe(table) -> dict:
+    """File counts of ``table``'s last MERGE probe, for command output."""
+    p = table.last_merge_probe or {}
+    return {"live_files": p.get("live_files"),
+            "candidate_files": len(p.get("candidate_files", [])),
+            "touched_files": len(p.get("touched_files", []))}
+
+
+def dispatch_step(records: DataFrame, sinks_dir: str, mode: str,
+                  scope: DataFrame | None = None, since=None,
+                  force: bool = False, ignore_checksums: bool = False,
+                  now=None, rows_per_file: int = 500_000) -> dict:
+    """One dispatch over ``scope`` (default: all of ``records``):
+    ``reindex``, then the solr docs and the links as JSON lines under
+    ``<sinks_dir>/solr`` and ``<sinks_dir>/links``, written with
+    Spark save mode ``mode``; the metrics rows upserted into the
+    key-clustered TxnTable at ``<sinks_dir>/metrics`` (a stat-pruned
+    MERGE that opens only files whose key range can hold a batch
+    bibcode, the reference's INSERT..ON CONFLICT, adsmp/app.py:45-77);
+    then ``mark_processed`` for the three sinks.
+
+    Returns a dict: ``updated``, ``records`` with the writeback applied
+    (pinned); ``touched``, its rows whose key went to a sink (the only
+    rows the writeback changed); ``counts``, the rows per sink; and
+    ``probes``, the metrics MERGE's file probe when one ran.
+    """
+    # looked up at call time, so a tracer that replaces these module
+    # attributes sees every call
+    from .sinks import writers
+    from .sinks.txnlake import txn_table
+    from .transform import solr_docs_json
+
+    batches = reindex(records if scope is None else scope, since=since,
+                      force=force, ignore_checksums=ignore_checksums)
+    solr, metrics, links = (batches[k].cache()
+                            for k in ("solr", "metrics", "links"))
+    mtime = [c for c in solr.columns
+             if c.endswith("_mtime") or c == "update_timestamp"]
+    writers.write_solr_dir(solr_docs_json(solr.drop("checksum", *mtime)),
+                           os.path.join(sinks_dir, "solr"), mode)
+    probes: dict = {}
+    incoming = writers.metrics_upsert(metrics).localCheckpoint()
+    mt = txn_table(records.sparkSession, os.path.join(sinks_dir, "metrics"),
+                   cluster_writes=True, rows_per_file=rows_per_file)
+    if mt.version() >= 0 and mt.live_files():
+        mt.merge(incoming)
+        probes["metrics_merge"] = merge_probe(mt)
+    elif incoming.count():
+        mt.overwrite(incoming)
+    writers.write_links_dir(links, os.path.join(sinks_dir, "links"), mode)
+
+    updated = records
+    for sink, df in (("solr", solr), ("metrics", metrics),
+                     ("datalinks", links)):
+        updated = mark_processed(updated, df.select("bibcode", "checksum"),
+                                 sink, now=now)
+    touched = (solr.select("bibcode")
+               .unionByName(metrics.select("bibcode"))
+               .unionByName(links.select("bibcode"))
+               .distinct().withColumn("_touched", F.lit(True)))
+    updated = updated.join(touched, "bibcode", "left").localCheckpoint()
+    counts = {"solr": solr.count(), "metrics": metrics.count(),
+              "links": links.count()}
+    for df in (solr, metrics, links):
+        df.unpersist()
+    return {"updated": updated.drop("_touched"),
+            "touched": updated.where(F.col("_touched").isNotNull())
+            .drop("_touched"),
+            "counts": counts, "probes": probes}

@@ -1900,6 +1900,12 @@ class TxnTable:
                 if root != data_root else None
             if m and int(m.group(1)) > latest:
                 continue
+            # the dir's age is read BEFORE its files go: each unlink
+            # below sets the dir's mtime to now
+            try:
+                dir_mtime = os.path.getmtime(root)
+            except OSError:
+                continue
             for name in files:
                 full = os.path.join(root, name)
                 rel = os.path.relpath(full, self.path)
@@ -1914,16 +1920,15 @@ class TxnTable:
                 except OSError:
                     continue               # lost a race: another vacuum
                 deleted.append(rel)
-            if root != data_root and not os.listdir(root):
+            if root != data_root and dir_mtime <= cutoff \
+                    and not os.listdir(root):
                 # the SAME age guard as files: a freshly-created empty
                 # directory is a concurrent writer's commit dir or
                 # staging dir that hasn't received its first file yet —
                 # rmdir'ing it would crash that writer's tasks (found by
-                # the concurrent-maintenance race test); aged-out empty
-                # dirs are collected on the next vacuum pass instead
+                # the concurrent-maintenance race test)
                 try:
-                    if os.path.getmtime(root) <= cutoff:
-                        os.rmdir(root)
+                    os.rmdir(root)
                 except OSError:
                     pass
         return sorted(deleted)

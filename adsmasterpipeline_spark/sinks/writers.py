@@ -17,28 +17,25 @@ from pyspark.sql import functions as F
 from ..schemas import METRICS_SCHEMA
 
 
-def write_solr_dir(solr_docs: DataFrame, out_dir: str) -> None:
-    """S5 batch sink: search docs as JSON lines, partitioned write."""
-    solr_docs.write.mode("overwrite").json(out_dir)
+def write_solr_dir(solr_docs: DataFrame, out_dir: str, mode: str) -> None:
+    """S5 batch sink: search docs as JSON lines, partitioned write.
+    ``mode`` is Spark's save mode: ``overwrite`` keeps only this
+    dispatch, ``append`` adds it to earlier ones."""
+    solr_docs.write.mode(mode).json(out_dir)
 
 
-def write_links_dir(links: DataFrame, out_dir: str) -> None:
-    """S8: resolver payloads as JSON lines."""
-    links.write.mode("overwrite").json(out_dir)
+def write_links_dir(links: DataFrame, out_dir: str, mode: str) -> None:
+    """S8: resolver payloads as JSON lines (``mode`` as above)."""
+    links.write.mode(mode).json(out_dir)
 
 
-def delete_by_bibcodes(sink_table: DataFrame, bibcodes: DataFrame) -> DataFrame:
-    """S6 — solr delete-by-bibcode (adsmp/solr_updater.py:372-391) as an
-    anti-join over the sink table: the returned DataFrame replaces it
-    (tombstone semantics; an HTTP adapter would issue deletes instead)."""
-    return sink_table.join(bibcodes.select("bibcode"), "bibcode", "left_anti")
-
-
-def metrics_upsert(existing: DataFrame, batch: DataFrame) -> DataFrame:
-    """S7 — INSERT ... ON CONFLICT (bibcode) DO UPDATE
-    (adsmp/app.py:45-77) as a keyed MERGE with the metrics table's
-    column defaults (adsmp/models.py:203-211): author_num=1, counts=0,
-    arrays=[], refereed=false."""
+def metrics_upsert(batch: DataFrame) -> DataFrame:
+    """S7 — the rows of INSERT ... ON CONFLICT (bibcode) DO UPDATE
+    (adsmp/app.py:45-77): each metrics payload parsed, with the
+    metrics table's column defaults (adsmp/models.py:203-211):
+    author_num=1, counts=0, arrays=[], refereed=false. The upsert
+    itself is the keyed ``TxnTable.merge`` of these rows
+    (``dispatch.dispatch_step``)."""
     parsed = batch.select(
         "bibcode", F.from_json("metrics", METRICS_SCHEMA).alias("m"))
     defaults = {
@@ -57,14 +54,8 @@ def metrics_upsert(existing: DataFrame, batch: DataFrame) -> DataFrame:
         c = F.col("m").getField(f)
         cols.append(F.coalesce(c, defaults[f]).alias(f)
                     if f in defaults else c.alias(f))
-    incoming = parsed.select(*cols) \
+    return parsed.select(*cols) \
         .withColumn("modtime", F.current_timestamp())
-    if existing is None or not existing.columns:
-        return incoming
-    # MERGE: incoming row wins; unmatched existing rows survive
-    survivors = existing.join(incoming.select("bibcode"), "bibcode",
-                              "left_anti")
-    return survivors.unionByName(incoming, allowMissingColumns=True)
 
 
 def write_text_files(rows: list[tuple[str, str]], out_dir: str) -> None:

@@ -13,8 +13,9 @@ serial Celery queue for ordering. The Spark engine is set-at-a-time:
    lazy scix_id generation on first bib_data (M7, adsmp/app.py:197-202),
    and a changelog DataFrame of pre-images (J6, adsmp/app.py:175).
 
-``merge_updates`` computes the post-merge rows of the batch's keys;
-callers publish them with a file-granular ``TxnTable.merge``
+``ingest_step`` runs ``merge_updates`` against only the table rows of
+the batch's keys; the CLI ``ingest`` verb and every streaming epoch
+call it and publish its rows with a file-granular ``TxnTable.merge``
 (sinks/txnlake.py), the executed ``MERGE INTO``. The join shuffles on
 ``bibcode`` only; the update batch side is typically small → AQE
 picks a broadcast.
@@ -236,6 +237,37 @@ def merge_updates(records: DataFrame, events: DataFrame, now=None,
         )
     )
     return new_records, changelog
+
+
+def ingest_step(table, events: DataFrame, now=None
+                ) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Merge an event batch into the records ``TxnTable`` ``table``.
+
+    Reads only the table rows of the batch's keys (``read_for_keys``,
+    stat-pruned), numbers inserts from the table-wide max id folded
+    from the per-file stats (``max_stat``, no data file opened) and
+    runs ``merge_updates``. A missing or live-empty table merges
+    against an empty frame.
+
+    Returns ``(merged, changelog, deleted)``: the post-merge rows of
+    the batch's keys (pinned, since the caller both counts and
+    publishes them), the changelog, and the batch keys the merge
+    deleted, which the publishing ``TxnTable.merge`` needs as
+    tombstones.
+    """
+    keys = events.select("bibcode").distinct()
+    if table.version() >= 0 and table.live_files():
+        records = table.read_for_keys(keys)
+        max_id = table.max_stat("id")
+        if max_id is None:
+            # files committed before id stats existed: one scan
+            max_id = table.read().agg(F.max("id")).collect()[0][0] or 0
+    else:
+        records, max_id = empty_records(table.spark), 0
+    merged, changelog = merge_updates(records, events, now=now,
+                                      max_id=max_id)
+    merged = merged.localCheckpoint()
+    return merged, changelog, keys.join(merged, "bibcode", "left_anti")
 
 
 def update_scix_ids(records: DataFrame, flag: str,

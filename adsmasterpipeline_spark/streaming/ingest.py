@@ -1,4 +1,5 @@
-"""Structured Streaming ingestion mode (SURVEY §2.10, §7 step 7).
+"""Structured Streaming cadence of the master pipeline (SURVEY §2.10,
+§7 step 7).
 
 The reference's cron-driven incremental loop maps onto
 ``readStream`` + ``foreachBatch`` + ``Trigger.AvailableNow``:
@@ -10,18 +11,20 @@ The reference's cron-driven incremental loop maps onto
   re-evaluated every micro-batch;
 - "pushy" forced mode                  → the ``force`` parameter.
 
-Each micro-batch runs the SAME ``merge_updates`` used in batch mode —
-streaming is an ingestion cadence here, not a separate engine.
+Each micro-batch runs the steps the CLI runs: ``storage.ingest_step``
+(the ``ingest`` verb's merge) and, in ``StreamingReindex``,
+``dispatch.dispatch_step`` (the ``reindex`` verb's dispatch).
+Streaming is an ingestion cadence here, not a separate engine.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from ..schemas import EVENT_SCHEMA
-from ..storage import empty_records, merge_updates
+from ..storage import ingest_step
+# unused here; kept because perfbench/pipeline.py wraps this attribute
+from ..storage import merge_updates  # noqa: F401
 
 
 class StreamingIngest:
@@ -75,71 +78,25 @@ class StreamingIngest:
         from ..sinks.txnlake import txn_table
         return txn_table(self.spark, self.records_path, **self.txn_opts)
 
-    def _load_records(self) -> DataFrame:
-        t = self._txn()
-        # live-EMPTY is distinct from nonexistent: an epoch whose
-        # deletes removed every row commits a merge with zero adds;
-        # the next epoch must see an empty table, not a
-        # FileNotFoundError crash-loop (foreachBatch would retry the
-        # same batch forever)
-        if t.version() >= 0 and t.live_files():
-            return t.read()
-        return empty_records(self.spark)
+    def _merge_batch(self, batch: DataFrame,
+                     now=None) -> tuple[DataFrame, DataFrame]:
+        """``storage.ingest_step`` for one micro-batch: returns the
+        post-merge rows of the batch's keys (pinned) and the keys the
+        batch deleted."""
+        merged, _, deleted = ingest_step(self._txn(), batch, now=now)
+        return merged, deleted
 
-    def _merge_batch(self, batch: DataFrame, now=None) -> DataFrame:
-        """Load + merge for one micro-batch. Only the batch's keys are
-        published, so an existing table is merged against ONLY the
-        rows read from candidate data files (TxnTable.read_for_keys —
-        per-file stats pruning): per-epoch compute is O(touched files
-        + batch), not O(table). The table-wide max id (insert
-        numbering) is looked up only when the batch actually
-        inserts."""
-        from pyspark.sql import functions as F
-
-        t = self._txn()
-        # the subset path needs live data files; a live-empty table
-        # (all rows deleted) falls through to the empty_records merge
-        # below
-        if t.version() >= 0 and t.live_files():
-            batch_keys = batch.select("bibcode").distinct()
-            records = t.read_for_keys(batch_keys)
-            n_new = batch_keys.join(records, "bibcode",
-                                    "left_anti").count()
-            max_id = 0
-            if n_new:
-                # table-wide max id for insert numbering WITHOUT a
-                # table scan: folded driver-side from the per-file id
-                # stats every commit records (a t.read().agg(max)
-                # would open every live file on every insert epoch).
-                # Falls back to the scan only for legacy tables whose
-                # files predate id stats.
-                max_id = t.max_stat("id")
-                if max_id is None:
-                    max_id = t.read().agg(
-                        F.max("id")).collect()[0][0] or 0
-            merged, _ = merge_updates(records, batch, now=now,
-                                      max_id=max_id)
-            return merged
-        merged, _ = merge_updates(self._load_records(), batch, now=now)
-        return merged
-
-    def _publish(self, merged: DataFrame, batch: DataFrame,
+    def _publish(self, merged: DataFrame, deleted: DataFrame,
                  epoch_id: int) -> None:
-        """Commit the post-merge table state for one micro-batch."""
+        """Commit one micro-batch: upsert ``merged`` and tombstone
+        ``deleted`` in one MERGE keyed by the epoch's txn id."""
         t = self._txn()
         txn_id = f"{self.checkpoint_dir}#epoch-{epoch_id}"
         ver = t.version()
         if ver < 0:
             t.overwrite(merged, app_txn_id=txn_id)
             return
-        batch_keys = batch.select("bibcode").distinct()
-        touched = merged.join(batch_keys, "bibcode", "left_semi")
-        # merge_updates DROPS deleted rows from `merged`, so a batch
-        # key absent from the post-merge table was deleted this epoch
-        # — it must flow to TxnTable.merge as a tombstone or the old
-        # row stays live and is resurrected by the next epoch's read
-        deleted = batch_keys.join(merged, "bibcode", "left_anti")
-        v = t.merge(touched, deleted_keys=deleted, app_txn_id=txn_id)
+        v = t.merge(merged, deleted_keys=deleted, app_txn_id=txn_id)
         if v > ver:                     # replay no-op: v == ver
             self._merges_since_compact += 1
         if (self.auto_compact_every and
@@ -149,10 +106,7 @@ class StreamingIngest:
             # above already landed): compact rebases on conflict like
             # merge does, and if a concurrent writer still outraces
             # every retry we SKIP this interval — the small files stay
-            # live and the next interval picks them up. Without this,
-            # a multi-writer table's auto-compact raised
-            # CommitConflict out of the epoch and cleanup_log after it
-            # never ran.
+            # live and the next interval picks them up.
             from ..sinks.txnlake import CommitConflict
             try:
                 t.compact(retries=2)
@@ -165,8 +119,7 @@ class StreamingIngest:
     def _apply_batch(self, batch: DataFrame, epoch_id: int) -> None:
         if batch.isEmpty():
             return
-        merged = self._merge_batch(batch).localCheckpoint()
-        self._publish(merged, batch, epoch_id)
+        self._publish(*self._merge_batch(batch), epoch_id)
 
     def run_available_now(self) -> None:
         """Process everything currently in events_dir, then stop —
@@ -182,27 +135,21 @@ class StreamingIngest:
 
 
 class StreamingReindex(StreamingIngest):
-    """End-to-end streaming dispatch (SURVEY §7 step 7 — the part
-    round 4 left batch-only): each micro-batch runs ingest-merge AND
-    the full reindex pipeline — readiness → transform → checksum
-    suppression → sink append → ``mark_processed`` writeback — through
-    ``foreachBatch`` with ``Trigger.AvailableNow``.
+    """End-to-end streaming dispatch: each micro-batch runs
+    ``ingest_step`` and then ``dispatch_step`` over the batch's keys
+    (readiness → transform → checksum suppression → the three sinks
+    under ``sinks_dir`` → ``mark_processed``), through ``foreachBatch``
+    with ``Trigger.AvailableNow``. The sinks are the CLI's: solr docs
+    and links as JSON lines, metrics as a TxnTable.
 
-    Contracts proven in tests/test_streaming_reindex.py:
-
-    - two AvailableNow runs over a delivered-then-redelivered event
-      set produce sink output IDENTICAL to one batch ``reindex`` over
-      the same events (streaming is a cadence, not a different
-      engine);
-    - a redelivered (content-identical) event produces ZERO sink rows
-      in the second run: the stored per-sink checksums that
-      ``mark_processed`` wrote back in batch N suppress the unchanged
-      doc in batch N+1 — the reference's checksum idempotence
-      (adsmp/tasks.py:396-421) across micro-batches.
-
-    Sink writes are APPEND (each micro-batch adds its delta), which is
-    exactly why checksum suppression matters: without it a replay
-    would duplicate sink rows.
+    Solr docs and links are APPENDED, one set of part files per
+    micro-batch, so the dirs hold every epoch's delta. Checksum
+    suppression is what keeps a redelivered, content-identical event
+    from adding sink rows: ``mark_processed`` wrote the per-sink
+    checksums back in batch N, so batch N+1 skips the unchanged doc
+    (the reference's idempotence, adsmp/tasks.py:396-421).
+    tests/test_streaming_reindex.py checks both contracts and that the
+    sinks equal the CLI's for the same events.
     """
 
     def __init__(self, spark: SparkSession, events_dir: str,
@@ -216,46 +163,16 @@ class StreamingReindex(StreamingIngest):
         self.now = now  # pin for deterministic tests
 
     def _apply_batch(self, batch: DataFrame, epoch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        from ..dispatch import mark_processed, reindex
-        from ..transform import solr_docs_json
+        from ..dispatch import dispatch_step
 
         if batch.isEmpty():
             return
-        merged = self._merge_batch(batch, now=self.now)
-        merged = merged.localCheckpoint()
-        # dispatch scope: only keys present in this micro-batch can
-        # have changed — an O(batch) scan, the incremental_filter
-        # analogue keyed by membership instead of a timestamp
-        scope = merged.join(batch.select("bibcode").distinct(),
-                            "bibcode", "left_semi")
-        batches = reindex(scope, force=self.force)
-        solr = batches["solr"].localCheckpoint()
-        metrics = batches["metrics"].localCheckpoint()
-        links = batches["links"].localCheckpoint()
-
-        mtime = [c for c in solr.columns
-                 if c.endswith("_mtime") or c == "update_timestamp"]
-        solr_docs_json(solr.drop("checksum", *mtime)) \
-            .withColumn("_epoch", F.lit(epoch_id)) \
-            .write.mode("append").json(os.path.join(self.sinks_dir, "solr"))
-        metrics.withColumn("_epoch", F.lit(epoch_id)) \
-            .write.mode("append").parquet(
-                os.path.join(self.sinks_dir, "metrics"))
-        links.withColumn("_epoch", F.lit(epoch_id)) \
-            .write.mode("append").json(os.path.join(self.sinks_dir, "links"))
-
-        updated = merged
-        for sink, df in (("solr", solr), ("metrics", metrics),
-                         ("datalinks", links)):
-            updated = mark_processed(updated,
-                                     df.select("bibcode", "checksum"),
-                                     sink, now=self.now)
-        updated = updated.localCheckpoint()
-        # mark_processed only touched `done` keys ⊆ batch keys, so the
-        # publish's batch-key MERGE covers the writeback too
-        self._publish(updated, batch, epoch_id)
+        merged, deleted = self._merge_batch(batch, now=self.now)
+        step = dispatch_step(merged, self.sinks_dir, "append",
+                             force=self.force, now=self.now)
+        # the writeback changed only batch keys: one MERGE publishes
+        # the ingest and the writeback together
+        self._publish(step["updated"], deleted, epoch_id)
 
 
 def windowed_event_counts(events: DataFrame, window: str = "5 minutes",

@@ -1,6 +1,5 @@
-"""Tests for the coverage gap-fills: bibcode-list source (S4), solr
-delete (S6), duplicate-row repair (M6), sitemap auto-update selection
-(O10)."""
+"""Tests for the coverage gap-fills: bibcode-list source (S4),
+duplicate-row repair (M6), sitemap auto-update selection (O10)."""
 
 from __future__ import annotations
 
@@ -10,7 +9,6 @@ import json
 from pyspark.sql import functions as F
 
 from adsmasterpipeline_spark.schemas import RECORDS_SCHEMA
-from adsmasterpipeline_spark.sinks.writers import delete_by_bibcodes
 from adsmasterpipeline_spark.sitemap import auto_update_selection
 from adsmasterpipeline_spark.sources.testdata import bibcode_list
 from adsmasterpipeline_spark.storage import repair_duplicates
@@ -62,14 +60,6 @@ def test_load_table_coerces_drifted_physical_types(spark, tmp_path):
             if f.name in want:
                 assert f.dataType.simpleString() == want[f.name], \
                     (name, f.name, f.dataType.simpleString())
-
-
-def test_delete_by_bibcodes(spark):
-    sink = spark.createDataFrame(
-        [("B1", "d1"), ("B2", "d2"), ("B3", "d3")], "bibcode string, doc string")
-    gone = spark.createDataFrame([("B2",)], "bibcode string")
-    left = delete_by_bibcodes(sink, gone)
-    assert sorted(r["bibcode"] for r in left.collect()) == ["B1", "B3"]
 
 
 def _dup_records(spark):

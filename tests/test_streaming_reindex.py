@@ -1,8 +1,9 @@
 """Streaming reindex end-to-end: dispatch + checksum suppression +
 mark_processed through readStream/foreachBatch with
 Trigger.AvailableNow — proving streaming output equals the batch
-``reindex`` pipeline and that redelivery produces zero sink rows
-(checksum idempotence ACROSS micro-batches).
+``reindex`` pipeline (and the CLI's sinks for the same events) and
+that redelivery produces zero sink rows (checksum idempotence ACROSS
+micro-batches).
 
 Reference analogue: the cron-driven incremental loop
 (/root/reference/run.py:103-232) + checksum suppression
@@ -14,6 +15,7 @@ from __future__ import annotations
 import pytest
 import datetime as dt
 import json
+import os
 
 from pyspark.sql import functions as F
 
@@ -46,21 +48,44 @@ def _events_batch2():
     ]
 
 
+def _solr_parts(solr_dir):
+    if not os.path.isdir(solr_dir):
+        return set()
+    return {n for n in os.listdir(solr_dir)
+            if n.startswith("part-") and n.endswith(".json")}
+
+
+def _read_docs(solr_dir, parts):
+    """(bibcode, doc) rows of the given solr sink part files."""
+    rows = []
+    for n in sorted(parts):
+        with open(os.path.join(solr_dir, n), encoding="utf-8") as f:
+            rows += [(r["bibcode"], r["doc"]) for r in
+                     (json.loads(line) for line in f if line.strip())]
+    return rows
+
+
 def _run_streaming(spark, tmp_path, name, batches):
+    """One AvailableNow run per batch; returns the base dir and, per
+    run, the (bibcode, doc) rows that run appended to the solr sink."""
     from adsmasterpipeline_spark.streaming.ingest import StreamingReindex
 
     base = tmp_path / name
     events_dir = base / "events"
     events_dir.mkdir(parents=True)
+    solr_dir = str(base / "sinks" / "solr")
     now = F.lit(dt.datetime(2024, 3, 1)).cast("timestamp")
     sr = StreamingReindex(spark, str(events_dir), str(base / "records"),
                           str(base / "ckpt"), str(base / "sinks"),
                           force=True, now=now)
+    per_run = []
     for i, batch in enumerate(batches):
         (events_dir / f"b{i}.json").write_text(
             "\n".join(json.dumps(e) for e in batch))
+        before = _solr_parts(solr_dir)
         sr.run_available_now()
-    return base
+        per_run.append(_read_docs(solr_dir, _solr_parts(solr_dir) - before))
+    return base, per_run
 
 
 def _solr_rows(spark, path):
@@ -80,7 +105,7 @@ def test_streaming_reindex_equals_batch_and_idempotent(spark, tmp_path):
     from adsmasterpipeline_spark.transform import solr_docs_json
 
     b1, b2 = _events_batch1(), _events_batch2()
-    base = _run_streaming(spark, tmp_path, "s", [b1, b2])
+    base, per_run = _run_streaming(spark, tmp_path, "s", [b1, b2])
 
     # batch twin: one merge of ALL events, one dispatch
     now = F.lit(dt.datetime(2024, 3, 1)).cast("timestamp")
@@ -111,18 +136,16 @@ def test_streaming_reindex_equals_batch_and_idempotent(spark, tmp_path):
 
     got = _solr_rows(spark, base / "sinks" / "solr")
     # streaming appended S2's doc twice (v1 then v2) — the FINAL doc
-    # per key must match the batch run; earlier epochs are superseded
+    # per key must match the batch run; earlier runs are superseded
     final = {}
-    sdf = spark.read.json(str(base / "sinks" / "solr"))
-    for r in sdf.orderBy("_epoch").collect():
-        final[r["bibcode"]] = r["doc"]
+    for docs in per_run:
+        final.update(docs)
     assert _strip_scix(set(final.items())) == _strip_scix(want)
     # scix_id stickiness across epochs: S2 indexed twice, same id both
-    scix_by_epoch = [json.loads(r["doc"]).get("scix_id")
-                     for r in sdf.where("bibcode = 'S2'")
-                     .orderBy("_epoch").collect()]
-    assert len(scix_by_epoch) == 2
-    assert scix_by_epoch[0] == scix_by_epoch[1]
+    scix_by_run = [json.loads(doc).get("scix_id")
+                   for docs in per_run for b, doc in docs if b == "S2"]
+    assert len(scix_by_run) == 2
+    assert scix_by_run[0] == scix_by_run[1]
     # and the batch-run doc set is a subset of everything streamed
     assert {b for b, _ in want} <= {b for b, _ in got}
 
@@ -136,6 +159,8 @@ def test_streaming_reindex_equals_batch_and_idempotent(spark, tmp_path):
     # --- redelivery: same content, new file -> zero new sink rows
     sinks_before = spark.read.json(
         str(base / "sinks" / "solr")).count()
+    metrics_t = txn_table(spark, str(base / "sinks" / "metrics"))
+    assert metrics_t.read().count() == 1       # only S2 has metrics
     events_dir = base / "events"
     (events_dir / "redelivered.json").write_text(
         "\n".join(json.dumps(e) for e in b1 + b2))
@@ -146,7 +171,57 @@ def test_streaming_reindex_equals_batch_and_idempotent(spark, tmp_path):
     sr.run_available_now()
     assert spark.read.json(
         str(base / "sinks" / "solr")).count() == sinks_before
-    # metrics + links sinks also silent on replay
-    mdir = base / "sinks" / "metrics"
-    assert spark.read.parquet(str(mdir)) \
-        .groupBy("bibcode").count().where("count > 1").count() == 0
+    # the metrics TxnTable sink also gains no row on replay, and
+    # holds one row per key
+    metrics = metrics_t.read()
+    assert metrics.count() == 1
+    assert metrics.groupBy("bibcode").count() \
+        .where("count > 1").count() == 0
+
+
+def test_cli_and_streaming_leave_identical_sinks(spark, tmp_path):
+    """The same events through ``cli ingest`` + ``cli reindex`` and
+    through one StreamingReindex AvailableNow run leave identical solr
+    docs, links rows and metrics TxnTable rows, read by the same
+    readers: both cadences run ``ingest_step`` and ``dispatch_step``."""
+    from adsmasterpipeline_spark.cli import main
+    from adsmasterpipeline_spark.sinks.txnlake import txn_table
+    from adsmasterpipeline_spark.streaming.ingest import StreamingReindex
+
+    events = []
+    for i in range(3):
+        b = f"P{i}"
+        ts = f"2024-01-0{i + 1}T00:00:0"
+        for j, (typ, payload) in enumerate((
+                ("bib_data", {"bibcode": b, "title": [f"T{i}"]}),
+                ("orcid_claims", {"verified": ["0-1"]}),
+                ("nonbib_data", {"boost": 0.1, "data_links_rows":
+                                 [{"url": [f"http://u/{i}"]}]}),
+                ("metrics", {"citation_num": i}))):
+            events.append(_event(b, typ, payload, f"{ts}{j}.000Z"))
+    events_dir = tmp_path / "events"
+    events_dir.mkdir()
+    (events_dir / "b.json").write_text(
+        "\n".join(json.dumps(e) for e in events))
+
+    data = str(tmp_path / "data")
+    assert main(["ingest", "--events", str(events_dir),
+                 "--data", data]) == 0
+    assert main(["reindex", "--data", data]) == 0
+    stream_sinks = str(tmp_path / "stream_sinks")
+    StreamingReindex(spark, str(events_dir), str(tmp_path / "records"),
+                     str(tmp_path / "ckpt"), stream_sinks) \
+        .run_available_now()
+
+    def sinks(d):
+        def rows(df):
+            return sorted(tuple(r) for r in
+                          df.select(*sorted(df.columns)).collect())
+        return {"solr": rows(spark.read.json(os.path.join(d, "solr"))),
+                "links": rows(spark.read.json(os.path.join(d, "links"))),
+                "metrics": rows(txn_table(spark, os.path.join(d, "metrics"))
+                                .read().drop("modtime"))}
+
+    cli_sinks = sinks(os.path.join(data, "sinks"))
+    assert [len(v) for v in cli_sinks.values()] == [3, 3, 3]
+    assert sinks(stream_sinks) == cli_sinks

@@ -646,7 +646,7 @@ def test_txn_randomized_lifecycle_matches_model(spark, tmp_path, seed):
 
 @pytest.mark.slow
 def test_streaming_txn_survives_delete_everything_epoch(spark, tmp_path):
-    """Crash-loop regression (round-6 review): an epoch whose deletes
+    """Crash-loop regression: an epoch whose deletes
     remove EVERY remaining row leaves the table live-empty (a commit
     with zero adds). The next epoch must merge against an empty
     records frame and re-insert — not die in read_for_keys with
@@ -675,13 +675,15 @@ def test_streaming_txn_survives_delete_everything_epoch(spark, tmp_path):
                        "status": "deleted", "payload": None,
                        "event_ts": "2024-01-02T00:00:00.000Z"}])
     ing.run_available_now()
-    assert ing._load_records().count() == 0     # live-empty, no crash
+    t = ing._txn()
+    assert t.version() == 1 and t.live_files() == []   # live-empty
     write("b3.json", [{"bibcode": "S2", "type": "bib_data",
                        "status": "active",
                        "payload": json.dumps({"bibcode": "S2"}),
                        "event_ts": "2024-01-03T00:00:00.000Z"}])
     ing.run_available_now()                     # would crash pre-fix
-    assert {r["bibcode"] for r in ing._load_records().collect()} == {"S2"}
+    assert t.version() == 2
+    assert {r["bibcode"] for r in t.read().collect()} == {"S2"}
 
 
 def test_txn_restore(spark, tmp_path):
@@ -831,7 +833,7 @@ def test_streaming_auto_compact_bounds_file_count(spark, tmp_path):
     # live files than epochs
     assert len(t.live_files()) < 5
     assert any(h["operation"] == "compact" for h in t.history())
-    assert ing._load_records().count() == 45
+    assert t.read().count() == 45
 
 
 def _recs_ts(spark, rows):
@@ -1812,6 +1814,45 @@ def test_vacuum_protects_inflight_staged_dirs(spark, tmp_path):
         os.utime(p, (1, 1))
     deleted = t.vacuum(keep_versions=1, min_age_seconds=0)
     assert {a["path"] for a in orphan} <= set(deleted)
+
+
+def test_vacuum_removes_emptied_dirs_in_one_pass(spark, tmp_path):
+    """Vacuum judges a dir's age by its mtime from before it unlinks
+    the dir's files (each unlink sets the mtime to now), so one pass
+    removes every aged dir it empties; a young unreferenced dir, a
+    concurrent writer's in the making, stays."""
+    path = str(tmp_path / "t")
+    data = os.path.join(path, "data")
+    t = txn_table(spark, path, key="id")
+    df = spark.range(10).select("id", (F.col("id") * 2).alias("v"))
+    t.overwrite(df)                                          # v0
+    live0 = set(os.listdir(data))
+    t.overwrite(df)                                          # v1
+    dirs1 = set(os.listdir(data))
+    superseded = live0 & dirs1
+    assert superseded
+    deleted = t.vacuum(keep_versions=1, min_age_seconds=0)
+    assert {p.split("/")[1] for p in deleted} >= superseded
+    assert set(os.listdir(data)) == dirs1 - superseded
+
+    # an aged orphan (crashed attempt at a taken version) and a young
+    # one: under a 60 s guard, one pass removes the first, dir and
+    # all, and leaves the second alone
+    def orphan(age):
+        adds = t._write_data(df, 1)
+        d = os.path.dirname(os.path.join(path, adds[0]["path"]))
+        if age:
+            for name in os.listdir(d):
+                os.utime(os.path.join(d, name), (1, 1))
+            os.utime(d, (1, 1))
+        return os.path.basename(d)
+
+    old, young = orphan(age=True), orphan(age=False)
+    t.vacuum(keep_versions=1, min_age_seconds=60)
+    left = set(os.listdir(data))
+    assert old not in left
+    assert young in left and os.listdir(os.path.join(data, young))
+    assert {r["id"] for r in t.read().collect()} == set(range(10))
 
 
 def test_lost_file_error_matches_empty_staged_dir(spark, tmp_path):
