@@ -262,16 +262,7 @@ def cmd_sitemap(args) -> int:
     table = table.localCheckpoint()
     out = args.out or os.path.join(args.data, "sitemap_files")
     only_dirty = args.action != "bootstrap"
-    total = 0
-    for site in sm.SITES:
-        rendered = sm.render_sitemap_files(table, site=site,
-                                           only_dirty=only_dirty)
-        total += sm.write_sitemap_files(rendered, out)
-        from .sinks.writers import write_text_files
-        write_text_files(
-            [("sitemap_index.xml", sm.render_sitemap_index(table, site=site)),
-             ("robots.txt", sm.render_robots_txt(site))],
-            os.path.join(out, site))
+    total = sm.write_sites(table, out, only_dirty=only_dirty)
     # Stamp filename_lastmoddate on every row of a regenerated file
     # (the reference sets it at generation time, adsmp/tasks.py:1040-1048)
     # so add_records' dirty predicate `bib_data_updated > lastmod` stays

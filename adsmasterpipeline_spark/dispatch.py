@@ -185,8 +185,9 @@ def dispatch_step(records: DataFrame, sinks_dir: str, mode: str,
     Spark save mode ``mode``; the metrics rows upserted into the
     key-clustered TxnTable at ``<sinks_dir>/metrics`` (a stat-pruned
     MERGE that opens only files whose key range can hold a batch
-    bibcode, the reference's INSERT..ON CONFLICT, adsmp/app.py:45-77);
-    then ``mark_processed`` for the three sinks.
+    bibcode, the reference's INSERT..ON CONFLICT, adsmp/app.py:45-77;
+    skipped when there are no metrics rows); then ``mark_processed``
+    for the three sinks.
 
     Returns a dict: ``updated``, ``records`` with the writeback applied
     (pinned); ``touched``, its rows whose key went to a sink (the only
@@ -205,17 +206,23 @@ def dispatch_step(records: DataFrame, sinks_dir: str, mode: str,
                             for k in ("solr", "metrics", "links"))
     mtime = [c for c in solr.columns
              if c.endswith("_mtime") or c == "update_timestamp"]
+    # counted first (the batches are cached): a dispatch with no
+    # metrics rows commits nothing to the metrics table
+    counts = {"solr": solr.count(), "metrics": metrics.count(),
+              "links": links.count()}
     writers.write_solr_dir(solr_docs_json(solr.drop("checksum", *mtime)),
                            os.path.join(sinks_dir, "solr"), mode)
     probes: dict = {}
-    incoming = writers.metrics_upsert(metrics).localCheckpoint()
-    mt = txn_table(records.sparkSession, os.path.join(sinks_dir, "metrics"),
-                   cluster_writes=True, rows_per_file=rows_per_file)
-    if mt.version() >= 0 and mt.live_files():
-        mt.merge(incoming)
-        probes["metrics_merge"] = merge_probe(mt)
-    elif incoming.count():
-        mt.overwrite(incoming)
+    if counts["metrics"]:
+        incoming = writers.metrics_upsert(metrics).localCheckpoint()
+        mt = txn_table(records.sparkSession,
+                       os.path.join(sinks_dir, "metrics"),
+                       cluster_writes=True, rows_per_file=rows_per_file)
+        if mt.version() >= 0 and mt.live_files():
+            mt.merge(incoming)
+            probes["metrics_merge"] = merge_probe(mt)
+        else:
+            mt.overwrite(incoming)
     writers.write_links_dir(links, os.path.join(sinks_dir, "links"), mode)
 
     updated = records
@@ -228,8 +235,6 @@ def dispatch_step(records: DataFrame, sinks_dir: str, mode: str,
                .unionByName(links.select("bibcode"))
                .distinct().withColumn("_touched", F.lit(True)))
     updated = updated.join(touched, "bibcode", "left").localCheckpoint()
-    counts = {"solr": solr.count(), "metrics": metrics.count(),
-              "links": links.count()}
     for df in (solr, metrics, links):
         df.unpersist()
     return {"updated": updated.drop("_touched"),

@@ -4,7 +4,7 @@ Local testing runs on ``local[N]`` (single JVM); the configuration is
 chosen so the same logical plans scale to a multi-executor cluster:
 AQE for runtime re-planning (skew joins, partition coalescing),
 UTC session timezone (oracle comparability), Arrow for the few
-Pandas-UDF paths.
+Pandas-UDF paths, INT64 microsecond parquet timestamps (footer stats).
 """
 
 from __future__ import annotations
@@ -30,6 +30,9 @@ def get_spark(app_name: str = "adsmasterpipeline_spark",
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # INT64 timestamps carry min/max in the parquet footer (INT96
+        # ones carry none), which TxnTable reads as per-file stats
+        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         # Python workers import this package by name: give them its

@@ -16,20 +16,29 @@ through it.
 - **Log**: ``<path>/_txn/<version>.json`` entries list data files
   added/removed plus an optional application transaction id. Each
   ``add`` carries the file's key min/max and row count (Delta's
-  per-file ``stats``) collected at write time; entries with removes
+  per-file ``stats``), read on the driver from the written files'
+  parquet footers; entries with removes
   also carry ``remove_stats`` (removed path -> row count, copied from
   the prior snapshot), which ``cli lake delete`` sums into its
-  ``deleted_rows`` report. The current snapshot
-  is the ordered fold of the log: ``adds - removes``.
+  ``deleted_rows`` report. A merge entry also records its sorted
+  affected ``keys`` (when there are at most ``_PRUNE_KEY_LIMIT`` of
+  string or integer type). A reader that predates the ``keys`` field
+  refuses such entries as an unknown table feature. The current
+  snapshot is the ordered fold of the log: ``adds - removes``.
+- **Schemas from footers**: scans pass the Spark schema stored in the
+  first file's footer to the reader (memoized per path; data files
+  are immutable), so building a scan runs no schema-inference job.
 - **Atomic commit**: the entry is staged to a temp file and published
   with ``os.link`` (fails with EEXIST if the version was taken) — the
   optimistic-concurrency primitive; a crash before publish leaves
   only unreferenced temp/data files, never a torn table.
-- **File-granular MERGE with file skipping**: candidate files are
-  pruned DRIVER-SIDE against the batch's key set/range using the
-  per-file min/max stats — a file whose key range cannot contain any
+- **File-granular MERGE with file skipping**: the batch's affected
+  keys are collected ONCE (up to ``_PRUNE_KEY_LIMIT``) and candidate
+  files are pruned DRIVER-SIDE against them using the per-file
+  min/max stats — a file whose key range cannot contain any
   affected key is never opened. Only candidates are scanned (tagged
-  with ``input_file_name()``) to find the truly touched files; only
+  with ``input_file_name()``, filtered by an ``IN`` predicate on the
+  collected keys) to find the truly touched files; only
   those are rewritten. Every other file is kept byte-identical and
   merely re-referenced. This bounds an incremental merge by the
   TOUCHED files — O(batch), not O(table) — the property the round-5
@@ -48,6 +57,10 @@ through it.
   the ids of the trailing ``txn_retention_commits`` commits only
   (Delta's txn expiry), so replay-detection state stops growing with
   total epochs.
+- **Change feed**: ``changes()`` derives row-level deltas from each
+  commit's removes (pre-image) and adds (post-image). Merges that
+  recorded ``keys`` read both images for those keys only and are
+  diffed together in one plan.
 - **Deletion vectors (merge-on-read DELETE)**: ``delete(keys=... |
   where=...)`` masks row positions instead of rewriting files — a
   commit that writes only a small (file, position, version) parquet
@@ -78,15 +91,16 @@ with ``TableStateError`` rather than read without it.
 Scale notes: the log fold and file lists live on the driver — bounded
 by FILE COUNT (what Delta itself keeps driver-side after parsing the
 log), never by row count. All row work (membership probe, rewrite,
-survivor union) is DataFrame joins; deleted keys are never collected
-into an IN-list (the pruning collect is capped at
-``_PRUNE_KEY_LIMIT`` keys and falls back to min/max range overlap
-above it).
+survivor union) is DataFrame joins or filters; the affected-key
+collect is capped at ``_PRUNE_KEY_LIMIT`` keys, and above it the keys
+stay a pinned DataFrame (semi/anti joins) and pruning falls back to
+min/max range overlap.
 """
 
 from __future__ import annotations
 
 import bisect
+import functools
 import json
 import os
 import uuid
@@ -94,6 +108,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 _LOG_DIR = "_txn"
 _LAST_CHECKPOINT = "_last_checkpoint"
@@ -210,7 +225,11 @@ class Snapshot:
 # replaceWhere)
 _ENTRY_FIELDS = frozenset((
     "version", "operation", "ts_ms", "adds", "removes", "remove_stats",
-    "remove_dvs", "app_txn_id", "dvs", "dv_prior", "dv_stats"))
+    "remove_dvs", "app_txn_id", "dvs", "dv_prior", "dv_stats", "keys"))
+# the columns the change feed adds to the table's
+_FEED_META = {"_change_type": T.StringType(),
+              "_commit_version": T.LongType(),
+              "_commit_timestamp": T.TimestampType()}
 _CHECKPOINT_FIELDS = frozenset((
     "version", "live", "txn_ids", "txn_pairs", "dvs"))
 
@@ -256,15 +275,16 @@ class TxnTable:
         # tick's watermark scan file-skipped via read_for_range; "id"
         # makes the table-wide max id a driver-side stat fold instead
         # of a full-table scan on every streaming insert epoch) and is
-        # a no-op for tables without those columns. The extra min/max
-        # aggregates ride the stats job _write_data already runs.
+        # a no-op for tables without those columns. Their min/max come
+        # from the same parquet footers as the key's.
         self.stats_cols = tuple(stats_cols)
         # cluster_writes range-partitions every written batch by key
         # (~rows_per_file rows per data file) — Delta's cluster-by
         # analogue. Key-clustered files are what make the min/max
         # stats pruning EFFECTIVE: a hash-partitioned bootstrap gives
         # every file the full key range and no file can ever be
-        # skipped. Costs one count() per write (O(batch)).
+        # skipped. A merge sizes the partitioning from an upper bound
+        # it already knows; other writes pay one count() (O(batch)).
         self.cluster_writes = cluster_writes
         self.rows_per_file = rows_per_file
         # checkpoints retain app txn ids from this many trailing
@@ -680,7 +700,8 @@ class TxnTable:
         self._maybe_checkpoint(version)
 
     # ----------------------------------------------------------- data
-    def _write_data(self, df: DataFrame, version: int) -> list[dict]:
+    def _write_data(self, df: DataFrame, version: int,
+                    rows_hint: int | None = None) -> list[dict]:
         """Write ``df`` as new parquet files under a per-attempt dir;
         returns add records ``{"path", "min_key", "max_key", "rows"}``
         (table-relative paths). Files are invisible until the log
@@ -689,14 +710,20 @@ class TxnTable:
         (data written, commit never published) can never collide with
         the retry; orphans are unreferenced garbage, not corruption.
 
-        The stats pass reads back ONLY this commit's files (O(batch),
-        straight out of page cache) — the price of making every future
-        merge's probe O(candidate files) instead of O(table)."""
+        The stats come from the written files' parquet footers, read
+        on the driver (``_footer_stats``): row count plus min/max of
+        the key and of ``stats_cols``, folded over row groups. Zero-row
+        parts are dropped. A column whose footer carries no min/max
+        (INT96 timestamps, floats, values too long for parquet stats)
+        records ``None``, which every probe treats as a candidate.
+        Under ``cluster_writes`` the range partitioning is sized from
+        ``rows_hint`` (an upper bound the caller knows) or, without
+        one, from a ``count()``."""
         rel_dir = os.path.join(
             "data", f"commit-{version:08d}-{uuid.uuid4().hex[:8]}")
         out_dir = os.path.join(self.path, rel_dir)
         if self.cluster_writes and self.key in df.columns:
-            n = df.count()
+            n = df.count() if rows_hint is None else rows_hint
             nfiles = max(1, -(-n // self.rows_per_file))
             df = df.repartitionByRange(nfiles, self.key)
         df.write.mode("error").parquet(out_dir)
@@ -704,47 +731,46 @@ class TxnTable:
                        if n.endswith(".parquet"))
         stats = {}
         if names and self.key in df.columns:
-            tagged = (self.spark.read.parquet(out_dir)
-                      .withColumn("_f", F.input_file_name()))
             extras = [c for c in self.stats_cols
                       if c != self.key and c in df.columns]
-            aggs = [F.min(self.key).alias("mn"),
-                    F.max(self.key).alias("mx"),
-                    F.count(F.lit(1)).alias("n")]
-            for i, c in enumerate(extras):
-                aggs.append(F.min(c).alias(f"_mn{i}"))
-                aggs.append(F.max(c).alias(f"_mx{i}"))
-            rows = tagged.groupBy("_f").agg(*aggs).collect()
-            for r in rows:
-                base = os.path.basename(_decode_uri(r["_f"]))
-                mn, mx = r["mn"], r["mx"]
-                if not _jsonable(mn) or not _jsonable(mx):
-                    mn = mx = None   # exotic key type: no pruning
-                s = {"min_key": mn, "max_key": mx, "rows": r["n"]}
-                if extras:
-                    s["cols"] = {
-                        c: {"mn": _stat_encode(r[f"_mn{i}"]),
-                            "mx": _stat_encode(r[f"_mx{i}"])}
-                        for i, c in enumerate(extras)}
-                stats[base] = s
-            # a part-file absent from the stats aggregate is EMPTY
-            # (Spark writes zero-row parts for some shuffle shapes):
-            # referencing it would seed stat-less adds that every
-            # future probe must treat as candidates and that poison
-            # the max_stat fold — drop the file instead of the stats
             for n in list(names):
-                if n not in stats:
+                rows, mm = _footer_stats(os.path.join(out_dir, n),
+                                         [self.key] + extras)
+                if not rows:
+                    # a zero-row part (Spark writes them for some
+                    # shuffle shapes): referencing it would seed an
+                    # add that every probe opens for nothing — drop
+                    # the file
                     os.unlink(os.path.join(out_dir, n))
                     names.remove(n)
+                    continue
+                mn, mx = mm[self.key]
+                if not _jsonable(mn) or not _jsonable(mx):
+                    mn = mx = None   # exotic key type: no pruning
+                s = {"min_key": mn, "max_key": mx, "rows": rows}
+                if extras:
+                    s["cols"] = {c: {"mn": _stat_encode(mm[c][0]),
+                                     "mx": _stat_encode(mm[c][1])}
+                                 for c in extras}
+                stats[n] = s
         return [{"path": os.path.join(rel_dir, n),
                  **stats.get(n, {"min_key": None, "max_key": None,
                                  "rows": None})}
                 for n in names]
 
     def _read_files(self, files: list[str]) -> DataFrame:
-        """Scan table-relative data files."""
-        return self.spark.read.parquet(
-            *[os.path.join(self.path, f) for f in files])
+        """Scan table-relative data files with the Spark schema stored
+        in the first file's footer (no schema-inference job); files
+        without one are read with inference."""
+        paths = [os.path.join(self.path, f) for f in files]
+        try:
+            raw = _footer_schema_json(paths[0])
+        except (OSError, ValueError):
+            raw = None     # a lost file: let Spark report the path
+        reader = self.spark.read
+        if raw is not None:
+            reader = reader.schema(T.StructType.fromJson(json.loads(raw)))
+        return reader.parquet(*paths)
 
     # ------------------------------------------------ deletion vectors
     # Merge-on-read DELETE (the public Delta deletionVectors feature):
@@ -1056,18 +1082,25 @@ class TxnTable:
         if not snap.live:
             raise TableStateError(
                 f"TxnTable at {self.path} has no committed data")
-        # pruning needs an agg + a collect and the result feeds a
-        # semi-join: sever the keys lineage once instead of
-        # re-executing the caller's pipeline three times
-        keys = keys.select(self.key).distinct().localCheckpoint()
-        cands = self._prune_candidates(snap.live, keys)
+        # one bounded collect of the keys prunes the files and becomes
+        # an IN filter; above the limit the keys are pinned (pruning
+        # needs an agg + a collect and the result feeds a semi-join)
+        keys = keys.select(self.key).distinct()
+        _, got, in_sql = self._collect_keys(keys)
+        if in_sql is None:
+            keys = keys.localCheckpoint()
+            cands = self._prune_candidates(snap.live, keys)
+        else:
+            cands = self._prune_candidates(snap.live, got)
         self.last_read_probe = {"live_files": len(snap.live),
                                 "candidate_files": sorted(cands)}
         if not cands:
             # no file can contain any key: empty frame, table schema
             return self._empty_like(snap)
-        return (self._read_live(cands, snap.dvs)
-                .join(keys, self.key, "left_semi"))
+        rows = self._read_live(cands, snap.dvs)
+        if in_sql is None:
+            return rows.join(keys, self.key, "left_semi")
+        return rows.where(in_sql)
 
     def read(self, as_of: int | None = None) -> DataFrame:
         snap = self._snapshot(as_of)
@@ -1096,6 +1129,17 @@ class TxnTable:
         table (``last_changes_probe`` records exactly which files were
         opened, vs the live count). ``compact`` commits reorganize
         bytes without changing rows and emit NOTHING by construction.
+
+        Only the rows of a merge's affected keys can differ, so a
+        merge entry that recorded its ``keys`` (and carries no
+        deletion-vector pointers) has both images read for those keys
+        only, and all such commits of the range are diffed in ONE
+        plan (``_scoped_diff``). Deletion-vector commits, overwrites
+        and entries without ``keys`` (written before the field
+        existed) take the per-commit ``_commit_diff``. Either way the
+        feed has the rows and schema of the by-name union of the
+        per-commit diffs, and building it runs no Spark job for
+        DV-free ranges.
 
         This is the question the reference answers with a SECOND
         table — the ``change_log`` audit rows with pre-images written
@@ -1126,6 +1170,10 @@ class TxnTable:
                 f"removed by cleanup_log — the feed below the log "
                 f"retention horizon is not reconstructable")
         per_commit: list[DataFrame] = []
+        scoped: list[tuple] = []
+        scoped_cols: set[str] = set()
+        # each emitted commit's output columns, in version order
+        commit_cols: list[dict] = []
         files_read: set[str] = set()
         for v in range(v_lo + 1, v_hi + 1):
             e = self._load_json(entry_paths[v])
@@ -1165,6 +1213,25 @@ class TxnTable:
             files_read.update(adds)
             files_read.update(removes)
             files_read.update(kept_dv)
+            in_sql = (_in_sql(self.key, e["keys"])
+                      if e.get("keys") is not None
+                      and not (dvs_e or prior_e or rdvs) else None)
+            if in_sql is not None:
+                # a DV-free merge that recorded its keys: only rows of
+                # those keys can differ between its removes and adds,
+                # so both images are read for those keys only and the
+                # diff joins them with every other such commit's
+                pre = self._read_files(removes) if removes else None
+                post = self._read_files(adds) if adds else None
+                cols: dict = {}
+                for df in (post, pre):
+                    if df is not None:
+                        for f_ in df.schema.fields:
+                            cols.setdefault(f_.name, f_.dataType)
+                commit_cols.append({**cols, **_FEED_META})
+                scoped_cols.update(cols)
+                scoped.append((v, e.get("ts_ms"), in_sql, pre, post))
+                continue
             # pre-image: removed files MINUS their already-masked
             # positions (remove_dvs — those rows' deletions were
             # served by the earlier delete commit's feed)
@@ -1235,13 +1302,15 @@ class TxnTable:
                                              allowMissingColumns=True))
             if pre is None and post is None:
                 continue   # DV pointer churn with zero position delta
-            per_commit.append(
-                self._commit_diff(pre, post, v, e.get("ts_ms")))
+            diff = self._commit_diff(pre, post, v, e.get("ts_ms"))
+            commit_cols.append(
+                {f_.name: f_.dataType for f_ in diff.schema.fields})
+            per_commit.append(diff)
         self.last_changes_probe = {
             "live_files": len(self._snapshot().live),
             "files_read": sorted(files_read),
             "commits": v_hi - v_lo}
-        if not per_commit:
+        if not per_commit and not scoped:
             snap = self._snapshot()
             if not snap.live:
                 # mirror read(): a table with no live data files has
@@ -1253,10 +1322,107 @@ class TxnTable:
                     .withColumn("_commit_version", F.lit(None).cast("long"))
                     .withColumn("_commit_timestamp",
                                 F.lit(None).cast("timestamp")))
-        out = per_commit[0]
-        for df in per_commit[1:]:
-            out = out.unionByName(df, allowMissingColumns=True)
-        return out
+        # the columns (and their order) of a by-name union of every
+        # commit's diff in version order: a column first seen in a
+        # later commit goes after the earlier ones
+        final: dict = {}
+        for cols in commit_cols:
+            for c, t in cols.items():
+                final.setdefault(c, t)
+        parts = list(per_commit)
+        if scoped:
+            parts.insert(0, self._scoped_diff(scoped, {
+                c: t for c, t in final.items() if c in scoped_cols}))
+        names = list(final)
+        aligned = []
+        for df in parts:
+            if df.columns != names:
+                have = set(df.columns)
+                df = df.select(*[
+                    F.col(_quote(c)) if c in have
+                    else F.lit(None).cast(final[c]).alias(c)
+                    for c in names])
+            aligned.append(df)
+        return functools.reduce(DataFrame.union, aligned)
+
+    def _scoped_diff(self, commits: list[tuple], cols: dict) -> DataFrame:
+        """The change rows of DV-free merge commits that recorded their
+        ``keys``, as ONE plan: each commit's pre-image (its removes)
+        and post-image (its adds) are read for its keys only, aligned
+        to ``cols`` (name -> type) and tagged with the version; the
+        images of all commits are full-outer-joined once on (key,
+        version). The rows and schema equal the by-name union of
+        ``_commit_diff`` over the same commits. ``commits`` holds
+        ``(version, ts_ms, IN predicate, pre, post)``; expressions
+        are SQL text, so building the plan costs a few py4j calls
+        per commit instead of several per column."""
+        key = _quote(self.key)
+
+        def image(df, v, ts_ms, in_sql):
+            have = set(df.columns)
+            sel = [(_quote(c) if c in have
+                    else f"CAST(NULL AS {t.simpleString()})")
+                   + f" AS {_quote(c)}" for c, t in cols.items()]
+            ts = (f"timestamp_millis({int(ts_ms)})" if ts_ms is not None
+                  else "CAST(NULL AS TIMESTAMP)")
+            return df.where(in_sql).selectExpr(
+                *sel, f"CAST({int(v)} AS BIGINT) AS _cdf_version",
+                f"{ts} AS _cdf_ts")
+
+        def union(frames):
+            return functools.reduce(DataFrame.union, frames) \
+                if frames else None
+
+        pre = union([image(p, v, ts, q) for v, ts, q, p, _ in commits
+                     if p is not None])
+        post = union([image(a, v, ts, q) for v, ts, q, _, a in commits
+                      if a is not None])
+        data = [_quote(c) for c in cols]
+        if pre is None or post is None:
+            # every commit only inserts (or only deletes)
+            side, ctype = ((post, "insert") if pre is None
+                           else (pre, "delete"))
+            return side.selectExpr(
+                *data, f"'{ctype}' AS _change_type",
+                "_cdf_version AS _commit_version",
+                "_cdf_ts AS _commit_timestamp")
+        # struct comparison treats null fields as equal; maps compare
+        # as the JSON of their key-sorted entries (see _commit_diff)
+        def cmp(side):
+            return "struct(" + ", ".join(
+                f"to_json(array_sort(map_entries({side}.{_quote(c)})))"
+                if isinstance(t, T.MapType) else f"{side}.{_quote(c)}"
+                for c, t in cols.items() if c != self.key) + ")"
+
+        changed = f"p.{key} IS NULL OR q.{key} IS NULL"
+        if len(cols) > (1 if self.key in cols else 0):
+            changed += f" OR NOT ({cmp('p')} <=> {cmp('q')})"
+        all_ts = all(ts is not None for _, ts, *_ in commits)
+        j = (pre.alias("p").join(
+                post.alias("q"),
+                F.expr(f"p.{key} = q.{key} AND "
+                       f"p._cdf_version = q._cdf_version"), "full_outer")
+             .where(changed)
+             .selectExpr(
+                 f"explode(CASE WHEN p.{key} IS NULL THEN array('insert') "
+                 f"WHEN q.{key} IS NULL THEN array('delete') ELSE "
+                 f"array('update_preimage', 'update_postimage') END) "
+                 f"AS _change_type",
+                 *[f"p.{c} AS _p{i}" for i, c in enumerate(data)],
+                 *[f"q.{c} AS _q{i}" for i, c in enumerate(data)],
+                 # the trailing literals are never reached (every
+                 # joined row has a side); they keep the columns
+                 # non-nullable like _commit_diff's literals
+                 "coalesce(p._cdf_version, q._cdf_version, "
+                 "CAST(-1 AS BIGINT)) AS _commit_version",
+                 "coalesce(p._cdf_ts, q._cdf_ts"
+                 + (", timestamp_millis(0)" if all_ts else "")
+                 + ") AS _commit_timestamp"))
+        return j.selectExpr(
+            *[f"CASE WHEN _change_type IN ('insert', 'update_postimage') "
+              f"THEN _q{i} ELSE _p{i} END AS {c}"
+              for i, c in enumerate(data)],
+            "_change_type", "_commit_version", "_commit_timestamp")
 
     def _commit_diff(self, pre: DataFrame | None, post: DataFrame | None,
                      version: int, ts_ms: int | None = None) -> DataFrame:
@@ -1381,25 +1547,33 @@ class TxnTable:
         return v
 
     def _prune_candidates(self, live: dict[str, dict | None],
-                          affected: DataFrame) -> list[str]:
+                          affected) -> list[str]:
         """Driver-side file skipping: keep only live files whose
-        [min_key, max_key] can contain an affected key. Small batches
-        (<= _PRUNE_KEY_LIMIT keys) test each file's range against the
-        sorted key list (exact containment, strongest pruning); larger
-        ones fall back to range overlap. Files without stats are
-        always candidates (never incorrectly skipped)."""
-        agg = affected.agg(
-            F.min(self.key).alias("mn"), F.max(self.key).alias("mx"),
-            F.count(F.lit(1)).alias("n")).collect()[0]
-        if agg["n"] == 0:
-            return []
-        bmin, bmax = agg["mn"], agg["mx"]
-        keys = None
-        if agg["n"] <= _PRUNE_KEY_LIMIT:
-            keys = sorted(r[0] for r in affected.collect()
-                          if r[0] is not None)
-            if keys and not _jsonable(keys[0]):
-                keys = None
+        [min_key, max_key] can contain an affected key. ``affected``
+        is either the sorted list of affected keys the caller already
+        collected, or a one-column DataFrame of them: small batches
+        (<= _PRUNE_KEY_LIMIT keys) are then collected and tested like
+        a list (exact containment, strongest pruning); larger ones
+        fall back to range overlap. Files without stats are always
+        candidates (never incorrectly skipped)."""
+        if isinstance(affected, list):
+            if not affected:
+                return []
+            keys = affected
+            bmin, bmax = keys[0], keys[-1]
+        else:
+            agg = affected.agg(
+                F.min(self.key).alias("mn"), F.max(self.key).alias("mx"),
+                F.count(F.lit(1)).alias("n")).collect()[0]
+            if agg["n"] == 0:
+                return []
+            bmin, bmax = agg["mn"], agg["mx"]
+            keys = None
+            if agg["n"] <= _PRUNE_KEY_LIMIT:
+                keys = sorted(r[0] for r in affected.collect()
+                              if r[0] is not None)
+        if keys and not _jsonable(keys[0]):
+            keys = None
         out = []
         for p, s in live.items():
             if not s or s.get("min_key") is None or s.get("max_key") is None:
@@ -1470,7 +1644,9 @@ class TxnTable:
            set/range using per-file stats (files whose range cannot
            hold an affected key are NEVER OPENED);
         2. probe which candidates actually contain an affected key
-           (semi-join against a scan tagged with input_file_name());
+           (an IN filter on the collected keys — or, above
+           _PRUNE_KEY_LIMIT, a semi-join — over a scan tagged with
+           input_file_name());
         3. rewrite ONLY those files' rows: survivors (rows whose key
            is neither changed nor deleted) + the changed rows
            (minus deletes); untouched files are re-referenced as-is;
@@ -1480,7 +1656,8 @@ class TxnTable:
            is unioned with a zero-row frame of the table schema
            instead, so a drifted batch refuses either way;
         5. commit {adds: rewritten+inserted files, removes: touched
-           files} as one atomic log entry.
+           files, keys: the collected affected keys} as one atomic
+           log entry.
 
         Returns the committed version (or the current one when
         ``app_txn_id`` was already applied — idempotent replay).
@@ -1495,9 +1672,32 @@ class TxnTable:
         deleted_keys = deleted_keys.select(key).distinct()
 
         affected = (changed.select(key)
-                    .unionByName(deleted_keys).distinct()
-                    .localCheckpoint())
-        candidates = self._prune_candidates(snap.live, affected)
+                    .unionByName(deleted_keys).distinct())
+        # ONE collect of the affected keys serves the file pruning, the
+        # probe and survivor filters (an IN predicate instead of a
+        # join) and the entry's ``keys``; a batch above the limit (or
+        # of a key type SQL literals cannot carry) is pinned and
+        # joined against instead
+        got, keys, in_sql = self._collect_keys(affected)
+        if in_sql is None:
+            affected = affected.localCheckpoint()
+            candidates = self._prune_candidates(snap.live, affected)
+
+            def hit(df):
+                return df.join(affected, key, "left_semi")
+
+            def miss(df):
+                return df.join(affected, key, "left_anti")
+        else:
+            candidates = self._prune_candidates(snap.live, keys)
+            cond = F.expr(in_sql)
+
+            def hit(df):
+                return df.where(cond)
+
+            def miss(df):
+                # the anti-join keeps null keys; NOT IN alone would not
+                return df.where(~cond | F.col(key).isNull())
         dv_cands = any(p in snap.dvs for p in candidates)
         if candidates and dv_cands:
             # DV-masked candidates: probe over the LIVE rows only (a
@@ -1507,20 +1707,18 @@ class TxnTable:
             # cache-empty fallback needed. (_metadata only resolves
             # directly on the scan, so tag before the anti-join.)
             live_rows = self._live_rows_tagged(candidates, snap.dvs)
-            touched = sorted(
-                r["_dv_file"] for r in
-                live_rows.join(affected, key, "left_semi")
-                .select("_dv_file").distinct().collect())
+            hits = {r["_dv_file"]: r["count"] for r in
+                    hit(live_rows).groupBy("_dv_file").count().collect()}
+            touched = sorted(hits)
         elif candidates:
             tagged = (self._read_files(candidates)
                       .withColumn("_file", F.input_file_name()))
             # file list is bounded by file count (driver-side by
             # design — the same cardinality Delta's log fold holds on
             # the driver)
-            touched_uris = [r["_file"] for r in
-                            tagged.join(affected, key, "left_semi")
-                            .select("_file").distinct().collect()]
-            if any(not u for u in touched_uris):
+            hits = {r["_file"]: r["count"] for r in
+                    hit(tagged).groupBy("_file").count().collect()}
+            if any(not u for u in hits):
                 # input_file_name() came back EMPTY: a caller has the
                 # same files CACHED (Spark's cache manager matches the
                 # probe scan by canonical plan and serves rows from the
@@ -1529,12 +1727,13 @@ class TxnTable:
                 # degrade to rewriting every candidate (a superset of
                 # touched; still stat-pruned, just less tightly).
                 touched = sorted(candidates)
+                hits = {}
             else:
                 touched = sorted(
                     os.path.relpath(_decode_uri(u), self.path)
-                    for u in touched_uris)
+                    for u in hits)
         else:
-            touched = []               # first merge == pure insert
+            touched, hits = [], {}     # first merge == pure insert
         self.last_merge_probe = {
             "live_files": len(snap.live),
             "candidate_files": sorted(candidates),
@@ -1546,8 +1745,7 @@ class TxnTable:
             # MATERIALIZES the touched files' DVs (masked rows do not
             # survive into the new files), and the commit's removes
             # drop their pointers
-            survivors = (self._read_live(touched, snap.dvs)
-                         .join(affected, key, "left_anti"))
+            survivors = miss(self._read_live(touched, snap.dvs))
             # a batch whose columns differ from the table's fails
             # loudly here
             new_rows = survivors.unionByName(upserts)
@@ -1558,13 +1756,38 @@ class TxnTable:
             new_rows = self._empty_like(snap).unionByName(upserts)
         else:
             new_rows = upserts
+        # upper bound on the rewrite's rows: the touched files' live
+        # rows the probe did not hit (the survivors) plus one row per
+        # affected key
+        touched_rows = [(snap.live.get(p) or {}).get("rows")
+                        for p in touched]
+        rows_hint = None
+        if got is not None and all(isinstance(r, int)
+                                   for r in touched_rows):
+            rows_hint = (sum(touched_rows) + len(got) - sum(hits.values())
+                         - sum(snap.dvs.get(p, {}).get("card", 0)
+                               for p in touched))
         # rewrite is read-from-committed-files, write-to-new-dir: no
         # read-own-input hazard, so no checkpoint needed
         v = snap.version + 1
-        adds = self._write_data(new_rows, v)
+        adds = self._write_data(new_rows, v, rows_hint)
         self._commit(v, adds, touched, "merge", app_txn_id,
+                     extra=None if in_sql is None else {"keys": keys},
                      prior_live=snap.live, prior_dvs=snap.dvs)
         return v
+
+    def _collect_keys(self, keys_df: DataFrame):
+        """One bounded collect of the distinct one-column ``keys_df``:
+        ``(collected, sorted non-null keys, IN predicate SQL)``, with
+        the last two None when there are more than _PRUNE_KEY_LIMIT
+        keys or SQL literals cannot carry their type, and the first
+        None above the limit."""
+        got = [r[0] for r in keys_df.limit(_PRUNE_KEY_LIMIT + 1).collect()]
+        if len(got) > _PRUNE_KEY_LIMIT:
+            return None, None, None
+        keys = sorted(k for k in got if k is not None)
+        in_sql = _in_sql(self.key, keys)
+        return got, (keys if in_sql is not None else None), in_sql
 
     def delete(self, keys: DataFrame | None = None,
                where=None, app_txn_id: str | None = None,
@@ -2196,6 +2419,103 @@ def _pred_may_match(node, stat_fn) -> bool:
         except TypeError:
             return True
     return True
+
+
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+@functools.lru_cache(maxsize=4096)
+def _footer_schema_json(path: str) -> str | None:
+    """The Spark schema (JSON) a Spark writer stored in the footer of
+    the parquet file at ``path``, or None for files written by other
+    writers. Data files are immutable, so the answer is memoized per
+    path; a missing file raises (and is not memoized)."""
+    import pyarrow.parquet as pq
+    raw = (pq.read_metadata(path).metadata or {}).get(_SPARK_SCHEMA_KEY)
+    return raw.decode("utf-8") if raw else None
+
+
+def _stat_decoder(dtype, column):
+    """A function mapping a footer statistic's raw (physical) value to
+    the Python value a Spark ``collect()`` of that column returns, or
+    None where the footer value cannot be trusted to equal Spark's
+    aggregate: floats (NaN and -0.0 ordering), INT96 and nanosecond
+    timestamps, decimals, binary and nested types."""
+    phys = column.physical_type
+    if isinstance(dtype, T.StringType) and phys == "BYTE_ARRAY":
+        return lambda b: b.decode("utf-8")
+    if isinstance(dtype, (T.LongType, T.IntegerType, T.ShortType,
+                          T.ByteType)) and phys in ("INT32", "INT64"):
+        return int
+    if isinstance(dtype, T.DateType) and phys == "INT32":
+        return dtype.fromInternal
+    if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)) \
+            and phys == "INT64":
+        unit = json.loads(column.logical_type.to_json()).get("timeUnit")
+        scale = {"microseconds": 1, "milliseconds": 1000}.get(unit)
+        if scale is not None:
+            return lambda v: dtype.fromInternal(v * scale)
+    return None
+
+
+def _footer_stats(path: str, cols: list[str]) -> tuple[int, dict]:
+    """Row count and per-column (min, max) of the Spark-written parquet
+    file at ``path``, from its footer: the fold over row groups of
+    each column chunk's statistics, in the values a Spark ``min``/
+    ``max`` aggregate of the file would collect. All-null row groups
+    contribute nothing (an all-null column folds to (None, None), as
+    the aggregate does); a column with a non-null row group lacking
+    min/max, or of a type ``_stat_decoder`` refuses, folds to (None,
+    None)."""
+    import pyarrow.parquet as pq
+    md = pq.read_metadata(path)
+    raw = (md.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    types = ({f.name: f.dataType for f in
+              T.StructType.fromJson(json.loads(raw)).fields}
+             if raw else {})
+    index = {md.schema.column(i).path: i for i in range(md.num_columns)}
+    out = {}
+    for c in cols:
+        i = index.get(c)
+        dec = (_stat_decoder(types[c], md.schema.column(i))
+               if i is not None and c in types else None)
+        mn = mx = None
+        for g in range(md.num_row_groups if dec else 0):
+            rg = md.row_group(g)
+            st = rg.column(i).statistics
+            if st is not None and not st.has_min_max and \
+                    st.has_null_count and st.null_count == rg.num_rows:
+                continue                       # all-null row group
+            if st is None or not st.has_min_max:
+                mn = mx = None
+                break
+            lo, hi = dec(st.min_raw), dec(st.max_raw)
+            mn = lo if mn is None or lo < mn else mn
+            mx = hi if mx is None or hi > mx else mx
+        out[c] = (mn, mx)
+    return md.num_rows, out
+
+
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _in_sql(col: str, keys: list) -> str | None:
+    """``col IN (<keys>)`` as SQL text (one py4j call to parse, instead
+    of one literal Column per key); None when a key is neither a
+    string nor an integer. An empty key list matches nothing."""
+    lits = []
+    for k in keys:
+        if isinstance(k, str):
+            lits.append("'" + k.replace("\\", "\\\\")
+                        .replace("'", "\\'") + "'")
+        elif isinstance(k, int) and not isinstance(k, bool):
+            lits.append(str(k))
+        else:
+            return None
+    if not lits:
+        return "FALSE"
+    return f"{_quote(col)} IN ({', '.join(lits)})"
 
 
 def _decode_uri(uri: str) -> str:

@@ -265,49 +265,59 @@ _INDEX_HEADER = ('<?xml version="1.0" encoding="UTF-8"?>\n'
                  '<sitemapindex xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">')
 
 
-def render_sitemap_files(sitemap: DataFrame, site: str = "ads",
+def render_sitemap_files(sitemap: DataFrame, site="ads",
                          only_dirty: bool = True) -> DataFrame:
     """S9 (adsmp/tasks.py:969-1055): regenerate the XML body of every
-    file containing a flagged row. Returns (sitemap_filename, site,
-    xml) — the write is `groupBy(filename)`, one shuffle, files render
-    in parallel. URL entries follow the reference template
-    (templates/__init__.py:49-54) with XML-escaped bibcodes."""
-    pattern = SITES[site]["abs_url_pattern"]
-    pre, post = pattern.split("{bibcode}")
+    file containing a flagged row, for one site or a sequence of
+    sites. Returns (sitemap_filename, site, xml), one row per file and
+    site — the render is ONE `groupBy(filename)` shuffle shared by
+    every site, files render in parallel. URL entries follow the
+    reference template (templates/__init__.py:49-54) with XML-escaped
+    bibcodes, ordered by record id."""
+    sites = (site,) if isinstance(site, str) else tuple(site)
     scope = sitemap
     if only_dirty:
         dirty = (sitemap.where("update_flag")
                  .select("sitemap_filename").distinct())
         scope = sitemap.join(F.broadcast(dirty), "sitemap_filename", "left_semi")
-    entry = F.concat(
-        F.lit(f"\n<url><loc>{pre}"), xml_escape(F.col("bibcode")),
-        F.lit(f"{post}</loc><lastmod>"),
-        F.date_format(F.coalesce("bib_data_updated", F.current_timestamp()),
-                      "yyyy-MM-dd"),
-        F.lit("</lastmod></url>"))
-    return (
+    lastmod = F.date_format(
+        F.coalesce("bib_data_updated", F.current_timestamp()), "yyyy-MM-dd")
+    grouped = (
         scope
-        .withColumn("_entry", F.struct(F.col("record_id"), entry.alias("e")))
+        .withColumn("_entry", F.struct(F.col("record_id"),
+                                       xml_escape(F.col("bibcode")).alias("b"),
+                                       lastmod.alias("d")))
         .groupBy("sitemap_filename")
-        .agg(F.array_sort(F.collect_list("_entry")).alias("_entries"))
-        .select(
-            "sitemap_filename",
-            F.lit(site).alias("site"),
-            F.concat(
-                F.lit(_URLSET_HEADER),
-                F.concat_ws("", F.transform(F.col("_entries"),
-                                            lambda s: s.getField("e"))),
-                F.lit("\n</urlset>"),
-            ).alias("xml"),
-        )
+        .agg(F.collect_list("_entry").alias("_entries"))
+    )
+
+    def xml(s: str):
+        pre, post = SITES[s]["abs_url_pattern"].split("{bibcode}")
+        entries = F.array_sort(F.transform(
+            F.col("_entries"), lambda r: F.struct(
+                r.getField("record_id").alias("record_id"),
+                F.concat(F.lit(f"\n<url><loc>{pre}"), r.getField("b"),
+                         F.lit(f"{post}</loc><lastmod>"), r.getField("d"),
+                         F.lit("</lastmod></url>")).alias("e"))))
+        return F.concat(
+            F.lit(_URLSET_HEADER),
+            F.concat_ws("", F.transform(entries, lambda r: r.getField("e"))),
+            F.lit("\n</urlset>"))
+
+    return (
+        grouped
+        .select("sitemap_filename", F.explode(F.array(*[
+            F.struct(F.lit(s).alias("site"), xml(s).alias("xml"))
+            for s in sites])).alias("_r"))
+        .select("sitemap_filename", "_r.site", "_r.xml")
     )
 
 
-def render_sitemap_index(sitemap: DataFrame, site: str = "ads",
-                         now: dt.date | None = None) -> str:
-    """S10 (adsmp/tasks.py:876-967): index of existing files with their
-    last modification dates; driver-side render from an aggregate."""
-    base = SITES[site]["sitemap_url"]
+def render_sitemap_indexes(sitemap: DataFrame, sites=tuple(SITES),
+                           now: dt.date | None = None) -> dict[str, str]:
+    """S10 (adsmp/tasks.py:876-967): each site's index of existing
+    files with their last modification dates; driver-side render from
+    ONE aggregate shared by every site."""
     rows = (
         sitemap.where(F.col("sitemap_filename").isNotNull())
         .groupBy("sitemap_filename")
@@ -319,16 +329,20 @@ def render_sitemap_index(sitemap: DataFrame, site: str = "ads",
         .collect()
     )
     now = now or dt.date.today()
-    parts = [_INDEX_HEADER]
-    for r in rows:
-        lastmod = (r["lastmod"].date() if r["lastmod"] else now).isoformat()
-        loc = f"{base}/{r['sitemap_filename']}"
-        parts.append("\n            <sitemap>\n"
-                     f"            <loc>{loc}</loc>\n"
-                     f"            <lastmod>{lastmod}</lastmod>\n"
-                     "            </sitemap>")
-    parts.append("\n</sitemapindex>")
-    return "".join(parts)
+    out = {}
+    for site in sites:
+        base = SITES[site]["sitemap_url"]
+        parts = [_INDEX_HEADER]
+        for r in rows:
+            lastmod = (r["lastmod"].date() if r["lastmod"] else now).isoformat()
+            loc = f"{base}/{r['sitemap_filename']}"
+            parts.append("\n            <sitemap>\n"
+                         f"            <loc>{loc}</loc>\n"
+                         f"            <lastmod>{lastmod}</lastmod>\n"
+                         "            </sitemap>")
+        parts.append("\n</sitemapindex>")
+        out[site] = "".join(parts)
+    return out
 
 
 def render_robots_txt(site: str = "ads") -> str:
@@ -362,3 +376,20 @@ def write_sitemap_files(rendered: DataFrame, out_dir: str) -> int:
 
     rendered.foreachPartition(_write_partition)
     return n_written.value
+
+
+def write_sites(sitemap: DataFrame, out_dir: str,
+                only_dirty: bool = True) -> int:
+    """Render and write every site's XML files (one render pass, one
+    ``write_sitemap_files``), index and robots.txt under
+    ``out_dir/<site>``; returns the number of XML files written."""
+    import os
+    from .sinks.writers import write_text_files
+    total = write_sitemap_files(
+        render_sitemap_files(sitemap, site=tuple(SITES),
+                             only_dirty=only_dirty), out_dir)
+    for site, index in render_sitemap_indexes(sitemap).items():
+        write_text_files([("sitemap_index.xml", index),
+                          ("robots.txt", render_robots_txt(site))],
+                         os.path.join(out_dir, site))
+    return total

@@ -65,6 +65,32 @@ def test_metrics_update_mixed_batch(spark, tmp_path):
     assert rows["B3"]["citation_num"] == 2
 
 
+def test_dispatch_without_metrics_rows_commits_nothing(spark, tmp_path):
+    """A dispatch whose checksums suppress every metrics row leaves the
+    metrics TxnTable at its version: no empty MERGE commit."""
+    from adsmasterpipeline_spark.dispatch import dispatch_step
+    from adsmasterpipeline_spark.schemas import EVENT_SCHEMA
+    from adsmasterpipeline_spark.sinks.txnlake import txn_table
+    from adsmasterpipeline_spark.storage import empty_records, merge_updates
+
+    sinks = str(tmp_path / "sinks")
+    events = spark.createDataFrame(
+        [(b, t, "active", json.dumps(p), dt.datetime(2024, 1, 1))
+         for b in ("B1", "B2")
+         for t, p in (("bib_data", {"bibcode": b}),
+                      ("metrics", {"citation_num": 3}))],
+        EVENT_SCHEMA)
+    records, _ = merge_updates(empty_records(spark), events)
+    first = dispatch_step(records.localCheckpoint(), sinks, "append",
+                          force=True)
+    assert first["counts"]["metrics"] == 2
+    second = dispatch_step(first["updated"], sinks, "append", force=True)
+    assert second["counts"] == {"solr": 0, "metrics": 0, "links": 0}
+    assert "metrics_merge" not in second["probes"]
+    assert [h["operation"] for h in
+            txn_table(spark, f"{sinks}/metrics").history()] == ["overwrite"]
+
+
 def test_dir_sinks(spark, tmp_path):
     docs = spark.createDataFrame([("B1", '{"a":1}')], "bibcode string, doc string")
     write_solr_dir(docs, str(tmp_path / "solr"), "overwrite")

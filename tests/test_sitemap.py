@@ -126,7 +126,8 @@ def test_render_files_and_index(spark, small_max, tmp_path):
     assert n == 2
     assert (tmp_path / "ads" / "sitemap_bib_1.xml").exists()
 
-    idx = sm.render_sitemap_index(table, site="ads", now=dt.date(2024, 2, 1))
+    idx = sm.render_sitemap_indexes(table, ("ads",),
+                                    now=dt.date(2024, 2, 1))["ads"]
     assert idx.count("<sitemap>") == 2
     assert "sitemap_bib_2.xml" in idx
     robots = sm.render_robots_txt("scix")
@@ -172,3 +173,59 @@ def test_xml_escaping(spark, small_max):
     xml = sm.render_sitemap_files(table).collect()[0]["xml"]
     assert "B&lt;&amp;&gt;&#x27;&quot;1" in xml
     assert "<&>" not in xml.split("urlset")[1].split("<url>")[1].split("</url>")[0]
+
+
+def _expected_site_files(rows, site: str) -> dict[str, str]:
+    """The reference templates rendered in Python: each dirty file's
+    urlset (entries by record id), the index and robots.txt."""
+    import html
+    pre, post = sm.SITES[site]["abs_url_pattern"].split("{bibcode}")
+    dirty = {r[4] for r in rows if r[6]}
+    out = {}
+    for fname in sorted(dirty):
+        entries = sorted(
+            (r[0], f"\n<url><loc>{pre}{html.escape(r[1])}{post}</loc>"
+                   f"<lastmod>{r[3]:%Y-%m-%d}</lastmod></url>")
+            for r in rows if r[4] == fname)
+        out[fname] = (sm._URLSET_HEADER + "".join(e for _, e in entries)
+                      + "\n</urlset>")
+    index = [sm._INDEX_HEADER]
+    for fname in sorted({r[4] for r in rows},
+                        key=lambda f: int(f.split("_")[-1][:-4])):
+        last = max(r[5] or r[3] for r in rows if r[4] == fname)
+        index.append("\n            <sitemap>\n"
+                     f"            <loc>{sm.SITES[site]['sitemap_url']}/"
+                     f"{fname}</loc>\n"
+                     f"            <lastmod>{last:%Y-%m-%d}</lastmod>\n"
+                     "            </sitemap>")
+    out["sitemap_index.xml"] = "".join(index) + "\n</sitemapindex>"
+    out["robots.txt"] = sm.render_robots_txt(site)
+    return out
+
+
+def test_write_sites_matches_reference_templates(spark, tmp_path):
+    """Both sites render from one pass; every written file is
+    byte-identical to the per-site render (the reference templates)."""
+    rows = [
+        (7, "2020A&A...1..7X", None, ts(3), "sitemap_bib_1.xml", None, True),
+        (2, "2019<B>..2..2Y", None, ts(5), "sitemap_bib_1.xml",
+         dt.datetime(2024, 1, 2), False),
+        (5, "2021'Q\"..5..5Z", None, ts(1), "sitemap_bib_1.xml", None, False),
+        (11, "2022ApJ..11..1A", None, ts(2), "sitemap_bib_2.xml",
+         dt.datetime(2024, 1, 9), False),
+        (12, "2022ApJ..12..1A", None, ts(4), "sitemap_bib_2.xml", None,
+         False),
+        (21, "2023MNRAS.21..1B", None, ts(6), "sitemap_bib_10.xml", None,
+         True),
+        (20, "2023MNRAS.20..1é", None, ts(7), "sitemap_bib_10.xml", None,
+         True),
+    ]
+    table = spark.createDataFrame(
+        rows, "record_id long, bibcode string, scix_id string, "
+              "bib_data_updated timestamp, sitemap_filename string, "
+              "filename_lastmoddate timestamp, update_flag boolean")
+    assert sm.write_sites(table, str(tmp_path)) == 4
+    for site in sm.SITES:
+        got = {p.name: p.read_text(encoding="utf-8")
+               for p in (tmp_path / site).iterdir()}
+        assert got == _expected_site_files(rows, site)
