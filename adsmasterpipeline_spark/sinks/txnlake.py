@@ -21,10 +21,12 @@ through it.
   also carry ``remove_stats`` (removed path -> row count, copied from
   the prior snapshot), which ``cli lake delete`` sums into its
   ``deleted_rows`` report. A merge entry also records its sorted
-  affected ``keys`` (when there are at most ``_PRUNE_KEY_LIMIT`` of
-  string or integer type). A reader that predates the ``keys`` field
-  refuses such entries as an unknown table feature. The current
-  snapshot is the ordered fold of the log: ``adds - removes``.
+  affected ``keys`` (when there are at most ``_IN_KEY_LIMIT`` of
+  string or integer type). This is a one-way log format change: a
+  reader that predates the ``keys`` field refuses such entries as an
+  unknown table feature, so rolling back to it needs a checkpoint
+  past the last keyed entry. The current snapshot is the ordered fold
+  of the log: ``adds - removes``.
 - **Schemas from footers**: scans pass the Spark schema stored in the
   first file's footer to the reader (memoized per path; data files
   are immutable), so building a scan runs no schema-inference job.
@@ -37,8 +39,9 @@ through it.
   files are pruned DRIVER-SIDE against them using the per-file
   min/max stats — a file whose key range cannot contain any
   affected key is never opened. Only candidates are scanned (tagged
-  with ``input_file_name()``, filtered by an ``IN`` predicate on the
-  collected keys) to find the truly touched files; only
+  with ``input_file_name()``, filtered by an ``IN`` predicate on up
+  to ``_IN_KEY_LIMIT`` collected keys, else by a semi-join on the
+  pinned keys) to find the truly touched files; only
   those are rewritten. Every other file is kept byte-identical and
   merely re-referenced. This bounds an incremental merge by the
   TOUCHED files — O(batch), not O(table) — the property the round-5
@@ -58,9 +61,9 @@ through it.
   (Delta's txn expiry), so replay-detection state stops growing with
   total epochs.
 - **Change feed**: ``changes()`` derives row-level deltas from each
-  commit's removes (pre-image) and adds (post-image). Merges that
-  recorded ``keys`` read both images for those keys only and are
-  diffed together in one plan.
+  commit's removes (pre-image) and adds (post-image), all commits of
+  a range diffed in one plan. Merges that recorded ``keys`` read both
+  images for those keys only.
 - **Deletion vectors (merge-on-read DELETE)**: ``delete(keys=... |
   where=...)`` masks row positions instead of rewriting files — a
   commit that writes only a small (file, position, version) parquet
@@ -115,6 +118,13 @@ _LAST_CHECKPOINT = "_last_checkpoint"
 # batches with at most this many distinct keys prune candidate files
 # by exact key containment; larger ones by min/max range overlap
 _PRUNE_KEY_LIMIT = 65536
+# batches with at most this many string or integer keys filter rows
+# with one SQL IN predicate on them (and a merge records them as its
+# entry's ``keys``); larger ones join against the pinned keys, which
+# costs about one Spark job where analysing an IN list grows with it
+# (on 4 cores a merge and its change feed cost the same both ways
+# near 2,048 keys; the IN path is faster below)
+_IN_KEY_LIMIT = 1024
 
 
 class CommitConflict(RuntimeError):
@@ -226,10 +236,6 @@ class Snapshot:
 _ENTRY_FIELDS = frozenset((
     "version", "operation", "ts_ms", "adds", "removes", "remove_stats",
     "remove_dvs", "app_txn_id", "dvs", "dv_prior", "dv_stats", "keys"))
-# the columns the change feed adds to the table's
-_FEED_META = {"_change_type": T.StringType(),
-              "_commit_version": T.LongType(),
-              "_commit_timestamp": T.TimestampType()}
 _CHECKPOINT_FIELDS = frozenset((
     "version", "live", "txn_ids", "txn_pairs", "dvs"))
 
@@ -1082,25 +1088,14 @@ class TxnTable:
         if not snap.live:
             raise TableStateError(
                 f"TxnTable at {self.path} has no committed data")
-        # one bounded collect of the keys prunes the files and becomes
-        # an IN filter; above the limit the keys are pinned (pruning
-        # needs an agg + a collect and the result feeds a semi-join)
-        keys = keys.select(self.key).distinct()
-        _, got, in_sql = self._collect_keys(keys)
-        if in_sql is None:
-            keys = keys.localCheckpoint()
-            cands = self._prune_candidates(snap.live, keys)
-        else:
-            cands = self._prune_candidates(snap.live, got)
+        _, _, cands, hit, _ = self._key_scope(
+            keys.select(self.key).distinct(), snap.live)
         self.last_read_probe = {"live_files": len(snap.live),
                                 "candidate_files": sorted(cands)}
         if not cands:
             # no file can contain any key: empty frame, table schema
             return self._empty_like(snap)
-        rows = self._read_live(cands, snap.dvs)
-        if in_sql is None:
-            return rows.join(keys, self.key, "left_semi")
-        return rows.where(in_sql)
+        return hit(self._read_live(cands, snap.dvs))
 
     def read(self, as_of: int | None = None) -> DataFrame:
         snap = self._snapshot(as_of)
@@ -1130,16 +1125,13 @@ class TxnTable:
         opened, vs the live count). ``compact`` commits reorganize
         bytes without changing rows and emit NOTHING by construction.
 
+        Every commit of the range is diffed in ONE plan (``_diff``).
         Only the rows of a merge's affected keys can differ, so a
-        merge entry that recorded its ``keys`` (and carries no
-        deletion-vector pointers) has both images read for those keys
-        only, and all such commits of the range are diffed in ONE
-        plan (``_scoped_diff``). Deletion-vector commits, overwrites
-        and entries without ``keys`` (written before the field
-        existed) take the per-commit ``_commit_diff``. Either way the
-        feed has the rows and schema of the by-name union of the
-        per-commit diffs, and building it runs no Spark job for
-        DV-free ranges.
+        merge entry that recorded its ``keys`` has both images read
+        for those keys only; overwrites, deletion-vector commits and
+        entries without ``keys`` (larger batches, or written before
+        the field existed) are diffed over their whole images.
+        Building the feed runs no Spark job for DV-free ranges.
 
         This is the question the reference answers with a SECOND
         table — the ``change_log`` audit rows with pre-images written
@@ -1169,11 +1161,7 @@ class TxnTable:
                 f"changes({v_lo}, {v_hi}): log entries {missing} were "
                 f"removed by cleanup_log — the feed below the log "
                 f"retention horizon is not reconstructable")
-        per_commit: list[DataFrame] = []
-        scoped: list[tuple] = []
-        scoped_cols: set[str] = set()
-        # each emitted commit's output columns, in version order
-        commit_cols: list[dict] = []
+        commits: list[tuple] = []
         files_read: set[str] = set()
         for v in range(v_lo + 1, v_hi + 1):
             e = self._load_json(entry_paths[v])
@@ -1213,25 +1201,6 @@ class TxnTable:
             files_read.update(adds)
             files_read.update(removes)
             files_read.update(kept_dv)
-            in_sql = (_in_sql(self.key, e["keys"])
-                      if e.get("keys") is not None
-                      and not (dvs_e or prior_e or rdvs) else None)
-            if in_sql is not None:
-                # a DV-free merge that recorded its keys: only rows of
-                # those keys can differ between its removes and adds,
-                # so both images are read for those keys only and the
-                # diff joins them with every other such commit's
-                pre = self._read_files(removes) if removes else None
-                post = self._read_files(adds) if adds else None
-                cols: dict = {}
-                for df in (post, pre):
-                    if df is not None:
-                        for f_ in df.schema.fields:
-                            cols.setdefault(f_.name, f_.dataType)
-                commit_cols.append({**cols, **_FEED_META})
-                scoped_cols.update(cols)
-                scoped.append((v, e.get("ts_ms"), in_sql, pre, post))
-                continue
             # pre-image: removed files MINUS their already-masked
             # positions (remove_dvs — those rows' deletions were
             # served by the earlier delete commit's feed)
@@ -1302,15 +1271,17 @@ class TxnTable:
                                              allowMissingColumns=True))
             if pre is None and post is None:
                 continue   # DV pointer churn with zero position delta
-            diff = self._commit_diff(pre, post, v, e.get("ts_ms"))
-            commit_cols.append(
-                {f_.name: f_.dataType for f_ in diff.schema.fields})
-            per_commit.append(diff)
+            # a merge that recorded its keys: only rows of those keys
+            # can differ between its images, so both are read for
+            # those keys only
+            scope = (_in_sql(self.key, e["keys"])
+                     if e.get("keys") is not None else None)
+            commits.append((v, e.get("ts_ms"), scope, pre, post))
         self.last_changes_probe = {
             "live_files": len(self._snapshot().live),
             "files_read": sorted(files_read),
             "commits": v_hi - v_lo}
-        if not per_commit and not scoped:
+        if not commits:
             snap = self._snapshot()
             if not snap.live:
                 # mirror read(): a table with no live data files has
@@ -1322,50 +1293,42 @@ class TxnTable:
                     .withColumn("_commit_version", F.lit(None).cast("long"))
                     .withColumn("_commit_timestamp",
                                 F.lit(None).cast("timestamp")))
-        # the columns (and their order) of a by-name union of every
-        # commit's diff in version order: a column first seen in a
-        # later commit goes after the earlier ones
-        final: dict = {}
-        for cols in commit_cols:
-            for c, t in cols.items():
-                final.setdefault(c, t)
-        parts = list(per_commit)
-        if scoped:
-            parts.insert(0, self._scoped_diff(scoped, {
-                c: t for c, t in final.items() if c in scoped_cols}))
-        names = list(final)
-        aligned = []
-        for df in parts:
-            if df.columns != names:
-                have = set(df.columns)
-                df = df.select(*[
-                    F.col(_quote(c)) if c in have
-                    else F.lit(None).cast(final[c]).alias(c)
-                    for c in names])
-            aligned.append(df)
-        return functools.reduce(DataFrame.union, aligned)
+        return self._diff(commits)
 
-    def _scoped_diff(self, commits: list[tuple], cols: dict) -> DataFrame:
-        """The change rows of DV-free merge commits that recorded their
-        ``keys``, as ONE plan: each commit's pre-image (its removes)
-        and post-image (its adds) are read for its keys only, aligned
-        to ``cols`` (name -> type) and tagged with the version; the
-        images of all commits are full-outer-joined once on (key,
-        version). The rows and schema equal the by-name union of
-        ``_commit_diff`` over the same commits. ``commits`` holds
-        ``(version, ts_ms, IN predicate, pre, post)``; expressions
-        are SQL text, so building the plan costs a few py4j calls
-        per commit instead of several per column."""
+    def _diff(self, commits: list[tuple]) -> DataFrame:
+        """The change rows of ``commits`` — ``(version, ts_ms, scope,
+        pre, post)`` with ``pre``/``post`` the commit's pre- and
+        post-image (None when it has none) and ``scope`` an optional
+        SQL predicate the images are restricted to — as ONE plan.
+        Each image is aligned to the key plus every column any image
+        has (first seen first; typed nulls where one lacks it) and
+        tagged with its version; the pre- and post-images of all
+        commits are full-outer-joined once on (key, version). Rows
+        only in a post-image are inserts, only in a pre-image are
+        deletes, on both sides with ANY column differing are update
+        pre/post pairs, and identical rows (survivors copied into a
+        rewrite) cancel; null keys are never emitted. Expressions are
+        SQL text, so building the plan costs a few py4j calls per
+        commit instead of several per column."""
+        cols: dict = {}
+        for _, _, _, pre, post in commits:
+            for df in (post, pre):
+                if df is not None:
+                    for f_ in df.schema.fields:
+                        cols.setdefault(f_.name, f_.dataType)
+        cols = {self.key: cols.pop(self.key), **cols}
         key = _quote(self.key)
 
-        def image(df, v, ts_ms, in_sql):
+        def image(df, v, ts_ms, scope):
             have = set(df.columns)
             sel = [(_quote(c) if c in have
                     else f"CAST(NULL AS {t.simpleString()})")
                    + f" AS {_quote(c)}" for c, t in cols.items()]
             ts = (f"timestamp_millis({int(ts_ms)})" if ts_ms is not None
                   else "CAST(NULL AS TIMESTAMP)")
-            return df.where(in_sql).selectExpr(
+            where = f"{key} IS NOT NULL" + (f" AND {scope}" if scope
+                                             else "")
+            return df.where(where).selectExpr(
                 *sel, f"CAST({int(v)} AS BIGINT) AS _cdf_version",
                 f"{ts} AS _cdf_ts")
 
@@ -1386,8 +1349,13 @@ class TxnTable:
                 *data, f"'{ctype}' AS _change_type",
                 "_cdf_version AS _commit_version",
                 "_cdf_ts AS _commit_timestamp")
-        # struct comparison treats null fields as equal; maps compare
-        # as the JSON of their key-sorted entries (see _commit_diff)
+
+        # struct comparison treats null fields as equal (Spark's
+        # interpreted ordering for complex types); map columns are not
+        # orderable, so they compare as the JSON of their entry list
+        # SORTED BY KEY — raw to_json(map) is insertion-order-
+        # sensitive, and equal maps written in different key orders
+        # would register as spurious update pairs
         def cmp(side):
             return "struct(" + ", ".join(
                 f"to_json(array_sort(map_entries({side}.{_quote(c)})))"
@@ -1395,7 +1363,7 @@ class TxnTable:
                 for c, t in cols.items() if c != self.key) + ")"
 
         changed = f"p.{key} IS NULL OR q.{key} IS NULL"
-        if len(cols) > (1 if self.key in cols else 0):
+        if len(cols) > 1:
             changed += f" OR NOT ({cmp('p')} <=> {cmp('q')})"
         all_ts = all(ts is not None for _, ts, *_ in commits)
         j = (pre.alias("p").join(
@@ -1412,7 +1380,7 @@ class TxnTable:
                  *[f"q.{c} AS _q{i}" for i, c in enumerate(data)],
                  # the trailing literals are never reached (every
                  # joined row has a side); they keep the columns
-                 # non-nullable like _commit_diff's literals
+                 # non-nullable when every image's value is
                  "coalesce(p._cdf_version, q._cdf_version, "
                  "CAST(-1 AS BIGINT)) AS _commit_version",
                  "coalesce(p._cdf_ts, q._cdf_ts"
@@ -1423,85 +1391,6 @@ class TxnTable:
               f"THEN _q{i} ELSE _p{i} END AS {c}"
               for i, c in enumerate(data)],
             "_change_type", "_commit_version", "_commit_timestamp")
-
-    def _commit_diff(self, pre: DataFrame | None, post: DataFrame | None,
-                     version: int, ts_ms: int | None = None) -> DataFrame:
-        """Key-level diff of one commit's rewritten files: rows only in
-        ``post`` are inserts, only in ``pre`` are deletes, on both
-        sides with ANY column differing are update pre/post pairs, and
-        identical rows (survivors copied into the rewrite) cancel.
-        Shuffles on the key over O(touched files) rows only."""
-        key = self.key
-        if pre is None and post is None:
-            raise AssertionError("commit with neither adds nor removes")
-        # align schemas (a full overwrite may replace the table's
-        # columns — surface the missing ones as typed nulls on the
-        # narrow side)
-        cols: dict[str, object] = {}
-        for df in (post, pre):
-            if df is not None:
-                for f_ in df.schema.fields:
-                    cols.setdefault(f_.name, f_.dataType)
-
-        def _aligned(df):
-            if df is None:
-                return None
-            sel = [(F.col(c) if c in df.columns
-                    else F.lit(None).cast(t)).alias(c)
-                   for c, t in cols.items()]
-            return df.select(*sel)
-
-        pre, post = _aligned(pre), _aligned(post)
-        data_cols = [c for c in cols if c != key]
-        # Delta CDF's _commit_timestamp (informational wall time from
-        # the entry; null for pre-round-8 commits)
-        ts_col = (F.timestamp_millis(F.lit(ts_ms)) if ts_ms is not None
-                  else F.lit(None).cast("timestamp"))
-        tag = (lambda df, t: df.select(
-            *[F.col(c) for c in cols],
-            F.lit(t).alias("_change_type"),
-            F.lit(version).cast("long").alias("_commit_version"),
-            ts_col.alias("_commit_timestamp")))
-        if pre is None:
-            return tag(post, "insert")
-        if post is None:
-            return tag(pre, "delete")
-
-        # struct comparison treats null fields as equal (verified:
-        # Spark's interpreted ordering for complex types); map columns
-        # are not orderable, so compare the JSON of their entry list
-        # SORTED BY KEY — raw to_json(map) is insertion-order-
-        # sensitive, so equal maps written in different key orders
-        # would register as spurious update pairs (ADVICE r8).
-        def _cmp(side):
-            items = []
-            for c in data_cols:
-                col = F.col(f"{side}.{c}")
-                if str(cols[c]).startswith("Map"):
-                    col = F.to_json(F.array_sort(F.map_entries(col)))
-                items.append(col.alias(c))
-            return F.struct(*items) if items else F.lit(0)
-
-        p, q = pre.alias("p"), post.alias("q")
-        pk, qk = F.col(f"p.{key}"), F.col(f"q.{key}")
-        j = p.join(q, pk == qk, "full_outer")
-
-        def _side(cond, side, ctype):
-            return j.where(cond).select(
-                F.col(f"{side}.{key}").alias(key),
-                *[F.col(f"{side}.{c}").alias(c) for c in data_cols],
-                F.lit(ctype).alias("_change_type"),
-                F.lit(version).cast("long").alias("_commit_version"),
-                ts_col.alias("_commit_timestamp"))
-
-        inserts = _side(pk.isNull() & qk.isNotNull(), "q", "insert")
-        deletes = _side(qk.isNull() & pk.isNotNull(), "p", "delete")
-        both = pk.isNotNull() & qk.isNotNull() \
-            & ~_cmp("p").eqNullSafe(_cmp("q"))
-        upd_pre = _side(both, "p", "update_preimage")
-        upd_post = _side(both, "q", "update_postimage")
-        return (inserts.unionByName(deletes)
-                .unionByName(upd_pre).unionByName(upd_post))
 
     # ------------------------------------------------------ operations
     @staticmethod
@@ -1550,12 +1439,11 @@ class TxnTable:
                           affected) -> list[str]:
         """Driver-side file skipping: keep only live files whose
         [min_key, max_key] can contain an affected key. ``affected``
-        is either the sorted list of affected keys the caller already
-        collected, or a one-column DataFrame of them: small batches
-        (<= _PRUNE_KEY_LIMIT keys) are then collected and tested like
-        a list (exact containment, strongest pruning); larger ones
-        fall back to range overlap. Files without stats are always
-        candidates (never incorrectly skipped)."""
+        is either the sorted list of affected keys the caller
+        collected (exact containment, strongest pruning) or, above
+        _PRUNE_KEY_LIMIT, a pinned one-column DataFrame of them, whose
+        [min, max] is tested for range overlap. Files without stats
+        are always candidates (never incorrectly skipped)."""
         if isinstance(affected, list):
             if not affected:
                 return []
@@ -1563,15 +1451,12 @@ class TxnTable:
             bmin, bmax = keys[0], keys[-1]
         else:
             agg = affected.agg(
-                F.min(self.key).alias("mn"), F.max(self.key).alias("mx"),
-                F.count(F.lit(1)).alias("n")).collect()[0]
-            if agg["n"] == 0:
+                F.min(self.key).alias("mn"),
+                F.max(self.key).alias("mx")).collect()[0]
+            if agg["mn"] is None:
                 return []
             bmin, bmax = agg["mn"], agg["mx"]
             keys = None
-            if agg["n"] <= _PRUNE_KEY_LIMIT:
-                keys = sorted(r[0] for r in affected.collect()
-                              if r[0] is not None)
         if keys and not _jsonable(keys[0]):
             keys = None
         out = []
@@ -1645,7 +1530,7 @@ class TxnTable:
            hold an affected key are NEVER OPENED);
         2. probe which candidates actually contain an affected key
            (an IN filter on the collected keys — or, above
-           _PRUNE_KEY_LIMIT, a semi-join — over a scan tagged with
+           _IN_KEY_LIMIT, a semi-join — over a scan tagged with
            input_file_name());
         3. rewrite ONLY those files' rows: survivors (rows whose key
            is neither changed nor deleted) + the changed rows
@@ -1674,30 +1559,9 @@ class TxnTable:
         affected = (changed.select(key)
                     .unionByName(deleted_keys).distinct())
         # ONE collect of the affected keys serves the file pruning, the
-        # probe and survivor filters (an IN predicate instead of a
-        # join) and the entry's ``keys``; a batch above the limit (or
-        # of a key type SQL literals cannot carry) is pinned and
-        # joined against instead
-        got, keys, in_sql = self._collect_keys(affected)
-        if in_sql is None:
-            affected = affected.localCheckpoint()
-            candidates = self._prune_candidates(snap.live, affected)
-
-            def hit(df):
-                return df.join(affected, key, "left_semi")
-
-            def miss(df):
-                return df.join(affected, key, "left_anti")
-        else:
-            candidates = self._prune_candidates(snap.live, keys)
-            cond = F.expr(in_sql)
-
-            def hit(df):
-                return df.where(cond)
-
-            def miss(df):
-                # the anti-join keeps null keys; NOT IN alone would not
-                return df.where(~cond | F.col(key).isNull())
+        # probe and survivor filters and the entry's ``keys``
+        got, keys, candidates, hit, miss = self._key_scope(
+            affected, snap.live)
         dv_cands = any(p in snap.dvs for p in candidates)
         if candidates and dv_cands:
             # DV-masked candidates: probe over the LIVE rows only (a
@@ -1772,22 +1636,41 @@ class TxnTable:
         v = snap.version + 1
         adds = self._write_data(new_rows, v, rows_hint)
         self._commit(v, adds, touched, "merge", app_txn_id,
-                     extra=None if in_sql is None else {"keys": keys},
+                     extra=None if keys is None else {"keys": keys},
                      prior_live=snap.live, prior_dvs=snap.dvs)
         return v
 
-    def _collect_keys(self, keys_df: DataFrame):
-        """One bounded collect of the distinct one-column ``keys_df``:
-        ``(collected, sorted non-null keys, IN predicate SQL)``, with
-        the last two None when there are more than _PRUNE_KEY_LIMIT
-        keys or SQL literals cannot carry their type, and the first
-        None above the limit."""
+    def _key_scope(self, keys_df: DataFrame, live: dict[str, dict | None]):
+        """ONE bounded collect of the distinct one-column ``keys_df``
+        serves the file pruning and the row filters. Returns ``(got,
+        keys, candidates, hit, miss)``: the collected keys (None above
+        _PRUNE_KEY_LIMIT); the sorted non-null keys when the filters
+        are a SQL ``IN`` predicate on them (at most _IN_KEY_LIMIT
+        string or integer keys), else None; the live files that can
+        hold a key; and ``hit``/``miss``, which keep a frame's rows
+        whose key is / is not among them. Without the IN predicate
+        ``keys_df`` is pinned and the filters are semi/anti joins."""
+        key = self.key
         got = [r[0] for r in keys_df.limit(_PRUNE_KEY_LIMIT + 1).collect()]
         if len(got) > _PRUNE_KEY_LIMIT:
-            return None, None, None
-        keys = sorted(k for k in got if k is not None)
-        in_sql = _in_sql(self.key, keys)
-        return got, (keys if in_sql is not None else None), in_sql
+            got = None
+        keys = (sorted(k for k in got if k is not None)
+                if got is not None else None)
+        in_sql = (_in_sql(key, keys)
+                  if keys is not None and len(keys) <= _IN_KEY_LIMIT
+                  else None)
+        if in_sql is None:
+            keys_df = keys_df.localCheckpoint()
+            candidates = self._prune_candidates(
+                live, keys_df if keys is None else keys)
+            return (got, None, candidates,
+                    lambda df: df.join(keys_df, key, "left_semi"),
+                    lambda df: df.join(keys_df, key, "left_anti"))
+        cond = F.expr(in_sql)
+        return (got, keys, self._prune_candidates(live, keys),
+                lambda df: df.where(cond),
+                # the anti-join keeps null keys; NOT IN alone would not
+                lambda df: df.where(~cond | F.col(key).isNull()))
 
     def delete(self, keys: DataFrame | None = None,
                where=None, app_txn_id: str | None = None,
@@ -1842,8 +1725,8 @@ class TxnTable:
             raise TableStateError(
                 f"TxnTable at {self.path} has no committed data")
         if keys is not None:
-            keys = keys.select(key).distinct().localCheckpoint()
-            candidates = self._prune_candidates(snap.live, keys)
+            _, _, candidates, hit, _ = self._key_scope(
+                keys.select(key).distinct(), snap.live)
         else:
             candidates = self._prune_where_candidates(snap, where)
         self.last_delete_probe = {
@@ -1853,7 +1736,7 @@ class TxnTable:
             return snap.version
         live_rows = self._live_rows_tagged(candidates, snap.dvs)
         if keys is not None:
-            matched = live_rows.join(keys, key, "left_semi")
+            matched = hit(live_rows)
         else:
             cond = where if isinstance(where, Column) else F.expr(where)
             matched = live_rows.where(cond)

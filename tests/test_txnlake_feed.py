@@ -1,8 +1,9 @@
 """The key-scoped change feed: a merge entry records its affected
-``keys``, and ``changes()`` diffs such commits in one plan restricted
-to those keys. It must serve exactly the rows and schema of the
-per-commit ``_commit_diff`` it replaces, and building it must launch
-no Spark job."""
+``keys``, and ``changes()`` restricts that commit's images to them
+before diffing every commit of the range in one plan. The feed must
+equal the unscoped diff of a copy whose entries carry no ``keys`` in
+rows and schema, applying it to ``read(as_of=lo)`` must give
+``read(as_of=hi)``, and building it must launch no Spark job."""
 
 from __future__ import annotations
 
@@ -14,6 +15,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from adsmasterpipeline_spark.sinks import txnlake
 from adsmasterpipeline_spark.sinks.txnlake import txn_table
 
 SCHEMA = ("bibcode string, v long, note string, "
@@ -43,6 +45,35 @@ def _strip_keys(src: str, dst: str) -> None:
             e.pop("keys", None)
             with open(p, "w") as f:
                 json.dump(e, f)
+
+
+def _apply_feed(t, lo: int, hi: int) -> list[str]:
+    """``read(as_of=lo)`` with ``changes(lo, hi)`` applied in version
+    order, as sorted JSON rows over ``read(as_of=hi)``'s columns."""
+    cols = t.read(as_of=hi).columns
+    state = ({} if lo < 0 else
+             {r[t.key]: r.asDict() for r in t.read(as_of=lo).collect()})
+    first = {"delete": 0, "update_preimage": 0,
+             "insert": 1, "update_postimage": 1}
+    feed = sorted(t.changes(lo, hi).collect(),
+                  key=lambda r: (r["_commit_version"],
+                                 first[r["_change_type"]]))
+    for r in feed:
+        k = r[t.key]
+        if first[r["_change_type"]] == 0:
+            assert k in state, (lo, hi, r)
+            del state[k]
+        else:
+            assert k not in state, (lo, hi, r)
+            state[k] = r.asDict()
+    return sorted(json.dumps({c: row.get(c) for c in cols},
+                             sort_keys=True, default=str)
+                  for row in state.values())
+
+
+def _table_rows(t, v: int) -> list[str]:
+    return sorted(json.dumps(r.asDict(), sort_keys=True, default=str)
+                  for r in t.read(as_of=v).collect())
 
 
 def _walk(spark, path: str, seed: int) -> list[int]:
@@ -103,7 +134,7 @@ def _walk(spark, path: str, seed: int) -> list[int]:
 
 
 @pytest.mark.parametrize("seed", [5])
-def test_keyed_feed_equals_per_commit_diff(spark, tmp_path, seed):
+def test_keyed_feed_equals_unscoped_feed(spark, tmp_path, seed):
     path = str(tmp_path / "t")
     merged = _walk(spark, path, seed)
     t = txn_table(spark, path)
@@ -125,6 +156,7 @@ def test_keyed_feed_equals_per_commit_diff(spark, tmp_path, seed):
         g, w = _rows(got), _rows(want)
         assert g == w, (lo, hi)
         assert t.last_changes_probe == old.last_changes_probe
+        assert _apply_feed(t, lo, hi) == _table_rows(t, hi), (lo, hi)
     # the walk really changed rows of every kind
     kinds = {r[0] for r in t.changes(-1).select("_change_type")
              .distinct().collect()}
@@ -152,3 +184,36 @@ def test_keyed_feed_builds_without_jobs(spark, tmp_path):
         [(f"K{i}", c, i + 1) for i in range(3)
          for c in ("update_preimage", "update_postimage")]
         + [(f"N{i}", "insert", i + 1) for i in range(3)])
+
+
+def test_merge_above_in_limit_records_no_keys(spark, tmp_path,
+                                              monkeypatch):
+    """Above _IN_KEY_LIMIT a merge filters with joins on the pinned
+    keys and records no ``keys``; its feed is the unscoped diff."""
+    monkeypatch.setattr(txnlake, "_IN_KEY_LIMIT", 2)
+    path = str(tmp_path / "t")
+    t = txn_table(spark, path)
+    t.overwrite(spark.createDataFrame(
+        [(f"K{i}", i) for i in range(10)], "bibcode string, v long"))
+    small = t.merge(spark.createDataFrame(
+        [("K1", 101), ("N1", 1)], "bibcode string, v long"))
+    big = t.merge(
+        spark.createDataFrame([("K2", 102), ("K3", 103), ("N2", 2)],
+                              "bibcode string, v long"),
+        deleted_keys=spark.createDataFrame([("K4",)], "bibcode string"))
+    entries = {}
+    for v in (small, big):
+        with open(os.path.join(path, "_txn", f"{v:08d}.json")) as f:
+            entries[v] = json.load(f)
+    assert entries[small]["keys"] == ["K1", "N1"]
+    assert "keys" not in entries[big]
+    got = sorted((r["bibcode"], r["_change_type"], r["v"])
+                 for r in t.changes(small).collect())
+    assert got == sorted(
+        [("K2", "update_preimage", 2), ("K2", "update_postimage", 102),
+         ("K3", "update_preimage", 3), ("K3", "update_postimage", 103),
+         ("N2", "insert", 2), ("K4", "delete", 4)])
+    assert sorted(r["bibcode"] for r in t.read_for_keys(
+        spark.createDataFrame([("K2",), ("K4",), ("N2",)],
+                              "bibcode string")).collect()) == ["K2", "N2"]
+    assert _apply_feed(t, 0, big) == _table_rows(t, big)
