@@ -95,9 +95,9 @@ Scale notes: the log fold and file lists live on the driver — bounded
 by FILE COUNT (what Delta itself keeps driver-side after parsing the
 log), never by row count. All row work (membership probe, rewrite,
 survivor union) is DataFrame joins or filters; the affected-key
-collect is capped at ``_PRUNE_KEY_LIMIT`` keys, and above it the keys
-stay a pinned DataFrame (semi/anti joins) and pruning falls back to
-min/max range overlap.
+collect is capped at ``_PRUNE_KEY_LIMIT`` keys, and above it pruning
+falls back to min/max range overlap; above ``_IN_KEY_LIMIT`` keys the
+row filters are semi/anti joins on a pinned key DataFrame.
 """
 
 from __future__ import annotations
