@@ -123,15 +123,16 @@ def cmd_reindex(args) -> int:
     probes.update(step["probes"])
     # `records` may be the watermark-PRUNED subset — the writeback is
     # a keyed MERGE of the touched rows, never a full-table rewrite
-    # (which would truncate the table to the subset)
-    subset = step["touched"]
-    if subset.count():
+    # (which would truncate the table to the subset). A row is touched
+    # exactly when its key went to a sink, so the sink counts say
+    # whether there is anything to write back.
+    if any(step["counts"].values()):
         # drop the cached scan of the table's files first: a live
         # cache entry over the same parquet paths would hijack the
         # merge's input_file_name() probe (served from memory, no
         # file context) and degrade its touched-file detection
         records.unpersist()
-        t.merge(subset)
+        t.merge(step["touched"])
         probes["writeback_merge"] = merge_probe(t)
     if not (args.bibcodes or args.failed):
         # a scoped run never saw the full table — advancing the
@@ -150,22 +151,33 @@ def cmd_sitemap(args) -> int:
     update_sitemaps_auto cron shape (run.py:558-628): select
     recently-touched records, flag/extend the table, regenerate dirty
     files. With ``--incremental`` the selection comes from the
-    records TxnTable's CHANGE-DATA-FEED keyed off a KV version
-    watermark — O(changed files) instead of the rescan's O(table),
-    with the feed probe in the output JSON and the watermark
-    advancing only after the sitemap table write succeeded (same
-    rollback contract as ``outbox --incremental``); the selected
-    records are then fetched via the stat-pruned ``read_for_keys``,
-    so the table scan is O(files containing selected keys) too.
-    Rescan mode (``--since``) remains as the equality oracle."""
+    records TxnTable's change feed, projected onto the columns the
+    selection reads and keyed off a KV version watermark — O(changed
+    files) instead of the rescan's O(table), with the feed probe in
+    the output JSON and the watermark advancing only after the
+    sitemap table write succeeded (same rollback contract as
+    ``outbox --incremental``); the selected records are then fetched
+    via the stat-pruned ``read_for_keys``, so the table scan is
+    O(files containing selected keys) too. Rescan mode (``--since``)
+    remains as the equality oracle.
+
+    The table is read with ``SITEMAP_SCHEMA`` (no inference job). The
+    new table is pinned and one per-file ``sitemap.catalogue`` of it
+    gives the files to render, both indexes, the files whose
+    ``filename_lastmoddate`` is stamped and the ``rows`` total."""
     from pyspark.sql import functions as F
     from . import sitemap as sm
+    from .schemas import SITEMAP_SCHEMA
     spark = _spark()
     table_path = os.path.join(args.data, "sitemap")
     extra: dict = {}
     kv_advance = None
+
+    def read_table():
+        return spark.read.schema(SITEMAP_SCHEMA).parquet(table_path)
+
     if args.action == "auto":
-        existing = spark.read.parquet(table_path)
+        existing = read_table()
         if args.incremental:
             from .storage import KeyValueStore
             t = _records_txn(spark, args.data)
@@ -179,7 +191,7 @@ def cmd_sitemap(args) -> int:
                     "feed": {"v_lo": v_lo, "v_hi": v_hi,
                              "files_read": 0, "live_files": None}}))
                 return 0
-            feed = t.changes(v_lo, v_hi)
+            feed = t.changes(v_lo, v_hi, columns=sm.AUTO_FEED_COLUMNS)
             sel = sm.auto_update_selection_from_feed(feed, existing) \
                 .localCheckpoint()
             p = t.last_changes_probe or {}
@@ -215,7 +227,7 @@ def cmd_sitemap(args) -> int:
         # ``--incremental`` the invalidation set comes from the change
         # feed instead, keyed off its own KV version watermark — the
         # last rescanning consumer now reads O(changed files) per tick.
-        existing = spark.read.parquet(table_path)
+        existing = read_table()
         if args.incremental:
             from .storage import KeyValueStore
             t = _records_txn(spark, args.data)
@@ -231,7 +243,7 @@ def cmd_sitemap(args) -> int:
                     "feed": {"v_lo": v_lo, "v_hi": v_hi,
                              "files_read": 0, "live_files": None}}))
                 return 0
-            feed = t.changes(v_lo, v_hi)
+            feed = t.changes(v_lo, v_hi, columns=sm.CLEANUP_FEED_COLUMNS)
             sel = sm.cleanup_selection_from_feed(feed, existing) \
                 .localCheckpoint()
             p = t.last_changes_probe or {}
@@ -257,34 +269,25 @@ def cmd_sitemap(args) -> int:
         table = sm.bootstrap(_records_txn(spark, args.data).read())
     else:
         records = _records_txn(spark, args.data).read()
-        existing = spark.read.parquet(table_path)
+        existing = read_table()
         table = sm.add_records(existing, records, force=args.force)
     table = table.localCheckpoint()
+    cat = sm.catalogue(table)
     out = args.out or os.path.join(args.data, "sitemap_files")
     only_dirty = args.action != "bootstrap"
-    total = sm.write_sites(table, out, only_dirty=only_dirty)
+    total = sm.write_sites(table, out, cat, only_dirty=only_dirty)
     # Stamp filename_lastmoddate on every row of a regenerated file
     # (the reference sets it at generation time, adsmp/tasks.py:1040-1048)
     # so add_records' dirty predicate `bib_data_updated > lastmod` stays
     # meaningful — without the stamp every later `--action update` would
     # re-flag and re-render everything.
+    stamp = F.current_timestamp()
     if only_dirty:
-        rendered_files = (table.where("update_flag")
-                          .select("sitemap_filename").distinct())
-        cleared = (
-            table.join(
-                F.broadcast(rendered_files.withColumn("_rendered", F.lit(True))),
-                "sitemap_filename", "left")
-            .withColumn("filename_lastmoddate",
-                        F.when(F.col("_rendered"), F.current_timestamp())
-                        .otherwise(F.col("filename_lastmoddate")))
-            .drop("_rendered")
-        )
-    else:
-        cleared = table.withColumn("filename_lastmoddate",
-                                   F.current_timestamp())
-    cleared = cleared.withColumn("update_flag", F.lit(False)) \
-        .select(*table.columns)
+        stamp = (F.when(F.col("sitemap_filename").isin(sm.dirty_files(cat)),
+                        stamp)
+                 .otherwise(F.col("filename_lastmoddate")))
+    cleared = (table.withColumn("filename_lastmoddate", stamp)
+               .withColumn("update_flag", F.lit(False)))
     if args.action == "cleanup":
         # removal can EMPTY whole sitemap files: their XML must go too
         # (the reference deletes the emptied file rows + regenerates,
@@ -303,7 +306,8 @@ def cmd_sitemap(args) -> int:
     if kv_advance is not None:
         kv, vk, v_hi = kv_advance      # only after the table write
         kv.put(vk, str(v_hi))
-    print(json.dumps({"rows": table.count(), "files": total, **extra}))
+    print(json.dumps({"rows": sum(r["rows"] for r in cat), "files": total,
+                      **extra}))
     return 0
 
 
@@ -434,7 +438,8 @@ def cmd_delete(args) -> int:
     emptied: list[str] = []
     table_path = os.path.join(args.data, "sitemap")
     if os.path.exists(table_path):
-        table = spark.read.parquet(table_path)
+        from .schemas import SITEMAP_SCHEMA
+        table = spark.read.schema(SITEMAP_SCHEMA).parquet(table_path)
         remaining, emptied = sm.remove_records(table, bibs)
         remaining.localCheckpoint().write.mode("overwrite") \
             .parquet(table_path + ".staging")

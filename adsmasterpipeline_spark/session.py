@@ -5,6 +5,15 @@ chosen so the same logical plans scale to a multi-executor cluster:
 AQE for runtime re-planning (skew joins, partition coalescing),
 UTC session timezone (oracle comparability), Arrow for the few
 Pandas-UDF paths, INT64 microsecond parquet timestamps (footer stats).
+
+``spark.python.sql.dataFrameDebugging.enabled`` is off. With it on
+(PySpark's default) every Column and function call records its Python
+call site in the JVM: an active-session lookup, a conf read, a JVM
+class lookup, a set/clear pair and a stack walk, a dozen or so py4j
+round trips per call. Building one dispatch plan makes thousands of
+such calls. PySpark caches the setting process-wide at the first
+wrapped call, so it is set here, in the builder. Errors keep their SQL
+query context; they lose only its Python call-site fragment.
 """
 
 from __future__ import annotations
@@ -30,6 +39,7 @@ def get_spark(app_name: str = "adsmasterpipeline_spark",
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # INT64 timestamps carry min/max in the parquet footer (INT96
         # ones carry none), which TxnTable reads as per-file stats
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")

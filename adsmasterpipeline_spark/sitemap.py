@@ -17,8 +17,9 @@ rows — the production corpus is 28.8M).
 from __future__ import annotations
 
 import datetime as dt
+import re
 
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import Column, DataFrame, Row, Window as W
 from pyspark.sql import functions as F
 
 from .functions.derivations import xml_escape
@@ -38,38 +39,71 @@ SITES = {
 }
 
 
+# the records columns each change-feed selection reads: the feed is
+# projected onto them (``TxnTable.changes(columns=...)``)
+AUTO_FEED_COLUMNS = ("bib_data_updated", "solr_processed")
+CLEANUP_FEED_COLUMNS = ("bib_data", "status")
+
+_FILE_INDEX = re.compile(r"_bib_([0-9]+)\.xml")
+
+
+def _included() -> Column:
+    """The inclusion predicate; never null."""
+    return (F.col("bib_data").isNotNull()
+            & (F.col("status").isNull()
+               | ~F.col("status").isin("solr-failed", "retrying")))
+
+
 def should_include(records: DataFrame) -> DataFrame:
     """P6 — should_include_in_sitemap (adsmp/app.py:922-973) as one
     boolean column expression: has bib_data ∧ status ∉ {solr-failed,
     retrying}. Staleness (bib_data_updated − solr_processed > 5 days)
     is logged-but-included in the reference → no filter effect."""
-    return records.where(
-        F.col("bib_data").isNotNull()
-        & (F.col("status").isNull()
-           | ~F.col("status").isin("solr-failed", "retrying")))
+    return records.where(_included())
 
 
-def current_state(sitemap: DataFrame) -> dict:
-    """get_current_sitemap_state (adsmp/app.py:1019-1072): find the
-    highest-index file; if full, roll to the next. Aggregation-only —
-    no full sort."""
-    counts = (
-        sitemap.where(F.col("sitemap_filename").isNotNull())
-        .groupBy("sitemap_filename").count()
-        .withColumn("idx", F.regexp_extract(
-            "sitemap_filename", r"_bib_(\d+)\.xml", 1).cast("int"))
-        .orderBy(F.col("idx").desc())
-        .limit(1)
-        .collect()
-    )
-    if not counts:
+def catalogue(sitemap: DataFrame) -> list[Row]:
+    """One collected row per ``sitemap_filename`` (a null filename is
+    its own row): ``rows``, ``lastmod`` (the latest of each row's
+    ``filename_lastmoddate``, else ``bib_data_updated``) and ``dirty``
+    (the file has a flagged row). One aggregate job; the result is
+    bounded by the file count (577 at 28.8M records), and the file
+    state, the render set, the indexes and the row total are read
+    from it on the driver."""
+    return (sitemap.groupBy("sitemap_filename")
+            .agg(F.count(F.lit(1)).alias("rows"),
+                 F.max(F.coalesce("filename_lastmoddate",
+                                  "bib_data_updated")).alias("lastmod"),
+                 F.max("update_flag").alias("dirty"))
+            .collect())
+
+
+def _file_index(name: str | None) -> int | None:
+    m = _FILE_INDEX.search(name) if name else None
+    return int(m.group(1)) if m else None
+
+
+def dirty_files(cat: list[Row]) -> list[str]:
+    """The files of a catalogue that hold a flagged row."""
+    return sorted(r["sitemap_filename"] for r in cat
+                  if r["dirty"] and r["sitemap_filename"] is not None)
+
+
+def current_state(cat: list[Row]) -> dict:
+    """get_current_sitemap_state (adsmp/app.py:1019-1072) from a
+    catalogue: the highest-index ``sitemap_bib_N.xml`` file; if full,
+    roll to the next. A filename without such an index is never the
+    current file."""
+    numbered = [(i, r) for r in cat
+                if (i := _file_index(r["sitemap_filename"])) is not None]
+    if not numbered:
         return {"filename": "sitemap_bib_1.xml", "count": 0, "index": 1}
-    row = counts[0]
-    if row["count"] >= MAX_RECORDS_PER_SITEMAP:
-        return {"filename": f"sitemap_bib_{row['idx'] + 1}.xml",
-                "count": 0, "index": row["idx"] + 1}
-    return {"filename": row["sitemap_filename"], "count": row["count"],
-            "index": row["idx"]}
+    idx, row = max(numbered, key=lambda t: t[0])
+    if row["rows"] >= MAX_RECORDS_PER_SITEMAP:
+        return {"filename": f"sitemap_bib_{idx + 1}.xml",
+                "count": 0, "index": idx + 1}
+    return {"filename": row["sitemap_filename"], "count": row["rows"],
+            "index": idx}
 
 
 def assign_filenames(records: DataFrame, start_index: int = 1,
@@ -110,7 +144,7 @@ def add_records(sitemap: DataFrame, records: DataFrame,
     the numbering from the current state; existing rows are flagged
     dirty when their bib_data_updated advanced past the file's lastmod
     (or always, under force)."""
-    state = current_state(sitemap)
+    state = current_state(catalogue(sitemap))
     incoming = should_include(records)
 
     new = incoming.join(sitemap.select("bibcode"), "bibcode", "left_anti") \
@@ -143,26 +177,28 @@ def add_records(sitemap: DataFrame, records: DataFrame,
 
 
 def remove_records(sitemap: DataFrame, bibcodes: DataFrame) -> tuple[DataFrame, list[str]]:
-    """O9 'remove' (adsmp/app.py:1263-1313): anti-join the removal set;
-    report files emptied by the removal (A2 two-count pattern →
-    files_to_delete = affected − surviving)."""
-    affected = (sitemap.join(bibcodes, "bibcode", "left_semi")
-                .select("sitemap_filename").distinct())
-    survivors = sitemap.join(bibcodes, "bibcode", "left_anti")
-    after = survivors.select("sitemap_filename").distinct()
-    emptied = [r["sitemap_filename"]
-               for r in affected.exceptAll(after).collect()]
-    # surviving rows of affected-but-not-emptied files need regeneration;
-    # broadcast join on the (small, bounded-by-file-count) affected set —
-    # no driver-side filename list in the plan
-    flag_files = F.broadcast(
-        affected.withColumn("_affected", F.lit(True)))
+    """O9 'remove' (adsmp/app.py:1263-1313): drop the rows whose
+    bibcode is in ``bibcodes`` and report the files the removal
+    emptied (sorted). One collect of (rows, removed rows) per affected
+    file — bounded by the file count — gives both the affected files,
+    whose surviving rows are flagged for regeneration, and the
+    emptied ones (every row removed)."""
+    gone = (bibcodes.select("bibcode").distinct()
+            .withColumn("_gone", F.lit(True)))
+    marked = sitemap.join(gone, "bibcode", "left")
+    per_file = (marked.groupBy("sitemap_filename")
+                .agg(F.count(F.lit(1)).alias("rows"),
+                     F.count("_gone").alias("removed"))
+                .where(F.col("removed") > 0)
+                .collect())
+    affected = [r["sitemap_filename"] for r in per_file]
+    emptied = sorted(r["sitemap_filename"] for r in per_file
+                     if r["rows"] == r["removed"])
     survivors = (
-        survivors.join(flag_files, "sitemap_filename", "left")
+        marked.where(F.col("_gone").isNull())
         .withColumn("update_flag",
-                    F.when(F.col("_affected"), True)
+                    F.when(F.col("sitemap_filename").isin(affected), True)
                     .otherwise(F.col("update_flag")))
-        .drop("_affected")
         .select(*sitemap.columns)
     )
     return survivors, emptied
@@ -185,33 +221,20 @@ def auto_update_selection(records: DataFrame, sitemap: DataFrame,
 
 def auto_update_selection_from_feed(feed: DataFrame,
                                     sitemap: DataFrame) -> DataFrame:
-    """O10 fed from the TxnTable CHANGE-DATA-FEED (VERDICT r8 task 4):
-    the selection ``auto_update_selection`` derives by rescanning the
-    whole records table against a time cutoff, derived instead from
-    the row-level deltas of a version window — keys INSERTED in the
-    window, plus update pairs whose ``bib_data_updated`` or
-    ``solr_processed`` actually moved (pre vs post compared null-safe
-    per key and commit), minus keys already flagged dirty. The
-    version watermark replaces the wall-clock cutoff, so the
-    derivation reads O(changed files), never the table — the same
-    consumer shape as ``cli outbox --incremental`` (reference rescan:
-    run.py:558-628)."""
+    """O10 fed from the records TxnTable's change feed projected onto
+    ``AUTO_FEED_COLUMNS``: the selection ``auto_update_selection``
+    derives by rescanning the whole records table against a time
+    cutoff, derived instead from the row-level deltas of a version
+    window — keys inserted in the window, plus keys with an update
+    post-image (in the projected feed an update pair exists only
+    where ``bib_data_updated`` or ``solr_processed`` moved), minus
+    keys already flagged dirty. The version watermark replaces the
+    wall-clock cutoff, so the derivation reads O(changed files),
+    never the table (reference rescan: run.py:558-628)."""
     flagged = sitemap.where("update_flag").select("bibcode")
-    inserts = feed.where(
-        F.col("_change_type") == "insert").select("bibcode")
-    pre = feed.where(F.col("_change_type") == "update_preimage").select(
-        "bibcode", "_commit_version",
-        F.col("bib_data_updated").alias("_pre_b"),
-        F.col("solr_processed").alias("_pre_s"))
-    post = feed.where(F.col("_change_type") == "update_postimage").select(
-        "bibcode", "_commit_version",
-        F.col("bib_data_updated").alias("_post_b"),
-        F.col("solr_processed").alias("_post_s"))
-    moved = (pre.join(post, ["bibcode", "_commit_version"])
-             .where(~F.col("_pre_b").eqNullSafe(F.col("_post_b"))
-                    | ~F.col("_pre_s").eqNullSafe(F.col("_post_s")))
-             .select("bibcode"))
-    return (inserts.union(moved).distinct()
+    return (feed.where(F.col("_change_type").isin(
+                "insert", "update_postimage"))
+            .select("bibcode").distinct()
             .join(flagged, "bibcode", "left_anti"))
 
 
@@ -225,11 +248,11 @@ def cleanup(sitemap: DataFrame, records: DataFrame) -> tuple[DataFrame, list[str
 
 def cleanup_selection_from_feed(feed: DataFrame,
                                 sitemap: DataFrame) -> DataFrame:
-    """O9 fed from the TxnTable CHANGE-DATA-FEED (VERDICT r9 task 3):
-    the invalidation set ``cleanup`` derives by anti-joining the FULL
-    records table every run (reference rescan: adsmp/tasks.py:482-583),
-    derived instead from the row-level deltas of a version window —
-    the last consumer that still paid O(table) per tick. A sitemap row
+    """O9 fed from the records TxnTable's change feed projected onto
+    ``CLEANUP_FEED_COLUMNS``: the invalidation set ``cleanup`` derives
+    by anti-joining the FULL records table every run (reference
+    rescan: adsmp/tasks.py:482-583), derived instead from the
+    row-level deltas of a version window. A sitemap row
     is invalid iff its key's FINAL image in the window is a delete
     (the record vanished) or a post-image that fails the inclusion
     predicate (``should_include``). Keys untouched in the window were
@@ -244,13 +267,10 @@ def cleanup_selection_from_feed(feed: DataFrame,
     w = W.partitionBy("bibcode").orderBy(F.col("_commit_version").desc())
     latest = (finals.withColumn("_rn", F.row_number().over(w))
               .where(F.col("_rn") == 1).drop("_rn"))
-    gone = latest.where(
-        F.col("_change_type") == "delete").select("bibcode")
-    present = latest.where(F.col("_change_type") != "delete")
-    no_longer = present.join(
-        should_include(present).select("bibcode"),
-        "bibcode", "left_anti").select("bibcode")
-    invalid = gone.union(no_longer).distinct()
+    # one row per bibcode, and the predicate is never null
+    invalid = latest.where(
+        (F.col("_change_type") == "delete") | ~_included()) \
+        .select("bibcode")
     return (sitemap.join(invalid, "bibcode", "left_semi")
             .select("bibcode").distinct())
 
@@ -266,20 +286,17 @@ _INDEX_HEADER = ('<?xml version="1.0" encoding="UTF-8"?>\n'
 
 
 def render_sitemap_files(sitemap: DataFrame, site="ads",
-                         only_dirty: bool = True) -> DataFrame:
-    """S9 (adsmp/tasks.py:969-1055): regenerate the XML body of every
-    file containing a flagged row, for one site or a sequence of
+                         files=None) -> DataFrame:
+    """S9 (adsmp/tasks.py:969-1055): regenerate the XML body of each
+    of ``files`` (every file when None), for one site or a sequence of
     sites. Returns (sitemap_filename, site, xml), one row per file and
     site — the render is ONE `groupBy(filename)` shuffle shared by
     every site, files render in parallel. URL entries follow the
     reference template (templates/__init__.py:49-54) with XML-escaped
     bibcodes, ordered by record id."""
     sites = (site,) if isinstance(site, str) else tuple(site)
-    scope = sitemap
-    if only_dirty:
-        dirty = (sitemap.where("update_flag")
-                 .select("sitemap_filename").distinct())
-        scope = sitemap.join(F.broadcast(dirty), "sitemap_filename", "left_semi")
+    scope = (sitemap if files is None else
+             sitemap.where(F.col("sitemap_filename").isin(list(files))))
     lastmod = F.date_format(
         F.coalesce("bib_data_updated", F.current_timestamp()), "yyyy-MM-dd")
     grouped = (
@@ -313,21 +330,15 @@ def render_sitemap_files(sitemap: DataFrame, site="ads",
     )
 
 
-def render_sitemap_indexes(sitemap: DataFrame, sites=tuple(SITES),
+def render_sitemap_indexes(cat: list[Row], sites=tuple(SITES),
                            now: dt.date | None = None) -> dict[str, str]:
-    """S10 (adsmp/tasks.py:876-967): each site's index of existing
-    files with their last modification dates; driver-side render from
-    ONE aggregate shared by every site."""
-    rows = (
-        sitemap.where(F.col("sitemap_filename").isNotNull())
-        .groupBy("sitemap_filename")
-        .agg(F.max(F.coalesce("filename_lastmoddate",
-                              "bib_data_updated")).alias("lastmod"))
-        .withColumn("idx", F.regexp_extract(
-            "sitemap_filename", r"_bib_(\d+)\.xml", 1).cast("int"))
-        .orderBy("idx")
-        .collect()
-    )
+    """S10 (adsmp/tasks.py:876-967): each site's index of the
+    catalogue's files with their last modification dates (``now``
+    where a file has none), rendered on the driver. Files are listed
+    by their ``_bib_N.xml`` index; names without one come first."""
+    rows = sorted((r for r in cat if r["sitemap_filename"] is not None),
+                  key=lambda r: (-1 if (i := _file_index(
+                      r["sitemap_filename"])) is None else i))
     now = now or dt.date.today()
     out = {}
     for site in sites:
@@ -378,17 +389,20 @@ def write_sitemap_files(rendered: DataFrame, out_dir: str) -> int:
     return n_written.value
 
 
-def write_sites(sitemap: DataFrame, out_dir: str,
+def write_sites(sitemap: DataFrame, out_dir: str, cat: list[Row],
                 only_dirty: bool = True) -> int:
-    """Render and write every site's XML files (one render pass, one
-    ``write_sitemap_files``), index and robots.txt under
-    ``out_dir/<site>``; returns the number of XML files written."""
+    """Render and write every site's XML files under ``out_dir/<site>``
+    — the dirty files of ``cat`` (``catalogue(sitemap)``), or every
+    file when not ``only_dirty`` — in one render pass and one
+    ``write_sitemap_files``, then each site's index (from ``cat``) and
+    robots.txt; returns the number of XML files written."""
     import os
     from .sinks.writers import write_text_files
-    total = write_sitemap_files(
-        render_sitemap_files(sitemap, site=tuple(SITES),
-                             only_dirty=only_dirty), out_dir)
-    for site, index in render_sitemap_indexes(sitemap).items():
+    files = dirty_files(cat) if only_dirty else None
+    total = 0 if files == [] else write_sitemap_files(
+        render_sitemap_files(sitemap, site=tuple(SITES), files=files),
+        out_dir)
+    for site, index in render_sitemap_indexes(cat).items():
         write_text_files([("sitemap_index.xml", index),
                           ("robots.txt", render_robots_txt(site))],
                          os.path.join(out_dir, site))

@@ -360,7 +360,8 @@ def test_cli_sitemap_auto_incremental_from_change_feed(spark, tmp_path,
     want = {r["bibcode"] for r in sm.auto_update_selection(
         t.read(), existing, "2024-01-10").collect()}
     got = {r["bibcode"] for r in sm.auto_update_selection_from_feed(
-        t.changes(r1["feed"]["v_hi"], v_hi), existing).collect()}
+        t.changes(r1["feed"]["v_hi"], v_hi, columns=sm.AUTO_FEED_COLUMNS),
+        existing).collect()}
     assert got == want == {"K003", "K007"}
 
     # e2e: the incremental run selects exactly those two, reads only
@@ -437,7 +438,8 @@ def test_cli_sitemap_cleanup_incremental_from_change_feed(
             - {r["bibcode"] for r in
                survivors_rescan.select("bibcode").collect()})
     got = {r["bibcode"] for r in sm.cleanup_selection_from_feed(
-        t.changes(r1["feed"]["v_hi"], t.version()), existing).collect()}
+        t.changes(r1["feed"]["v_hi"], t.version(),
+                  columns=sm.CLEANUP_FEED_COLUMNS), existing).collect()}
     assert got == want == {"K003", "K005", "K007"}
 
     # e2e: the incremental run removes exactly those three, reads only
@@ -538,6 +540,222 @@ def _mk_events(tmp_path, name, bibs, day, full=True):
                                      f"{i % 60:02d}.000Z"})
     (d / "b.json").write_text("\n".join(json.dumps(r) for r in rows))
     return d
+
+
+class _SitemapModel:
+    """The sitemap commands' outputs computed in Python from the
+    records table: file assignment continuing from the highest-index
+    file, dirty files rendered whole from the reference templates,
+    each index listing every file with its latest lastmod, rendered
+    files stamped and every flag cleared after a command."""
+
+    def __init__(self, spark, data, out, per_file):
+        import os
+        from adsmasterpipeline_spark.sinks.txnlake import txn_table
+        self.spark, self.out, self.per_file = spark, out, per_file
+        self.table_path = os.path.join(data, "sitemap")
+        self.t = txn_table(spark, os.path.join(data, "records"))
+        self.rows: dict[str, dict] = {}
+        self.files: dict[str, str] = {}
+
+    def records(self, v=None):
+        from pyspark.sql import functions as F
+        df = self.t.read() if v is None else self.t.read(as_of=v)
+        return {r["bibcode"]: r.asDict() for r in df.select(
+            "bibcode", "id", "scix_id", "bib_data", "status",
+            "bib_data_updated", "solr_processed",
+            F.date_format("bib_data_updated", "yyyy-MM-dd").alias("day"))
+            .collect()}
+
+    @staticmethod
+    def included(r):
+        return (r["bib_data"] is not None
+                and r["status"] not in ("solr-failed", "retrying"))
+
+    @staticmethod
+    def index_of(fname):
+        return int(fname[len("sitemap_bib_"):-len(".xml")])
+
+    def add(self, recs):
+        """Append new records in id order after the current file."""
+        counts: dict[str, int] = {}
+        for r in self.rows.values():
+            counts[r["file"]] = counts.get(r["file"], 0) + 1
+        idx, n = 1, 0
+        if counts:
+            last = max(counts, key=self.index_of)
+            idx, n = self.index_of(last), counts[last]
+            if n >= self.per_file:
+                idx, n = idx + 1, 0
+        for rn, r in enumerate(sorted(recs, key=lambda r: r["id"])):
+            self.rows[r["bibcode"]] = {
+                "record_id": r["id"], "bibcode": r["bibcode"],
+                "scix_id": r["scix_id"], "upd": r["bib_data_updated"],
+                "day": r["day"], "lastmod": None, "flag": True,
+                "file": f"sitemap_bib_{(rn + n) // self.per_file + idx}.xml"}
+
+    def finish(self, emptied=()):
+        """Render, stamp and clear as a command does; return the
+        expected (files, table rows)."""
+        import html
+        from adsmasterpipeline_spark import sitemap as sm
+        dirty = {r["file"] for r in self.rows.values() if r["flag"]}
+        names = sorted({r["file"] for r in self.rows.values()},
+                       key=self.index_of)
+        for site, conf in sm.SITES.items():
+            pre, post = conf["abs_url_pattern"].split("{bibcode}")
+            for f in dirty:
+                entries = sorted(
+                    (r["record_id"], f"\n<url><loc>{pre}"
+                     f"{html.escape(r['bibcode'])}{post}</loc><lastmod>"
+                     f"{r['day']}</lastmod></url>")
+                    for r in self.rows.values() if r["file"] == f)
+                self.files[f"{site}/{f}"] = (
+                    sm._URLSET_HEADER + "".join(e for _, e in entries)
+                    + "\n</urlset>")
+            for f in emptied:
+                self.files.pop(f"{site}/{f}", None)
+            index = [sm._INDEX_HEADER]
+            for f in names:
+                last = max(r["lastmod"] or r["upd"]
+                           for r in self.rows.values() if r["file"] == f)
+                index.append(
+                    "\n            <sitemap>\n"
+                    f"            <loc>{conf['sitemap_url']}/{f}</loc>\n"
+                    f"            <lastmod>{last.date().isoformat()}"
+                    "</lastmod>\n            </sitemap>")
+            self.files[f"{site}/sitemap_index.xml"] = (
+                "".join(index) + "\n</sitemapindex>")
+            self.files[f"{site}/robots.txt"] = sm.render_robots_txt(site)
+        # the stamp is the command's own timestamp: read it back, one
+        # value on every row of every rendered file
+        got = {r["bibcode"]: r for r in
+               self.spark.read.parquet(self.table_path).collect()}
+        stamps = {got[b]["filename_lastmoddate"]
+                  for b, r in self.rows.items() if r["file"] in dirty}
+        assert len(stamps) <= 1 and None not in stamps
+        for r in self.rows.values():
+            if r["file"] in dirty:
+                r["lastmod"] = next(iter(stamps))
+            r["flag"] = False
+        want = sorted((r["record_id"], r["bibcode"], r["scix_id"], r["upd"],
+                       r["file"], r["lastmod"], False)
+                      for r in self.rows.values())
+        return len(dirty) * len(sm.SITES), want
+
+    def written(self):
+        import os
+        return {f"{site}/{name}": open(os.path.join(self.out, site, name),
+                                       encoding="utf-8").read()
+                for site in os.listdir(self.out)
+                for name in os.listdir(os.path.join(self.out, site))}
+
+    def table(self):
+        return sorted(tuple(r) for r in
+                      self.spark.read.parquet(self.table_path).select(
+                          "record_id", "bibcode", "scix_id",
+                          "bib_data_updated", "sitemap_filename",
+                          "filename_lastmoddate", "update_flag").collect())
+
+
+def test_cli_sitemap_commands_match_model(spark, tmp_path, capsys,
+                                          monkeypatch):
+    """bootstrap, ``auto --incremental`` and ``cleanup --incremental``
+    over four-record files, the cleanup emptying one whole file and
+    part of another: every XML file, both indexes, the table rows and
+    each command's JSON line equal the model's."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from adsmasterpipeline_spark import sitemap as sm
+    from adsmasterpipeline_spark.storage import KeyValueStore
+
+    monkeypatch.setattr(sm, "MAX_RECORDS_PER_SITEMAP", 4)
+    data, out = str(tmp_path / "data"), str(tmp_path / "files")
+
+    def run(*argv):
+        assert main([*argv, "--data", data]) == 0
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    def sitemap(action):
+        line = run("sitemap", "--action", action, "--out", out,
+                   *(["--incremental"] if action != "bootstrap" else []))
+        for k in ("files_read", "live_files"):
+            line.get("feed", {}).pop(k, None)
+        return line
+
+    run("ingest", "--events", str(_mk_events(
+        tmp_path, "ev0", [f"K{i:03d}" for i in range(12)], 1)),
+        "--rows-per-file", "4")
+    m = _SitemapModel(spark, data, out, 4)
+    m.add([r for r in m.records().values() if m.included(r)])
+    line = sitemap("bootstrap")
+    files, rows = m.finish()
+    assert line == {"rows": 12, "files": files}
+    assert files == 6 and m.written() == m.files and m.table() == rows
+
+    v0 = m.t.version()
+    kv = KeyValueStore(spark, os.path.join(data, "kv"))
+    for k in ("last.sitemap.auto.version", "last.sitemap.cleanup.version"):
+        kv.put(k, str(v0))
+    # one record moves, two are new (they open a fourth file)
+    for name, keys, day, full in (("ev1", ["K001"], 20, False),
+                                  ("ev2", ["K012", "K013"], 21, True)):
+        run("ingest", "--events",
+            str(_mk_events(tmp_path, name, keys, day, full=full)),
+            "--rows-per-file", "4")
+    v1 = m.t.version()
+    before, after = m.records(v0), m.records(v1)
+    sel = {b for b, r in after.items() if b not in before
+           or (r["bib_data_updated"], r["solr_processed"])
+           != (before[b]["bib_data_updated"], before[b]["solr_processed"])}
+    incoming = [after[b] for b in sel if m.included(after[b])]
+    m.add([r for r in incoming if r["bibcode"] not in m.rows])
+    for r in incoming:
+        m.rows[r["bibcode"]].update(flag=True, upd=r["bib_data_updated"],
+                                    day=r["day"])
+    line = sitemap("auto")
+    files, rows = m.finish()
+    assert line == {"rows": 14, "files": files, "selected": 3,
+                    "feed": {"v_lo": v0, "v_hi": v1}}
+    assert files == 4 and m.written() == m.files and m.table() == rows
+
+    # delete every record of file 2 and one of file 1, and fail one
+    # of file 3
+    by_file: dict[str, list] = {}
+    for b, r in sorted(m.rows.items()):
+        by_file.setdefault(r["file"], []).append(b)
+    gone = by_file["sitemap_bib_2.xml"] + by_file["sitemap_bib_1.xml"][:1]
+    d = tmp_path / "ev_del"
+    d.mkdir()
+    (d / "del.json").write_text("\n".join(json.dumps(
+        {"bibcode": b, "type": "bib_data", "status": "deleted",
+         "payload": "{}", "event_ts": "2024-01-22T00:00:00.000Z"})
+        for b in gone))
+    run("ingest", "--events", str(d), "--rows-per-file", "4")
+    failed = by_file["sitemap_bib_3.xml"][0]
+    m.t.merge(m.t.read().where(F.col("bibcode") == failed)
+              .withColumn("status", F.lit("solr-failed")).localCheckpoint())
+    v2 = m.t.version()
+    now = m.records()
+    removed = {b for b in m.rows
+               if b not in now or not m.included(now[b])}
+    per_file: dict[str, list] = {}
+    for b, r in m.rows.items():
+        per_file.setdefault(r["file"], []).append(b in removed)
+    emptied = sorted(f for f, hit in per_file.items() if all(hit))
+    for b in removed:
+        del m.rows[b]
+    for r in m.rows.values():
+        r["flag"] = any(per_file[r["file"]])
+    line = sitemap("cleanup")
+    files, rows = m.finish(emptied)
+    assert line == {
+        "rows": 8, "files": files, "removed": 6,
+        "emptied": ["sitemap_bib_2.xml"], "feed": {"v_lo": v0, "v_hi": v2}}
+    assert emptied == ["sitemap_bib_2.xml"] and files == 4
+    assert m.written() == m.files and m.table() == rows
 
 
 @pytest.mark.slow

@@ -119,3 +119,28 @@ def test_metrics_batch_payload(spark):
 def test_solr_batch_has_identifier(spark):
     doc = solr_batch(_records(spark)).collect()[0]
     assert "B1" in doc["identifier"]
+
+
+def test_dispatch_plan_py4j_budget(spark, monkeypatch):
+    """Building the dispatch plan stays within a py4j round-trip
+    budget: ``get_spark`` turns off PySpark's per-call DataFrame
+    origin capture, which costs a dozen or so round trips on every
+    Column and function call (about 15,000 for this plan with it on,
+    about 5,000 with it off)."""
+    from py4j.clientserver import ClientServerConnection
+
+    assert spark.conf.get(
+        "spark.python.sql.dataFrameDebugging.enabled") == "false"
+    recs = _records(spark).localCheckpoint()
+    calls = [0]
+    send = ClientServerConnection.send_command
+
+    def counting(self, *a, **k):
+        calls[0] += 1
+        return send(self, *a, **k)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    batches = reindex(recs)
+    monkeypatch.undo()
+    assert set(batches) >= {"solr", "metrics", "links"}
+    assert calls[0] <= 8000, calls[0]

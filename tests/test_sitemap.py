@@ -58,7 +58,7 @@ def test_bootstrap_rollover(spark, small_max):
 
 def test_current_state_and_continuation(spark, small_max):
     table = sm.bootstrap(_records(spark, 25)).cache()
-    state = sm.current_state(table)
+    state = sm.current_state(sm.catalogue(table))
     assert state == {"filename": "sitemap_bib_3.xml", "count": 5, "index": 3}
 
     # add 8 more records: 5 fill file 3, 3 roll into file 4
@@ -70,7 +70,7 @@ def test_current_state_and_continuation(spark, small_max):
     assert counts["sitemap_bib_4.xml"] == 3
 
     # full last file -> next state rolls over
-    state2 = sm.current_state(sm.bootstrap(_records(spark, 20)))
+    state2 = sm.current_state(sm.catalogue(sm.bootstrap(_records(spark, 20))))
     assert state2 == {"filename": "sitemap_bib_3.xml", "count": 0, "index": 3}
 
 
@@ -126,7 +126,7 @@ def test_render_files_and_index(spark, small_max, tmp_path):
     assert n == 2
     assert (tmp_path / "ads" / "sitemap_bib_1.xml").exists()
 
-    idx = sm.render_sitemap_indexes(table, ("ads",),
+    idx = sm.render_sitemap_indexes(sm.catalogue(table), ("ads",),
                                     now=dt.date(2024, 2, 1))["ads"]
     assert idx.count("<sitemap>") == 2
     assert "sitemap_bib_2.xml" in idx
@@ -159,7 +159,9 @@ def test_write_many_files_executor_side(spark, small_max, tmp_path,
 def test_render_only_dirty(spark, small_max):
     table = sm.bootstrap(_records(spark, 12)) \
         .withColumn("update_flag", F.col("record_id") <= 3)
-    rendered = sm.render_sitemap_files(table, site="ads")
+    dirty = sm.dirty_files(sm.catalogue(table))
+    assert dirty == ["sitemap_bib_1.xml"]
+    rendered = sm.render_sitemap_files(table, site="ads", files=dirty)
     # only file 1 contains flagged rows, but it renders ALL its rows
     rows = rendered.collect()
     assert len(rows) == 1
@@ -224,7 +226,7 @@ def test_write_sites_matches_reference_templates(spark, tmp_path):
         rows, "record_id long, bibcode string, scix_id string, "
               "bib_data_updated timestamp, sitemap_filename string, "
               "filename_lastmoddate timestamp, update_flag boolean")
-    assert sm.write_sites(table, str(tmp_path)) == 4
+    assert sm.write_sites(table, str(tmp_path), sm.catalogue(table)) == 4
     for site in sm.SITES:
         got = {p.name: p.read_text(encoding="utf-8")
                for p in (tmp_path / site).iterdir()}

@@ -3,7 +3,10 @@
 before diffing every commit of the range in one plan. The feed must
 equal the unscoped diff of a copy whose entries carry no ``keys`` in
 rows and schema, applying it to ``read(as_of=lo)`` must give
-``read(as_of=hi)``, and building it must launch no Spark job."""
+``read(as_of=hi)``, and building it must launch no Spark job. A feed
+projected onto some columns must be the feed of the projected table,
+and the sitemap selections must read the same keys from it as from
+the full feed."""
 
 from __future__ import annotations
 
@@ -47,15 +50,22 @@ def _strip_keys(src: str, dst: str) -> None:
                 json.dump(e, f)
 
 
-def _apply_feed(t, lo: int, hi: int) -> list[str]:
+def _read(t, v: int, columns=None):
+    df = t.read(as_of=v)
+    return df if columns is None else df.select(t.key, *columns)
+
+
+def _apply_feed(t, lo: int, hi: int, columns=None) -> list[str]:
     """``read(as_of=lo)`` with ``changes(lo, hi)`` applied in version
-    order, as sorted JSON rows over ``read(as_of=hi)``'s columns."""
-    cols = t.read(as_of=hi).columns
+    order, as sorted JSON rows over ``read(as_of=hi)``'s columns; with
+    ``columns``, the feed and both reads projected onto them."""
+    cols = _read(t, hi, columns).columns
     state = ({} if lo < 0 else
-             {r[t.key]: r.asDict() for r in t.read(as_of=lo).collect()})
+             {r[t.key]: r.asDict()
+              for r in _read(t, lo, columns).collect()})
     first = {"delete": 0, "update_preimage": 0,
              "insert": 1, "update_postimage": 1}
-    feed = sorted(t.changes(lo, hi).collect(),
+    feed = sorted(t.changes(lo, hi, columns=columns).collect(),
                   key=lambda r: (r["_commit_version"],
                                  first[r["_change_type"]]))
     for r in feed:
@@ -71,9 +81,9 @@ def _apply_feed(t, lo: int, hi: int) -> list[str]:
                   for row in state.values())
 
 
-def _table_rows(t, v: int) -> list[str]:
+def _table_rows(t, v: int, columns=None) -> list[str]:
     return sorted(json.dumps(r.asDict(), sort_keys=True, default=str)
-                  for r in t.read(as_of=v).collect())
+                  for r in _read(t, v, columns).collect())
 
 
 def _walk(spark, path: str, seed: int) -> list[int]:
@@ -217,3 +227,175 @@ def test_merge_above_in_limit_records_no_keys(spark, tmp_path,
         spark.createDataFrame([("K2",), ("K4",), ("N2",)],
                               "bibcode string")).collect()) == ["K2", "N2"]
     assert _apply_feed(t, 0, big) == _table_rows(t, big)
+
+
+RECORDS = ("bibcode string, id long, bib_data string, status string, "
+           "bib_data_updated timestamp, solr_processed timestamp, "
+           "nonbib_data string")
+
+
+def _records_walk(spark, path: str, seed: int) -> tuple[int, int]:
+    """Seeded merges over a records-shaped table: inserts, updates of
+    each column alone (the sitemap selections' columns and the
+    unread ``nonbib_data``), no-op redeliveries and deletes, one
+    deletion-vector delete and one overwrite; returns the overwrite's
+    version and the latest."""
+    import datetime as dt
+    rng = random.Random(seed)
+    t = txn_table(spark, path, cluster_writes=True, rows_per_file=16)
+    day = dt.datetime(2024, 1, 1)
+    statuses = [None, "active", "solr-failed", "retrying"]
+    model = {}
+    for i in range(40):
+        k = f"K{i:03d}"
+        model[k] = (k, i, None if i % 7 == 0 else f'{{"t": {i}}}',
+                    statuses[i % 4], day + dt.timedelta(hours=i),
+                    None if i % 3 == 0 else day, f"nb{i}")
+    t.overwrite(spark.createDataFrame(list(model.values()), RECORDS))
+    col = {"bib_data": 2, "status": 3, "bib_data_updated": 4,
+           "solr_processed": 5, "nonbib_data": 6}
+    nxt = 40
+
+    def changed(r, name, step):
+        r = list(r)
+        r[col[name]] = {
+            "bib_data": None if r[2] and step % 2 else f'{{"s": {step}}}',
+            "status": statuses[(statuses.index(r[3]) + 1) % 4],
+            "bib_data_updated": day + dt.timedelta(days=step + 1),
+            "solr_processed": (None if r[5] and step % 2
+                               else day + dt.timedelta(days=step + 2)),
+            "nonbib_data": f"nb{step}-{r[1]}"}[name]
+        return tuple(r)
+
+    def merge(step):
+        nonlocal nxt
+        keys = sorted(model)
+        batch = {}
+        picked = rng.sample(keys, 10)
+        for k, name in zip(picked, list(col) * 2):    # updates
+            batch[k] = changed(model[k], name, step)
+        for k in rng.sample(keys, 2):                 # redeliveries
+            batch.setdefault(k, model[k])
+        for _ in range(2):                            # inserts
+            k = f"K{nxt:03d}"
+            batch[k] = (k, nxt, f'{{"t": {nxt}}}', None,
+                        day + dt.timedelta(days=step), None, "nb")
+            nxt += 1
+        dels = [k for k in rng.sample(keys, 2) if k not in batch]
+        t.merge(spark.createDataFrame(list(batch.values()), RECORDS),
+                deleted_keys=spark.createDataFrame(
+                    [(k,) for k in dels], "bibcode string"))
+        model.update(batch)
+        for k in dels:
+            model.pop(k)
+
+    for step in range(5):
+        merge(step)
+        if step == 2:
+            gone = rng.sample(sorted(model), 3)
+            t.delete(keys=spark.createDataFrame(
+                [(k,) for k in gone], "bibcode string"))
+            for k in gone:
+                model.pop(k)
+    for k in rng.sample(sorted(model), 5):
+        model[k] = changed(model[k], "status", 9)
+    t.overwrite(spark.createDataFrame(list(model.values()), RECORDS))
+    over = t.version()
+    for step in range(6, 8):
+        merge(step)
+    return over, t.version()
+
+
+def _auto_selection_full_feed(feed, sitemap):
+    """The auto selection from the unprojected feed: inserts, plus
+    update pairs whose bib_data_updated or solr_processed moved."""
+    flagged = sitemap.where("update_flag").select("bibcode")
+    inserts = feed.where(
+        F.col("_change_type") == "insert").select("bibcode")
+    pre = feed.where(F.col("_change_type") == "update_preimage").select(
+        "bibcode", "_commit_version",
+        F.col("bib_data_updated").alias("_pre_b"),
+        F.col("solr_processed").alias("_pre_s"))
+    post = feed.where(F.col("_change_type") == "update_postimage").select(
+        "bibcode", "_commit_version",
+        F.col("bib_data_updated").alias("_post_b"),
+        F.col("solr_processed").alias("_post_s"))
+    moved = (pre.join(post, ["bibcode", "_commit_version"])
+             .where(~F.col("_pre_b").eqNullSafe(F.col("_post_b"))
+                    | ~F.col("_pre_s").eqNullSafe(F.col("_post_s")))
+             .select("bibcode"))
+    return (inserts.union(moved).distinct()
+            .join(flagged, "bibcode", "left_anti"))
+
+
+def _cleanup_selection_full_feed(feed, sitemap):
+    """The cleanup selection from the unprojected feed: keys whose
+    latest image is a delete or fails the inclusion predicate."""
+    from pyspark.sql import Window as W
+    from adsmasterpipeline_spark import sitemap as sm
+    finals = feed.where(F.col("_change_type").isin(
+        "insert", "delete", "update_postimage"))
+    w = W.partitionBy("bibcode").orderBy(F.col("_commit_version").desc())
+    latest = (finals.withColumn("_rn", F.row_number().over(w))
+              .where(F.col("_rn") == 1).drop("_rn"))
+    gone = latest.where(
+        F.col("_change_type") == "delete").select("bibcode")
+    present = latest.where(F.col("_change_type") != "delete")
+    no_longer = present.join(
+        sm.should_include(present).select("bibcode"),
+        "bibcode", "left_anti").select("bibcode")
+    return (sitemap.join(gone.union(no_longer).distinct(), "bibcode",
+                         "left_semi").select("bibcode").distinct())
+
+
+def test_projected_feed_is_feed_of_projected_table(spark, tmp_path):
+    from adsmasterpipeline_spark import sitemap as sm
+    path = str(tmp_path / "t")
+    over, latest = _records_walk(spark, path, 11)
+    t = txn_table(spark, path)
+    assert [h["operation"] for h in t.history()].count("delete") == 1
+    def sitemap_at(lo):
+        """A sitemap as the ticks up to ``lo`` leave it: only keys
+        included at ``lo`` (the premise of the cleanup selection),
+        some flagged dirty."""
+        if lo < 0:
+            return spark.createDataFrame(
+                [(f"K{i:03d}", i % 5 == 0) for i in range(0, 60, 2)],
+                "bibcode string, update_flag boolean")
+        return sm.should_include(t.read(as_of=lo)).select(
+            "bibcode", (F.col("id") % 5 == 0).alias("update_flag"))
+
+    ranges = [(-1, latest), (0, 3), (2, 5), (over - 2, over),
+              (over, latest), (latest - 1, latest)]
+    for columns, select, full in (
+            (sm.AUTO_FEED_COLUMNS, sm.auto_update_selection_from_feed,
+             _auto_selection_full_feed),
+            (sm.CLEANUP_FEED_COLUMNS, sm.cleanup_selection_from_feed,
+             _cleanup_selection_full_feed)):
+        for lo, hi in ranges:
+            feed = t.changes(lo, hi, columns=columns)
+            assert feed.columns == ["bibcode", *columns, "_change_type",
+                                    "_commit_version", "_commit_timestamp"]
+            assert (_apply_feed(t, lo, hi, columns)
+                    == _table_rows(t, hi, columns)), (columns, lo, hi)
+            sitemap = sitemap_at(lo)
+            got = {r[0] for r in select(feed, sitemap).collect()}
+            want = {r[0] for r in full(t.changes(lo, hi), sitemap)
+                    .collect()}
+            assert got == want, (columns, lo, hi)
+        # updates of unread columns only leave no update pair behind
+        n_full = t.changes(-1, latest).where(
+            "_change_type = 'update_postimage'").count()
+        n_proj = t.changes(-1, latest, columns=columns).where(
+            "_change_type = 'update_postimage'").count()
+        assert 0 < n_proj < n_full, columns
+    # a DV-free range builds without a Spark job
+    j0 = _jobs(spark)
+    t.changes(over, latest, columns=sm.AUTO_FEED_COLUMNS)
+    assert _jobs(spark) == j0
+    assert t.changes(latest, latest, columns=sm.AUTO_FEED_COLUMNS).columns \
+        == ["bibcode", *sm.AUTO_FEED_COLUMNS, "_change_type",
+            "_commit_version", "_commit_timestamp"]
+    for lo in (over, latest):
+        with pytest.raises(ValueError, match="nope"):
+            t.changes(lo, latest, columns=("nope",))
