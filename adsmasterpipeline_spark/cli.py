@@ -347,7 +347,7 @@ def cmd_rebuild(args) -> int:
 def cmd_gc(args) -> int:
     """M8 — delete obsolete records (run.py:258-293): drop rows with no
     bib_data whose last update predates the cutoff, as one keyed
-    deletion-vector DELETE on the records TxnTable."""
+    copy-on-write DELETE on the records TxnTable."""
     from .storage import delete_obsolete_records
     spark = _spark()
     t = _records_txn(spark, args.data)
@@ -421,7 +421,7 @@ def cmd_diag(args) -> int:
 
 def cmd_delete(args) -> int:
     """run.py --delete parity: remove a file of bibcodes from the
-    records table (a keyed deletion-vector DELETE on the TxnTable),
+    records table (a keyed copy-on-write DELETE on the TxnTable),
     emit solr tombstones, and (when a sitemap table exists) anti-join
     it too, reporting files emptied by the removal."""
     from . import sitemap as sm
@@ -639,11 +639,10 @@ def cmd_validate(args) -> int:
 
 def cmd_lake(args) -> int:
     """TxnTable maintenance: DESCRIBE HISTORY, OPTIMIZE (bin-pack
-    small files, optionally purging deletion vectors), VACUUM (drop
-    files unreachable from the retained snapshots), log retention, a
-    deletion-vector DELETE by predicate, and the change-data-feed
-    summary — the operational lifecycle of the log-structured records
-    table (sinks/txnlake.py)."""
+    small files), VACUUM (drop files unreachable from the retained
+    snapshots), log retention, a copy-on-write DELETE by predicate,
+    and the change-data-feed summary — the operational lifecycle of
+    the log-structured records table (sinks/txnlake.py)."""
     from .sinks.txnlake import txn_table
     spark = _spark()
     t = txn_table(spark, args.path, key=args.key)
@@ -654,13 +653,9 @@ def cmd_lake(args) -> int:
         if args.rows_per_file:
             t.rows_per_file = args.rows_per_file
         v0 = len(t.live_files())
-        dv0 = sum(d["card"] for d in t._snapshot().dvs.values())
-        out["version"] = t.compact(purge_dvs=args.purge_dvs)
+        out["version"] = t.compact()
         out["files_before"] = v0
         out["files_after"] = len(t.live_files())
-        out["masked_rows_before"] = dv0
-        out["masked_rows_after"] = sum(
-            d["card"] for d in t._snapshot().dvs.values())
     elif args.action == "vacuum":
         deleted = t.vacuum(keep_versions=args.keep_versions,
                            min_age_seconds=args.min_age_seconds)
@@ -669,11 +664,9 @@ def cmd_lake(args) -> int:
         deleted = t.cleanup_log(keep_versions=args.keep_versions)
         out["deleted_log_files"] = len(deleted)
     elif args.action == "delete":
-        # merge-on-read DELETE via deletion vectors (Delta's
-        # deletionVectors shape): writes only the deleted row
-        # positions, zero data files rewritten. --expr is the
-        # predicate; a parse failure or an empty table report on the
-        # JSON contract.
+        # copy-on-write DELETE: the files holding a matching row are
+        # rewritten without it. --expr is the predicate; a parse
+        # failure or an empty table report on the JSON contract.
         if not args.expr:
             raise SystemExit("lake delete needs --expr SQL_PREDICATE")
         v0 = t.version()
@@ -703,10 +696,12 @@ def cmd_lake(args) -> int:
             # rebuild the '_txn/<version>.json' path here (ADVICE r10)
             entry = t._load_json(
                 dict(t._entry_files())[out["version"]])
+        # rows of the removed files minus the rows written back
+        adds = entry.get("adds") or []
         out["deleted_rows"] = (
-            sum(d["new"] for d in (entry.get("dvs") or {}).values())
-            + sum((entry.get("remove_stats") or {}).values()))
-        out["files_rewritten"] = 0
+            sum((entry.get("remove_stats") or {}).values())
+            - sum(a.get("rows") or 0 for a in adds))
+        out["files_rewritten"] = len(adds)
         out["files_dropped"] = len(entry.get("removes") or [])
         p_ = t.last_delete_probe or {}
         out["probe"] = {
@@ -859,8 +854,8 @@ def main(argv=None) -> int:
                                        "delete"])
     pl.add_argument("--expr",
                     help="delete: SQL predicate selecting the rows to "
-                         "mask (merge-on-read, no data files "
-                         "rewritten)")
+                         "delete (the files holding them are "
+                         "rewritten without them)")
     pl.add_argument("--since-version", type=int, default=-1,
                     help="changes: feed starts AFTER this version")
     pl.add_argument("--to-version", type=int, default=None,
@@ -869,9 +864,6 @@ def main(argv=None) -> int:
     pl.add_argument("--path", required=True)
     pl.add_argument("--key", default="bibcode")
     pl.add_argument("--rows-per-file", type=int, default=None)
-    pl.add_argument("--purge-dvs", action="store_true",
-                    help="compact: rewrite every deletion-vector-"
-                         "masked file (REORG ... APPLY (PURGE))")
     pl.add_argument("--keep-versions", type=int, default=10)
     pl.add_argument("--min-age-seconds", type=float, default=3600.0)
     pl.set_defaults(fn=cmd_lake)

@@ -218,14 +218,21 @@ def banded_hamming_pairs(sig: DataFrame, id_col: str, hash_col: str,
     band pigeonhole join (hamming <= 3 over 64 bits => some band
     equal), verified by exact bit_count hamming. Shared by the text
     SimHash and image Blockhash paths — one place for the banding
-    math."""
+    math.
+
+    Precondition: one hash per id. Repeated (id, hash) rows are
+    collapsed, so each pair is emitted once; an id carrying two
+    different hashes would pair once per hash."""
     # pin the signature table: both sides of the band self-join derive
     # from it, and for the multimodal callers the lineage above it is a
     # full media decode pass (mapInPandas — AQE does not reuse those
     # stages across the two branches, so without the pin every payload
     # decodes twice). The pinned frame is (id, 8-byte hash) rows — the
-    # standard materialize-the-signatures move at any scale.
-    sig = sig.select(id_col, hash_col).localCheckpoint(eager=True)
+    # standard materialize-the-signatures move at any scale. The
+    # first-match pairing below emits a pair once per row pair, so a
+    # repeated (id, hash) row is dropped inside the same pin.
+    sig = (sig.select(id_col, hash_col).distinct()
+           .localCheckpoint(eager=True))
     banded = sig.select(
         id_col, hash_col,
         F.explode(F.array(*[

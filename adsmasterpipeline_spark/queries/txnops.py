@@ -1,5 +1,5 @@
-"""Oracled query surface for the TxnTable's deletion-vector DELETE
-and its change feed: the lifecycle is scripted deterministically from
+"""Oracled query surface for the TxnTable's copy-on-write DELETE and
+its change feed: the lifecycle is scripted deterministically from
 the synthetic source tables so the DuckDB oracle can recompute the
 exact same answer from them.
 
@@ -39,7 +39,7 @@ def _scratch(sf_dir: str, name: str) -> str:
 
 
 @query(
-    "txn_dv_delete_feed",
+    "txn_delete_feed",
     """
     SELECT c_custkey, c_acctbal AS acctbal,
            'delete' AS change_type, 1 AS commit_version
@@ -48,32 +48,27 @@ def _scratch(sf_dir: str, name: str) -> str:
     SELECT c_custkey, c_acctbal, 'delete', 2
     FROM customer WHERE c_acctbal < 0 AND c_mktsegment <> 'FURNITURE'
     """,
-    "txn", "dv", "cdf",
-    doc="Deletion-vector DELETE served on the change feed, "
-        "exactly-once: bootstrap customers, DV-delete the FURNITURE "
-        "segment by predicate (v1, zero data files rewritten), then "
-        "DV-delete all negative balances by KEY BATCH (v2) — the "
-        "overlap (negative-balance FURNITURE rows) is already masked "
-        "and must NOT re-report. The oracle recomputes both commits' "
-        "deletes from the customer table alone, so a double-reported "
-        "or missed deletion hash-mismatches.")
-def txn_dv_delete_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    "txn", "cdf",
+    doc="Copy-on-write DELETE served on the change feed, "
+        "exactly-once: bootstrap customers, delete the FURNITURE "
+        "segment by predicate (v1), then delete all negative balances "
+        "by KEY BATCH (v2) — the overlap (negative-balance FURNITURE "
+        "rows) is already gone and must NOT re-report. The oracle "
+        "recomputes both commits' deletes from the customer table "
+        "alone, so a double-reported or missed deletion "
+        "hash-mismatches.")
+def txn_delete_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sinks.txnlake import txn_table
 
     base = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal")
-    t = txn_table(spark, _scratch(sf_dir, "dv_delete_feed"),
+    t = txn_table(spark, _scratch(sf_dir, "delete_feed"),
                   key="c_custkey", cluster_writes=True,
                   rows_per_file=100_000)
     t.overwrite(base)                                            # v0
     assert t.delete(where="c_mktsegment = 'FURNITURE'") == 1     # v1
     neg = base.where(F.col("c_acctbal") < 0).select("c_custkey")
     t.delete(keys=neg)       # v2 (or no-op at an SF with no matches)
-    # the headline property, asserted at every SF: a DV delete
-    # commits ZERO data files (adds empty unless a whole file died,
-    # which cluster_writes' 100k-row files make impossible here)
-    e = t._load_json(dict(t._entry_files())[1])
-    assert e["adds"] == [] and e["operation"] == "delete"
     return t.changes(0, t.version()).select(
         "c_custkey",
         F.col("c_acctbal").alias("acctbal"),

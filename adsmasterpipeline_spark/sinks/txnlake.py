@@ -19,10 +19,10 @@ through it.
   per-file ``stats``), read on the driver from the written files'
   parquet footers; entries with removes
   also carry ``remove_stats`` (removed path -> row count, copied from
-  the prior snapshot), which ``cli lake delete`` sums into its
-  ``deleted_rows`` report. A merge entry also records its sorted
-  affected ``keys`` (when there are at most ``_IN_KEY_LIMIT`` of
-  string or integer type). This is a one-way log format change: a
+  the prior snapshot), from which ``cli lake delete`` subtracts the
+  adds' rows for its ``deleted_rows`` report. A merge or key-delete
+  entry also records its sorted affected ``keys`` (when there are at
+  most ``_IN_KEY_LIMIT`` of string or integer type). This is a one-way log format change: a
   reader that predates the ``keys`` field refuses such entries as an
   unknown table feature, so rolling back to it needs a checkpoint
   past the last keyed entry. The current snapshot is the ordered fold
@@ -62,23 +62,14 @@ through it.
   total epochs.
 - **Change feed**: ``changes()`` derives row-level deltas from each
   commit's removes (pre-image) and adds (post-image), all commits of
-  a range diffed in one plan. Merges that recorded ``keys`` read both
-  images for those keys only; ``columns=`` projects the feed onto the
+  a range diffed in one plan. Merges and key deletes that recorded
+  ``keys`` read both images for those keys only; ``columns=`` projects the feed onto the
   key and those columns, so no other column is read.
-- **Deletion vectors (merge-on-read DELETE)**: ``delete(keys=... |
-  where=...)`` masks row positions instead of rewriting files — a
-  commit that writes only a small (file, position, version) parquet
-  and repoints per-file DV pointers. Readers apply the mask with a
-  broadcast anti-join on (file, pos) built from Spark's
-  ``_metadata.row_index``; merges/compactions materialize the
-  vectors of the files they rewrite; ``compact()`` force-rewrites
-  files >= 20% masked (the pressure valve bounding the mask
-  broadcast); the change feed serves each masked position's delete
-  exactly once (entries carry ``dvs`` + ``dv_prior`` + ``remove_dvs``
-  pointers, so each commit's position delta is self-contained).
-  This is the public Delta deletionVectors shape: at 100 TB a purge
-  of 0.01% of keys writes O(deleted positions), not a rewrite of
-  every touched file.
+- **DELETE**: ``delete(keys=... | where=...)`` is the same
+  copy-on-write rewrite as a merge with no upserts: the files holding
+  a matching row are rewritten without it, every other file is
+  re-referenced as is. A key delete records its ``keys`` like a
+  merge, so its change feed stays key-scoped.
 - **Lifecycle**: ``read_for_keys`` (stat-pruned point reads),
   optional ``cluster_writes`` (range-partition every written batch —
   what makes min/max pruning effective), ``compact()`` (OPTIMIZE
@@ -87,10 +78,11 @@ through it.
   modification-time guard for in-flight writers), ``cleanup_log()``
   (log retention) and ``history()`` (DESCRIBE HISTORY).
 
-The table has no CHECK constraints, no Hive partitioning and no
-RESTORE. A log or checkpoint that carries a constraint or a partition
-declaration (written by an earlier version of this module) is refused
-with ``TableStateError`` rather than read without it.
+The table has no CHECK constraints, no Hive partitioning, no
+deletion vectors and no RESTORE. A log or checkpoint that carries a
+constraint, a partition declaration or deletion-vector pointers
+(written by an earlier version of this module) is refused with
+``TableStateError`` rather than read without it.
 
 Scale notes: the log fold and file lists live on the driver — bounded
 by FILE COUNT (what Delta itself keeps driver-side after parsing the
@@ -147,7 +139,7 @@ class TableStateError(FileNotFoundError):
 
 _LOST_FILE_MARKERS = ("PATH_NOT_FOUND", "FILE_NOT_EXIST",
                       "FAILED_READ_FILE", "FileNotFoundException",
-                      # a staged/DV dir whose every parquet was
+                      # a staged dir whose every parquet was
                       # collected mid-operation stops inferring a
                       # schema — the lost-input signal's shape when
                       # the DIRECTORY survives but its files don't
@@ -168,7 +160,7 @@ def _is_lost_file_error(exc: BaseException) -> bool:
     ``str(exc)`` inside a broad ``except Exception`` arm would
     misclassify any error whose message merely embeds
     'FileNotFoundException'): only Python's own FileNotFoundError
-    (a log/DV file unlinked between listdir and open — but never the
+    (a log file unlinked between listdir and open — but never the
     deliberate TableStateError refusal), PySpark's captured
     exceptions, and raw Py4J JVM errors qualify; for the JVM forms
     the error class / cause chain is what carries the missing-path
@@ -218,27 +210,23 @@ def _is_lost_file_error(exc: BaseException) -> bool:
 @dataclass
 class Snapshot:
     """Driver-side fold of the log at one version: the live file set
-    (path -> stats dict or None) in add order, the application
+    (path -> stats dict or None) in add order and the application
     txn ids visible from the checkpoint's retention window + the
-    log tail, and the per-file DELETION VECTOR pointers (data path ->
-    {"dir", "card"}): merge-on-read deletes that mask rows of a live
-    file without rewriting it (Delta's deletionVectors table
-    feature)."""
+    log tail."""
     version: int = -1
     live: dict[str, dict | None] = field(default_factory=dict)
     txn_ids: set[str] = field(default_factory=set)
-    dvs: dict[str, dict] = field(default_factory=dict)
 
 
-# every field this module writes (or, for dv_stats, once wrote) into a
-# log entry / checkpoint; a non-empty field outside these sets belongs
-# to a removed table feature (CHECK constraints, Hive partitioning,
-# replaceWhere)
+# every field this module writes into a log entry / checkpoint; a
+# non-empty field outside these sets belongs to a removed table
+# feature (CHECK constraints, Hive partitioning, replaceWhere,
+# deletion vectors)
 _ENTRY_FIELDS = frozenset((
     "version", "operation", "ts_ms", "adds", "removes", "remove_stats",
-    "remove_dvs", "app_txn_id", "dvs", "dv_prior", "dv_stats", "keys"))
+    "app_txn_id", "keys"))
 _CHECKPOINT_FIELDS = frozenset((
-    "version", "live", "txn_ids", "txn_pairs", "dvs"))
+    "version", "live", "txn_ids", "txn_pairs"))
 
 
 def _refuse_unknown_fields(d: dict, known: frozenset, where: str) -> None:
@@ -249,8 +237,8 @@ def _refuse_unknown_fields(d: dict, known: frozenset, where: str) -> None:
     if bad:
         raise TableStateError(
             f"{where} carries {bad}, a table feature this TxnTable "
-            f"does not support (CHECK constraints and Hive "
-            f"partitioning were removed); refusing to read it "
+            f"does not support (CHECK constraints, Hive partitioning "
+            f"and deletion vectors were removed); refusing to read it "
             f"without them")
 
 
@@ -269,8 +257,7 @@ class TxnTable:
                  checkpoint_every: int = 10,
                  cluster_writes: bool = False,
                  rows_per_file: int = 500_000,
-                 stats_cols: tuple[str, ...] = ("id", "updated"),
-                 dv_broadcast_budget: int = 1_000_000):
+                 stats_cols: tuple[str, ...] = ("id", "updated")):
         self.spark = spark
         self.path = os.path.abspath(path)
         self.key = key
@@ -297,22 +284,10 @@ class TxnTable:
         # checkpoints retain app txn ids from this many trailing
         # commits (replay detection window — Delta's txn expiry)
         self.txn_retention_commits = 10_000
-        # PER-SCAN deletion-vector budget (VERDICT r10 #2): the
-        # default DV read path broadcasts ALL scanned files' unpurged
-        # positions in one anti-join — F.broadcast is a hint that
-        # ignores autoBroadcastJoinThreshold, and compact()'s
-        # per-FILE >= 20% trigger cannot bound the SUM (a 100-TB
-        # table of files each 19% masked would broadcast O(0.19 x
-        # total rows): a driver/executor OOM). Scans whose total
-        # masked cardinality exceeds this budget therefore apply each
-        # file's vector INSIDE that file's scan task instead (what
-        # Delta does with per-file RoaringBitmaps), and compact()
-        # additionally uses the budget as a global materialization
-        # trigger. ~1M positions ≈ tens of MB broadcast: safe.
-        self.dv_broadcast_budget = dv_broadcast_budget
-        # observability: filled by merge() / read_for_keys() /
-        # read_for_range() so tests/benchmarks can assert which files
-        # the probe was allowed to open
+        # observability: filled by merge() / delete() /
+        # read_for_keys() / read_for_range() / changes() so
+        # tests/benchmarks can assert which files the probe was
+        # allowed to open
         self.last_merge_probe: dict | None = None
         self.last_read_probe: dict | None = None
         self.last_changes_probe: dict | None = None
@@ -363,20 +338,9 @@ class TxnTable:
         snap.version = e["version"]
         for f in e.get("removes", []):
             snap.live.pop(f, None)
-            snap.dvs.pop(f, None)
         for a in e.get("adds", []):
             p, stats = _as_add(a)
             snap.live[p] = stats
-            snap.dvs.pop(p, None)      # a fresh add masks nothing
-        # deletion-vector pointer deltas, AFTER adds/removes so an
-        # entry that re-references a file AND attaches a DV to it
-        # folds to the attached state (null detaches the pointer;
-        # RESTORE commits of earlier versions wrote both shapes)
-        for p, dv in (e.get("dvs") or {}).items():
-            if dv is None:
-                snap.dvs.pop(p, None)
-            elif p in snap.live:
-                snap.dvs[p] = {"dir": dv["dir"], "card": dv["card"]}
         if e.get("app_txn_id") is not None:
             snap.txn_ids.add(e["app_txn_id"])
 
@@ -423,7 +387,6 @@ class TxnTable:
                 snap.version = data["version"]
                 snap.live = dict(_as_add(a) for a in data["live"])
                 snap.txn_ids = set(data["txn_ids"])
-                snap.dvs = dict(data.get("dvs") or {})
             except (OSError, ValueError, KeyError, TypeError):
                 # missing OR corrupt checkpoint: the retained log can
                 # rebuild the state — fall back rather than wedging
@@ -558,10 +521,7 @@ class TxnTable:
                 # txn_ids kept for readers of the old shape; txn_pairs
                 # is what lets the NEXT checkpoint carry forward
                 "txn_ids": sorted({t for _, t in pairs}),
-                "txn_pairs": sorted(pairs),
-                # deletion-vector pointers must outlive their delete
-                # entries once the log head is cleaned
-                "dvs": snap.dvs}
+                "txn_pairs": sorted(pairs)}
         d = self._log_dir()
         tmp = os.path.join(d, f".tmp-cp-{uuid.uuid4().hex}.json")
         with open(tmp, "w") as f:
@@ -645,8 +605,7 @@ class TxnTable:
     def _commit(self, version: int, adds: list, removes: list[str],
                 operation: str, app_txn_id: str | None,
                 extra: dict | None = None,
-                prior_live: dict[str, dict | None] | None = None,
-                prior_dvs: dict[str, dict] | None = None) -> None:
+                prior_live: dict[str, dict | None] | None = None) -> None:
         import time
         d = self._log_dir()
         os.makedirs(d, exist_ok=True)
@@ -664,25 +623,9 @@ class TxnTable:
             # report. Stat-less removed files are omitted.
             rs = {p: (prior_live.get(p) or {}).get("rows")
                   for p in removes}
-            # a removed file carrying a deletion vector has card rows
-            # already masked: record its live rows (rows - card)
-            if prior_dvs:
-                rs = {p: (max(0, r - prior_dvs[p]["card"])
-                          if isinstance(r, int) and p in prior_dvs
-                          else r)
-                      for p, r in rs.items()}
             rs = {p: r for p, r in rs.items() if isinstance(r, int)}
             if rs:
                 entry["remove_stats"] = rs
-        if prior_dvs and removes:
-            # the removed files' DV pointers at commit time: the feed
-            # reads each removed file MINUS these positions as the
-            # commit's pre-image (already-deleted rows must not
-            # re-report as deletes)
-            rdv = {p: prior_dvs[p]["dir"] for p in removes
-                   if p in prior_dvs}
-            if rdv:
-                entry["remove_dvs"] = rdv
         if app_txn_id is not None:
             entry["app_txn_id"] = app_txn_id
         if extra:
@@ -779,220 +722,6 @@ class TxnTable:
             reader = reader.schema(T.StructType.fromJson(json.loads(raw)))
         return reader.parquet(*paths)
 
-    # ------------------------------------------------ deletion vectors
-    # Merge-on-read DELETE (the public Delta deletionVectors feature):
-    # a delete commit writes only the deleted ROW POSITIONS — a tiny
-    # parquet of (_dv_file, _dv_pos, _dv_commit) under data/dv-* —
-    # and repoints the touched files' DV pointers, instead of
-    # rewriting the files (copy-on-write merge rewrites O(touched
-    # rows); a DV delete writes O(deleted positions): at 100 TB,
-    # deleting 0.1% of a wide table stops costing a rewrite of every
-    # touched file's full width). Readers mask the positions with a
-    # BROADCAST hash anti-join on (file, pos) — the scan itself never
-    # shuffles, and the broadcast is bounded by the un-purged DV
-    # cardinality, which compact() (the materializer) keeps small by
-    # rewriting heavily-masked files. DV parquets are CUMULATIVE per
-    # file (each position tagged with the version that deleted it),
-    # so one pointer per file serves reads and each commit entry
-    # stays self-contained for the change feed (``dvs`` new pointer +
-    # ``dv_prior`` old pointer = exact per-commit position delta).
-
-    @staticmethod
-    def _rel_file_col():
-        """Table-relative path of each scanned row's source file —
-        the last three path components of ``_metadata.file_path``
-        (``data/<commit-or-dv dir>/<part file>``), which are plain
-        ASCII by construction (uuid-hex dirs, Spark part names), so
-        the extraction is URI-encoding-proof and matches the log's
-        literal rel paths bit-for-bit."""
-        return F.regexp_extract(F.col("_metadata.file_path"),
-                                r"(data/[^/]+/[^/]+)$", 1)
-
-    @staticmethod
-    def _guard_dv_columns(cols, what: str) -> None:
-        """The DV machinery tags scans with working columns
-        ``_dv_file`` / ``_dv_pos`` / ``_dv_commit`` (joined on, then
-        dropped). A table or batch that already carries one of those
-        names would silently mis-join or lose user data on any DV
-        read, delete or merge — refuse loudly instead
-        (ADVICE r10)."""
-        clash = sorted(c for c in cols if c.startswith("_dv_"))
-        if clash:
-            raise ValueError(
-                f"{what}: column name(s) {clash} collide with the "
-                f"deletion-vector working columns (_dv_file/_dv_pos/"
-                f"_dv_commit are reserved); rename them first")
-
-    def _with_pos(self, df: DataFrame) -> DataFrame:
-        """Tag each row with its source file's rel path and its
-        stable in-file row position (parquet row order is immutable;
-        Spark's hidden ``_metadata.row_index`` exposes it)."""
-        self._guard_dv_columns(df.columns, "deletion-vector scan")
-        return (df.withColumn("_dv_file", self._rel_file_col())
-                .withColumn("_dv_pos", F.col("_metadata.row_index")))
-
-    def _dv_positions(self, pairs: dict[str, str],
-                      with_commit: bool = False) -> DataFrame | None:
-        """(_dv_file, _dv_pos) rows for the given file -> DV-dir
-        pointers. Each distinct dir is read once, filtered to the
-        files whose CURRENT pointer is that dir — a dir may also hold
-        stale rows for files whose pointer has since moved, and those
-        must not leak in."""
-        if not pairs:
-            return None
-        cols = ["_dv_file", "_dv_pos"] + \
-            (["_dv_commit"] if with_commit else [])
-        parts = []
-        for dd in sorted({d for d in pairs.values()}):
-            files = sorted(p for p, d in pairs.items() if d == dd)
-            parts.append(
-                self.spark.read.parquet(os.path.join(self.path, dd))
-                .where(F.col("_dv_file").isin(files)).select(*cols))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def _read_live(self, files: list[str],
-                   dvs: dict[str, dict]) -> DataFrame:
-        """Scan data files with their deletion vectors applied.
-        Identical plan to a bare ``_read_files`` when none of the
-        files carries a DV. Two masking strategies, chosen by the
-        scan's TOTAL unpurged cardinality (VERDICT r10 #2 — the
-        per-file compact trigger bounds each file's vector, never the
-        sum across a scan):
-
-        - within ``dv_broadcast_budget`` positions: one broadcast
-          hash anti-join on (file, pos) — no shuffle of the data
-          side, whole-stage codegen intact;
-        - above it: each file's vector is applied INSIDE the scan
-          task that reads the file (``_read_live_scan_masked``) —
-          memory is O(one file's positions) per task instead of
-          O(scan's positions) on every executor + the driver."""
-        if not any(p in dvs for p in files):
-            return self._read_files(files)
-        return (self._live_rows_tagged(files, dvs)
-                .drop("_dv_file", "_dv_pos"))
-
-    def _live_rows_tagged(self, files: list[str],
-                          dvs: dict[str, dict]) -> DataFrame:
-        """Position-tagged LIVE rows of ``files`` (the _dv_file /
-        _dv_pos working columns kept for callers that classify or
-        probe by position: the merge probe and the delete
-        classifier). Every DV-masking consumer routes through
-        here so the per-scan budget applies uniformly — no call site
-        is left with its own unbounded broadcast."""
-        tagged = self._with_pos(self._read_files(files))
-        sel = {p: d["dir"] for p, d in dvs.items() if p in set(files)}
-        if not sel:
-            return tagged
-        total = sum((dvs[p] or {}).get("card", 0) for p in sel)
-        if total > self.dv_broadcast_budget:
-            return self._scan_masked_tagged(tagged, sel)
-        dvu = self._dv_positions(sel)
-        return tagged.join(F.broadcast(dvu), ["_dv_file", "_dv_pos"],
-                           "left_anti")
-
-    def _scan_masked_tagged(self, tagged: DataFrame,
-                            sel: dict[str, str]) -> DataFrame:
-        """Above-budget DV masking, Delta's per-file shape: an
-        Arrow-batched ``mapInPandas`` over the position-tagged scan
-        filters each batch against ITS OWN file's position set, read
-        executor-side from the file's current DV parquet with a
-        pushed-down ``_dv_file =`` filter. No broadcast, no exchange
-        (mapInPandas is a narrow transformation): peak memory per
-        task is one file's positions — bounded by rows_per_file no
-        matter how many lightly-masked files the scan covers. The
-        file -> DV-dir pointer map ships in the task closure
-        (O(masked files), the same driver-side cardinality the log
-        fold already holds)."""
-        out_schema = tagged.schema
-        out_cols = tagged.columns      # tags kept: callers drop them
-        table_path = self.path
-        pointers = dict(sel)
-
-        def mask(batches):
-            import pandas as pd
-            import pyarrow.parquet as pq
-
-            cache: dict[str, set | None] = {}
-
-            def positions(f: str) -> set | None:
-                if f not in cache:
-                    dd = pointers.get(f)
-                    if dd is None:
-                        cache[f] = None
-                    else:
-                        # dir-level read, row-group-pruned by the
-                        # equality filter; a dir may hold stale rows
-                        # for OTHER files (pointer since moved) — the
-                        # equality keeps only this file's cumulative
-                        # mask, mirroring _dv_positions
-                        t = pq.read_table(
-                            os.path.join(table_path, dd),
-                            columns=["_dv_pos"],
-                            filters=[("_dv_file", "=", f)])
-                        cache[f] = set(t.column("_dv_pos").to_pylist())
-                    if len(cache) > 4:      # scans visit files in
-                        cache.pop(next(iter(cache)))  # order: tiny LRU
-                return cache[f]
-
-            for pdf in batches:
-                keep = pd.Series(True, index=pdf.index)
-                for f in pdf["_dv_file"].unique():
-                    pos = positions(f)
-                    if pos:
-                        keep &= ~((pdf["_dv_file"] == f)
-                                  & pdf["_dv_pos"].isin(pos))
-                yield pdf.loc[keep, out_cols]
-
-        return tagged.mapInPandas(mask, out_schema)
-
-    def _pos_join(self, tagged: DataFrame, positions: DataFrame,
-                  how: str) -> DataFrame:
-        """Join position-tagged data rows against a (file, pos) set
-        with a budget-aware strategy: the positions are
-        localCheckpointed (the join build re-reads them anyway),
-        counted, and BROADCAST only under ``dv_broadcast_budget`` —
-        above it the hint is dropped so the planner shuffles the join
-        instead of OOMing every executor on a giant single-commit
-        delta (a feed replaying a billion-row delete pays a shuffle,
-        which is the honest cost of materializing that pre-image)."""
-        positions = positions.localCheckpoint()
-        if positions.count() <= self.dv_broadcast_budget:
-            positions = F.broadcast(positions)
-        return tagged.join(positions, ["_dv_file", "_dv_pos"], how)
-
-    def _rows_at(self, positions: DataFrame | None,
-                 pinned: bool = False) -> DataFrame | None:
-        """Data rows at the given (_dv_file, _dv_pos) positions —
-        the change feed's way of materializing a DV delta's pre/post
-        images. O(touched files) scan, budget-aware semi-join.
-
-        ``pinned=True`` marks positions already localCheckpointed by
-        the caller (the feed's shared delta pass). One grouped collect
-        serves BOTH the touched-file list and the broadcast-budget
-        count — the previous shape (checkpoint + distinct collect +
-        re-checkpoint + count inside ``_pos_join``) launched twice the
-        driver actions per commit for the same decision."""
-        if positions is None:
-            return None
-        if not pinned:
-            # lazy: the grouped collect right below is the first
-            # action, so pin + stats cost ONE job instead of two
-            positions = positions.localCheckpoint(eager=False)
-        per_file = positions.groupBy("_dv_file").agg(
-            F.count(F.lit(1)).alias("_n")).collect()
-        files = sorted(r["_dv_file"] for r in per_file)
-        if not files:
-            return None
-        total = sum(r["_n"] for r in per_file)
-        if total <= self.dv_broadcast_budget:
-            positions = F.broadcast(positions)
-        return (self._with_pos(self._read_files(files))
-                .join(positions, ["_dv_file", "_dv_pos"], "left_semi")
-                .drop("_dv_file", "_dv_pos"))
-
     def _empty_like(self, snap: Snapshot) -> DataFrame:
         """Zero-row frame with the TABLE schema: every live file
         shares one schema (merges refuse a drifted batch), so any
@@ -1071,7 +800,7 @@ class TxnTable:
                                 "candidate_files": sorted(cands)}
         if not cands:
             return self._empty_like(snap)
-        df = self._read_live(cands, snap.dvs)
+        df = self._read_files(cands)
         if lo is not None:
             df = df.where(F.col(col) >= F.lit(lo))
         if hi is not None:
@@ -1096,14 +825,14 @@ class TxnTable:
         if not cands:
             # no file can contain any key: empty frame, table schema
             return self._empty_like(snap)
-        return hit(self._read_live(cands, snap.dvs))
+        return hit(self._read_files(cands))
 
     def read(self, as_of: int | None = None) -> DataFrame:
         snap = self._snapshot(as_of)
         if not snap.live:
             raise TableStateError(
                 f"TxnTable at {self.path} has no committed data")
-        return self._read_live(list(snap.live), snap.dvs)
+        return self._read_files(list(snap.live))
 
     def changes(self, v_lo: int, v_hi: int | None = None,
                 columns=None) -> DataFrame:
@@ -1135,12 +864,12 @@ class TxnTable:
         bytes without changing rows and emit NOTHING by construction.
 
         Every commit of the range is diffed in ONE plan (``_diff``).
-        Only the rows of a merge's affected keys can differ, so a
-        merge entry that recorded its ``keys`` has both images read
-        for those keys only; overwrites, deletion-vector commits and
+        Only the rows of a merge's or key delete's affected keys can
+        differ, so an entry that recorded its ``keys`` has both images
+        read for those keys only; overwrites, predicate deletes and
         entries without ``keys`` (larger batches, or written before
         the field existed) are diffed over their whole images.
-        Building the feed runs no Spark job for DV-free ranges.
+        Building the feed runs no Spark job.
 
         This is the question the reference answers with a SECOND
         table — the ``change_log`` audit rows with pre-images written
@@ -1174,115 +903,29 @@ class TxnTable:
         files_read: set[str] = set()
         for v in range(v_lo + 1, v_hi + 1):
             e = self._load_json(entry_paths[v])
+            _refuse_unknown_fields(
+                e, _ENTRY_FIELDS,
+                f"TxnTable log entry {v} at {self._log_dir()}")
             if e.get("operation") == "compact":
                 continue               # bin-packing: zero row changes
             adds = [_as_add(a)[0] for a in e.get("adds", [])]
             removes = list(e.get("removes", []))
-            dvs_e = e.get("dvs") or {}
-            prior_e = e.get("dv_prior") or {}
-            rdvs = e.get("remove_dvs") or {}
-            if not adds and not removes and not dvs_e:
+            if not adds and not removes:
                 continue               # metadata-only entry
-            add_set = set(adds)
-            kept_dv = {p: d for p, d in dvs_e.items()
-                       if p not in add_set}
-            dv_dirs = ({d["dir"] for d in dvs_e.values() if d}
-                       | {d["dir"] for d in prior_e.values() if d}
-                       | set(rdvs.values()))
-            for f in adds + removes + sorted(kept_dv):
+            for f in adds + removes:
                 if not os.path.exists(os.path.join(self.path, f)):
                     raise ValueError(
                         f"changes({v_lo}, {v_hi}): data file {f} from "
                         f"commit {v} was collected by vacuum — "
                         f"pre-images below the retention horizon are "
                         f"not reconstructable")
-            for dd in dv_dirs:
-                # vacuum unlinks a dir's files before the dir itself
-                # ages out, so an emptied dir is collected too
-                full = os.path.join(self.path, dd)
-                if not (os.path.isdir(full) and any(
-                        n.endswith(".parquet") for n in os.listdir(full))):
-                    raise ValueError(
-                        f"changes({v_lo}, {v_hi}): deletion-vector "
-                        f"dir {dd} from commit {v} was collected by "
-                        f"vacuum — the feed below the retention "
-                        f"horizon is not reconstructable")
             files_read.update(adds)
             files_read.update(removes)
-            files_read.update(kept_dv)
-            # pre-image: removed files MINUS their already-masked
-            # positions (remove_dvs — those rows' deletions were
-            # served by the earlier delete commit's feed)
             pre = self._read_files(removes) if removes else None
-            rsel = {p: rdvs[p] for p in removes if p in rdvs}
-            if pre is not None and rsel:
-                pos = self._dv_positions(rsel)
-                pre = (self._pos_join(self._with_pos(pre), pos,
-                                      "left_anti")
-                       .drop("_dv_file", "_dv_pos"))
-            # post-image: added files minus the DVs this entry
-            # attaches to them (RESTORE commits written by earlier
-            # versions re-add a file together with its old vector)
             post = self._read_files(adds) if adds else None
-            add_dv = {p: d["dir"] for p, d in dvs_e.items()
-                      if d and p in add_set}
-            if post is not None and add_dv:
-                pos = self._dv_positions(add_dv)
-                post = (self._pos_join(self._with_pos(post), pos,
-                                       "left_anti")
-                        .drop("_dv_file", "_dv_pos"))
-            # kept-live files whose DV pointer moved: the position
-            # DELTA is the row-level change — newly masked positions
-            # are deletes (a delete commit), unmasked ones re-insert
-            # (an earlier version's RESTORE to a pre-delete version)
-            if kept_dv:
-                new_pos = self._dv_positions(
-                    {p: d["dir"] for p, d in kept_dv.items() if d})
-                old_pos = self._dv_positions(
-                    {p: prior_e[p]["dir"] for p in kept_dv
-                     if prior_e.get(p)})
-
-                # both delta directions from ONE materialized pass:
-                # tag current positions +1 and prior positions -1;
-                # each side is per-(file, pos) unique (cumulative DV
-                # parquets are position SETS per file), so a position
-                # in both sides sums to 0 (unchanged), only-current
-                # to +1 (newly masked -> delete) and only-prior to -1
-                # (unmasked by a RESTORE -> re-insert). Replaces two
-                # anti-joins each paying its own checkpoint + count
-                # (half the feed's driver actions per DV commit).
-                del_pos = res_pos = None
-                pinned = False
-                if new_pos is not None and old_pos is not None:
-                    tagged = (new_pos.withColumn("_t", F.lit(1))
-                              .unionByName(
-                                  old_pos.withColumn("_t", F.lit(-1))))
-                    s = (tagged.groupBy("_dv_file", "_dv_pos")
-                         .agg(F.sum("_t").alias("_t"))
-                         .where(F.col("_t") != 0)
-                         .localCheckpoint(eager=False))
-                    del_pos = s.where(F.col("_t") > 0).drop("_t")
-                    res_pos = s.where(F.col("_t") < 0).drop("_t")
-                    pinned = True
-                elif new_pos is not None:
-                    del_pos = new_pos
-                elif old_pos is not None:
-                    res_pos = old_pos
-                del_rows = self._rows_at(del_pos, pinned=pinned)
-                res_rows = self._rows_at(res_pos, pinned=pinned)
-                if del_rows is not None:
-                    pre = (del_rows if pre is None else
-                           pre.unionByName(del_rows,
-                                           allowMissingColumns=True))
-                if res_rows is not None:
-                    post = (res_rows if post is None else
-                            post.unionByName(res_rows,
-                                             allowMissingColumns=True))
-            if pre is None and post is None:
-                continue   # DV pointer churn with zero position delta
-            # a merge that recorded its keys: only rows of those keys
-            # can differ between its images, so both are read for
-            # those keys only
+            # a merge or key delete that recorded its keys: only rows
+            # of those keys can differ between its images, so both
+            # are read for those keys only
             scope = (_in_sql(self.key, e["keys"])
                      if e.get("keys") is not None else None)
             commits.append((v, e.get("ts_ms"), scope, pre, post))
@@ -1458,7 +1101,7 @@ class TxnTable:
         v = snap.version + 1
         adds = self._write_data(df, v)
         self._commit(v, adds, list(snap.live), "overwrite", app_txn_id,
-                     prior_live=snap.live, prior_dvs=snap.dvs)
+                     prior_live=snap.live)
         return v
 
     def _prune_candidates(self, live: dict[str, dict | None],
@@ -1549,58 +1192,55 @@ class TxnTable:
         """MERGE: upsert ``changed`` (full post-merge rows keyed by
         ``self.key``) and delete ``deleted_keys`` — the
         whenMatchedUpdate / whenNotMatchedInsert / whenMatchedDelete
-        triple, executed file-granularly:
-
-        1. prune live files driver-side against the batch's key
-           set/range using per-file stats (files whose range cannot
-           hold an affected key are NEVER OPENED);
-        2. probe which candidates actually contain an affected key
-           (an IN filter on the collected keys — or, above
-           _IN_KEY_LIMIT, a semi-join — over a scan tagged with
-           input_file_name());
-        3. rewrite ONLY those files' rows: survivors (rows whose key
-           is neither changed nor deleted) + the changed rows
-           (minus deletes); untouched files are re-referenced as-is;
-        4. changed keys absent from the table insert via the same
-           union (they appear in no file, so they survive the
-           anti-join unconditionally); a batch that touches no file
-           is unioned with a zero-row frame of the table schema
-           instead, so a drifted batch refuses either way;
-        5. commit {adds: rewritten+inserted files, removes: touched
-           files, keys: the collected affected keys} as one atomic
-           log entry.
+        triple. ONE collect of the affected keys (changed + deleted)
+        prunes live files driver-side against the per-file stats
+        (files whose range cannot hold an affected key are NEVER
+        OPENED) and gives the row filters and the entry's ``keys``;
+        ``_rewrite`` then rewrites the touched files with the upserts
+        (changed rows minus deletes). Changed keys absent from the
+        table appear in no file, so they insert via the same union.
 
         Returns the committed version (or the current one when
         ``app_txn_id`` was already applied — idempotent replay).
         """
         key = self.key
-        self._guard_dv_columns(changed.columns, "merge")
         snap = self._snapshot()
         if app_txn_id is not None and app_txn_id in snap.txn_ids:
             return snap.version
         if deleted_keys is None:
             deleted_keys = changed.select(key).limit(0)
         deleted_keys = deleted_keys.select(key).distinct()
-
         affected = (changed.select(key)
                     .unionByName(deleted_keys).distinct())
-        # ONE collect of the affected keys serves the file pruning, the
-        # probe and survivor filters and the entry's ``keys``
         got, keys, candidates, hit, miss = self._key_scope(
             affected, snap.live)
-        dv_cands = any(p in snap.dvs for p in candidates)
-        if candidates and dv_cands:
-            # DV-masked candidates: probe over the LIVE rows only (a
-            # file whose every affected row is already masked is not
-            # touched). The _dv_file tag from the position join IS
-            # the log's literal rel path — no URI decode or
-            # cache-empty fallback needed. (_metadata only resolves
-            # directly on the scan, so tag before the anti-join.)
-            live_rows = self._live_rows_tagged(candidates, snap.dvs)
-            hits = {r["_dv_file"]: r["count"] for r in
-                    hit(live_rows).groupBy("_dv_file").count().collect()}
-            touched = sorted(hits)
-        elif candidates:
+        return self._rewrite(
+            snap, candidates, hit, miss, "merge", app_txn_id, keys,
+            upserts=changed.join(deleted_keys, key, "left_anti"),
+            max_upserts=None if got is None else len(got))
+
+    def _rewrite(self, snap: Snapshot, candidates: list[str], hit, miss,
+                 operation: str, app_txn_id: str | None,
+                 keys: list | None, upserts: DataFrame | None = None,
+                 max_upserts: int | None = 0) -> int:
+        """The copy-on-write step ``merge`` and ``delete`` share:
+
+        1. probe which ``candidates`` hold a row ``hit`` keeps (a
+           scan tagged with input_file_name(), one grouped collect);
+        2. rewrite ONLY those touched files' rows that ``miss``
+           keeps, plus ``upserts``; every other file is re-referenced
+           as is. A batch that touches no file is unioned with a
+           zero-row frame of the table schema instead, so a drifted
+           batch refuses either way;
+        3. commit {adds: the rewritten files, removes: the touched
+           files, keys} as one atomic log entry.
+
+        Without ``upserts`` (a delete) a probe that touches no file
+        commits nothing and returns the current version. The probe is
+        recorded as ``last_merge_probe`` / ``last_delete_probe``.
+        ``max_upserts`` bounds the upsert rows (None: unknown) for
+        sizing a clustered write."""
+        if candidates:
             tagged = (self._read_files(candidates)
                       .withColumn("_file", F.input_file_name()))
             # file list is bounded by file count (driver-side by
@@ -1623,47 +1263,42 @@ class TxnTable:
                     os.path.relpath(_decode_uri(u), self.path)
                     for u in hits)
         else:
-            touched, hits = [], {}     # first merge == pure insert
-        self.last_merge_probe = {
-            "live_files": len(snap.live),
-            "candidate_files": sorted(candidates),
-            "touched_files": touched,
-        }
-        upserts = changed.join(deleted_keys, key, "left_anti")
+            touched, hits = [], {}     # no file can hold a key
+        probe = {"live_files": len(snap.live),
+                 "candidate_files": sorted(candidates),
+                 "touched_files": touched}
+        if operation == "merge":
+            self.last_merge_probe = probe
+        else:
+            self.last_delete_probe = probe
         if touched:
-            # survivors read through the deletion vectors: a rewrite
-            # MATERIALIZES the touched files' DVs (masked rows do not
-            # survive into the new files), and the commit's removes
-            # drop their pointers
-            survivors = miss(self._read_live(touched, snap.dvs))
+            new_rows = miss(self._read_files(touched))
+        elif upserts is None:
+            return snap.version        # a delete that matched no row
+        elif snap.live:
+            new_rows = self._empty_like(snap)
+        else:
+            new_rows = None
+        if upserts is not None:
             # a batch whose columns differ from the table's fails
             # loudly here
-            new_rows = survivors.unionByName(upserts)
-        elif snap.live:
-            # nothing touched (every key is new): the same schema
-            # contract against a zero-row table-schema frame, so a
-            # drifted batch refuses before anything is written
-            new_rows = self._empty_like(snap).unionByName(upserts)
-        else:
-            new_rows = upserts
-        # upper bound on the rewrite's rows: the touched files' live
-        # rows the probe did not hit (the survivors) plus one row per
-        # affected key
+            new_rows = (upserts if new_rows is None
+                        else new_rows.unionByName(upserts))
+        # upper bound on the rewrite's rows: the touched files' rows
+        # the probe did not hit (the survivors) plus the upserts
         touched_rows = [(snap.live.get(p) or {}).get("rows")
                         for p in touched]
         rows_hint = None
-        if got is not None and all(isinstance(r, int)
-                                   for r in touched_rows):
-            rows_hint = (sum(touched_rows) + len(got) - sum(hits.values())
-                         - sum(snap.dvs.get(p, {}).get("card", 0)
-                               for p in touched))
+        if max_upserts is not None and all(isinstance(r, int)
+                                           for r in touched_rows):
+            rows_hint = sum(touched_rows) + max_upserts - sum(hits.values())
         # rewrite is read-from-committed-files, write-to-new-dir: no
         # read-own-input hazard, so no checkpoint needed
         v = snap.version + 1
         adds = self._write_data(new_rows, v, rows_hint)
-        self._commit(v, adds, touched, "merge", app_txn_id,
+        self._commit(v, adds, touched, operation, app_txn_id,
                      extra=None if keys is None else {"keys": keys},
-                     prior_live=snap.live, prior_dvs=snap.dvs)
+                     prior_live=snap.live)
         return v
 
     def _key_scope(self, keys_df: DataFrame, live: dict[str, dict | None]):
@@ -1701,46 +1336,32 @@ class TxnTable:
     def delete(self, keys: DataFrame | None = None,
                where=None, app_txn_id: str | None = None,
                retries: int = 0) -> int:
-        """Merge-on-read DELETE via deletion vectors (the public
-        Delta deletionVectors feature, enabled there with
-        ``delta.enableDeletionVectors``): instead of rewriting every
-        touched file minus the deleted rows (what ``merge(...,
-        deleted_keys=...)`` does — copy-on-write, O(touched rows)
-        written), this records the deleted ROW POSITIONS in a small
-        parquet and repoints the files' DV pointers in one atomic
-        commit — O(deleted positions) written, zero data files
-        rewritten. At 100 TB, a GDPR-style purge of 0.01% of keys
-        stops costing a rewrite of every file that holds one.
-
-        Exactly one of:
+        """Copy-on-write DELETE: the files holding a matching row are
+        rewritten without it (``_rewrite``, the step a merge uses,
+        with no upserts) in one atomic commit; a file whose every row
+        is deleted gets no add. Exactly one of:
 
         - ``keys``: DataFrame of key values — stat-pruned like a
-          merge (files that cannot hold an affected key are never
-          opened);
+          merge (files that cannot hold a key are never opened), and
+          recorded as the entry's ``keys`` so the change feed reads
+          only those keys;
         - ``where``: SQL predicate string or Column. String
           predicates of stat-checkable shape (comparisons / IN /
           BETWEEN over AND/OR referencing the key or ``stats_cols``)
           prune candidate files against the per-file [min, max]
-          ranges before any scan (VERDICT r10 task 4); Column objects
-          and richer expressions evaluate over every live file — the
-          win there is still writing no data files.
+          ranges before any scan; Column objects and richer
+          expressions scan every live file. A row whose predicate is
+          NULL survives; a null-key row that matches is deleted.
 
-        A file whose every remaining row dies is dropped from the
-        snapshot outright (no pointer to an all-masked file). Rows
-        already masked by an earlier delete do not re-delete (the
-        change feed reports each row's deletion exactly once).
-        Readers mask positions with a broadcast anti-join;
-        ``compact()`` materializes heavily-masked files (>= 20%) and
-        is the pressure valve that keeps that broadcast bounded.
         Returns the committed version — unchanged when nothing
-        matched (no empty commits)."""
+        matched (no empty commits) or when ``app_txn_id`` was already
+        applied. ``retries`` is the shared ``_with_retries`` policy."""
         return self._with_retries(
             lambda: self._delete_once(keys, where, app_txn_id), retries)
 
     def _delete_once(self, keys: DataFrame | None, where,
                      app_txn_id: str | None) -> int:
         from pyspark.sql import Column
-        key = self.key
         if (keys is None) == (where is None):
             raise ValueError(
                 "delete: exactly one of keys= / where= is required")
@@ -1751,92 +1372,24 @@ class TxnTable:
             raise TableStateError(
                 f"TxnTable at {self.path} has no committed data")
         if keys is not None:
-            _, _, candidates, hit, _ = self._key_scope(
-                keys.select(key).distinct(), snap.live)
+            _, in_keys, candidates, hit, miss = self._key_scope(
+                keys.select(self.key).distinct(), snap.live)
         else:
+            in_keys = None
             candidates = self._prune_where_candidates(snap, where)
-        self.last_delete_probe = {
-            "live_files": len(snap.live),
-            "candidate_files": sorted(candidates)}
-        if not candidates:
-            return snap.version
-        live_rows = self._live_rows_tagged(candidates, snap.dvs)
-        if keys is not None:
-            matched = hit(live_rows)
-        else:
             cond = where if isinstance(where, Column) else F.expr(where)
-            matched = live_rows.where(cond)
-        # sever the lineage once: the positions are counted per file,
-        # classified, and written — three consumers of one O(deleted)
-        # frame
-        matched = matched.select("_dv_file", "_dv_pos").localCheckpoint()
-        v = snap.version + 1
-        dead, extra = self._mask_commit_parts(matched, snap, v)
-        if not dead and not extra:
-            return snap.version        # nothing matched: no commit
-        self._commit(v, [], dead, "delete", app_txn_id,
-                     extra=extra or None,
-                     prior_live=snap.live, prior_dvs=snap.dvs)
-        return v
+            keep = ~F.coalesce(cond, F.lit(False))
 
-    def _mask_commit_parts(self, matched: DataFrame,
-                           snap: Snapshot, v: int) -> tuple[list, dict]:
-        """Masking step of the DV delete: classify the matched LIVE
-        positions (``matched`` must already exclude previously-masked
-        ones) into fully-dead files (every remaining row died —
-        dropped outright) and files getting a new cumulative vector;
-        writes the vector parquet and returns (dead_files, commit
-        extra with dvs/dv_prior)."""
-        per_file = {r["_dv_file"]: r["n"] for r in
-                    matched.groupBy("_dv_file")
-                    .agg(F.count(F.lit(1)).alias("n")).collect()}
-        if not per_file:
-            return [], {}
-        dead, dv_files = [], []
-        for p, n_new in sorted(per_file.items()):
-            rows = (snap.live.get(p) or {}).get("rows")
-            old_card = snap.dvs.get(p, {}).get("card", 0)
-            if isinstance(rows, int) and old_card + n_new >= rows:
-                dead.append(p)         # every remaining row died
-            else:
-                dv_files.append(p)
-        dvs_entry: dict = {}
-        extra: dict = {}
-        if dv_files:
-            # CUMULATIVE vector per file: old positions (with their
-            # original _dv_commit tags) + this commit's, in one new
-            # dir — one pointer per file serves every future read,
-            # and (new dir minus prior dir) is exactly this commit's
-            # delta for the change feed
-            new_pos = (matched
-                       .where(F.col("_dv_file").isin(dv_files))
-                       .withColumn("_dv_commit",
-                                   F.lit(v).cast("long")))
-            carry_sel = {p: snap.dvs[p]["dir"] for p in dv_files
-                         if p in snap.dvs}
-            carry = self._dv_positions(carry_sel, with_commit=True)
-            all_pos = (new_pos if carry is None
-                       else new_pos.unionByName(carry))
-            rel_dir = os.path.join(
-                "data", f"dv-{v:08d}-{uuid.uuid4().hex[:8]}")
-            total = sum(per_file[p] + snap.dvs.get(p, {}).get("card", 0)
-                        for p in dv_files)
-            nparts = max(1, -(-total // self.rows_per_file))
-            (all_pos.repartition(nparts, "_dv_file")
-             .write.mode("error")
-             .parquet(os.path.join(self.path, rel_dir)))
-            for p in dv_files:
-                card = per_file[p] + snap.dvs.get(p, {}).get("card", 0)
-                dvs_entry[p] = {"dir": rel_dir, "card": card,
-                                "new": per_file[p]}
-            extra["dvs"] = dvs_entry
-            # prior pointers make the entry self-contained for the
-            # feed (new minus prior = this commit's deleted positions)
-            extra["dv_prior"] = {p: snap.dvs.get(p) for p in dvs_entry}
-        return dead, extra
+            def hit(df):
+                return df.where(cond)
+
+            def miss(df):
+                return df.where(keep)
+        return self._rewrite(snap, candidates, hit, miss, "delete",
+                             app_txn_id, in_keys)
 
     def compact(self, small_rows_threshold: int | None = None,
-                retries: int = 0, purge_dvs: bool = False) -> int:
+                retries: int = 0) -> int:
         """OPTIMIZE: fold small data files into ~rows_per_file-sized
         key-clustered ones in one atomic commit (Delta's bin-packing
         OPTIMIZE). Micro-batch merges add one small file per epoch —
@@ -1850,12 +1403,6 @@ class TxnTable:
         Returns the committed version, or the current one when
         nothing qualifies (needs >= 2 small files to pay for itself).
 
-        ``purge_dvs=True`` additionally rewrites EVERY file carrying
-        a deletion vector regardless of mask fraction — Delta's
-        ``REORG TABLE ... APPLY (PURGE)``: the post-commit snapshot
-        has zero masked positions, so reads drop the position
-        anti-join entirely.
-
         ``retries``: the shared ``_with_retries`` policy — on a
         CommitConflict (a concurrent writer landed a commit between
         this compact's snapshot and its CAS) the WHOLE compact re-runs
@@ -1865,55 +1412,17 @@ class TxnTable:
         auto-compact must not fail a streaming epoch).
         """
         return self._with_retries(
-            lambda: self._compact_once(small_rows_threshold, purge_dvs),
-            retries)
+            lambda: self._compact_once(small_rows_threshold), retries)
 
-    def _compact_once(self, small_rows_threshold: int | None = None,
-                      purge_dvs: bool = False) -> int:
+    def _compact_once(self, small_rows_threshold: int | None = None) -> int:
         thr = (self.rows_per_file // 2 if small_rows_threshold is None
                else small_rows_threshold)
         snap = self._snapshot()
-
-        def _masked(p) -> int:
-            return snap.dvs.get(p, {}).get("card", 0)
-
-        # "small" by EFFECTIVE rows (stats count minus DV-masked), so a
-        # file whittled down by DV deletes qualifies for bin-packing;
-        # additionally any file with >= 20% of its rows masked is
-        # rewritten outright — compact is the DV MATERIALIZER (Delta's
-        # REORG/purge), the pressure valve that keeps the read path's
-        # broadcast of masked positions bounded. purge_dvs forces
-        # EVERY masked file in.
         small = [p for p, s in snap.live.items()
-                 if (not s or s.get("rows") is None
-                     or s["rows"] - _masked(p) <= thr
-                     or (_masked(p) > 0 and _masked(p) * 5 >= s["rows"])
-                     or (purge_dvs and _masked(p) > 0))]
-        # GLOBAL masked-cardinality trigger (VERDICT r10 #2): the
-        # per-file 20% rule never fires on a table of MANY files each
-        # lightly masked, yet their SUM is what a scan must hold. When
-        # the table's total unpurged cardinality exceeds the read
-        # budget, pull in the most-masked files (descending) until the
-        # remainder sits at half the budget (hysteresis — the next
-        # trickle of deletes does not immediately re-trigger).
-        total_card = sum(_masked(p) for p in snap.live)
-        if total_card > self.dv_broadcast_budget:
-            chosen = set(small)
-            rem = total_card - sum(_masked(p) for p in chosen)
-            for p in sorted(
-                    (q for q in snap.dvs
-                     if q in snap.live and q not in chosen),
-                    key=lambda q: -_masked(q)):
-                if rem <= self.dv_broadcast_budget // 2:
-                    break
-                chosen.add(p)
-                rem -= _masked(p)
-            small = [p for p in snap.live if p in chosen]
-        # a single DV-carrying file is still worth rewriting (the
-        # rewrite drops its vector); plain bin-packing needs >= 2
-        if len(small) < 2 and not any(_masked(p) for p in small):
+                 if not s or s.get("rows") is None or s["rows"] <= thr]
+        if len(small) < 2:
             return snap.version
-        df = self._read_live(small, snap.dvs)
+        df = self._read_files(small)
         n = df.count()
         nfiles = max(1, -(-n // self.rows_per_file))
         if self.key in df.columns:
@@ -1928,7 +1437,7 @@ class TxnTable:
         finally:
             self.cluster_writes = cw
         self._commit(v, adds, sorted(small), "compact", None,
-                     prior_live=snap.live, prior_dvs=snap.dvs)
+                     prior_live=snap.live)
         return v
 
     def history(self) -> list[dict]:
@@ -1942,7 +1451,6 @@ class TxnTable:
                         "ts_ms": e.get("ts_ms"),
                         "adds": len(e.get("adds", [])),
                         "removes": len(e.get("removes", [])),
-                        "dvs": len(e.get("dvs") or {}),
                         "app_txn_id": e.get("app_txn_id")})
         return out
 
@@ -1981,26 +1489,10 @@ class TxnTable:
                   if v >= horizon]
             hsnap = self._snapshot(as_of=vs[0] if vs else None)
         protected: set[str] = set(hsnap.live)
-        # deletion-vector dirs are referenced state too: a collected
-        # DV would UNDELETE its masked rows on every future read of a
-        # still-live file — protect every dir referenced by the
-        # horizon snapshot or by any retained entry (incl. the prior/
-        # removed pointers the change feed needs for pre-images)
-        protected_dirs: set[str] = {dv["dir"]
-                                    for dv in hsnap.dvs.values()}
         for v, p in self._entry_files():
             if v > horizon:
-                e = self._load_json(p)
-                for a in e.get("adds", []):
+                for a in self._load_json(p).get("adds", []):
                     protected.add(_as_add(a)[0])
-                for dv in (e.get("dvs") or {}).values():
-                    if dv:
-                        protected_dirs.add(dv["dir"])
-                for dv in (e.get("dv_prior") or {}).values():
-                    if dv:
-                        protected_dirs.add(dv["dir"])
-                protected_dirs.update(
-                    (e.get("remove_dvs") or {}).values())
         cutoff = time.time() - min_age_seconds
         data_root = os.path.join(self.path, "data")
         deleted = []
@@ -2014,11 +1506,10 @@ class TxnTable:
             parts = os.path.relpath(root, data_root).split(os.sep)
             if "_temporary" in parts:
                 continue
-            # nor an IN-FLIGHT writer's staged commit/DV dir: both
-            # families encode their target version (commit-%08d-*,
-            # dv-%08d-*), and a dir staged for a version ABOVE the
-            # currently-committed latest belongs to a writer whose
-            # commit can still land — collecting it would let that
+            # nor an IN-FLIGHT writer's staged commit dir: its name
+            # encodes its target version (commit-%08d-*), and a dir
+            # staged for a version ABOVE the currently-committed
+            # latest belongs to a writer whose commit can still land — collecting it would let that
             # commit publish pointers to nothing (silent data loss)
             # or crash its stats read-back mid-write (the round-10/11
             # maintenance-race flake: a merge slower than
@@ -2028,7 +1519,7 @@ class TxnTable:
             # CommitConflict and restages), so it ages out normally;
             # crashed attempts above latest are collected as soon as
             # the next commit advances the version past them.
-            m = _re.match(r"(?:commit|dv)-(\d{8})-", parts[0]) \
+            m = _re.match(r"commit-(\d{8})-", parts[0]) \
                 if root != data_root else None
             if m and int(m.group(1)) > latest:
                 continue
@@ -2043,8 +1534,6 @@ class TxnTable:
                 rel = os.path.relpath(full, self.path)
                 if rel in protected:
                     continue
-                if os.path.dirname(rel) in protected_dirs:
-                    continue           # live deletion-vector dir
                 try:
                     if os.path.getmtime(full) > cutoff:
                         continue           # too young: maybe in flight

@@ -274,11 +274,12 @@ def test_cli_lake_maintenance(spark, tmp_path, capsys):
     assert "error" in err and err["range"]["v_lo"] == 0
 
 
-def test_cli_lake_delete_deletion_vectors(spark, tmp_path, capsys):
-    """`lake delete --expr P`: merge-on-read delete from the CLI —
-    reports deleted_rows and files_rewritten: 0 (the headline DV
-    property), and a malformed predicate reports on the JSON error
-    contract instead of a raw Spark traceback."""
+def test_cli_lake_delete(spark, tmp_path, capsys):
+    """`lake delete --expr P`: copy-on-write delete from the CLI —
+    reports deleted_rows (the removed files' rows minus the rows
+    written back) and files_rewritten (the commit's adds), and a
+    malformed predicate reports on the JSON error contract instead of
+    a raw Spark traceback."""
     import json
 
     from adsmasterpipeline_spark.cli import main
@@ -293,7 +294,9 @@ def test_cli_lake_delete_deletion_vectors(spark, tmp_path, capsys):
                  "--expr", "v >= 2"]) == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["version"] == 1 and out["deleted_rows"] == 2
-    assert out["files_rewritten"] == 0
+    entry = t._load_json(dict(t._entry_files())[1])
+    assert out["files_rewritten"] == len(entry["adds"])
+    assert out["files_dropped"] == len(entry["removes"]) > 0
     assert {r["bibcode"] for r in t.read().collect()} == {"B1"}
 
     # nothing matched: no commit, zero rows reported
@@ -872,9 +875,9 @@ def test_cli_outbox_incremental_from_change_feed(spark, tmp_path, capsys):
     assert got == want
 
 
-def test_cli_lake_compact_purge_and_zorder(spark, tmp_path, capsys):
-    """`lake compact --purge-dvs`: the REORG form is operable from the
-    CLI with masked-row accounting in the JSON output. Z-order
+def test_cli_lake_compact(spark, tmp_path, capsys):
+    """`lake compact`: bin-packs the small files a delete left behind
+    into one, rows unchanged, and reports the file counts. Z-order
     compaction is gone from the table, so `--zorder` is refused as an
     unknown flag instead of being accepted and ignored."""
     import json
@@ -888,13 +891,16 @@ def test_cli_lake_compact_purge_and_zorder(spark, tmp_path, capsys):
     t.overwrite(spark.range(128).selectExpr(
         "id", "pmod(id * 37, 127) as a", "pmod(id * 53, 113) as b"))
     t.delete(where="id in (0, 40, 80, 120)")
+    before = sorted(tuple(r) for r in t.read().collect())
+    assert len(before) == 124
 
     assert main(["lake", "compact", "--path", path, "--key", "id",
-                 "--purge-dvs"]) == 0
+                 "--rows-per-file", "128"]) == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out["masked_rows_before"] == 4
-    assert out["masked_rows_after"] == 0
-    assert t.read().count() == 124
+    assert out["version"] == 2
+    assert out["files_before"] >= 2 and out["files_after"] == 1
+    assert sorted(tuple(r) for r in t.read().collect()) == before
+    assert t.changes(1, 2).count() == 0          # layout-only commit
 
     with pytest.raises(SystemExit):
         main(["lake", "compact", "--path", path, "--key", "id",

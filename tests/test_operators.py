@@ -850,6 +850,22 @@ def test_banded_hamming_first_match_equals_dedup_form(spark):
     assert [g for g in got if g[:2] == (1, 2)] == [(1, 2, 0)]
 
 
+def test_banded_hamming_repeated_signature_row_pairs_once(spark):
+    """A signature table that repeats one (id, hash) row still emits
+    each near-dup pair once: the repeated row is collapsed before the
+    band self-join, whose first-match pairing otherwise emits a pair
+    once per row pair."""
+    from adsmasterpipeline_spark.operators.dedup import (
+        banded_hamming_pairs)
+    h = 0x1234_5678_9ABC_DEF0
+    rows = [(1, h), (1, h), (2, h ^ 0x1), (3, h ^ 0x3), (3, h ^ 0x3),
+            (4, 0x0F0F_0F0F_0F0F_0F0F)]
+    sig = spark.createDataFrame(rows, "id long, hh long")
+    got = sorted(map(tuple, banded_hamming_pairs(
+        sig, "id", "hh", max_hamming=3).collect()))
+    assert got == [(1, 2, 1), (1, 3, 2), (2, 3, 1)]
+
+
 def test_hadamard_bucket_vectorized_dirty_vectors(spark):
     """ADVICE r6: embeddings containing null/NaN/inf components must
     not hit np.floor(non-finite).astype(int64) — platform-defined

@@ -17,7 +17,7 @@ _load()
 # the two heaviest smoke params (>= 10 s each: a full near-dup band
 # join / a txn lifecycle rebuild) go to the slow tier; every other
 # query keeps its default-run smoke row
-_SLOW_SMOKE = {"simhash_neardup", "txn_dv_delete_feed"}
+_SLOW_SMOKE = {"simhash_neardup", "txn_delete_feed"}
 
 
 @pytest.mark.parametrize(

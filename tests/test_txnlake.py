@@ -488,7 +488,7 @@ def test_txn_vacuum_and_history(spark, tmp_path):
     assert hist[2] == {"version": 2, "operation": "merge",
                        "ts_ms": hist[2]["ts_ms"],
                        "adds": hist[2]["adds"], "removes": 1,
-                       "dvs": 0, "app_txn_id": "b1"}
+                       "app_txn_id": "b1"}
     assert isinstance(hist[2]["ts_ms"], int)   # commit wall time recorded
 
     rows_now = sorted(tuple(r) for r in t.read().collect())
@@ -521,7 +521,7 @@ def test_txn_vacuum_and_history(spark, tmp_path):
 @pytest.mark.slow
 def test_txn_randomized_lifecycle_matches_model(spark, tmp_path, seed):
     """Model-based check of the WHOLE lifecycle: a seeded random
-    sequence of merge/delete/dv_delete (deletion vectors)/overwrite/
+    sequence of merge/merge-delete/delete(keys=|where=)/overwrite/
     compact/vacuum/cleanup_log ops (checkpoints firing every 3
     commits) must keep the table equal to a plain dict model after
     every step — the same style of test that caught the round-5
@@ -568,7 +568,7 @@ def test_txn_randomized_lifecycle_matches_model(spark, tmp_path, seed):
         except ValueError:
             return
         except FileNotFoundError:
-            # a dv_delete can empty the WHOLE table; a later
+            # a delete_call can empty the WHOLE table; a later
             # metadata-only window then has no live schema to shape
             # even an empty feed with (the documented read() mirror)
             assert not model
@@ -587,7 +587,7 @@ def test_txn_randomized_lifecycle_matches_model(spark, tmp_path, seed):
 
     for step in range(10):
         op = rng.choice(["merge", "merge", "merge", "delete",
-                         "dv_delete", "compact", "vacuum", "cleanup"])
+                         "delete_call", "compact", "vacuum", "cleanup"])
         v_before, prev_model = t.version(), dict(model)
         if op == "merge":
             ups = {rng.choice(keys): step * 100 + i for i in range(4)}
@@ -609,10 +609,10 @@ def test_txn_randomized_lifecycle_matches_model(spark, tmp_path, seed):
                     deleted_keys=spark.createDataFrame(
                         [(k,)], "bibcode string"))
             model.pop(k)
-        elif op == "dv_delete":
-            # merge-on-read delete (deletion vectors): by key batch
-            # or by predicate, interleaved with every other op — the
-            # read and the feed must both see through the vectors
+        elif op == "delete_call":
+            # delete(): by key batch or by predicate, interleaved
+            # with every other op — the read and the feed must both
+            # match the model
             if not model:
                 continue
             if rng.random() < 0.5:
@@ -636,7 +636,7 @@ def test_txn_randomized_lifecycle_matches_model(spark, tmp_path, seed):
         check_feed(v_before, prev_model)
 
     # replaying the whole history through time travel still resolves
-    # for the retained horizon (a run whose dv_deletes emptied the
+    # for the retained horizon (a run whose deletes emptied the
     # table ends with no live files — read() then refuses by design)
     try:
         assert t.read(as_of=t.version()).count() == len(model)
@@ -740,12 +740,13 @@ def test_txn_corrupt_checkpoint_falls_back_to_log(spark, tmp_path):
 
 
 def test_txn_refuses_log_with_removed_features(spark, tmp_path):
-    """A log entry carrying a CHECK constraint, or a checkpoint
-    declaring Hive partition columns, comes from a table feature this
+    """A log entry carrying a CHECK constraint or deletion-vector
+    pointers, or a checkpoint declaring Hive partition columns or
+    deletion-vector pointers, comes from a table feature this
     TxnTable does not implement: opening the table refuses instead of
-    reading it with the constraint or the partitioning dropped. The
-    empty ``constraints``/``partition_by`` fields every older
-    checkpoint carries still read."""
+    reading it with the constraint, the partitioning or the masked
+    rows dropped. The empty ``constraints``/``partition_by``/``dvs``
+    fields older checkpoints carry still read."""
     from adsmasterpipeline_spark.sinks.txnlake import TableStateError
 
     def write_json(p, obj):
@@ -772,10 +773,29 @@ def test_txn_refuses_log_with_removed_features(spark, tmp_path):
     cp_path = os.path.join(b, "_txn", "checkpoint-00000001.json")
     cp = _json.load(open(cp_path))
     # the shape older checkpoints carry: empty fields read as before
-    write_json(cp_path, {**cp, "constraints": {}, "partition_by": []})
+    write_json(cp_path, {**cp, "constraints": {}, "partition_by": [],
+                         "dvs": {}})
     assert tb.read().count() == 2
     write_json(cp_path, {**cp, "partition_by": ["bibcode"]})
     with pytest.raises(TableStateError, match="partition_by"):
+        tb.read()
+
+    # deletion vectors: a delete entry that masks rows of a live file
+    # instead of rewriting it, and a checkpoint carrying its pointer
+    live = cp["live"][0]
+    live = live if isinstance(live, str) else live["path"]
+    dv = {live: {"dir": "data/dv-00000002-0000beef", "card": 1}}
+    write_json(cp_path, cp)
+    write_json(os.path.join(b, "_txn", "00000002.json"),
+               {"version": 2, "operation": "delete", "adds": [],
+                "removes": [], "dvs": dv, "dv_prior": {live: None}})
+    with pytest.raises(TableStateError, match="dvs"):
+        tb.read()
+    with pytest.raises(TableStateError, match="dvs"):
+        tb.changes(1, 2)
+    os.unlink(os.path.join(b, "_txn", "00000002.json"))
+    write_json(cp_path, {**cp, "dvs": dv})
+    with pytest.raises(TableStateError, match="dvs"):
         tb.read()
 
 
@@ -1782,7 +1802,7 @@ def test_vacuum_protects_inflight_staged_dirs(spark, tmp_path):
     """The round-10/11 maintenance-race flake's root cause: a writer
     slower than ``min_age_seconds`` between staging its data files
     and publishing its commit lost them to a concurrent vacuum (the
-    mtime guard is a heuristic, not a guarantee). Staged commit/DV
+    mtime guard is a heuristic, not a guarantee). Staged commit
     dirs encode their target version; vacuum must protect any dir
     staged ABOVE the committed latest (its commit can still land) no
     matter how old — and may collect it once the version is taken

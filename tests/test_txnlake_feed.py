@@ -88,7 +88,7 @@ def _table_rows(t, v: int, columns=None) -> list[str]:
 
 def _walk(spark, path: str, seed: int) -> list[int]:
     """Seeded merges (inserts, updates, no-op redeliveries, deletes),
-    one deletion-vector delete and one overwrite with a drifted
+    one key delete and one overwrite with a drifted
     schema; returns the versions of the keyed merges."""
     import datetime as dt
     rng = random.Random(seed)
@@ -238,7 +238,7 @@ def _records_walk(spark, path: str, seed: int) -> tuple[int, int]:
     """Seeded merges over a records-shaped table: inserts, updates of
     each column alone (the sitemap selections' columns and the
     unread ``nonbib_data``), no-op redeliveries and deletes, one
-    deletion-vector delete and one overwrite; returns the overwrite's
+    key delete and one overwrite; returns the overwrite's
     version and the latest."""
     import datetime as dt
     rng = random.Random(seed)
@@ -389,7 +389,7 @@ def test_projected_feed_is_feed_of_projected_table(spark, tmp_path):
         n_proj = t.changes(-1, latest, columns=columns).where(
             "_change_type = 'update_postimage'").count()
         assert 0 < n_proj < n_full, columns
-    # a DV-free range builds without a Spark job
+    # building a feed runs no Spark job
     j0 = _jobs(spark)
     t.changes(over, latest, columns=sm.AUTO_FEED_COLUMNS)
     assert _jobs(spark) == j0

@@ -27,8 +27,4 @@ echo "=== streamtxn insert-heavy ==="
 python tools/stream_stress.py --json "STREAMTXN_${R}.json" --rows 16384 --epochs 20 --batch 8192 --insert-heavy 2>/dev/null | tail -3
 echo "=== txnprobe (incl. change-feed consumer) ==="
 python tools/txn_reindex_probe.py --json "TXNPROBE_${R}.json" 2>/dev/null | tail -8
-echo "=== dv probe (deletion vectors vs copy-on-write) ==="
-python tools/dv_probe.py --json "DVPROBE_${R}.json" 2>/dev/null | tail -2
-echo "=== partition probe (replaceWhere vs full overwrite) ==="
-python tools/partition_probe.py --json "PARTPROBE_${R}.json" 2>/dev/null | tail -2
 echo "=== ALL ARTIFACTS DONE ==="
